@@ -5,9 +5,11 @@ package graft.functions
   * these re-implement the *published formulas* the reference delegates to
   * numpy/scipy (reference: dabstract/dataprocessor/processors/processors.py:296-600).
   *
-  * All kernels are per-row (per-cell) and allocation-conscious: they run
-  * inside executor tasks via UDFs, so the engine's distribution story is
-  * Spark's — these only need to be fast on one array at a time.
+  * All kernels are per-row (per-cell) and allocation-conscious: the DSP
+  * processors run them inside executor tasks through the native
+  * [[graft.plans.DspKernel]] expression, on primitive arrays, so the
+  * engine's distribution story is Spark's — these only need to be fast on
+  * one array at a time.
   */
 object Dsp {
 
@@ -150,10 +152,41 @@ object Dsp {
       case "hann" | "hanning" => Array.tabulate(n)(i => 0.5 - 0.5 * math.cos(2 * math.Pi * i / den))
       case "blackman" => Array.tabulate(n)(i =>
         0.42 - 0.5 * math.cos(2 * math.Pi * i / den) + 0.08 * math.cos(4 * math.Pi * i / den))
-      case "boxcar" | "rectangular" | "none" => Array.fill(n)(1.0)
+      case "boxcar" | "rectangular" | "none" | "None" => Array.fill(n)(1.0)
       case other => throw new IllegalArgumentException(s"unsupported window: $other")
     }
   }
+
+  /** `x * win`, elementwise over equal lengths. */
+  def applyWindow(x: Array[Double], win: Array[Double]): Array[Double] = {
+    val out = new Array[Double](x.length)
+    var i = 0
+    while (i < x.length) { out(i) = x(i) * win(i); i += 1 }
+    out
+  }
+
+  /** Overlapping windowed frames: frame `f` is `x[f*step, f*step+len)`
+    * times `win` (length `len`); `floor((x.length - len)/step) + 1`
+    * frames, none when the signal is shorter than one frame.
+    */
+  def frames(x: Array[Double], step: Int, win: Array[Double]): Array[Array[Double]] = {
+    val len = win.length
+    val n = if (x.length < len) 0 else (x.length - len) / step + 1
+    Array.tabulate(n) { f =>
+      val out = new Array[Double](len)
+      val off = f * step
+      var k = 0
+      while (k < len) { out(k) = x(off + k) * win(k); k += 1 }
+      out
+    }
+  }
+
+  /** Spark's `round(x)` then `cast int`: HALF_UP on the shortest decimal
+    * form of `x` (`BigDecimal.valueOf`), so 2.5 → 3 and 2.4999… → 2
+    * exactly as the SQL engine rounds.
+    */
+  def roundHalfUp(x: Double): Int =
+    java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toInt
 
   // ---------- filterbank (reference processors.py:354-461) ----------
 
@@ -212,18 +245,33 @@ object Dsp {
     fbank
   }
 
+  /** Per band, the index range `[from, until)` of its nonzero weights. */
+  def bandSupport(fbank: Array[Array[Double]]): Array[(Int, Int)] = fbank.map { row =>
+    val from = row.indexWhere(_ != 0.0)
+    if (from < 0) (0, 0) else (from, row.lastIndexWhere(_ != 0.0) + 1)
+  }
+
   /** `data(frames × bins) · fbankᵀ`, zero-floored at eps like the
-    * reference (processors.py:458-461).
+    * reference (processors.py:458-461). With `support` ([[bandSupport]])
+    * each band sums only its nonzero weights. For a finite frame that is
+    * exact: a skipped term is ±0.0, and adding ±0.0 to a sum that starts at
+    * +0.0 never changes it. A frame holding Inf or NaN sums every weight,
+    * so 0·Inf = NaN as in the reference's matrix product.
     */
-  def applyFilterbank(frame: Array[Double], fbank: Array[Array[Double]]): Array[Double] = {
+  def applyFilterbank(frame: Array[Double], fbank: Array[Array[Double]],
+      support: Option[Array[(Int, Int)]] = None): Array[Double] = {
+    var sparse = support.isDefined
+    var i = 0
+    while (sparse && i < frame.length) { sparse = java.lang.Double.isFinite(frame(i)); i += 1 }
     val out = new Array[Double](fbank.length)
     var m = 0
     while (m < fbank.length) {
       var s = 0.0
       val row = fbank(m)
       val n = math.min(frame.length, row.length)
-      var k = 0
-      while (k < n) { s += frame(k) * row(k); k += 1 }
+      var k = if (sparse) support.get(m)._1 else 0
+      val until = if (sparse) math.min(support.get(m)._2, n) else n
+      while (k < until) { s += frame(k) * row(k); k += 1 }
       out(m) = if (s == 0.0) java.lang.Double.MIN_NORMAL else s
       m += 1
     }

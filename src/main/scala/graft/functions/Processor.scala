@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Column-to-column UDF pipeline: the Spark-native re-expression of the
+/** Column-to-column processing pipeline: the Spark-native re-expression of the
   * reference's `Processor` / `ProcessingChain`
   * (dabstract/dataprocessor/processing_chain.py:14-194).
   *
@@ -69,15 +69,18 @@ object Processor {
     lit(null).cast("array<int>").as("output_shape"),
     lit(null).cast("int").as("nfft"))
 
-  /** Rebuild info replacing selected fields (struct columns are immutable). */
+  /** Info with selected fields replaced. `withField` references the
+    * previous info once, so a k-step chain's info expression grows
+    * linearly in k, not 4^k. A null info stays null.
+    */
   def withInfo(info: Column, fs: Option[Column] = None,
       timeStep: Option[Column] = None, outputShape: Option[Column] = None,
       nfft: Option[Column] = None): Column =
-    struct(
-      fs.getOrElse(info.getField("fs")).as("fs"),
-      timeStep.getOrElse(info.getField("time_step")).as("time_step"),
-      outputShape.getOrElse(info.getField("output_shape")).as("output_shape"),
-      nfft.getOrElse(info.getField("nfft")).as("nfft"))
+    Seq("fs" -> fs, "time_step" -> timeStep, "output_shape" -> outputShape,
+        "nfft" -> nfft).foldLeft(info) {
+      case (i, (field, Some(v))) => i.withField(field, v)
+      case (i, _) => i
+    }
 }
 
 /** Ordered processor composition (reference `ProcessingChain`,
@@ -91,10 +94,11 @@ final case class Chain(steps: Seq[Processor]) extends Processor {
   def apply(data: Column, info: Column): (Column, Column) =
     steps.foldLeft((data, info)) { case ((d, i), p) =>
       val (d2, i2) = p(d, i)
-      // thread output_shape after every step (processing_chain.py:106-107)
+      // thread output_shape after every step (processing_chain.py:106-107);
+      // zero frames have no inner length (null), not an ANSI index error
       val shape = p.outputDepth match {
         case 1 => Some(array(size(d2)))
-        case 2 => Some(array(size(d2), size(element_at(d2, 1))))
+        case 2 => Some(array(size(d2), size(try_element_at(d2, lit(1)))))
         case _ => None
       }
       (d2, shape.fold(i2)(sh => Processor.withInfo(i2, outputShape = Some(sh))))
@@ -105,18 +109,23 @@ final case class Chain(steps: Seq[Processor]) extends Processor {
   override def invert(data: Column, info: Column): (Column, Column) =
     steps.reverse.foldLeft((data, info)) { case ((d, i), p) => p.invert(d, i) }
 
+  override def fit(df: DataFrame, dataCol: String): Chain =
+    fit(df, dataCol, Processor.emptyInfo)
+
   /** Chain-fit with the reference's causal recursion
     * (processing_chain.py:138-172): each trainable stage is fitted on the
     * output of the already-fitted prefix — which forces one materialization
-    * per trainable stage (inherent to the semantics, not the engine).
+    * per trainable stage (inherent to the semantics, not the engine). The
+    * prefix runs on `info`, a column of `df`, so a stage that reads the
+    * sample rate (Framing) sees the same info as when the chain is applied.
     */
-  override def fit(df: DataFrame, dataCol: String): Chain = {
+  def fit(df: DataFrame, dataCol: String, info: Column): Chain = {
     val fitted = Seq.newBuilder[Processor]
     var prefix: Seq[Processor] = Nil
     for (p <- steps) {
       val fp =
         if (p.needsFit) {
-          val (d, _) = Chain(prefix)(col(dataCol), Processor.emptyInfo)
+          val (d, _) = Chain(prefix)(col(dataCol), info)
           p.fit(df.select(d.as(dataCol)), dataCol)
         } else p
       fitted += fp

@@ -2,25 +2,38 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
+import graft.plans.DspKernel
 
 /** The built-in processor library: Spark-native re-expressions of the 14
   * reference processors (dabstract/dataprocessor/processors/processors.py).
   *
-  * Cheap elementwise ops are *expressions* (codegen'd higher-order
-  * functions — `transform`, `zip_with` — no JVM boundary). Heavy numeric
-  * kernels (FFT, filterbank, FIR, resample) are Scala UDFs over
-  * `Array[Double]` calling [[Dsp]]: per-cell number crunching where UDF
-  * overhead is negligible next to the kernel itself, and everything stays
-  * distributed (no collect, no driver loop).
+  * Cheap elementwise ops (Scaler, Logarithm, Normalizer, ExpandDims) are
+  * Spark expressions mapped with `transform`; Logarithm keeps Spark's
+  * `log10` (StrictMath), which a `Math.log10` kernel does not match bit
+  * for bit. The heavy
+  * DSP processors (Framing, Windowing, FFT, Filterbank, Aggregation, FIR,
+  * Resample) each run one [[Dsp]] kernel per cell inside the native
+  * [[DspKernel]] expression, on primitive `double[]` with no boxing.
+  * Everything stays distributed (no collect, no driver loop).
   */
 
-/** Elementwise helpers shared by array processors. */
+/** Helpers shared by array processors. */
 object ArrayOps {
   /** Apply a scalar expression at nesting `depth` of an array column:
     * depth 0 = scalar column, 1 = array<double>, 2 = array<array<double>>.
     */
   def mapAtDepth(c: Column, depth: Int, f: Column => Column): Column =
     if (depth <= 0) f(c) else transform(c, x => mapAtDepth(x, depth - 1, f))
+
+  /** Run a [[Dsp]] kernel over `data` (nested `depth` levels) as one
+    * native [[DspKernel]] expression; `scalar` is an optional per-row
+    * `double` handed to the kernel.
+    */
+  def kernel(name: String, data: Column, depth: Int, scalar: Option[Column] = None)(
+      fn: DspKernel.Fn): Column =
+    ColumnShim.column(DspKernel(
+      (data +: scalar.toSeq).map(ColumnShim.expression), depth, fn, name))
 }
 
 /** Fixed-point rescale (reference Scaler, processors.py:168-195):
@@ -85,13 +98,17 @@ final case class DummyProcessor() extends Processor {
 }
 
 /** Overlapping frames + window function, 1-D → 2-D (reference Framing,
-  * processors.py:198-261). Entirely codegen'd HOF expressions — the frame
-  * length/step derive from `fs` (info.fs or time_step), the window vector
-  * is generated in-expression so per-row sample rates work.
+  * processors.py:198-261). The frame length and step derive from the
+  * per-row sample rate (1 / info.time_step, else info.fs), so rows at
+  * different rates frame correctly.
   *
-  * frame_length = round(windowsize*fs); step = round(stepsize*fs);
+  * frame_length = round(windowsize*fs); step = round(stepsize*fs), both
+  * rounded HALF_UP on the decimal form like Spark's `round`;
   * num_frames = floor((len - flen)/step) + 1; each frame multiplied by a
-  * periodic window (reference Windowing with fftbins=True).
+  * periodic window ([[Dsp.window]], the reference's Windowing with
+  * fftbins=True). A signal shorter than one frame yields zero frames (the
+  * reference asserts num_frames > 0, processors.py:242); a null signal or
+  * sample rate yields null.
   */
 final case class Framing(windowSize: Double, stepSize: Double,
     windowFunc: String = "hamming") extends Processor {
@@ -100,33 +117,20 @@ final case class Framing(windowSize: Double, stepSize: Double,
   override def params = Map("windowsize" -> windowSize.toString,
     "stepsize" -> stepSize.toString, "window_func" -> windowFunc)
 
-  private def windowExpr(n: Column): Column = windowFunc match {
-    case "hamming" => transform(sequence(lit(0), n - 1),
-      i => lit(0.54) - lit(0.46) * cos(lit(2 * math.Pi) * i / n))
-    case "hann" | "hanning" => transform(sequence(lit(0), n - 1),
-      i => lit(0.5) - lit(0.5) * cos(lit(2 * math.Pi) * i / n))
-    case "none" | "None" => transform(sequence(lit(0), n - 1), _ => lit(1.0))
-    case w => throw new IllegalArgumentException(s"window $w")
+  private def frames(x: Array[Double], fs: Double): Array[Array[Double]] = {
+    val flen = Dsp.roundHalfUp(windowSize * fs)
+    val step = Dsp.roundHalfUp(stepSize * fs)
+    require(flen > 0 && step > 0,
+      s"Framing at fs=$fs gives frame length $flen and step $step; both must be positive")
+    Dsp.frames(x, step, Dsp.window(windowFunc, flen))
   }
 
   def apply(data: Column, info: Column): (Column, Column) = {
+    Dsp.window(windowFunc, 0) // an unknown window name fails here, not in a task
     val fs = coalesce(lit(1.0) / info.getField("time_step"),
       info.getField("fs").cast("double"))
-    val flen = round(lit(windowSize) * fs).cast("int")
-    val step = round(lit(stepSize) * fs).cast("int")
-    val nFrames = greatest(lit(0),
-      (floor((size(data) - flen).cast("double") / step) + 1).cast("int"))
-    val win = windowExpr(flen)
-    // Signals shorter than one frame yield zero frames. Guarded because
-    // sequence(0, -1) produces [0, -1] (descending), which would emit two
-    // garbage frames; the reference instead asserts num_frames > 0
-    // (processors.py:242) — an empty 2-D cell is the non-fatal equivalent.
-    val frames = when(nFrames > 0,
-      transform(sequence(lit(0), nFrames - 1),
-        i => zip_with(slice(data, i * step + 1, flen), win, (a, b) => a * b)))
-      .otherwise(array().cast("array<array<double>>"))
-    val outInfo = Processor.withInfo(info, timeStep = Some(lit(stepSize)))
-    (frames, outInfo)
+    val out = ArrayOps.kernel(name, data, 1, Some(fs))(DspKernel.VecToRows(frames))
+    (out, Processor.withInfo(info, timeStep = Some(lit(stepSize))))
   }
 }
 
@@ -138,24 +142,14 @@ final case class WindowingProcessor(windowFunc: String = "hamming",
   def name = "Windowing"
   override def params = Map("window_func" -> windowFunc, "depth" -> depth.toString)
   def apply(data: Column, info: Column): (Column, Column) = {
-    def winApply(arr: Column): Column = {
-      val n = size(arr)
-      val win = windowFunc match {
-        case "hamming" => transform(sequence(lit(0), n - 1),
-          i => lit(0.54) - lit(0.46) * cos(lit(2 * math.Pi) * i / n))
-        case "hann" | "hanning" => transform(sequence(lit(0), n - 1),
-          i => lit(0.5) - lit(0.5) * cos(lit(2 * math.Pi) * i / n))
-        case "none" | "None" => null
-        case w => throw new IllegalArgumentException(s"window $w")
-      }
-      if (win == null) arr else zip_with(arr, win, (a, b) => a * b)
-    }
-    (ArrayOps.mapAtDepth(data, depth - 1, winApply), info)
+    Dsp.window(windowFunc, 0) // an unknown window name fails here, not in a task
+    (ArrayOps.kernel(name, data, math.max(depth, 1))(DspKernel.VecToVec(x =>
+      Dsp.applyWindow(x, Dsp.window(windowFunc, x.length)))), info)
   }
 }
 
 /** FFT over the innermost axis (reference FFT, processors.py:296-351).
-  * Hand-rolled Cooley–Tukey/Bluestein kernel ([[Dsp.fft]]) in a UDF;
+  * Hand-rolled Cooley–Tukey/Bluestein kernel ([[Dsp.fft]]) per vector;
   * nfft = nextpow2 (zero-pad) or original; output = magnitude | power |
   * split (re‖im) of the rfft bins. Sets info.nfft like the reference's
   * info dict.
@@ -168,10 +162,9 @@ final case class FFTProcessor(format: String = "magnitude",
   override def params = Map("format" -> format, "nfft" -> nfftMode,
     "dc_reset" -> dcReset.toString, "depth" -> depth.toString)
 
-  private def kernel(x: Seq[Double]): Seq[Double] = {
-    val arr = x.toArray
-    val nfft = if (nfftMode == "nextpow2") Dsp.nextPow2(arr.length) else arr.length
-    val (re, im) = Dsp.rfft(arr, nfft)
+  private def spectrum(x: Array[Double]): Array[Double] = {
+    val nfft = if (nfftMode == "nextpow2") Dsp.nextPow2(x.length) else x.length
+    val (re, im) = Dsp.rfft(x, nfft)
     val out: Array[Double] = format match {
       case "magnitude" => Array.tabulate(re.length)(i => math.hypot(re(i), im(i)))
       case "power"     => Array.tabulate(re.length)(i => re(i) * re(i) + im(i) * im(i))
@@ -179,19 +172,14 @@ final case class FFTProcessor(format: String = "magnitude",
       case f => throw new IllegalArgumentException(s"FFT format $f")
     }
     if (dcReset) out(0) = 0.0
-    out.toSeq
+    out
   }
-  // UDFs can't run inside HOF lambdas, so the 2-D (per-frame) variant maps
-  // the frame axis inside one UDF call. Null-tolerant: a null cell (e.g.
-  // Framing without a sample rate) propagates as null rather than NPE.
-  private val u1 = udf((x: Seq[Double]) => if (x == null) null else kernel(x))
-  private val u2 = udf((frames: Seq[Seq[Double]]) =>
-    if (frames == null) null else frames.map(f => if (f == null) null else kernel(f)))
 
   def apply(data: Column, info: Column): (Column, Column) = {
-    val out = if (depth <= 1) u1(data) else u2(data)
+    val out = ArrayOps.kernel(name, data, math.max(depth, 1))(DspKernel.VecToVec(spectrum))
     // nfft of the innermost axis; for depth=2 use the first frame's length
-    val innerLen = if (depth <= 1) size(data) else size(element_at(data, 1))
+    // (none for zero frames: nextpow2 then reports 1, like Dsp.nextPow2(0))
+    val innerLen = if (depth <= 1) size(data) else size(try_element_at(data, lit(1)))
     // The 1e-9 backoff keeps the metadata consistent with the kernel's
     // integer Dsp.nextPow2: at exact powers of two the double-precision
     // ln-ratio can land a hair above the integer (log2(2^29) =
@@ -206,8 +194,8 @@ final case class FFTProcessor(format: String = "magnitude",
 
 /** Mel/linear triangular filterbank (reference Filterbank,
   * processors.py:354-461). The matrix is built once on the driver
-  * ([[Dsp.filterbank]]) and closed over by the UDF — i.e. broadcast with
-  * the task closure; the per-row work is one mat-vec.
+  * ([[Dsp.filterbank]]) and closed over by the kernel — i.e. shipped with
+  * the task closure; the per-vector work is one mat-vec.
   */
 final case class Filterbank(nBands: Int, scale: String = "mel",
     fs: Int = 16000, nfft: Int = 512, fmin: Double = 0.0,
@@ -220,36 +208,36 @@ final case class Filterbank(nBands: Int, scale: String = "mel",
     "fmax" -> fmax.toString, "depth" -> depth.toString) ++
     norm.map("norm" -> _)
   private val fbank = Dsp.filterbank(nBands, nfft, fs, scale, fmin, fmax, norm)
-  private val u1 = udf((x: Seq[Double]) => Dsp.applyFilterbank(x.toArray, fbank).toSeq)
-  private val u2 = udf((frames: Seq[Seq[Double]]) =>
-    frames.map(f => Dsp.applyFilterbank(f.toArray, fbank).toSeq))
+  private val support = Some(Dsp.bandSupport(fbank))
   def apply(data: Column, info: Column): (Column, Column) =
-    (if (depth <= 1) u1(data) else u2(data), info)
+    (ArrayOps.kernel(name, data, math.max(depth, 1))(
+      DspKernel.VecToVec(Dsp.applyFilterbank(_, fbank, support))), info)
 }
 
 /** Per-cell aggregation over the frame axis (reference Aggregation,
   * processors.py:483-520): mean/std/kurtosis of each column across frames,
-  * stats concatenated (combine="concatenate").
+  * stats concatenated (combine="concatenate"). Zero frames aggregate to
+  * an empty array.
   */
 final case class AggregationProcessor(methods: Seq[String]) extends Processor {
   def name = "Aggregation"
   override def outputDepth = 1
   override def params = Map("methods" -> methods.mkString(","))
-  private val u = udf((frames: Seq[Seq[Double]]) => {
-    if (frames.isEmpty) Seq.empty[Double]
+  private val stats: Seq[Array[Double] => Double] = methods.map {
+    case "mean"     => Dsp.mean _
+    case "std"      => Dsp.std _
+    case "kurtosis" => Dsp.kurtosis _
+    case m => throw new IllegalArgumentException(s"Aggregation method $m")
+  }
+  private def aggregate(frames: Array[Array[Double]]): Array[Double] =
+    if (frames.isEmpty) Array.empty[Double]
     else {
-      val nCols = frames.head.length
-      val cols = Array.tabulate(nCols)(j => frames.map(_(j)).toArray)
-      methods.flatMap {
-        case "mean"     => cols.map(Dsp.mean)
-        case "std"      => cols.map(Dsp.std)
-        case "kurtosis" => cols.map(Dsp.kurtosis)
-        case m => throw new IllegalArgumentException(s"Aggregation method $m")
-      }
+      val cols = Array.tabulate(frames.head.length)(j => frames.map(_(j)))
+      stats.flatMap(f => cols.map(f)).toArray
     }
-  })
   def apply(data: Column, info: Column): (Column, Column) =
-    (u(data), Processor.withInfo(info, timeStep = Some(lit(0.0))))
+    (ArrayOps.kernel(name, data, 2)(DspKernel.RowsToVec(aggregate)),
+      Processor.withInfo(info, timeStep = Some(lit(0.0))))
 }
 
 /** Fitted normalizer (reference Normalizer, processors.py:93-165).
@@ -325,8 +313,8 @@ final case class FIRFilter(filterType: String, f: Double, taps: Int = 101,
     case "bandstop" => Dsp.firwin(taps, Array(f, f2), fs, passZero = true, window)
     case t => throw new IllegalArgumentException(s"FIRFilter type $t")
   }
-  private val u = udf((x: Seq[Double]) => Dsp.lfilter(coeffs, x.toArray).toSeq)
-  def apply(data: Column, info: Column) = (u(data), info)
+  def apply(data: Column, info: Column) =
+    (ArrayOps.kernel(name, data, 1)(DspKernel.VecToVec(Dsp.lfilter(coeffs, _))), info)
 }
 
 /** FFT-domain resample (reference Resample, processors.py:578-600):
@@ -335,13 +323,9 @@ final case class FIRFilter(filterType: String, f: Double, taps: Int = 101,
 final case class Resample(targetFs: Int, srcFs: Int = 16000) extends Processor {
   def name = "Resample"
   override def params = Map("target_fs" -> targetFs.toString, "src_fs" -> srcFs.toString)
-  private val tf = targetFs
-  private val sf = srcFs
-  private val u = udf((x: Seq[Double]) => {
-    val num = math.round(tf.toDouble / sf * x.length).toInt
-    Dsp.resample(x.toArray, num).toSeq
-  })
+  private def resample(x: Array[Double]): Array[Double] =
+    Dsp.resample(x, math.round(targetFs.toDouble / srcFs * x.length).toInt)
   def apply(data: Column, info: Column) =
-    (u(data), Processor.withInfo(info,
+    (ArrayOps.kernel(name, data, 1)(DspKernel.VecToVec(resample)), Processor.withInfo(info,
       fs = Some(lit(targetFs)), timeStep = Some(lit(1.0 / targetFs))))
 }

@@ -34,7 +34,7 @@ object Features {
     } catch { case _: Throwable => false }
     if (!exists) {
       val info = infoCol.map(col).getOrElse(Processor.emptyInfo)
-      val fitted = chain.fit(ds.df, dataCol)
+      val fitted = chain.fit(ds.df, dataCol, info)
       val (feat, featInfo) = fitted(col(dataCol), info)
       ds.df.select(col(DabDataset.IdxCol), feat.as(newKey), featInfo.as(s"${newKey}_info"))
         .write.mode(if (overwrite) "overwrite" else "ignore").parquet(featPath)

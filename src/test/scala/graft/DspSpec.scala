@@ -74,6 +74,23 @@ class DspSpec extends AnyFunSuite {
     fb.foreach(row => assert(math.abs(row.max - 1.0) < 1e-12))
   }
 
+  test("filterbank over band support == dense product, bit for bit, incl. non-finite frames") {
+    val fb = Dsp.filterbank(nBands = 12, nfft = 256, fs = 8000, scale = "mel", norm = Some("slaney"))
+    val support = Some(Dsp.bandSupport(fb))
+    val rnd = new scala.util.Random(5)
+    val frames = Seq.fill(50)(Array.fill(129)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(9) - 4))) ++
+      Seq(Array.fill(129)(-0.0), Array.fill(100)(1.0),
+        Array.tabulate(129)(i => if (i == 128) Double.PositiveInfinity else 1.0),
+        Array.tabulate(129)(i => if (i == 0) Double.NaN else 0.0))
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    for (f <- frames)
+      assert(bits(Dsp.applyFilterbank(f, fb, support)) == bits(Dsp.applyFilterbank(f, fb)))
+    // an Inf outside a band's support still turns that band NaN, as 0·Inf does
+    val out = Dsp.applyFilterbank(frames(52), fb, support)
+    val outside = fb.indices.filter(m => fb(m)(128) == 0.0)
+    assert(outside.nonEmpty && outside.forall(m => out(m).isNaN))
+  }
+
   test("lowpass firwin has unity DC gain, highpass unity Nyquist gain") {
     val lp = Dsp.firwin(31, Array(100.0), fs = 1000, passZero = true)
     assert(math.abs(lp.sum - 1.0) < 1e-9)

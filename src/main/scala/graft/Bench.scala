@@ -209,7 +209,15 @@ object Bench {
       (parts(0).toDouble, parts(1).toDouble)
     } catch { case _: Throwable => (-1.0, -1.0) }
 
+  /** "315" for q315_ivf_probe_plan: the key of the short stdout lines. */
+  private def numericId(name: String): String = name.drop(1).takeWhile(_.isDigit)
+
   def main(args: Array[String]): Unit = {
+    // the short stdout lines key queries by numeric id, so two headline
+    // queries sharing one would silently merge their seconds
+    val ids = headline.map(numericId)
+    require(ids.distinct.size == ids.size,
+      s"headline numeric ids collide: ${ids.diff(ids.distinct).mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // environment snapshot BEFORE Spark starts: ambient load + a
     // single-thread fixed-work loop time (see calibMs) so a judge can
@@ -308,6 +316,8 @@ object Bench {
     // around: the total covers only clean runs and "failed" names the rest
     val failedNames = results.collect { case (k, med, _, _, _) if med < 0 => "\"" + k + "\"" }
     val failedJson = failedNames.mkString("[", ",", "]")
+    val failedIdJson = results.collect { case (k, med, _, _, _) if med < 0 =>
+      "\"" + numericId(k) + "\"" }.mkString("[", ",", "]")
     // A subset re-baseline must never masquerade as a full-board record:
     // it rides "subset":true AND "complete":false in every emitted
     // variant, so a 1-query run can't overwrite the committed headline
@@ -336,26 +346,27 @@ object Bench {
     // self-trimming, ITERATIVE (r11 ADVICE: the env-stripped fallback
     // was itself one growth step from overflowing): try progressively
     // smaller lines until one fits the driver's 2000-char tail capture.
-    // The last variant is O(1)-sized, so the require can never fire —
-    // it exists to fail loudly at run time if an edit breaks that.
+    // The last variant is bounded (at most 113 numeric failed ids, ~0.9k
+    // chars), so the require can never fire — it exists to fail loudly
+    // at run time if an edit breaks that.
     //
     // Variant 3 (NEW r19, the r18 verdict's #2): the full 113-query map
     // with long names (~3.2k chars) never fit, so the driver's per-query
     // and scaling comparisons ran empty both optimization rounds
     // (PERF_r18 per_query: {}). This variant keys each query by its
-    // NUMERIC id ("315" for q315_ivf_probe_plan — ids are unique across
-    // the board) at 2 decimals: ~1.3k chars for 113 queries, fits the
+    // NUMERIC id ("315" for q315_ivf_probe_plan — main requires them
+    // unique) at 2 decimals: ~1.3k chars for 113 queries, fits the
     // capture with headroom. Full names + min/raw/ticks stay in
     // bench_last.json; this is a measurement-path fix only — no query
     // was removed or renamed (the id is a 1:1 projection of the name).
     val qIdJson = results.map { case (k, med, _, _, _) =>
-      "\"" + k.drop(1).takeWhile(_.isDigit) + f"\":$med%.2f" }
+      "\"" + numericId(k) + f"\":$med%.2f" }
       .mkString("{", ",", "}")
     val candidates = Seq(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"failed":$failedJson,"env":$envJson,"queries":$qJson,"sf":"$sfDir"}""",
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"failed":$failedJson,$calibJson,"env":"see bench_last.json","queries":$qJson,"sf":"$sfDir"}""",
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"n_failed":${failedNames.size},$calibJson,"env":"see bench_last.json","queries":$qIdJson,"queries_by":"numeric id; names in bench_last.json","n_queries":${results.size},"sf":"$sfDir"}""",
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"n_failed":${failedNames.size},$calibJson,"env":"see bench_last.json","queries":"see bench_last.json","n_queries":${results.size},"sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"failed":$failedIdJson,$calibJson,"env":"see bench_last.json","queries":$qIdJson,"queries_by":"numeric id; names in bench_last.json","n_queries":${results.size},"sf":"$sfDir"}""",
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"stat":"median","complete":$completeJson,"subset":$isSubset,"failed":$failedIdJson,$calibJson,"env":"see bench_last.json","queries":"see bench_last.json","n_queries":${results.size},"sf":"$sfDir"}""")
     val stdoutLine = candidates.find(_.length <= 1950).getOrElse(
       throw new IllegalStateException(
         s"bench stdout minimal variant is ${candidates.last.length} chars > 1950"))

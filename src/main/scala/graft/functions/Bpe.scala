@@ -4,6 +4,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Dedup
 
 /** Loadable byte-pair-encoding tokenizer: the GPT-2-style merge walk
   * over a merges table that ships as a tiny sidecar file (the public
@@ -69,7 +70,8 @@ object Bpe {
     *
     * Scale: per-iteration cost is one vocab-sized aggregation + a
     * top-1 TakeOrdered collect (bounded), with the rewritten dictionary
-    * `localCheckpoint`ed so plans don't nest across iterations. The
+    * materialized ([[graft.operators.Dedup.materialize]]) so plans
+    * don't nest across iterations. The
     * published 30k–50k-merge trainings prune the dictionary first
     * (drop rare words — `minWordCount`, the standard knob: a 100 TB
     * corpus has a long hapax tail of noise that contributes nothing to
@@ -112,16 +114,15 @@ object Bpe {
       minCount: Long = 1, textCol: String = "text",
       minWordCount: Long = 1): Seq[(String, String, Long)] = {
     require(nMerges > 0, s"nMerges $nMerges must be > 0")
-    // LAZY checkpoints throughout: each iteration's rewrite materializes
-    // as a by-product of the NEXT iteration's pair-count job (one Spark
-    // job per merge instead of two); the previous table is freed only
-    // after its successor has materialized.
-    var vocab = docs
+    // LAZY materialization throughout: each iteration's rewrite
+    // materializes as a by-product of the NEXT iteration's pair-count
+    // job (one Spark job per merge instead of two); the previous table
+    // is released only after its successor has materialized.
+    var vocab = Dedup.materialize(docs
       .select(explode(graft.operators.TextAnalysis.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minWordCount)
-      .select(split(col("w"), "").as("syms"), col("cnt"))
-      .localCheckpoint(eager = false)
+      .select(split(col("w"), "").as("syms"), col("cnt")))
     val nVocab = vocab.count()
     if (nVocab <= trainDriverMaxVocab) {
       // bounded-dictionary driver fast path: same greedy algorithm,
@@ -130,7 +131,7 @@ object Bpe {
       // merge round.
       var dict = vocab.collect().map(r =>
         (r.getSeq[String](0).toArray, r.getLong(1)))
-      vocab.unpersist()
+      Dedup.releaseStage(vocab)
       val learned =
         scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
       var stop = false
@@ -192,7 +193,8 @@ object Bpe {
         .agg(sum("cnt").as("pc"))
         .orderBy(col("pc").desc, col("l"), col("r"))
         .limit(1).collect()
-      prev.foreach(_.unpersist()) // vocab just materialized; its parent can go
+      // vocab just materialized; its parent can go
+      prev.foreach(Dedup.releaseStage)
       prev = Some(vocab)
       if (best.isEmpty || best(0).getLong(2) < minCount) stop = true
       else {
@@ -202,7 +204,7 @@ object Bpe {
         // after a fuse the accumulator tail is "lr" != l (strictly
         // longer), so overlapping matches resolve exactly as the
         // left-to-right scan of the paper
-        vocab = vocab.select(
+        vocab = Dedup.materialize(vocab.select(
           aggregate(
             slice(col("syms"), lit(2), size(col("syms")) - 1),
             array(element_at(col("syms"), 1)),
@@ -210,10 +212,12 @@ object Bpe {
               element_at(acc, -1) === lit(l) && x === lit(r),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
               .otherwise(concat(acc, array(x)))).as("syms"),
-          col("cnt")).localCheckpoint(eager = false)
+          col("cnt")))
       }
     }
-    vocab.unpersist() // the loop's working table; intermediates already freed
+    // the loop's working tables: the last one read, and its never-read
+    // successor when the loop ran out of merges
+    (prev.toSeq :+ vocab).foreach(Dedup.releaseStage)
     learned.toSeq
   }
 

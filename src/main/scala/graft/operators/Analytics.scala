@@ -461,12 +461,11 @@ object Analytics {
 
   def ksDrift(df: DataFrame, valueCol: String, isSample2: Column,
       numBuckets: Int = 32): DataFrame = {
-    val perV = Dedup.tracked(
+    val perV = Dedup.materialize(
       df.select(col(valueCol).as("_v"),
           when(isSample2, 1L).otherwise(0L).as("_f"))
         .groupBy("_v")
-        .agg(sum(lit(1L) - col("_f")).as("_c1"), sum(col("_f")).as("_c2"))
-        .localCheckpoint(eager = false))
+        .agg(sum(lit(1L) - col("_f")).as("_c1"), sum(col("_f")).as("_c2")))
     val b = perV.withColumn("_b",
       Ranking.bucketCol("_v", Ranking.rangeCuts(perV, "_v", numBuckets)))
     val cnt = b.groupBy("_b")
@@ -670,10 +669,9 @@ object Analytics {
       .agg(max(when(col(typeCol) =!= convType, 1).otherwise(0)).as("_t"))
       .filter(col("_t") === 0)
       .select(lit(START).as("src"), lit(CONV).as("dst"))
-    val counts = Dedup.tracked(
+    val counts = Dedup.materialize(
       mid.unionByName(startT).unionByName(lonely)
-        .groupBy("src", "dst").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = true))
+        .groupBy("src", "dst").agg(count(lit(1)).as("c")), eager = true)
     val rowSum = counts.groupBy("src").agg(sum("c").as("cs"))
     val channels = counts.select(col("src").as("ch"))
       .union(counts.select(col("dst")))
@@ -686,13 +684,12 @@ object Analytics {
     // scen is ≤|channels|+1 rows — broadcast it so the expansion plans
     // as BroadcastNestedLoopJoin, never CartesianProduct (plan-audit
     // gate: a cartesian repartitions BOTH sides at scale)
-    val edges = Dedup.tracked(broadcast(scen).crossJoin(counts)
+    val edges = Dedup.materialize(broadcast(scen).crossJoin(counts)
       .withColumn("_d",
         when(col("dst") === col("scenario"), lit(NUL)).otherwise(col("dst")))
       .groupBy(col("scenario"), col("src"), col("_d").as("dst"))
       .agg(sum("c").as("c"))
-      .join(rowSum, Seq("src"))
-      .localCheckpoint(eager = true))
+      .join(rowSum, Seq("src")), eager = true)
     val absorb = scen.select(col("scenario"), lit(CONV).as("state"),
       lit(scale).as("p"))
     var p = absorb
@@ -705,8 +702,7 @@ object Analytics {
         .agg(sum(expr(s"CAST(c AS $dec) * p")).as("_num"))
         .select(col("scenario"), col("src").as("state"),
           expr("CAST(_num DIV cs AS BIGINT)").as("p"))
-      p = Dedup.tracked(stepped.unionByName(absorb)
-        .localCheckpoint(eager = true))
+      p = Dedup.materialize(stepped.unionByName(absorb), eager = true)
     }
     val pStart = p.filter(col("state") === START)
     val pFull = pStart.filter(col("scenario") === FULL)
@@ -1600,8 +1596,8 @@ object Analytics {
     val p = Dedup.materialize(cells
       .withColumn("_tot", sum("n").over(wtot))
       .withColumn("pq", expr(
-        "CAST((CAST(n AS DECIMAL(38,0)) * 1000000000) DIV _tot" +
-          " AS BIGINT)"))
+        "CAST((CAST(n AS DECIMAL(38,0)) * 1000000000)" +
+          " DIV nullif(_tot, 0) AS BIGINT)"))
       .select("src", "dst", "pq"))
     val states = Dedup.materialize(
       cells.select(col("src").as("s"))
@@ -2109,7 +2105,7 @@ object Analytics {
       .withColumn("rank", row_number().over(wr).cast("long"))
       .filter(col("rank") <= k)
       .withColumn("prob_q9",
-        expr("(CAST(n AS DECIMAL(38,0)) * 1000000000) DIV _tot"))
+        expr("(CAST(n AS DECIMAL(38,0)) * 1000000000) DIV nullif(_tot, 0)"))
       .select(col("src"), col("rank"), col("dst"), col("n"),
         col("prob_q9"))
   }

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators over a document table
@@ -22,65 +24,80 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Lifecycle for the checkpoint blocks a pipeline materializes
-    * ([[capBuckets]]'s signature tables, [[clusterPairs]]'s per-round
-    * results, [[Ranking]]/[[Packing]]'s bucketed projections). Without it
-    * the blocks live until the plans are GC'd and the ContextCleaner runs
-    * — correct, but operationally sharp in a long-lived session composing
-    * many pipelines. [[withPipeline]] scopes a run and frees ONLY the
-    * blocks registered inside that scope on exit — the registry is a
-    * per-thread stack of scopes, so nested `withPipeline` calls and
-    * pipelines built concurrently on other driver threads never release
-    * each other's blocks. [[releaseCheckpoints]] is the explicit form:
-    * it drains the calling thread's innermost open scope.
+  /** Stage lifecycle: the engine's one way to materialize a stage and
+    * its only ways to free one.
     *
-    * Scoping is thread-local because registration happens at
-    * plan-CONSTRUCTION time (building the DataFrame), which runs on the
-    * caller's thread; a plan built inside the scope and executed later
-    * from another thread is still owned by the scope that built it.
+    * [[materialize]] is a local checkpoint (lineage truncated, blocks on
+    * the executors) registered with the calling thread's innermost
+    * pipeline scope. `eager = true` runs the whole stage now, so the
+    * returned table's rows already exist. `eager = false` (the default)
+    * adds no job for the stage's last step: the first action that reads
+    * the stage computes it and populates the blocks every later reader
+    * shares. (Under adaptive execution, building a stage still runs the
+    * shuffle stages that feed it.)
     *
-    * Contract: MATERIALIZE results inside the scope (collect/write/count)
-    * — a local checkpoint truncates lineage, so a lazy DataFrame that
-    * escapes the scope cannot recompute its freed blocks.
+    * What frees the blocks:
+    *  - [[withPipeline]] exit frees every stage materialized inside the
+    *    scope. The registry is a per-thread stack of scopes, so nested
+    *    scopes and pipelines built on other driver threads never free
+    *    each other's blocks. Registration happens when the plan is
+    *    BUILT, on the caller's thread.
+    *  - [[releaseStage]] frees one stage early, for bounded round loops,
+    *    once an action has populated the stage that supersedes it.
+    *  - Outside any scope, the ContextCleaner frees a stage once the
+    *    plans that read it are garbage-collected.
+    *
+    * Contract: consume results (collect/write/count) inside the scope. A
+    * local checkpoint has no lineage, so a lazy DataFrame that escapes
+    * the scope cannot recompute its freed blocks.
     */
-  private val checkpointScopes =
-    new ThreadLocal[java.util.ArrayDeque[
-        java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]]] {
-      override def initialValue() = {
-        val d = new java.util.ArrayDeque[
-          java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]]()
-        d.push(new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()) // root scope
-        d
-      }
-    }
-
-  /** Register a localCheckpoint'd Dataset's backing RDD for release by
-    * the calling thread's innermost open scope.
-    */
-  private[operators] def tracked(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        checkpointScopes.get().peek().push(lr.rdd)
-      case _ => ()
-    }
-    df
+  private type Scope = java.util.ArrayDeque[RDD[_]]
+  private val openScopes = new ThreadLocal[java.util.ArrayDeque[Scope]] {
+    override def initialValue() = new java.util.ArrayDeque[Scope]()
   }
 
-  /** Materialize a pipeline stage (lazy local checkpoint, registered
-    * with the calling thread's checkpoint scope for cleanup): the
-    * stage-boundary idiom for composed curation chains. Each keep-stage
-    * built as `df ⋉ keys(df)` doubles its input's lineage — chaining k
-    * stages unboxed re-scans the base table 2^k times; a materialize
+  /** Materialize a pipeline stage (see the lifecycle note above). Also
+    * the stage-boundary idiom for composed curation chains: each
+    * keep-stage built as `df ⋉ keys(df)` doubles its input's lineage, so
+    * k unboxed stages re-scan the base table 2^k times; a materialize
     * between stages caps every stage at one scan of the previous
     * stage's (already filtered, smaller) output.
     */
-  def materialize(df: DataFrame): DataFrame =
-    tracked(df.localCheckpoint(eager = false))
+  def materialize(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val mat = df.localCheckpoint(eager)
+    val scope = openScopes.get().peek() // null outside any scope
+    mat.queryExecution.analyzed match {
+      case lr: LogicalRDD if scope != null => scope.push(lr.rdd)
+      case _ => ()
+    }
+    mat
+  }
 
-  /** Free every checkpoint block registered in the calling thread's
-    * innermost open scope since it opened (or since the last release).
+  /** Free ONE materialized stage's blocks now: round k's output
+    * supersedes round k−1's, so a loop frees the predecessor once an
+    * ACTION has populated the successor (never before: the successor's
+    * plan reads the predecessor's blocks). Keeps a k-round loop at ≤2
+    * live stages instead of k. Harmless double-free with the scope exit.
     */
-  def releaseCheckpoints(): Unit = drain(checkpointScopes.get().peek())
+  def releaseStage(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD =>
+      lr.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
+  private def drain(q: Scope): Unit = {
+    var r = q.poll()
+    while (r != null) { r.unpersist(blocking = false); r = q.poll() }
+  }
+
+  /** Run a pipeline in a fresh scope and free (only) the stages
+    * materialized inside it on exit.
+    */
+  def withPipeline[T](body: => T): T = {
+    val scopes = openScopes.get()
+    scopes.push(new Scope())
+    try body finally drain(scopes.pop())
+  }
 
   /** Scale-adaptive scan-parallelism guard (guide §2.5 "input skew: one
     * huge unsplittable file → repartition immediately after the read"):
@@ -106,35 +123,6 @@ object Dedup {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val p = df.rdd.getNumPartitions
     if (p > 0 && p < target) df.repartition(target) else df
-  }
-
-  /** Eagerly free ONE materialized stage's checkpoint blocks — the
-    * bounded-round-loop companion to the scope-exit release: round k's
-    * materialized output supersedes round k−1's, so the loop frees the
-    * predecessor as soon as an ACTION has populated the successor's
-    * blocks (localCheckpoint truncates lineage, so the predecessor must
-    * stay persisted until then — never before). Keeps a k-round loop at
-    * ≤2 live corpus-sized blocks instead of k. Harmless double-free
-    * with the scope drain.
-    */
-  def releaseStage(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
-    case _ => ()
-  }
-
-  private def drain(q: java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]): Unit = {
-    var r = q.poll()
-    while (r != null) { r.unpersist(blocking = false); r = q.poll() }
-  }
-
-  /** Run a pipeline in a fresh checkpoint scope and free (only) the
-    * blocks that scope created on exit.
-    */
-  def withPipeline[T](body: => T): T = {
-    val scopes = checkpointScopes.get()
-    scopes.push(new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]())
-    try body finally drain(scopes.pop())
   }
 
   /** Exact duplicate groups by content digest. Returns one row per kept
@@ -329,7 +317,7 @@ object Dedup {
     * Hot buckets are near-identical content anyway — they surface through
     * the other bands or exact dedup.
     *
-    * Shape: the bucket table is materialized once (`localCheckpoint` —
+    * Shape: the bucket table is materialized once ([[materialize]] —
     * the hash kernels upstream must not re-run per consumer), then
     * partial-aggregated counts (map-side combine shrinks them to
     * ~#distinct buckets) feed a blacklist holding only the over-cap
@@ -352,9 +340,8 @@ object Dedup {
     // Lazy checkpoint: materializes on the FIRST action that touches the
     // result (building the candidate DataFrame stays free), after which the
     // two consumers (blacklist agg + anti-join) share the one materialized
-    // copy. Blocks are freed by Dedup.withPipeline/releaseCheckpoints, or
-    // (default) by plan GC + ContextCleaner.
-    val mat = tracked(df.localCheckpoint(eager = false))
+    // copy.
+    val mat = materialize(df)
     val hot = mat.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_bsz"))
       .filter(col("_bsz") > cap)
@@ -490,10 +477,10 @@ object Dedup {
     // unmaterialized signature kernel would run once per side and once
     // for the skew count). The checkpointed table is compact (ids +
     // 64-int signatures + band keys) — the classic LSH signature-matrix
-    // materialization. localCheckpoint trades fault-tolerance for speed
-    // (executor loss fails the job); on preemptible clusters swap for
-    // persist(MEMORY_AND_DISK_2) or a reliable checkpoint dir — same
-    // plan shape either way.
+    // materialization. A local checkpoint trades fault-tolerance for
+    // speed (executor loss fails the job); on preemptible clusters swap
+    // [[materialize]]'s one checkpoint call for persist(MEMORY_AND_DISK_2)
+    // or a reliable checkpoint dir — same plan shape either way.
     val buckets = capBuckets(allBuckets, maxBucket, "band", "bucket")
     val pairs = buckets.as("a").join(buckets.as("b"),
         col("a.band") === col("b.band") &&
@@ -907,7 +894,7 @@ object Dedup {
     *    rounds, each one join + one agg + one self-join on the (small)
     *    label table.
     *
-    * Every round materializes through `localCheckpoint()` so lineage stays
+    * Every round goes through [[materialize]] (eager) so lineage stays
     * flat across iterations (no re-execution stack at scale), and the
     * convergence probe reads the already-materialized result instead of
     * recomputing the round's join.
@@ -981,9 +968,11 @@ object Dedup {
           .select(col("id").cast(idType), col("cluster_id").cast(idType))
       }
     }
-    val edges = tracked(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()) // reused by every round — materialize once
+    // reused by every round — materialize once
+    val edges = materialize(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      eager = true)
     // Checkpointed tables carry no size stats, so every round's joins
     // plan as sort-merge without a hint. The label table is bounded by
     // the edge-endpoint count, which is EXACT here (edges are already
@@ -1023,12 +1012,12 @@ object Dedup {
       // shortcut: follow the label's own label (labels are node ids, so
       // every mid_cid has a row); this is the pointer-doubling step
       val parents = stepped.select(col("id").as("pid"), col("mid_cid").as("p_label"))
-      val updated = tracked(
+      val updated = materialize(
         stepped.join(hinted(parents), stepped("mid_cid") === parents("pid"), "left")
           .select(col("id"), col("old_cid"),
             least(col("mid_cid"), coalesce(col("p_label"), col("mid_cid")))
-              .as("cluster_id"))
-          .localCheckpoint()) // eager: one job materializes the round
+              .as("cluster_id")),
+        eager = true) // one job materializes the round
       val changed = updated
         .filter(col("cluster_id") =!= col("old_cid")).limit(1).count()
       labels = updated.select("id", "cluster_id")
@@ -1309,7 +1298,7 @@ object Dedup {
     * a global funnel), span merge is the per-doc gaps-and-islands pass,
     * and the rebuild is one row-local array filter against the doc's
     * merged span list (collected per doc — bounded by words/1). The
-    * tokenized corpus is materialized once (lazy localCheckpoint) and
+    * tokenized corpus is materialized once (lazy [[materialize]]) and
     * shared by the window pass and the rebuild.
     *
     * Output: (idCol, clean_text, n_words_in, n_words_kept).
@@ -1317,11 +1306,10 @@ object Dedup {
   def removeDuplicateSpans(docs: DataFrame, window: Int = 10,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    val base = tracked(docs
+    val base = materialize(docs
       .select(col(idCol),
         coalesce(graft.operators.TextAnalysis.words(col(textCol)), array())
-          .as("_ws"))
-      .localCheckpoint(eager = false))
+          .as("_ws")))
     val wins = base.filter(size(col("_ws")) >= window)
       .select(col(idCol), posexplode(
         transform(sequence(lit(0), size(col("_ws")) - window),

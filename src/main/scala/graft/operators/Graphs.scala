@@ -28,8 +28,8 @@ object Graphs {
     * relation — comfortably inside default executor memory on a real
     * cluster. (The previous 5·10⁷ gate was ~800 MB serialized — fine
     * at local[32]/128 GiB, marginal against default driver/executor
-    * limits.) Above the gate the cached src-partitioning carries the
-    * join; GraphsSpec pins the fallback path to the same results.
+    * limits.) Above the gate the rounds join by shuffle; GraphsSpec
+    * pins the fallback path to the same results.
     * Mutable ONLY so that spec can force the fallback on a small graph.
     */
   private[graft] var broadcastScoreMaxNodes: Long = 10000000L
@@ -159,11 +159,10 @@ object Graphs {
     */
   def triangleCount(edges: DataFrame,
       broadcastMaxEdges: Long = 5000000L): DataFrame = {
-    val und = Dedup.tracked(
+    val und = Dedup.materialize(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(eager = false))
+        .filter(col("a") =!= col("b")).distinct())
     val m = und.count()
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
@@ -280,18 +279,17 @@ object Graphs {
       scale: Long = 1000000000000L, dampPct: Int = 85,
       maxNbrsPerRow: Int = 8192): DataFrame = {
     val c = maxNbrsPerRow
-    val e = edges.select(col("src"), col("dst"), col("weight"))
+    val e = Dedup.materialize(edges
+      .select(col("src"), col("dst"), col("weight"))
       .groupBy("src").agg(
         sum("weight").as("wdeg"),
         collect_list(struct(col("dst"), col("weight").as("w"))).as("_all"))
       .select(col("src"), col("wdeg"),
         posexplode(expr(
           s"transform(sequence(0, (size(_all)-1) div $c)," +
-            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs")))
-      .cache()
-    // nodes are a pure projection of the CACHED adjacency — no
-    // separate eager checkpoint (r19, the pageRankInt symmetric fix;
-    // weighted edges are symmetric-caller-only in this engine)
+            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
+    // weighted edges are symmetric-caller-only in this engine, so the
+    // nodes are exactly the chunk-0 adjacency rows
     val nodes = e.filter(col("_chunk") === 0).select(col("src").as("node"))
     val n = nodes.count()
     require(n > 0, "empty graph")
@@ -306,13 +304,9 @@ object Graphs {
         .select(col("_nb.dst").as("node"),
           expr(s"(score * $dampPct * _nb.w) div (wdeg * 100)").as("_c"))
         .groupBy("node").agg(sum("_c").as("_cs"))
-      // lazy checkpoint (r19): materializes inside the next round's
-      // broadcast build / final readout, not a dedicated job per round
-      scores = Dedup.tracked(
-        contrib.select(col("node"), (lit(base) + col("_cs")).as("score"))
-          .localCheckpoint(eager = false))
+      scores = Dedup.materialize(
+        contrib.select(col("node"), (lit(base) + col("_cs")).as("score")))
     }
-    e.unpersist(blocking = false)
     scores
   }
 
@@ -330,22 +324,19 @@ object Graphs {
     * than a node's neighbour-label set.
     */
   def labelPropagate(edges: DataFrame, rounds: Int = 2): DataFrame = {
-    val e = Dedup.tracked(
-      edges.select(col("src"), col("dst")).distinct()
-        .localCheckpoint(eager = true))
-    var labels = Dedup.tracked(
+    val e = Dedup.materialize(
+      edges.select(col("src"), col("dst")).distinct(), eager = true)
+    var labels = Dedup.materialize(
       e.select(col("src").as("node")).union(e.select(col("dst")))
-        .distinct().withColumn("lab", col("node"))
-        .localCheckpoint(eager = true))
+        .distinct().withColumn("lab", col("node")), eager = true)
     for (_ <- 1 to rounds) {
-      labels = Dedup.tracked(
+      labels = Dedup.materialize(
         e.join(labels.select(col("node").as("dst"), col("lab")), Seq("dst"))
           .groupBy(col("src").as("node"), col("lab"))
           .agg(count(lit(1)).as("_c"))
           .groupBy("node")
           .agg(max(struct(col("_c"), (-col("lab")).as("_nl"))).as("_m"))
-          .select(col("node"), (-col("_m._nl")).as("lab"))
-          .localCheckpoint(eager = true))
+          .select(col("node"), (-col("_m._nl")).as("lab")), eager = true)
     }
     labels.select(col("node"), col("lab").as("community"))
   }
@@ -421,12 +412,12 @@ object Graphs {
     */
   def hitsInt(edges: DataFrame, rounds: Int = 2,
       scale: Long = 1000000L): DataFrame = {
-    val e = Dedup.tracked(
+    val e = Dedup.materialize(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-        .distinct().localCheckpoint(eager = true))
-    val nodes = Dedup.tracked(
+        .distinct(), eager = true)
+    val nodes = Dedup.materialize(
       e.select(col("src").as("node")).union(e.select(col("dst")))
-        .distinct().localCheckpoint(eager = true))
+        .distinct(), eager = true)
     def maxNorm(df: DataFrame, c: String): DataFrame = {
       val mx = df.agg(max(col(c)).as("_mx"))
       // DIV, not decimal `/`: decimal division HALF_UP-rounds to its
@@ -443,10 +434,10 @@ object Graphs {
     for (_ <- 1 to rounds) {
       val aRaw = e.join(h.select(col("node").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("h").as("a"))
-      a = Dedup.tracked(maxNorm(aRaw, "a").localCheckpoint(eager = true))
+      a = Dedup.materialize(maxNorm(aRaw, "a"), eager = true)
       val hRaw = e.join(a.select(col("node").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum("a").as("h"))
-      h = Dedup.tracked(maxNorm(hRaw, "h").localCheckpoint(eager = true))
+      h = Dedup.materialize(maxNorm(hRaw, "h"), eager = true)
     }
     nodes
       .join(h.select(col("node"), col("h").as("hub_q6")), Seq("node"), "left")
@@ -463,24 +454,22 @@ object Graphs {
     *
     * Scale shape per round: one degree aggregation + two semi-joins on
     * node ids, every shuffle keyed on node/edge ids; the edge set only
-    * shrinks. Rounds materialize via localCheckpoint so round r's plan
+    * shrinks. Rounds go through Dedup.materialize so round r's plan
     * does not nest rounds 1..r−1.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
-    var und = Dedup.tracked(
+    var und = Dedup.materialize(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(eager = true))
+        .filter(col("a") =!= col("b")).distinct(), eager = true)
     for (_ <- 1 to rounds) {
       val keep = und.select(col("a").as("n"))
         .union(und.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("n")
-      und = Dedup.tracked(
+      und = Dedup.materialize(
         und.join(keep.select(col("n").as("a")), Seq("a"), "semi")
-          .join(keep.select(col("n").as("b")), Seq("b"), "semi")
-          .localCheckpoint(eager = true))
+          .join(keep.select(col("n").as("b")), Seq("b"), "semi"), eager = true)
     }
     und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -498,26 +487,24 @@ object Graphs {
     * Scale shape per round: one equi-join of the (typically shrinking)
     * frontier against the edge table + one anti-join against the
     * settled set, every shuffle keyed on node ids; rounds flatten
-    * through localCheckpoint so round r's plan never nests rounds
+    * through Dedup.materialize so round r's plan never nests rounds
     * 1..r−1. Output: (node, hops) for every node within `maxHops`.
     */
   def bfsHops(edges: DataFrame, sources: DataFrame = null,
       maxHops: Int = 3): DataFrame = {
-    val e = Dedup.tracked(edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true))
+    val e = Dedup.materialize(edges.select(col("src"), col("dst")).distinct(),
+      eager = true)
     val src0 = Option(sources).getOrElse(e.agg(min(col("src")).as("node")))
-    var dist = Dedup.tracked(src0.select(col("node")).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint(eager = true))
+    var dist = Dedup.materialize(src0.select(col("node")).distinct()
+      .withColumn("hops", lit(0L)), eager = true)
     var frontier = dist.select("node")
     for (h <- 1 to maxHops) {
-      val next = Dedup.tracked(
+      val next = Dedup.materialize(
         e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-          .join(dist.select("node"), Seq("node"), "anti")
-          .localCheckpoint(eager = true))
-      dist = Dedup.tracked(
-        dist.union(next.withColumn("hops", lit(h.toLong)))
-          .localCheckpoint(eager = true))
+          .join(dist.select("node"), Seq("node"), "anti"), eager = true)
+      dist = Dedup.materialize(
+        dist.union(next.withColumn("hops", lit(h.toLong))), eager = true)
       frontier = next
     }
     dist
@@ -534,7 +521,7 @@ object Graphs {
     *
     * Scale shape per round: one equi-join of the (shrinking) improved
     * frontier against the edge table + one per-node min — shuffles
-    * keyed on node ids only; rounds flatten through localCheckpoint.
+    * keyed on node ids only; rounds flatten through Dedup.materialize.
     * Only nodes whose label improved last round join this round
     * (contributions from unchanged labels were already applied), and
     * the result after r rounds equals the synchronous Bellman–Ford
@@ -542,13 +529,12 @@ object Graphs {
     */
   def ssspInt(edges: DataFrame, sources: DataFrame = null,
       rounds: Int = 3): DataFrame = {
-    val e = Dedup.tracked(edges
+    val e = Dedup.materialize(edges
       .select(col("src"), col("dst"), col("weight").cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .localCheckpoint(eager = true))
+      .groupBy("src", "dst").agg(min("w").as("w")), eager = true)
     val src0 = Option(sources).getOrElse(e.agg(min(col("src")).as("node")))
-    var dist = Dedup.tracked(src0.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(eager = true))
+    var dist = Dedup.materialize(src0.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)), eager = true)
     var frontier = dist
     // The frontier is materialized every round (its checkpoint blocks
     // are already populated), so its EXACT row count is a cheap cached
@@ -573,15 +559,14 @@ object Graphs {
       // per node the merge is least(dist, _nd) and "improved" is
       // exactly "_nd exists and beats the old dist" — the same label-
       // correcting frontier, one shuffle cheaper per round.
-      val merged = Dedup.tracked(dist
+      val merged = Dedup.materialize(dist
         .join(relax, Seq("node"), "full")
         .select(col("node"),
           when(col("dist").isNull || (col("_nd").isNotNull &&
             col("_nd") < col("dist")), col("_nd"))
             .otherwise(col("dist")).as("dist"),
           (col("dist").isNull || (col("_nd").isNotNull &&
-            col("_nd") < col("dist"))).as("_imp"))
-        .localCheckpoint(eager = true))
+            col("_nd") < col("dist"))).as("_imp")), eager = true)
       dist = merged.select("node", "dist")
       frontier = merged.filter(col("_imp")).select("node", "dist")
       if (r < rounds) frontierCount = frontier.count() // cached-block scan
@@ -608,12 +593,11 @@ object Graphs {
   def itemSimilarityTopK(df: DataFrame, groupCol: String, itemCol: String,
       k: Int = 3, maxGroup: Int = 1000,
       scale: Long = 1000000L): DataFrame = {
-    val sets = Dedup.tracked(
+    val sets = Dedup.materialize(
       df.select(col(groupCol).as("_g"), col(itemCol).as("_i"))
         .groupBy("_g").agg(collect_list("_i").as("_raw"))
         .filter(size(col("_raw")) <= maxGroup)
-        .select(array_distinct(col("_raw")).as("_is"))
-        .localCheckpoint(eager = false))
+        .select(array_distinct(col("_raw")).as("_is")))
     val pairs = sets.select(col("_is"), explode(col("_is")).as("src"))
       .select(col("src"), explode(col("_is")).as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -650,7 +634,7 @@ object Graphs {
     * long), nothing per-edge — scale posture unchanged.
     *
     * Output: (node, score) for every node. Edges + degrees materialize
-    * once (lazy localCheckpoint) and feed all rounds; each round is a
+    * once (lazy Dedup.materialize) and feed all rounds; each round is a
     * join on src (reusing the edge partitioning) + one groupBy dst.
     */
   def pageRankInt(edges: DataFrame, iters: Int = 3,
@@ -665,55 +649,52 @@ object Graphs {
     // degree hub becomes ~1.2k bounded rows, never one giant record).
     // This replaces the previous distinct + repartition + window-sort
     // pipeline (three exchanges and a sort) with a single hash-agg
-    // exchange; the cache keeps the groupBy's src hash-partitioning,
-    // so non-broadcast rounds still join scores without moving edges.
+    // exchange. The stage is lazy: the node count below populates it,
+    // and the pipeline scope (or plan GC) frees it after the rounds have
+    // run. Under adaptive execution the checkpoint does not declare the
+    // groupBy's src hash-partitioning, so a round that does not
+    // broadcast its scores shuffles the adjacency again.
     val c = maxNbrsPerRow
-    val e = edges.select("src", "dst")
+    val e = Dedup.materialize(edges.select("src", "dst")
       .groupBy("src").agg(collect_set("dst").as("_all"))
       .select(col("src"), size(col("_all")).as("deg"),
         posexplode(expr(
           s"transform(sequence(0, (size(_all)-1) div $c)," +
-            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs")))
-      .cache()
+            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
     // Pure sinks (dst-only nodes of a digraph) still get base mass:
     // nodes = every src (one bounded row per node via _chunk=0) ∪ every
-    // neighbour, deduped reading the small cached adjacency — never the
+    // neighbour, deduped reading the small adjacency — never the
     // raw edge input a second time. `symmetric = true` (the caller
     // GUARANTEES every dst also appears as a src — coOccurrenceEdges
     // output by construction) skips the neighbour explode + distinct
     // entirely: nodes are exactly the chunk-0 adjacency rows.
-    // symmetric nodes are a pure projection of the CACHED adjacency —
-    // a separate eager checkpoint paid one extra job per invocation
-    // for rows the cache already holds (r19)
     val nodes =
       if (symmetric)
         e.filter(col("_chunk") === 0).select(col("src").as("node"))
       else
-        Dedup.tracked(
+        Dedup.materialize(
           e.filter(col("_chunk") === 0).select(col("src").as("node"))
             .union(e.select(explode(col("nbrs")).as("node")))
-            .distinct().localCheckpoint(eager = true))
+            .distinct(), eager = true)
     val n = nodes.count()
     require(n > 0, "empty graph")
     val base = (scale * (100 - dampPct)) / (100L * n)
-    // Each round's scores materialize eagerly (nodes-sized — tiny by
+    // Each round's scores materialize (nodes-sized — tiny by
     // construction), keeping round k's plan flat instead of nesting
     // rounds 1..k−1. Checkpointed score tables carry no size stats, so
     // without a hint every round falls back to sort-merge and re-sorts
     // the edge table. n is known EXACTLY here — broadcast the
     // node-sized tables while they provably fit (each row ~16 B; 5e7
-    // nodes ≈ 800 MB hinted off), and above that let the cached
-    // src-partitioning do its job.
+    // nodes ≈ 800 MB hinted off), and above that join by shuffle.
     val bcast = n <= broadcastScoreMaxNodes
     def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // Dangling set (out-degree 0): nodes minus adjacency srcs — node-
     // sized, computed once, reused every round for the sink-mass agg.
     val sinks: Option[DataFrame] =
       if (!symmetric && redistributeDangling)
-        Some(Dedup.tracked(nodes.join(
+        Some(Dedup.materialize(nodes.join(
             e.filter(col("_chunk") === 0).select(col("src").as("node")),
-            Seq("node"), "anti")
-          .localCheckpoint(eager = true)))
+            Seq("node"), "anti"), eager = true))
       else None
     var scores = nodes.withColumn("score", lit(scale / n))
     for (_ <- 1 to iters) {
@@ -744,12 +725,8 @@ object Graphs {
             .select(col("node"),
               (lit(base + sinkShare) +
                 coalesce(col("_cs"), lit(0L))).as("score"))
-      // lazy checkpoint (r19): still truncates lineage per round, but
-      // the materialization folds into the next round's broadcast
-      // build / final readout instead of a dedicated job per round
-      scores = Dedup.tracked(next.localCheckpoint(eager = false))
+      scores = Dedup.materialize(next)
     }
-    e.unpersist(blocking = false)
     scores
   }
 
@@ -772,38 +749,34 @@ object Graphs {
       iters: Int = 3, scale: Long = 1000000000000L, dampPct: Int = 85,
       maxNbrsPerRow: Int = 8192, symmetric: Boolean = false): DataFrame = {
     val c = maxNbrsPerRow
-    val e = edges.select("src", "dst")
+    val e = Dedup.materialize(edges.select("src", "dst")
       .groupBy("src").agg(collect_set("dst").as("_all"))
       .select(col("src"), size(col("_all")).as("deg"),
         posexplode(expr(
           s"transform(sequence(0, (size(_all)-1) div $c)," +
-            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs")))
-      .cache()
+            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
     // `symmetric = true` (the caller GUARANTEES every dst also appears
     // as a src — coOccurrenceEdges output by construction) skips the
     // neighbour explode + distinct, exactly as in [[pageRankInt]] (r18:
-    // the explode re-scanned the whole cached adjacency and shuffled a
-    // node row per EDGE for a node set the chunk-0 rows already hold).
-    // symmetric nodes are a pure projection of the CACHED adjacency —
-    // a separate eager checkpoint paid one extra job per invocation
-    // for rows the cache already holds (r19)
+    // the explode re-scanned the whole adjacency and shuffled a node
+    // row per EDGE for a node set the chunk-0 rows already hold).
     val nodes =
       if (symmetric)
         e.filter(col("_chunk") === 0).select(col("src").as("node"))
       else
-        Dedup.tracked(
+        Dedup.materialize(
           e.filter(col("_chunk") === 0).select(col("src").as("node"))
             .union(e.select(explode(col("nbrs")).as("node")))
-            .distinct().localCheckpoint(eager = true))
+            .distinct(), eager = true)
     val n = nodes.count()
     require(n > 0, "empty graph")
     // In-graph seeds, as a 0/1 flag on the node table (one join, once)
     val seedCol = seeds.columns.head
-    val flagged = Dedup.tracked(nodes
+    val flagged = Dedup.materialize(nodes
       .join(seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("_s", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_s"), lit(0L)).as("_seed"))
-      .localCheckpoint(eager = true))
+      .select(col("node"), coalesce(col("_s"), lit(0L)).as("_seed")),
+      eager = true)
     val ns = flagged.filter(col("_seed") === 1L).count()
     require(ns > 0, "no seed is present in the graph")
     val baseSeed = (scale * (100 - dampPct)) / (100L * ns)
@@ -821,12 +794,8 @@ object Graphs {
         .select(col("node"),
           (col("_seed") * lit(baseSeed) +
             coalesce(col("_cs"), lit(0L))).as("score"))
-      // lazy checkpoint (r19): still truncates lineage per round, but
-      // the materialization folds into the next round's broadcast
-      // build / final readout instead of a dedicated job per round
-      scores = Dedup.tracked(next.localCheckpoint(eager = false))
+      scores = Dedup.materialize(next)
     }
-    e.unpersist(blocking = false)
     scores
   }
 

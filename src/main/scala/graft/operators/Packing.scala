@@ -36,10 +36,10 @@ object Packing {
       outCol: String = "running", numBuckets: Int = 32): DataFrame = {
     require(sortCols.nonEmpty, "withRunningTotal needs at least one sort column")
     // One source scan (same shape as Ranking.withGlobalRanks): lazily
-    // localCheckpoint the input, let the quantile sketch materialize it,
+    // materialize the input, let the quantile sketch populate it,
     // and feed both the per-bucket totals and the final query from the
     // materialized copy.
-    val mat = Dedup.tracked(df.localCheckpoint(eager = false))
+    val mat = Dedup.materialize(df)
     val b = mat.withColumn("_b",
       Ranking.bucketCol(sortCols.head,
         Ranking.rangeCuts(mat, sortCols.head, numBuckets)))

@@ -80,7 +80,7 @@ object Ranking {
       outCol: String = "grank", nCol: String = "gn",
       numBuckets: Int = 32): (DataFrame, Long) = {
     require(sortCols.nonEmpty, "withGlobalRowNumber needs sort columns")
-    val mat = Dedup.tracked(df.localCheckpoint(eager = false))
+    val mat = Dedup.materialize(df)
     val b = mat.withColumn("_b",
       bucketCol(sortCols.head, rangeCuts(mat, sortCols.head, numBuckets)))
     val cnt = b.groupBy("_b").agg(count(lit(1)).as("_cnt"))
@@ -120,10 +120,8 @@ object Ranking {
     // sketch's job populates the blocks) and run all three passes against
     // the materialized copy: sketch, per-bucket counts, final ranked
     // query. Without this the upstream scan runs three times — 1–2
-    // redundant full scans of the fact table at 100 TB. Blocks are freed
-    // by Dedup.withPipeline/releaseCheckpoints (consume the result inside
-    // the scope), or by plan GC + ContextCleaner.
-    val mat = Dedup.tracked(df.localCheckpoint(eager = false))
+    // redundant full scans of the fact table at 100 TB.
+    val mat = Dedup.materialize(df)
     val b = mat.withColumn("_b",
       bucketCol(sortCols.head, rangeCuts(mat, sortCols.head, numBuckets)))
     // Cumulative offsets on the driver: the per-bucket count table is

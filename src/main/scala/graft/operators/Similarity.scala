@@ -412,8 +412,7 @@ object Similarity extends Serializable {
     // final cell assignment — materialize it once (lazy local checkpoint,
     // the Ranking/Packing idiom) instead of re-reading + re-quantizing
     // the source per pass. Freed via Dedup.withPipeline or plan GC.
-    val qc = Dedup.tracked(
-      quantIds(corpus, idCol, vecCol).localCheckpoint(eager = false))
+    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol))
     val cs = trainCellCentroids(qc, hashSeedVecs(qc, nCells), iters)
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -535,8 +534,7 @@ object Similarity extends Serializable {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // one materialization feeds seeds + every per-sub Lloyd round + the
     // final coding pass (see ivfTopKInt8)
-    val qc = Dedup.tracked(
-      quantIds(corpus, idCol, vecCol).localCheckpoint(eager = false))
+    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol))
     pqTopKInt8Quant(qc, queries, k, m, ksub, iters, idCol, vecCol)
   }
 
@@ -681,8 +679,7 @@ object Similarity extends Serializable {
     val spark = corpus.sparkSession
     import spark.implicits._
 
-    val qc = Dedup.tracked(
-      quantIds(corpus, idCol, vecCol).localCheckpoint(eager = false))
+    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol))
     val ivfSeeds = hashSeedVecs(qc, math.max(nCells, ksub))
     val dim = ivfSeeds.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subvectors")
@@ -696,10 +693,9 @@ object Similarity extends Serializable {
     })
     // residuals feed the PQ seed ranking, every residual Lloyd round, AND
     // the coding pass — second materialization point
-    val withRes = Dedup.tracked(
+    val withRes = Dedup.materialize(
       qc.withColumn("cell", cellAssigner(ivfCents)(col("qv")))
-        .withColumn("rv", resU(col("qv"), col("cell")))
-        .localCheckpoint(eager = false))
+        .withColumn("rv", resU(col("qv"), col("cell"))))
     // PQ codebooks on residuals; seeds = residuals of the ksub
     // hash-smallest ids (their own cells' residuals)
     val resTable = withRes.select(col("id"), col("rv").as("qv"))
@@ -929,8 +925,7 @@ object Similarity extends Serializable {
     // 64): a cosine threshold > 1 is meaningless, so num ≤ den ≤ 1000.
     require(thresholdNum <= thresholdDen,
       s"thresholdNum $thresholdNum > thresholdDen $thresholdDen (cosine threshold > 1)")
-    val qc = Dedup.tracked(
-      quantIds(corpus, idCol, vecCol).localCheckpoint(eager = false))
+    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol))
     // nCells ≤ 0 → auto-scale with corpus size (see scaladoc). The
     // count() forces the checkpoint that training re-reads — one extra
     // job over materialized data, nothing shuffled.
@@ -945,10 +940,9 @@ object Similarity extends Serializable {
     // norms computed ONCE per vector here (O(N·dim)) and carried through
     // the pair join — recomputing them per pair would triple the
     // pair-stage arithmetic, the dominant cost at scale
-    val assigned = Dedup.tracked(
+    val assigned = Dedup.materialize(
       qc.withColumn("cell", cellAssigner(cs)(col("qv")))
-        .withColumn("n2", n2(col("qv")))
-        .localCheckpoint(eager = false))
+        .withColumn("n2", n2(col("qv"))))
     val capped = Dedup.capBuckets(assigned, maxCell, "cell")
     val dup = capped.select(col("id").as("id_a"), col("qv").as("va"),
         col("n2").as("na"), col("cell"))
@@ -1397,8 +1391,7 @@ object Similarity extends Serializable {
   def ivfStalenessAudit(base: DataFrame, appended: DataFrame,
       nCells: Int = 16, iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val qc = Dedup.tracked(
-      quantIds(base, idCol, vecCol).localCheckpoint(eager = false))
+    val qc = Dedup.materialize(quantIds(base, idCol, vecCol))
     // clamp the codebook to the base size (the semanticDedup
     // auto-scale convention) so a tiny base degrades to one-vector
     // cells instead of failing the seed requirement
@@ -1480,8 +1473,7 @@ object Similarity extends Serializable {
       .select(col("id"), col("qv"), lit(false).as("_bench"))
     val qcB = quantIds(benchmark, idCol, vecCol)
       .select(col("id"), col("qv"), lit(true).as("_bench"))
-    val qcU = Dedup.tracked(
-      qcC.unionByName(qcB).localCheckpoint(eager = false))
+    val qcU = Dedup.materialize(qcC.unionByName(qcB))
     val nc = if (nCells > 0) nCells else {
       val n = qcU.count()
       require(n > 0, "semanticDecontaminate on empty input")
@@ -1491,10 +1483,9 @@ object Similarity extends Serializable {
     val cs = trainCellCentroids(idqv, hashSeedVecs(idqv, nc), iters)
     def n2(c: Column) = aggregate(c, lit(0L),
       (acc, v) => acc + v.cast("long") * v.cast("long"))
-    val assigned = Dedup.tracked(
+    val assigned = Dedup.materialize(
       qcU.withColumn("cell", cellAssigner(cs)(col("qv")))
-        .withColumn("n2", n2(col("qv")))
-        .localCheckpoint(eager = false))
+        .withColumn("n2", n2(col("qv"))))
     val corpusA = assigned.filter(!col("_bench"))
     val benchA = assigned.filter(col("_bench"))
       .select(col("id").as("_bid"), col("qv").as("_bv"),

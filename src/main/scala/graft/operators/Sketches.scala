@@ -282,7 +282,7 @@ object Sketches {
     */
   def heavyHitters(df: DataFrame, itemCol: String,
       relDen: Long = 120L): DataFrame = {
-    val slim = Dedup.tracked(df.select(col(itemCol)).localCheckpoint(false))
+    val slim = Dedup.materialize(df.select(col(itemCol)))
     screenAndVerify(slim, cmsCounters(slim, itemCol), itemCol, relDen)
   }
 
@@ -295,7 +295,7 @@ object Sketches {
     */
   def heavyHittersWithCounters(df: DataFrame, counters: DataFrame,
       itemCol: String, relDen: Long = 120L): DataFrame = {
-    val slim = Dedup.tracked(df.select(col(itemCol)).localCheckpoint(false))
+    val slim = Dedup.materialize(df.select(col(itemCol)))
     screenAndVerify(slim, counters, itemCol, relDen)
   }
 

@@ -1000,7 +1000,7 @@ object TextAnalysis {
     // nY would each re-tokenize); syllables via the native byte-wise
     // vowel-run kernel — the HOF regexp_extract_all form paid a regex
     // Matcher + match-array allocation PER WORD, the worst hot path
-    // the r14 100× ForceSweep found (>20 min for the 5M-doc corpus)
+    // an r14 100× sweep found (>20 min for the 5M-doc corpus)
     val nS = size(filter(split(lower(t), "[.!?]+"),
       s => s.rlike("[a-z0-9]"))).cast("long")
     docs

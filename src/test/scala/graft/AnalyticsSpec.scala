@@ -1176,6 +1176,12 @@ class AnalyticsSpec extends SparkSpec {
         "NULL-pq rows must drop identically on both paths")
     } finally Analytics.stationaryDriverMaxStates = saved
     assert(viaDriver.map(_._1) == List("A", "B", "C"))
+    // transitionFromCells divides by the same per-src total: C's rows
+    // keep their counts with a NULL probability instead of failing the job
+    val probs = Analytics.transitionFromCells(cells, k = 3)
+      .filter(col("src") === "C").orderBy("rank").collect()
+      .map(r => (r.getString(2), r.getLong(3), r.isNullAt(4))).toList
+    assert(probs == List(("A", 0L, true), ("B", 0L, true)))
   }
 
   test("bradleyTerryFromWins: GAME-cell gate forces the distributed branch (r19)") {

@@ -43,24 +43,9 @@ class HofReuseLintSpec extends AnyFunSuite {
   private val inlineHeads = Seq("words(", "wordNgrams(", "split(col",
     "split(lower")
 
-  /** Comment- AND string-literal-stripped source. Strings go too (r15
-    * self-review finding): oracle SQL carries DuckDB's floor-division
-    * operator `//` inside string literals, and the old
-    * strip-line-comments pass truncated every such line at the `//` —
-    * unbalancing parens and silently blinding `extractCalls` for the
-    * rest of the def. Order matters: block comments, then string
-    * literals (so an in-string `//` never reads as a comment), then
-    * line comments.
-    */
-  private def stripComments(src: String): String =
-    src.replaceAll("(?s)/\\*.*?\\*/", "")
-      .replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
-      .replaceAll("\"(\\\\.|[^\"\\\\\n])*\"", "\"\"")
-      .replaceAll("//[^\n]*", "")
-
   /** rule 1: multi-referenced HOF-built vals. */
   private def violations(src0: String, where: String): Seq[String] = {
-    val src = stripComments(src0)
+    val src = SourceLint.strip(src0)
     val defs = src.split("\n  def ").toSeq
     defs.drop(1).flatMap { d =>
       val name = d.takeWhile(_ != '(').trim
@@ -116,7 +101,7 @@ class HofReuseLintSpec extends AnyFunSuite {
 
   /** rule 2: identical builder call ≥2× in one expression unit. */
   private def inlineViolations(src0: String, where: String): Seq[String] = {
-    val src = stripComments(src0)
+    val src = SourceLint.strip(src0)
     src.split("\n  def ").toSeq.drop(1).flatMap { d =>
       val name = d.takeWhile(_ != '(').trim
       // query maps: each ((s, dir) => ...) lambda is its own unit
@@ -132,23 +117,13 @@ class HofReuseLintSpec extends AnyFunSuite {
     }
   }
 
-  private def walk(f: java.io.File): Seq[java.io.File] =
-    if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-
-  private def sources: Seq[(String, String)] =
-    walk(new java.io.File("src/main/scala/graft")).map { f =>
-      (f.getName,
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    }
-
   test("no multi-referenced HOF-built locals in operators or SparkEntry") {
-    val bad = sources.flatMap { case (n, s) => violations(s, n) }
+    val bad = SourceLint.sources.flatMap { case (n, s) => violations(s, n) }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("no inline duplicate HOF builder calls in one expression unit") {
-    val bad = sources.flatMap { case (n, s) => inlineViolations(s, n) }
+    val bad = SourceLint.sources.flatMap { case (n, s) => inlineViolations(s, n) }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 

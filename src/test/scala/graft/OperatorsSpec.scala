@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.operators._
 import graft.sources.WavCodec
 
@@ -371,21 +372,70 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("withPipeline frees the pipeline's checkpoint blocks on exit") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.storage.StorageLevel
     val sc = spark.sparkContext
-    // force the distributed path (edges + per-round checkpoints) and run
-    // an LSH candidate pass (capBuckets' lazy checkpoint)
+    def live(id: Int): Boolean = sc.getPersistentRDDs.get(id)
+      .exists(_.getStorageLevel != StorageLevel.NONE)
+    // unpersist events, and every persisted RDD a stage has read
+    val freed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val read = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        freed.add(e.rddId)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel != StorageLevel.NONE)
+          .foreach(i => read.add(i.id))
+    }
+    // the bus delivers events in order: once a sentinel's unpersist
+    // event has arrived, every earlier event has too
+    def drainBus(): Unit = {
+      val s = sc.parallelize(Seq(1)).persist()
+      s.unpersist(blocking = true)
+      val deadline = System.nanoTime() + 60000000000L
+      while (!freed.contains(s.id)) {
+        assert(System.nanoTime() < deadline, "listener bus stalled")
+        Thread.sleep(10)
+      }
+    }
+    // A PageRank result is read after the rounds are built; every stage
+    // the call materialized (its adjacency first) must still be live.
+    def keepsStagesUntilRead(name: String)(
+        run: => org.apache.spark.sql.DataFrame): Unit = {
+      val lo = sc.parallelize(Seq(1)).id
+      assert(run.count() > 0)
+      drainBus()
+      val mine = read.asScala.filter(_ > lo)
+      assert(mine.nonEmpty, s"$name materialized nothing")
+      val gone = mine.filter(id => freed.contains(id) || !live(id))
+      assert(gone.isEmpty, s"$name freed stages before scope exit: $gone")
+    }
+    val und = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L, 3L -> 4L)
+    val graph = (und ++ und.map(_.swap)).toDF("src", "dst")
     val before = sc.getPersistentRDDs.keySet
-    Dedup.withPipeline {
+    sc.addSparkListener(listener)
+    try Dedup.withPipeline {
+      // force the distributed path (edges + per-round checkpoints) and run
+      // an LSH candidate pass (capBuckets' lazy checkpoint)
       val edges = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       assert(Dedup.clusterPairs(edges, driverMaxEdges = 0).count() == 31)
       assert(Dedup.minhashCandidates(docs, numHashes = 16, rowsPerBand = 4)
         .count() >= 0)
       val during = sc.getPersistentRDDs.keySet -- before
       assert(during.nonEmpty, "pipeline should have live checkpoint blocks")
-    }
-    val leaked = (sc.getPersistentRDDs.keySet -- before)
-      .filter(id => sc.getPersistentRDDs(id).getStorageLevel
-        != org.apache.spark.storage.StorageLevel.NONE)
+      keepsStagesUntilRead("pageRankInt")(Graphs.pageRankInt(graph))
+      keepsStagesUntilRead("personalizedPageRankInt")(
+        Graphs.personalizedPageRankInt(graph, Seq(1L).toDF("node")))
+      keepsStagesUntilRead("pageRankIntWeighted")(
+        Graphs.pageRankIntWeighted(graph.withColumn("weight", lit(2L))))
+      // Bpe.train on both paths: driver fixed point and distributed loop
+      assert(graft.functions.Bpe.train(docs, nMerges = 3).nonEmpty)
+      val saved = graft.functions.Bpe.trainDriverMaxVocab
+      graft.functions.Bpe.trainDriverMaxVocab = 0L
+      try assert(graft.functions.Bpe.train(docs, nMerges = 3).nonEmpty)
+      finally graft.functions.Bpe.trainDriverMaxVocab = saved
+    } finally sc.removeSparkListener(listener)
+    val leaked = (sc.getPersistentRDDs.keySet -- before).filter(live)
     assert(leaked.isEmpty, s"checkpoint blocks still persisted: $leaked")
   }
 

@@ -4,7 +4,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Gates}
 
 /** Loadable byte-pair-encoding tokenizer: the GPT-2-style merge walk
   * over a merges table that ships as a tiny sidecar file (the public
@@ -80,21 +80,6 @@ object Bpe {
     * is the exact published recipe, practical for the `nMerges` a
     * pipeline derives thresholds or demo vocabularies from.
     */
-  /** Driver-side ceiling (in DISTINCT WORDS) for [[train]]'s merge
-    * loop — the r18 bounded-table-rounds discipline
-    * (Analytics.btDriverMaxItems): each merge round is one vocab-sized
-    * aggregation + a top-1 collect, i.e. a full Spark job for
-    * microseconds of pair counting once the dictionary is small. Below
-    * the gate (exact count — the vocab table is materialized either
-    * way) the dictionary collects once and the merges run on the
-    * driver with code-point ordering matching Spark's UTF8 binary
-    * comparison; above it the per-round jobs are unchanged. The
-    * published trainings prune to a bounded dictionary first
-    * (minWordCount), so the gate is the common case at any corpus
-    * scale. Mutable only so the spec can force and compare both paths.
-    */
-  private[graft] var trainDriverMaxVocab: Long = 2000000L
-
   /** UTF8-binary string ordering (code-point compare) — Spark's
     * `orderBy` on strings compares UTF8 bytes, which is code-point
     * order; Java's String.compareTo is UTF-16 code-unit order and
@@ -123,12 +108,16 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minWordCount)
       .select(split(col("w"), "").as("syms"), col("cnt")))
-    val nVocab = vocab.count()
-    if (nVocab <= trainDriverMaxVocab) {
-      // bounded-dictionary driver fast path: same greedy algorithm,
-      // same (count DESC, pair ASC by UTF8 order) tie-break, same
-      // left-to-right fuse — one Spark job total instead of one per
-      // merge round.
+    // Each merge round is one vocab-sized aggregation + a top-1 collect:
+    // a full Spark job for microseconds of pair counting once the
+    // dictionary is small. While the distinct words fit Gates (the
+    // count is the job that materializes the lazy vocab stage), the
+    // dictionary collects once and the merges run on the driver — same
+    // greedy algorithm, same (count DESC, pair ASC by UTF8 order)
+    // tie-break, same left-to-right fuse. The published trainings prune
+    // to a bounded dictionary first (minWordCount), so this is the
+    // common case at any corpus scale.
+    if (Gates.fits(vocab, vocab.count())) {
       var dict = vocab.collect().map(r =>
         (r.getSeq[String](0).toArray, r.getLong(1)))
       Dedup.releaseStage(vocab)

@@ -1565,31 +1565,23 @@ object Analytics {
     stationaryFromCells(
       transitionPairCells(events, keyCol, tsCol, typeCol, ordCol), rounds)
 
-  /** Driver-side ceiling (in STATES) for [[stationaryFromCells]]' fixed
-    * point. The state set is bounded by contract (event types, page
-    * kinds — never the corpus), so at any scale the power iteration is
-    * arithmetic over ≤|states|² cells; running `rounds` of it as Spark
-    * jobs pays ~`rounds` × (join + shuffle + checkpoint) of pure
-    * scheduling for microseconds of math (measured r18: 1.6 s of the
-    * q292 bench cost was the 8-round loop over a 25-cell table). Below
-    * the gate the cells collect once and the rounds run on the driver
-    * with the IDENTICAL floor-division arithmetic (BigInt for the
-    * widened products — the DECIMAL(38,0) twin); above it the
-    * distributed loop is unchanged. Mutable only so the spec can force
-    * and equality-check both paths.
-    */
-  private[graft] var stationaryDriverMaxStates: Long = 65536L
-
-  /** Driver-side ceiling in CELLS for the same gate (r18 verdict #3 /
-    * ADVICE: the state gate alone admits a dense 65k-state chain whose
-    * ~4.3e9 cells would then be collect()ed — a driver OOM the gate
-    * never sees). The cell table is already materialized, so the count
-    * is cheap; 1M cells ≈ tens of MB collected. Mutable for the spec.
-    */
-  private[graft] var stationaryDriverMaxCells: Long = 1000000L
-
   /** Power-iteration readout over (src, dst, n) cells — see
-    * [[transitionStationary]]. */
+    * [[transitionStationary]].
+    *
+    * The state set is bounded by contract (event types, page kinds —
+    * never the corpus), so the power iteration is arithmetic over
+    * ≤|states|² cells; running `rounds` of it as Spark jobs pays
+    * ~`rounds` × (join + shuffle + checkpoint) of pure scheduling for
+    * microseconds of math (measured r18: 1.6 s of the q292 bench cost
+    * was the 8-round loop over a 25-cell table). So while the states
+    * and then the cells fit [[Gates]], the cells collect once and the
+    * rounds run on the driver with the IDENTICAL floor-division
+    * arithmetic (BigInt for the widened products — the DECIMAL(38,0)
+    * twin); otherwise the distributed loop runs. The cell check guards
+    * the collect: a dense chain can fit in states but not in cells. It
+    * runs only when the states fit, and `p.count()` is the job that
+    * materializes the lazy cell stage, not a cheap count.
+    */
   def stationaryFromCells(cells: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, "stationaryFromCells needs rounds >= 1")
     val wtot = Window.partitionBy("src")
@@ -1604,8 +1596,8 @@ object Analytics {
         .union(cells.select(col("dst"))).distinct())
     val ns = states.count()
     require(ns > 0, "stationaryFromCells needs a non-empty chain")
-    if (ns <= stationaryDriverMaxStates && p.count() <= stationaryDriverMaxCells) {
-      // bounded-cells driver fixed point (see the gate's scaladoc):
+    if (Gates.fits(states, ns) && Gates.fits(p, p.count())) {
+      // bounded-cells driver fixed point (see the scaladoc):
       // per round π′(d) = Σ_s ⌊π(s)·pq/10⁹⌋ — the exact arithmetic of
       // the distributed branch, BigInt where the SQL widens to
       // DECIMAL(38,0); states with no in-mass stay at the 0 the
@@ -1690,30 +1682,19 @@ object Analytics {
     * out so [[bradleyTerryConfidence]] can fit the rating and run the
     * Fisher-information pass over the SAME materialized games table
     * (one build site, r16 verdict item: the cells were built twice).
+    *
+    * The [[stationaryFromCells]] gate applied to the arena: items are
+    * bounded by contract (models, suppliers, judged candidates) and
+    * game cells are ≤|items|², while the 6-round distributed loop paid
+    * ~6 × (2 broadcasts + shuffle + checkpoint) of scheduling for
+    * microseconds of math (measured r18: 3.0 s of q310's bench cost).
+    * While the items and then the game cells fit [[Gates]], the cells
+    * collect once and the rounds run on the driver with the identical
+    * floor arithmetic (BigInt = the DECIMAL(38,0) twin); otherwise the
+    * distributed loop runs. `games.count()` runs only when the items
+    * fit, and it is the job that materializes the lazy games stage, not
+    * a cheap count.
     */
-  /** Driver-side ceiling (in ITEMS) for [[btFit]]'s MM fixed point —
-    * the [[stationaryDriverMaxStates]] argument applied to the arena:
-    * items are bounded by contract (models, suppliers, judged
-    * candidates), game cells are ≤|items|², and the 6-round
-    * distributed loop paid ~6 × (2 broadcasts + shuffle + checkpoint)
-    * of scheduling for microseconds of math (measured r18: 3.0 s of
-    * q310's bench cost was the loop; the win-table build was 0.1 s).
-    * Below the gate the cells collect once and the rounds run on the
-    * driver with the identical floor arithmetic (BigInt = the
-    * DECIMAL(38,0) twin); above it the distributed loop is unchanged.
-    * Mutable only so the spec can force and equality-check both paths.
-    */
-  private[graft] var btDriverMaxItems: Long = 65536L
-
-  /** Driver-side ceiling in GAME CELLS for the same gate — the
-    * [[stationaryDriverMaxCells]] argument applied to the arena: the
-    * item gate alone admits a dense 65k-item arena whose ~4.3e9
-    * symmetric cells would then be collect()ed (r18 verdict #3).
-    * `games` is already materialized; the count is cheap. Mutable for
-    * the spec.
-    */
-  private[graft] var btDriverMaxGameCells: Long = 1000000L
-
   private def btFit(wins: DataFrame, games: DataFrame, rounds: Int)
       : DataFrame = {
     require(rounds >= 1, "bradleyTerryFromWins needs rounds >= 1")
@@ -1724,8 +1705,8 @@ object Analytics {
         wins.groupBy(col("winner").as("i")).agg(sum("n").as("_w")),
         Seq("i"), "left")
       .na.fill(0L, Seq("_w"))
-    if (nItems <= btDriverMaxItems && games.count() <= btDriverMaxGameCells) {
-      // bounded-cells driver fixed point (see the gate's scaladoc).
+    if (Gates.fits(items, nItems) && Gates.fits(games, games.count())) {
+      // bounded-cells driver fixed point (see the scaladoc).
       // Same update as the distributed branch below, term for term:
       //   x_ij = ⌊g·10¹² / (s_i + s_j)⌋           (summed per i)
       //   sr_i = xs_i > 0 ? max(1, ⌊w_i·10¹² / xs_i⌋) : 1
@@ -1868,8 +1849,8 @@ object Analytics {
       .groupBy("item_a", "item_b")
       .agg(sum("_g").as("n_games"), sum("_wa").as("n_a_wins"))
       .withColumn("win_rate_q6", expr(
-        "CAST((CAST(n_a_wins AS DECIMAL(38,0)) * 1000000) DIV n_games" +
-          " AS BIGINT)"))
+        "CAST((CAST(n_a_wins AS DECIMAL(38,0)) * 1000000)" +
+          " DIV nullif(n_games, 0) AS BIGINT)"))
       .withColumn("wilson_lb_q9",
         wilsonLbQ9Native(col("n_games"), col("n_a_wins")))
       .select(col("item_a"), col("item_b"), col("n_games"),

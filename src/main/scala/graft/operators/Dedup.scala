@@ -330,13 +330,7 @@ object Dedup {
     */
   private[operators] def capBuckets(df: DataFrame, maxBucket: Int,
       keys: String*): DataFrame = {
-    // maxBucket < 0 → spark.graft.dedup.maxBucket (default 5000), the
-    // same conf-override pattern as clusterPairs' driverMaxEdges — lets
-    // operators keep a sane default while a deploy tunes the skew cap
-    // without touching call sites.
-    val cap =
-      if (maxBucket >= 0) maxBucket
-      else df.sparkSession.conf.get("spark.graft.dedup.maxBucket", "5000").toInt
+    require(maxBucket >= 0, s"maxBucket $maxBucket must be >= 0")
     // Lazy checkpoint: materializes on the FIRST action that touches the
     // result (building the candidate DataFrame stays free), after which the
     // two consumers (blacklist agg + anti-join) share the one materialized
@@ -344,7 +338,7 @@ object Dedup {
     val mat = materialize(df)
     val hot = mat.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_bsz"))
-      .filter(col("_bsz") > cap)
+      .filter(col("_bsz") > maxBucket)
       .select(keys.map(col): _*)
     mat.join(broadcast(hot), keys.toSeq, "left_anti")
   }
@@ -586,14 +580,14 @@ object Dedup {
     // a global sort): the p globally-rarest digests of each doc
     val wRare = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy("df", "hk")
-    // df-annotation join, byte-gated (r19): |dfreq| ≤ Σs, known exactly
+    // df-annotation join, size-gated (r19): |dfreq| ≤ Σs, known exactly
     // from the materialized base for the price of one tiny agg job.
-    // When the whole vocabulary slice fits the session broadcast
-    // threshold, BROADCAST it — the exploded token table then never
-    // exchanges before its per-doc window (the r18 blanket shuffle_hash
-    // hint forced that exchange even on a 249-group sweep input, the
-    // biggest slice of q316's 2.26×-above-floor flag: A/B'd 2.62 →
-    // 1.84 s min with the spread revert below). Above the gate,
+    // When Σs rows of the vocabulary slice fit (see Gates), BROADCAST
+    // it — the exploded token table then never exchanges before its
+    // per-doc window (the r18 blanket shuffle_hash hint forced that
+    // exchange even on a 249-group sweep input, the biggest slice of
+    // q316's 2.26×-above-floor flag: A/B'd 2.62 → 1.84 s min with the
+    // spread revert below). Above the gate,
     // shuffle_hash as in r18: per-partition build of the 16 B/row
     // (hk, df) vocabulary slice, no sort of the exploded token table by
     // hk — see containmentJoin's ranked join for the measurement and
@@ -601,7 +595,7 @@ object Dedup {
     val nTokUb = base.agg(coalesce(sum(col("s")), lit(0L)))
       .first.getLong(0)
     val dfreqSide =
-      if (Gates.fitsAutoBroadcast(nTokUb, 32L)) broadcast(dfreq)
+      if (Gates.fits(dfreq, nTokUb)) broadcast(dfreq)
       else dfreq.hint("shuffle_hash")
     val prefix = toks.join(dfreqSide, "hk")
       .withColumn("_rn", row_number().over(wRare))
@@ -884,9 +878,10 @@ object Dedup {
     * edges, labels = component-minimum ids. Two physical paths, same
     * result:
     *
-    *  - edge sets up to `driverMaxEdges` (the common case — LSH exists to
+    *  - edge sets that fit [[Gates]] (the common case — LSH exists to
     *    make candidates ≪ corpus) collect to the driver and solve in one
-    *    union-find pass: a single action, no iteration;
+    *    union-find pass: a single action, no iteration. `driverMaxEdges`
+    *    ≥ 0 sets the edge ceiling instead; 0 forces the loop below;
     *  - larger graphs run distributed min-label propagation *with
     *    pointer-doubling shortcutting* (each round every node takes the
     *    min label of its neighbors, then follows its label's own label) —
@@ -906,33 +901,22 @@ object Dedup {
   def clusterPairs(pairs: DataFrame, maxIterations: Int = 15,
       driverMaxEdges: Int = -1): DataFrame = {
     // Fit-then-broadcast fast path: after LSH the candidate edge set is
-    // normally tiny next to the corpus (it is the point of LSH), so below
-    // `driverMaxEdges` edges connected components solve on the driver in
-    // one union-find pass — one action, zero per-round stage barriers —
-    // the same driver-scale discipline as Normalizer.fit / IVF centroids.
-    // The size probe is limit(N+1).collect: if it comes back short we
-    // already hold every edge (no separate count, no plan re-execution —
-    // the signature table upstream is checkpointed). Corpora whose
-    // near-dup graph exceeds the threshold take the distributed loop
-    // below unchanged.
-    //
-    // The threshold caps the probe's driver heap (~100 B/edge Row), so it
-    // is conf-driven: driverMaxEdges < 0 (the default) reads
-    // spark.graft.dedup.driverMaxEdges (default 100000 ≈ 10 MB probe);
-    // pass an explicit value to override per call, 0 to force the
-    // distributed path.
-    val maxEdges =
-      if (driverMaxEdges >= 0) driverMaxEdges
-      else pairs.sparkSession.conf
-        .get("spark.graft.dedup.driverMaxEdges", "100000").toInt
+    // normally tiny next to the corpus (it is the point of LSH), so an
+    // edge set that fits solves on the driver in one union-find pass —
+    // one action, zero per-round stage barriers — the same driver-scale
+    // discipline as Normalizer.fit / IVF centroids. The size probe is
+    // limit(N+1).collect: if it comes back short we already hold every
+    // edge (no separate count, no plan re-execution — the signature
+    // table upstream is checkpointed).
     val idType = pairs.schema("id_a").dataType
     val isIntegral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
     if (isIntegral) {
-      val probe = pairs
-        .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .limit(maxEdges + 1)
-        .collect()
+      val slim =
+        pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      val maxEdges =
+        if (driverMaxEdges >= 0) driverMaxEdges else Gates.maxRows(slim)
+      val probe = slim.limit(maxEdges + 1).collect()
       if (probe.length <= maxEdges) {
         // union-find, roots kept at the component minimum: attach the
         // larger root under the smaller, halve paths on find
@@ -973,18 +957,9 @@ object Dedup {
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       eager = true)
-    // Checkpointed tables carry no size stats, so every round's joins
-    // plan as sort-merge without a hint. The label table is bounded by
-    // the edge-endpoint count, which is EXACT here (edges are already
-    // materialized — the count is a cached-block scan); broadcast the
-    // node-sized sides while they provably fit (the pageRankInt
-    // `hinted` discipline; ~48 B/row serialized ⇒ the 10⁷ gate is
-    // ~0.5 GB, inside default executor memory on a real cluster).
-    // Above the gate the loop runs unchanged.
+    // The label table is bounded by the directed edge count, exact here:
+    // its node-sized sides broadcast while that many rows fit.
     val nDirEdges = edges.count()
-    val bcastLabels = nDirEdges <= 10000000L
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
     // init folds the first hop in: label = min(self, direct neighbors).
     // Every node appears as a src (edges are bidirectional), so this one
     // aggregation replaces the distinct-nodes scan AND saves a full
@@ -1001,8 +976,8 @@ object Dedup {
     while (!converged && iter < maxIterations) {
       // hop: each node adopts the min label among itself and its neighbors
       val neighborMin = edges
-        .join(hinted(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("cluster_id", "n_label")), Seq("dst"))
+        .join(Gates.broadcastIfFits(labels.withColumnRenamed("id", "dst")
+          .withColumnRenamed("cluster_id", "n_label"), nDirEdges), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min("n_label").as("n_min"))
       val stepped = labels.join(neighborMin, Seq("id"), "left")
@@ -1013,7 +988,8 @@ object Dedup {
       // every mid_cid has a row); this is the pointer-doubling step
       val parents = stepped.select(col("id").as("pid"), col("mid_cid").as("p_label"))
       val updated = materialize(
-        stepped.join(hinted(parents), stepped("mid_cid") === parents("pid"), "left")
+        stepped.join(Gates.broadcastIfFits(parents, nDirEdges),
+            stepped("mid_cid") === parents("pid"), "left")
           .select(col("id"), col("old_cid"),
             least(col("mid_cid"), coalesce(col("p_label"), col("mid_cid")))
               .as("cluster_id")),
@@ -1510,7 +1486,7 @@ object Dedup {
     *
     * Scale shape: the quadratic comparison runs only inside blocks
     * (capped at `maxBlock`), the component solve sees only the MATCH
-    * graph (≪ corpus; driver union-find under `driverMaxEdges`, else
+    * graph (≪ corpus; driver union-find while it fits [[Gates]], else
     * the distributed pointer-doubling loop), and the label table joins
     * back on the id key once.
     */

@@ -1,25 +1,52 @@
 package graft.operators
 
-/** Shared byte-size gate for explicit `broadcast()` / `hint` decisions
-  * (r18 verdict #9): a row-COUNT ceiling alone (e.g. 10M rows) can admit
-  * a multi-GB broadcast on wide payloads, and a fixed constant ignores
-  * the session's own `spark.sql.autoBroadcastJoinThreshold`. Every
-  * operator that force-broadcasts a side it has an EXACT count for
-  * derives the decision here: rows × estimated in-memory bytes/row must
-  * fit the session threshold. `bytesPerRow` is the caller's estimate of
-  * the built hash-relation row (data + object overhead), deliberately
-  * coarse — the gate exists to bound the broadcast in BYTES at any
-  * scale, not to win borderline cases.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.internal.SQLConf
+
+/** The one size gate. Every operator that picks a physical strategy
+  * from an exact row count asks here: an explicit `broadcast(...)` (else
+  * a shuffle join), a fixed point collected to the driver (else the
+  * distributed loop), a `limit(N + 1)` probe that collects at most N
+  * rows. The answer is Spark's own: `rows` × the planner's row-size
+  * estimate for `df`'s output (`EstimationUtils.getSizePerRow`, what
+  * Catalyst compares with the same setting) must fit the session's
+  * `spark.sql.autoBroadcastJoinThreshold`. A threshold ≤ 0 admits
+  * nothing, so `-1` turns off every broadcast and every driver-side
+  * branch at once.
+  *
+  * Why callers hint at all: a materialized stage (a local checkpoint)
+  * carries no size statistics, so Catalyst plans every join against it
+  * as sort-merge. The caller holds the exact row count — the count is
+  * the job that materializes the lazy stage, not a cheap metadata read —
+  * and this gate turns it into the decision the planner would make with
+  * real statistics.
   */
 private[graft] object Gates {
 
-  /** True iff `rows` rows at ~`bytesPerRow` bytes fit the session's
-    * autoBroadcastJoinThreshold (false when broadcasting is disabled
-    * with -1, or the threshold is 0).
+  private def threshold: Long = SQLConf.get.autoBroadcastJoinThreshold
+
+  private def bytesPerRow(df: DataFrame): BigInt =
+    EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+
+  /** True iff `rows` rows of `df`'s output fit the broadcast threshold. */
+  def fits(df: DataFrame, rows: Long): Boolean = {
+    val thr = threshold
+    thr > 0 && rows >= 0 && bytesPerRow(df) * rows <= thr
+  }
+
+  /** `df` with a broadcast hint iff `rows` of it [[fits]]. */
+  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
+    if (fits(df, rows)) broadcast(df) else df
+
+  /** The most rows of `df`'s output that fit the broadcast threshold,
+    * for a `limit(maxRows(df) + 1)` probe: 0 when the threshold is
+    * ≤ 0, and never past `Int.MaxValue - 1`.
     */
-  def fitsAutoBroadcast(rows: Long, bytesPerRow: Long): Boolean = {
-    val thr = org.apache.spark.sql.internal.SQLConf.get
-      .autoBroadcastJoinThreshold
-    thr > 0 && rows >= 0 && rows <= thr / math.max(1L, bytesPerRow)
+  def maxRows(df: DataFrame): Int = {
+    val thr = threshold
+    if (thr <= 0) 0
+    else (BigInt(thr) / bytesPerRow(df)).min(Int.MaxValue - 1).toInt
   }
 }

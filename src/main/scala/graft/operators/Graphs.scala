@@ -19,21 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** Broadcast ceiling for the per-round PageRank/PPR score tables, in
-    * NODES. A score row is (node: long, score: long) = 16 B of data,
-    * but a broadcast HashedRelation carries ~3× that in object/hash
-    * overhead, and the driver must hold the serialized relation under
-    * `spark.driver.maxResultSize` (default 1 GiB) while every executor
-    * holds a deserialized copy: 10⁷ nodes ≈ 160 MB data / ~0.5 GB
-    * relation — comfortably inside default executor memory on a real
-    * cluster. (The previous 5·10⁷ gate was ~800 MB serialized — fine
-    * at local[32]/128 GiB, marginal against default driver/executor
-    * limits.) Above the gate the rounds join by shuffle; GraphsSpec
-    * pins the fallback path to the same results.
-    * Mutable ONLY so that spec can force the fallback on a small graph.
-    */
-  private[graft] var broadcastScoreMaxNodes: Long = 10000000L
-
   /** Undirected co-occurrence edges: items sharing a group (parts in an
     * order, tokens in a doc, domains in a session) get both directed
     * edges. Multiplicity is ignored — the final DISTINCT collapses
@@ -157,8 +142,7 @@ object Graphs {
     * Wedge closure is one join against the canonical edge set; every
     * shuffle keys on node or edge ids.
     */
-  def triangleCount(edges: DataFrame,
-      broadcastMaxEdges: Long = 5000000L): DataFrame = {
+  def triangleCount(edges: DataFrame): DataFrame = {
     val und = Dedup.materialize(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -167,16 +151,13 @@ object Graphs {
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-    // the degree table is node-sized (≤ 2m rows, m EXACT here) —
-    // broadcast it under the same gate as the adjacency below instead
-    // of letting the stats-free checkpointed edge table plan two
-    // sort-merge joins (r18)
-    def dHinted(df: DataFrame): DataFrame =
-      if (m <= broadcastMaxEdges) broadcast(df) else df
-    // orient each edge (degree, id)-low → high
+    // orient each edge (degree, id)-low → high; the degree table has
+    // at most 2m rows
     val o = und
-      .join(dHinted(deg.select(col("n").as("a"), col("d").as("_da"))), Seq("a"))
-      .join(dHinted(deg.select(col("n").as("b"), col("d").as("_db"))), Seq("b"))
+      .join(Gates.broadcastIfFits(
+        deg.select(col("n").as("a"), col("d").as("_da")), 2 * m), Seq("a"))
+      .join(Gates.broadcastIfFits(
+        deg.select(col("n").as("b"), col("d").as("_db")), 2 * m), Seq("b"))
       .select(
         when(struct(col("_da"), col("a")) < struct(col("_db"), col("b")),
           struct(col("a").as("u"), col("b").as("v")))
@@ -190,16 +171,14 @@ object Graphs {
     // rows — 41M at sf0.1 — and its closure probe dominates the
     // runtime). Out-lists are bounded by the oriented out-degree
     // (O(√m) under this orientation), so per-row work is bounded too.
-    // The adjacency table (n rows, m total entries) broadcasts while
-    // the exact m says it fits; bigger graphs fall back to u- and
-    // v-keyed hash joins.
+    // The adjacency table (n rows, m total entries) is gated as m rows;
+    // bigger graphs fall back to u- and v-keyed hash joins.
     val adj = o.groupBy("u").agg(collect_set("v").as("_vs"))
-    def hinted(df: DataFrame): DataFrame =
-      if (m <= broadcastMaxEdges) broadcast(df) else df
     val tri = o
-      .join(hinted(adj.select(col("u"), col("_vs").as("_nu"))), Seq("u"))
-      .join(hinted(adj.select(col("u").as("v"), col("_vs").as("_nv"))),
-        Seq("v"))
+      .join(Gates.broadcastIfFits(
+        adj.select(col("u"), col("_vs").as("_nu")), m), Seq("u"))
+      .join(Gates.broadcastIfFits(
+        adj.select(col("u").as("v"), col("_vs").as("_nv")), m), Seq("v"))
       .select(size(array_intersect(col("_nu"), col("_nv"))).as("_t"))
       .agg(coalesce(sum("_t"), lit(0L)).as("n_triangles"))
     deg.agg(count(lit(1)).as("n_nodes"))
@@ -294,15 +273,16 @@ object Graphs {
     val n = nodes.count()
     require(n > 0, "empty graph")
     val base = (scale * (100 - dampPct)) / (100L * n)
-    val bcast = n <= broadcastScoreMaxNodes
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     var scores = nodes.withColumn("score", lit(scale / n))
     for (_ <- 1 to iters) {
+      // a node whose out-weights are all zero passes no mass
       val contrib = e
-        .join(hinted(scores.withColumnRenamed("node", "src")), Seq("src"))
+        .join(Gates.broadcastIfFits(
+          scores.withColumnRenamed("node", "src"), n), Seq("src"))
         .select(col("score"), col("wdeg"), explode(col("nbrs")).as("_nb"))
-        .select(col("_nb.dst").as("node"),
-          expr(s"(score * $dampPct * _nb.w) div (wdeg * 100)").as("_c"))
+        .select(col("_nb.dst").as("node"), expr(
+          s"coalesce((score * $dampPct * _nb.w) div nullif(wdeg * 100, 0), 0)")
+          .as("_c"))
         .groupBy("node").agg(sum("_c").as("_cs"))
       scores = Dedup.materialize(
         contrib.select(col("node"), (lit(base) + col("_cs")).as("score")))
@@ -536,20 +516,14 @@ object Graphs {
     var dist = Dedup.materialize(src0.select(col("node")).distinct()
       .withColumn("dist", lit(0L)), eager = true)
     var frontier = dist
-    // The frontier is materialized every round (its checkpoint blocks
-    // are already populated), so its EXACT row count is a cheap cached
-    // scan — broadcast it while it provably fits (the pageRankInt
-    // `hinted` discipline). Checkpointed tables carry no size stats, so
-    // without the hint every round's relax plans as a sort-merge join
-    // that re-shuffles and re-sorts the FULL edge table by src
-    // (measured r18: the 3 edge-table shuffles were q211's dominant
-    // cost — the rounds cost more than the co-occurrence build itself).
+    // The frontier is materialized every round, so its count is exact
+    // (see Gates). Without the broadcast every round's relax re-shuffles
+    // and re-sorts the FULL edge table by src (measured r18: the 3
+    // edge-table shuffles were q211's dominant cost).
     var frontierCount = frontier.count()
     for (r <- 1 to rounds) {
-      val fr = frontier.withColumnRenamed("node", "src")
-      val frH = if (frontierCount <= broadcastScoreMaxNodes) broadcast(fr)
-        else fr
-      val relax = e.join(frH, Seq("src"))
+      val relax = e.join(Gates.broadcastIfFits(
+          frontier.withColumnRenamed("node", "src"), frontierCount), Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("_nd"))
         .groupBy("node").agg(min("_nd").as("_nd"))
       // One node-keyed FULL OUTER join folds the old improved-filter +
@@ -681,13 +655,7 @@ object Graphs {
     val base = (scale * (100 - dampPct)) / (100L * n)
     // Each round's scores materialize (nodes-sized — tiny by
     // construction), keeping round k's plan flat instead of nesting
-    // rounds 1..k−1. Checkpointed score tables carry no size stats, so
-    // without a hint every round falls back to sort-merge and re-sorts
-    // the edge table. n is known EXACTLY here — broadcast the
-    // node-sized tables while they provably fit (each row ~16 B; 5e7
-    // nodes ≈ 800 MB hinted off), and above that join by shuffle.
-    val bcast = n <= broadcastScoreMaxNodes
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // rounds 1..k−1; the node-sized tables broadcast while n rows fit.
     // Dangling set (out-degree 0): nodes minus adjacency srcs — node-
     // sized, computed once, reused every round for the sink-mass agg.
     val sinks: Option[DataFrame] =
@@ -710,7 +678,8 @@ object Graphs {
       // Per-chunk hop: the floor division happens once per adjacency
       // row, then fans out map-side under codegen via explode.
       val contrib = e
-        .join(hinted(scores.withColumnRenamed("node", "src")), Seq("src"))
+        .join(Gates.broadcastIfFits(
+          scores.withColumnRenamed("node", "src"), n), Seq("src"))
         .select(expr(s"(score * $dampPct) div (deg * 100)").as("_c"),
           explode(col("nbrs")).as("node"))
         .groupBy("node").agg(sum("_c").as("_cs"))
@@ -721,7 +690,7 @@ object Graphs {
           contrib.select(col("node"),
             (lit(base) + col("_cs")).as("score"))
         else
-          nodes.join(hinted(contrib), Seq("node"), "left")
+          nodes.join(Gates.broadcastIfFits(contrib, n), Seq("node"), "left")
             .select(col("node"),
               (lit(base + sinkShare) +
                 coalesce(col("_cs"), lit(0L))).as("score"))
@@ -780,17 +749,17 @@ object Graphs {
     val ns = flagged.filter(col("_seed") === 1L).count()
     require(ns > 0, "no seed is present in the graph")
     val baseSeed = (scale * (100 - dampPct)) / (100L * ns)
-    val bcast = n <= broadcastScoreMaxNodes
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     var scores = flagged.select(col("node"),
       (col("_seed") * lit(scale / ns)).as("score"))
     for (_ <- 1 to iters) {
       val contrib = e
-        .join(hinted(scores.withColumnRenamed("node", "src")), Seq("src"))
+        .join(Gates.broadcastIfFits(
+          scores.withColumnRenamed("node", "src"), n), Seq("src"))
         .select(expr(s"(score * $dampPct) div (deg * 100)").as("_c"),
           explode(col("nbrs")).as("node"))
         .groupBy("node").agg(sum("_c").as("_cs"))
-      val next = flagged.join(hinted(contrib), Seq("node"), "left")
+      val next = flagged.join(Gates.broadcastIfFits(contrib, n), Seq("node"),
+          "left")
         .select(col("node"),
           (col("_seed") * lit(baseSeed) +
             coalesce(col("_cs"), lit(0L))).as("score"))
@@ -832,12 +801,9 @@ object Graphs {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct())
-    // canon is materialized — its exact edge count gates the node-sized
-    // broadcasts below (the pageRankInt hinted discipline; without the
-    // hint the stats-free checkpoint plans sort-merge joins, r18)
+    // canon's exact edge count gates the broadcasts below: canon has m
+    // rows, and the weight table (nodes of degree ≥ 2) at most m
     val m = canon.count()
-    def hinted(df: DataFrame): DataFrame =
-      if (m <= Graphs.broadcastScoreMaxNodes) broadcast(df) else df
     val both = canon.select(col("a").as("z"), col("b").as("x"))
       .unionByName(canon.select(col("b").as("z"), col("a").as("x")))
     val deg = both.groupBy("z").agg(count(lit(1)).as("_d"))
@@ -847,7 +813,7 @@ object Graphs {
       .withColumn("_ln", graft.plans.GraftExtensions.lnQ12Native(col("_d")))
       .withColumn("_wq6", expr("1000000000000000000 DIV _ln"))
       .drop("_ln")
-    val pairs = both.join(hinted(wz), Seq("z"))
+    val pairs = both.join(Gates.broadcastIfFits(wz, m), Seq("z"))
       .groupBy("z", "_wq6").agg(collect_list("x").as("_xs"))
       .select(col("_wq6"), explode(col("_xs")).as("pa"), col("_xs"))
       .select(col("_wq6"), col("pa"), explode(col("_xs")).as("pb"))
@@ -855,7 +821,7 @@ object Graphs {
     pairs
       .groupBy(col("pa").as("a"), col("pb").as("b"))
       .agg(count(lit(1)).as("cn"), sum("_wq6").as("aa_q6"))
-      .join(hinted(canon), Seq("a", "b"), "left_anti")
+      .join(Gates.broadcastIfFits(canon, m), Seq("a", "b"), "left_anti")
       .orderBy(col("aa_q6").desc, col("a"), col("b"))
       .limit(topK)
   }

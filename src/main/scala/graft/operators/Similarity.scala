@@ -914,7 +914,7 @@ object Similarity extends Serializable {
   def semanticDedup(corpus: DataFrame, nCells: Int = -1, iters: Int = 2,
       thresholdNum: Long = 7, thresholdDen: Long = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxCell: Int = -1, targetCellSize: Int = 1024): DataFrame = {
+      maxCell: Int = 5000, targetCellSize: Int = 1024): DataFrame = {
     require(thresholdDen > 0 && thresholdNum >= 0,
       s"threshold $thresholdNum/$thresholdDen not a nonnegative rational")
     require(targetCellSize > 0, s"targetCellSize $targetCellSize must be positive")

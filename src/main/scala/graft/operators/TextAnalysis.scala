@@ -705,8 +705,7 @@ object TextAnalysis {
     *
     *  - the hot LEXICON is usually tiny even when hot HITS are huge
     *    (one footer shared by 10⁹ docs is one digest), so when it fits
-    *    `spark.graft.boilerplate.broadcastHotMax` (default 1 000 000
-    *    digests, checked with a bounded count) the digest set
+    *    [[Gates]] (checked with a bounded count) the digest set
     *    broadcasts and each doc drops its hot lines row-locally — the
     *    corpus is NEVER shuffled;
     *  - past the cap, hot hits regroup per doc (rows ∝ hits) and the
@@ -720,8 +719,6 @@ object TextAnalysis {
   def removeBoilerplateLines(docs: DataFrame, minDocs: Long = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(minDocs >= 2, s"minDocs $minDocs must be >= 2 (1 would empty the corpus)")
-    val broadcastMax = docs.sparkSession.conf
-      .get("spark.graft.boilerplate.broadcastHotMax", "1000000").toLong
     val lines = docs.select(col(idCol),
         explode(split(coalesce(col(textCol), lit("")), "\r?\n")).as("_line"))
       .select(col(idCol), md5(col("_line")).as("_ld"))
@@ -730,7 +727,8 @@ object TextAnalysis {
       .filter(col("_nd") >= minDocs)
       .select("_ld")
     val splitCol = split(coalesce(col(textCol), lit("")), "\r?\n")
-    val hotCount = hot.limit((broadcastMax + 1).toInt).count()
+    val broadcastMax = Gates.maxRows(hot)
+    val hotCount = hot.limit(broadcastMax + 1).count()
     val withKept =
       if (hotCount <= broadcastMax) {
         // broadcast path: hot digests ride a broadcast, the filter is a

@@ -28,9 +28,8 @@ import graft.operators.Dedup
   * older than the TTL are evicted on arrival (so an expired entry stops
   * matching even when its bucket key stays hot). Deployments sizing for
   * the advertised scale should set the TTL to their dedup horizon (e.g.
-  * 7 days); the default (-1, overridable via conf
-  * `spark.graft.streamdedup.stateTtlMs`) keeps state forever — exact
-  * against all history, appropriate for bounded backfills only.
+  * 7 days); the default (-1) keeps state forever — exact against all
+  * history, appropriate for bounded backfills only.
   *
   * The same function runs in batch mode (flatMapGroupsWithState over a
   * bounded Dataset executes with empty initial state), which is how the
@@ -54,8 +53,7 @@ object StreamingDedup {
     * (the batch operator's dropDuplicates step).
     *
     * `stateTtlMs`: per-bucket state retention in processing-time ms;
-    * -1 (default) reads conf `spark.graft.streamdedup.stateTtlMs`
-    * (default -1 = retain forever). See the object doc for the
+    * ≤ 0 (default -1) retains forever. See the object doc for the
     * state-growth characteristics.
     *
     * Operational note: with a TTL the engine schedules timeout-check
@@ -72,11 +70,8 @@ object StreamingDedup {
       stateTtlMs: Long = -1L): DataFrame = {
     import spark.implicits._
     val num = numHashes
-    val ttl =
-      if (stateTtlMs >= 0) stateTtlMs
-      else spark.conf.get("spark.graft.streamdedup.stateTtlMs", "-1").toLong
     val timeoutConf =
-      if (ttl > 0) GroupStateTimeout.ProcessingTimeTimeout
+      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     val sigU = udf((t: String) =>
       graft.functions.Hashing.minhashSignature(t, k, num).toSeq)
@@ -97,15 +92,16 @@ object StreamingDedup {
             state.remove()
             Iterator.empty
           } else {
-            val now = if (ttl > 0) state.getCurrentProcessingTimeMs() else 0L
+            val now =
+              if (stateTtlMs > 0) state.getCurrentProcessingTimeMs() else 0L
             val prev = state.getOption.getOrElse(BucketState(Nil, Nil, Nil))
             // age out expired entries even when the bucket key stays hot:
             // the engine-level timeout only catches buckets with NO
             // arrivals, so eviction-on-arrival is what makes an expired
             // entry stop matching
             var (ids, sigs, adm) =
-              if (ttl > 0) {
-                val keep = prev.admitted.map(t => now - t <= ttl)
+              if (stateTtlMs > 0) {
+                val keep = prev.admitted.map(t => now - t <= stateTtlMs)
                 ((prev.ids zip keep).collect { case (v, true) => v },
                  (prev.sigs zip keep).collect { case (v, true) => v },
                  (prev.admitted zip keep).collect { case (v, true) => v })
@@ -132,7 +128,7 @@ object StreamingDedup {
               }
             }
             state.update(BucketState(ids, sigs, adm))
-            if (ttl > 0) state.setTimeoutDuration(ttl)
+            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
             out.iterator
           }
       }

@@ -1103,22 +1103,31 @@ class AnalyticsSpec extends SparkSpec {
     assert(out == List((1L, 2L, 2L, 0L, 0L, 500000L, -1000000L)))
   }
 
+  // (result, whether the rounds ran as Spark jobs)
+  private def stationary(cells: org.apache.spark.sql.DataFrame, rounds: Int) = {
+    val (pi, jobs) = extraJobs(rounds)(r => Analytics.stationaryFromCells(
+      cells, rounds = r).orderBy("state").as[(String, Long)].collect().toList)
+    (pi, jobs > 0)
+  }
+
+  private def bt(wins: org.apache.spark.sql.DataFrame, rounds: Int) = {
+    val (s, jobs) = extraJobs(rounds)(r => Analytics.bradleyTerryFromWins(
+      wins, rounds = r).orderBy("item").as[(Long, Long)].collect().toList)
+    (s, jobs > 0)
+  }
+
   test("stationaryFromCells: driver fixed point ≡ distributed loop (r18 gate)") {
     // asymmetric 3-state chain incl. a mass-leaking state (C has no
     // outgoing row) — exercises the left-join-coalesce-0 semantics on
     // both paths
     val cells = Seq(("A", "A", 3L), ("A", "B", 2L), ("B", "C", 5L),
       ("B", "A", 1L)).toDF("src", "dst", "n")
-    val viaDriver = Analytics.stationaryFromCells(cells, rounds = 7)
-      .orderBy("state").as[(String, Long)].collect().toList
-    val saved = Analytics.stationaryDriverMaxStates
-    Analytics.stationaryDriverMaxStates = 0L
-    try {
-      val viaSpark = Analytics.stationaryFromCells(cells, rounds = 7)
-        .orderBy("state").as[(String, Long)].collect().toList
-      assert(viaDriver == viaSpark,
-        "driver fixed point must equal the distributed loop exactly")
-    } finally Analytics.stationaryDriverMaxStates = saved
+    val (viaDriver, driverLoop) = stationary(cells, 7)
+    assert(!driverLoop, "a 3-state chain fits: the rounds run on the driver")
+    val (viaSpark, sparkLoop) = withoutBroadcast(stationary(cells, 7))
+    assert(sparkLoop, "threshold -1 must force the distributed loop")
+    assert(viaDriver == viaSpark,
+      "driver fixed point must equal the distributed loop exactly")
     assert(viaDriver.map(_._1) == List("A", "B", "C"))
   }
 
@@ -1128,36 +1137,31 @@ class AnalyticsSpec extends SparkSpec {
     val wins = Seq((1L, 2L, 5L), (2L, 1L, 2L), (1L, 3L, 1L),
       (3L, 2L, 4L), (1L, 4L, 9L), (2L, 4L, 1L))
       .toDF("winner", "loser", "n")
-    val viaDriver = Analytics.bradleyTerryFromWins(wins, rounds = 6)
-      .orderBy("item").as[(Long, Long)].collect().toList
-    val saved = Analytics.btDriverMaxItems
-    Analytics.btDriverMaxItems = 0L
-    try {
-      val viaSpark = Analytics.bradleyTerryFromWins(wins, rounds = 6)
-        .orderBy("item").as[(Long, Long)].collect().toList
-      assert(viaDriver == viaSpark,
-        "driver MM fixed point must equal the distributed loop exactly")
-    } finally Analytics.btDriverMaxItems = saved
+    val (viaDriver, driverLoop) = bt(wins, 6)
+    assert(!driverLoop, "a 4-item arena fits: the rounds run on the driver")
+    val (viaSpark, sparkLoop) = withoutBroadcast(bt(wins, 6))
+    assert(sparkLoop, "threshold -1 must force the distributed loop")
+    assert(viaDriver == viaSpark,
+      "driver MM fixed point must equal the distributed loop exactly")
     assert(viaDriver.map(_._1) == List(1L, 2L, 3L, 4L))
     assert(viaDriver.minBy(_._2)._1 == 4L, "all-losses item rates lowest")
   }
 
   test("stationaryFromCells: CELL-count gate forces the distributed branch (r19)") {
-    // few states, but a cell table over the cell ceiling: the r18 gate
-    // (states only) would collect it; the r19 gate must route to the
-    // distributed loop — and both must agree exactly
+    // few states, but a cell table over the threshold: a states-only
+    // gate would collect it; the cell gate must route to the distributed
+    // loop — and both must agree exactly. Spark's row estimate is 28 B
+    // for a (string) state and 56 B for a (string, string, long) cell,
+    // so 100 B admits the 3 states (84 B) but not the 5 cells (280 B).
     val cells = Seq(("A", "A", 3L), ("A", "B", 2L), ("B", "C", 5L),
       ("B", "A", 1L), ("C", "A", 4L)).toDF("src", "dst", "n")
-    val viaDriver = Analytics.stationaryFromCells(cells, rounds = 5)
-      .orderBy("state").as[(String, Long)].collect().toList
-    val saved = Analytics.stationaryDriverMaxCells
-    Analytics.stationaryDriverMaxCells = 2L // < 5 cells, states stay under gate
-    try {
-      val viaSpark = Analytics.stationaryFromCells(cells, rounds = 5)
-        .orderBy("state").as[(String, Long)].collect().toList
-      assert(viaDriver == viaSpark,
-        "cell-gated distributed loop must equal the driver fixed point")
-    } finally Analytics.stationaryDriverMaxCells = saved
+    val (viaDriver, driverLoop) = stationary(cells, 5)
+    assert(!driverLoop)
+    val (viaSpark, sparkLoop) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "100")(stationary(cells, 5))
+    assert(sparkLoop, "cells over the threshold must force the distributed loop")
+    assert(viaDriver == viaSpark,
+      "cell-gated distributed loop must equal the driver fixed point")
   }
 
   test("stationaryFromCells: all-zero-count src (NULL pq) agrees across branches (r19)") {
@@ -1165,16 +1169,11 @@ class AnalyticsSpec extends SparkSpec {
     // must drop the row like the distributed SUM does, not NPE
     val cells = Seq(("A", "A", 3L), ("A", "B", 2L), ("B", "A", 1L),
       ("C", "A", 0L), ("C", "B", 0L)).toDF("src", "dst", "n")
-    val viaDriver = Analytics.stationaryFromCells(cells, rounds = 4)
-      .orderBy("state").as[(String, Long)].collect().toList
-    val saved = Analytics.stationaryDriverMaxStates
-    Analytics.stationaryDriverMaxStates = 0L
-    try {
-      val viaSpark = Analytics.stationaryFromCells(cells, rounds = 4)
-        .orderBy("state").as[(String, Long)].collect().toList
-      assert(viaDriver == viaSpark,
-        "NULL-pq rows must drop identically on both paths")
-    } finally Analytics.stationaryDriverMaxStates = saved
+    val (viaDriver, driverLoop) = stationary(cells, 4)
+    val (viaSpark, sparkLoop) = withoutBroadcast(stationary(cells, 4))
+    assert(!driverLoop && sparkLoop)
+    assert(viaDriver == viaSpark,
+      "NULL-pq rows must drop identically on both paths")
     assert(viaDriver.map(_._1) == List("A", "B", "C"))
     // transitionFromCells divides by the same per-src total: C's rows
     // keep their counts with a NULL probability instead of failing the job
@@ -1185,18 +1184,17 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("bradleyTerryFromWins: GAME-cell gate forces the distributed branch (r19)") {
+    // 4 (long) items at 16 B fit 100 B; 12 (long, long, long) symmetric
+    // game cells at 32 B do not
     val wins = Seq((1L, 2L, 5L), (2L, 1L, 2L), (1L, 3L, 1L),
       (3L, 2L, 4L), (1L, 4L, 9L), (2L, 4L, 1L))
       .toDF("winner", "loser", "n")
-    val viaDriver = Analytics.bradleyTerryFromWins(wins, rounds = 6)
-      .orderBy("item").as[(Long, Long)].collect().toList
-    val saved = Analytics.btDriverMaxGameCells
-    Analytics.btDriverMaxGameCells = 3L // < 12 symmetric cells, items under gate
-    try {
-      val viaSpark = Analytics.bradleyTerryFromWins(wins, rounds = 6)
-        .orderBy("item").as[(Long, Long)].collect().toList
-      assert(viaDriver == viaSpark,
-        "cell-gated distributed loop must equal the driver MM fixed point")
-    } finally Analytics.btDriverMaxGameCells = saved
+    val (viaDriver, driverLoop) = bt(wins, 6)
+    assert(!driverLoop)
+    val (viaSpark, sparkLoop) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "100")(bt(wins, 6))
+    assert(sparkLoop, "game cells over the threshold must force the distributed loop")
+    assert(viaDriver == viaSpark,
+      "cell-gated distributed loop must equal the driver MM fixed point")
   }
 }

@@ -248,14 +248,14 @@ class BpeSpec extends SparkSpec {
     val docs = Seq((0L, "the the the"), (1L, "then then"), (2L, "he"),
       (3L, "aaaa abab"), (4L, "zz zz zz the"))
       .toDF("doc_id", "text")
-    val viaDriver = Bpe.train(docs, nMerges = 5)
-    val saved = Bpe.trainDriverMaxVocab
-    Bpe.trainDriverMaxVocab = 0L
-    try {
-      val viaSpark = Bpe.train(docs, nMerges = 5)
-      assert(viaDriver == viaSpark,
-        "driver merge loop must equal the distributed loop exactly")
-    } finally Bpe.trainDriverMaxVocab = saved
+    def train(nMerges: Int) =
+      extraJobs(nMerges)(n => Bpe.train(docs, nMerges = n))
+    val (viaDriver, driverJobs) = train(5)
+    assert(driverJobs == 0, "a 6-word dictionary fits: merges run on the driver")
+    val (viaSpark, sparkJobs) = withoutBroadcast(train(5))
+    assert(sparkJobs >= 4, "threshold -1 must force the distributed merge loop")
+    assert(viaDriver == viaSpark,
+      "driver merge loop must equal the distributed loop exactly")
   }
 
   test("train fuses greedily left-to-right: overlapping pairs take even offsets") {

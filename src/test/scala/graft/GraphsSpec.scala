@@ -43,27 +43,25 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("pageRank/PPR broadcast-gate fallback (shuffle-join path) is result-identical") {
-    // the bcast gate (broadcastScoreMaxNodes) only picks a join
-    // STRATEGY; forcing the fallback on a small graph must not change
-    // one score. Guards the gate constant against result-affecting
-    // refactors (r11 verdict item: the fallback path needs its own pin).
+    // the broadcast gate only picks a join STRATEGY; forcing the
+    // fallback on a small graph must not change one score. Guards the
+    // gate against result-affecting refactors (r11 verdict item: the
+    // fallback path needs its own pin).
     val edges = (Seq(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 9L) ++
       Seq(1L -> 0L, 2L -> 0L, 3L -> 0L)).toDF("src", "dst")
     val seeds = Seq(0L).toDF("node")
-    val saved = Graphs.broadcastScoreMaxNodes
-    val (prB, pprB) =
+    def run() =
       (Graphs.pageRankInt(edges, iters = 2).as[(Long, Long)].collect().toMap,
         Graphs.personalizedPageRankInt(edges, seeds, iters = 2)
           .as[(Long, Long)].collect().toMap)
-    try {
-      Graphs.broadcastScoreMaxNodes = 0L
-      val prF = Graphs.pageRankInt(edges, iters = 2)
-        .as[(Long, Long)].collect().toMap
-      val pprF = Graphs.personalizedPageRankInt(edges, seeds, iters = 2)
-        .as[(Long, Long)].collect().toMap
-      assert(prF == prB, "pageRankInt fallback diverged from broadcast path")
-      assert(pprF == pprB, "PPR fallback diverged from broadcast path")
-    } finally Graphs.broadcastScoreMaxNodes = saved
+    val viaBroadcast = traced(run())
+    assert(viaBroadcast.broadcasts, "a 5-node graph's score tables fit")
+    val viaShuffle = withoutBroadcast(traced(run()))
+    assert(!viaShuffle.broadcasts && viaShuffle.joins,
+      viaShuffle.plans.mkString("\n"))
+    val ((prB, pprB), (prF, pprF)) = (viaBroadcast.result, viaShuffle.result)
+    assert(prF == prB, "pageRankInt fallback diverged from broadcast path")
+    assert(pprF == pprB, "PPR fallback diverged from broadcast path")
   }
 
   test("personalizedPageRankInt: symmetric fast path ≡ default on a symmetric graph (r18)") {
@@ -195,6 +193,16 @@ class GraphsSpec extends SparkSpec {
     val s = Graphs.pageRankIntWeighted(star, iters = 2)
       .as[(Long, Long)].collect().toMap
     assert(s(1L) > s(2L) && s(2L) == s(3L))
+    // a node whose out-weights are all zero passes no mass (its weighted
+    // degree is 0): 1–2 at weight 0, 2–3 at weight 1, one round from
+    // scale/3 each, base = 10¹²·15/300
+    val zero = Seq((1L, 2L, 0L), (2L, 1L, 0L), (2L, 3L, 1L), (3L, 2L, 1L))
+      .toDF("src", "dst", "weight")
+    val z = Graphs.pageRankIntWeighted(zero, iters = 1)
+      .as[(Long, Option[Long])].collect().toMap
+    val (base, s0) = (50000000000L, 1000000000000L / 3)
+    assert(z == Map(1L -> Some(base), 2L -> Some(base + s0 * 85 / 100),
+      3L -> Some(base + s0 * 85 / 100)))
   }
 
   test("labelPropagate: two cliques joined by one bridge keep their own communities") {

@@ -15,9 +15,7 @@ class LayoutSpec extends SparkSpec {
     Layout.writeBucketed(li, "li_bkt", "l_orderkey", 8)
     Layout.writeBucketed(os, "os_bkt", "l_orderkey", 8)
     // disable broadcast so the join would otherwise shuffle both sides
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withoutBroadcast {
       val joined = Layout.colocatedJoin(spark, "li_bkt", "os_bkt", "l_orderkey")
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
@@ -30,7 +28,6 @@ class LayoutSpec extends SparkSpec {
         col("l_orderkey") === col("o_orderkey")).count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS li_bkt")
       spark.sql("DROP TABLE IF EXISTS os_bkt")
     }

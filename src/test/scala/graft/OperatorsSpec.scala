@@ -116,16 +116,15 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, s"family $t shared shingle stream alpha beta gamma " * 4 +
         (if (i >= 24) s"divergent tail content $i" else ""))
     }.toDF("doc_id", "text")
-    val viaBroadcast = Dedup.setSimJoin(corpus, 0.7).collect()
+    def pairs() = Dedup.setSimJoin(corpus, 0.7).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val viaShj = Dedup.setSimJoin(corpus, 0.7).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(viaShj == viaBroadcast,
-        "shuffle_hash branch must emit the same pairs as the broadcast branch")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val viaBroadcast = traced(pairs())
+    assert(viaBroadcast.broadcasts)
+    val viaShj = withoutBroadcast(traced(pairs()))
+    assert(!viaShj.broadcasts &&
+      viaShj.plans.exists(_.contains("ShuffledHashJoin")))
+    assert(viaShj.result == viaBroadcast.result,
+      "shuffle_hash branch must emit the same pairs as the broadcast branch")
   }
 
   test("blockedLinkPairs: within-block edit-distance pairs; cap drops hot blocks") {
@@ -320,11 +319,19 @@ class OperatorsSpec extends SparkSpec {
     assert(fast == dist)
     assert(fast(5L) == 1L && fast(2L) == 1L && fast(13L) == 10L &&
       fast(22L) == 20L && fast(31L) == 30L)
-    // the probe threshold is conf-driven when not passed explicitly:
-    // 0 forces the distributed loop, which must agree with the default
-    spark.conf.set("spark.graft.dedup.driverMaxEdges", "0")
-    try assert(asMap(Dedup.clusterPairs(edges)) == fast)
-    finally spark.conf.unset("spark.graft.dedup.driverMaxEdges")
+    // not passed explicitly, the probe ceiling follows the broadcast
+    // threshold: the default solves on the driver (its result is a local
+    // table), -1 forces the distributed loop with shuffle joins
+    def onDriver(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("LocalTableScan")
+    assert(onDriver(Dedup.clusterPairs(edges)))
+    val viaLoop = withoutBroadcast(traced {
+      val c = Dedup.clusterPairs(edges)
+      (onDriver(c), asMap(c))
+    })
+    assert(viaLoop.result == ((false, fast)))
+    assert(viaLoop.joins && !viaLoop.broadcasts,
+      viaLoop.plans.mkString("\n"))
   }
 
   test("duplicateSpans: planted shared run becomes one merged span per doc") {
@@ -428,12 +435,13 @@ class OperatorsSpec extends SparkSpec {
         Graphs.personalizedPageRankInt(graph, Seq(1L).toDF("node")))
       keepsStagesUntilRead("pageRankIntWeighted")(
         Graphs.pageRankIntWeighted(graph.withColumn("weight", lit(2L))))
-      // Bpe.train on both paths: driver fixed point and distributed loop
-      assert(graft.functions.Bpe.train(docs, nMerges = 3).nonEmpty)
-      val saved = graft.functions.Bpe.trainDriverMaxVocab
-      graft.functions.Bpe.trainDriverMaxVocab = 0L
-      try assert(graft.functions.Bpe.train(docs, nMerges = 3).nonEmpty)
-      finally graft.functions.Bpe.trainDriverMaxVocab = saved
+      // Bpe.train on both paths: driver fixed point and distributed
+      // loop, which runs at least one job per merge
+      def train() = traced(graft.functions.Bpe.train(docs, nMerges = 3))
+      val (viaDriver, viaLoop) = (train(), withoutBroadcast(train()))
+      assert(viaDriver.result.size == 3 && viaLoop.result == viaDriver.result)
+      assert(viaLoop.jobs >= viaDriver.jobs + 3,
+        s"distributed loop ran ${viaLoop.jobs} jobs, driver ${viaDriver.jobs}")
     } finally sc.removeSparkListener(listener)
     val leaked = (sc.getPersistentRDDs.keySet -- before).filter(live)
     assert(leaked.isEmpty, s"checkpoint blocks still persisted: $leaked")
@@ -1874,13 +1882,16 @@ class OperatorsSpec extends SparkSpec {
     assert(loose(0) == ((0L, "content zero\nfooter x", 4L, 2L)))
     assert(loose(1) == ((1L, "content one\nfooter x", 3L, 2L)))
     // the hot-lexicon-too-big fallback (per-doc hits join) must agree
-    // with the default broadcast path row for row
-    spark.conf.set("spark.graft.boilerplate.broadcastHotMax", "0")
-    try {
+    // with the default broadcast path row for row; only it joins
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Join")
+    assert(!joins(TextAnalysis.removeBoilerplateLines(d, minDocs = 2)))
+    withoutBroadcast {
       val viaJoin = TextAnalysis.removeBoilerplateLines(d, minDocs = 2)
-        .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-      assert(viaJoin.toSeq == out.toSeq)
-    } finally spark.conf.unset("spark.graft.boilerplate.broadcastHotMax")
+      assert(joins(viaJoin))
+      assert(viaJoin.as[(Long, String, Long, Long)].collect().sortBy(_._1)
+        .toSeq == out.toSeq)
+    }
   }
 
   test("dedupLinesWithinDoc: kernel path agrees with the fold; pathological doc is linear") {
@@ -1896,11 +1907,8 @@ class OperatorsSpec extends SparkSpec {
     def run() = TextAnalysis.dedupLinesWithinDoc(d)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     val viaFold = run()
-    spark.conf.set("spark.graft.lineDedup.maxExprLines", "0")
-    try {
-      val viaKernel = run()
-      assert(viaKernel == viaFold)
-    } finally spark.conf.unset("spark.graft.lineDedup.maxExprLines")
+    val viaKernel = withConf("spark.graft.lineDedup.maxExprLines", "0")(run())
+    assert(viaKernel == viaFold)
     // a 50k-line doc (1k distinct lines) crosses the default 10k
     // threshold into the O(lines) kernel — the fold's ~1.25G quadratic
     // membership checks would stall here; the kernel is instant
@@ -2011,10 +2019,9 @@ class OperatorsSpec extends SparkSpec {
     val digests = idx.as[String].collect()
     assert(digests.forall(loaded.mightContainString))
     // a filter too big to broadcast is refused up front
-    spark.conf.set("spark.graft.bloom.maxBytes", "8")
-    try intercept[IllegalArgumentException] {
-      Dedup.bloomIndex(idx)
-    } finally spark.conf.unset("spark.graft.bloom.maxBytes")
+    withConf("spark.graft.bloom.maxBytes", "8") {
+      intercept[IllegalArgumentException](Dedup.bloomIndex(idx))
+    }
   }
 
   test("exactKeepAgainst: indexed bodies dropped, shard dups collapse to min id") {
@@ -2096,11 +2103,12 @@ class OperatorsSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(again == kept.select("doc_id").as[Long].collect().toSet)
     // a key-cardinality explosion is refused, not silently collected
-    spark.conf.set("spark.graft.mixture.maxKeys", "2")
-    try intercept[IllegalArgumentException] {
-      Dedup.rebalanceMixture(df, "source",
-        Map("a" -> 1L, "b" -> 1L, "c" -> 1L), seed = 7).count()
-    } finally spark.conf.unset("spark.graft.mixture.maxKeys")
+    withConf("spark.graft.mixture.maxKeys", "2") {
+      intercept[IllegalArgumentException] {
+        Dedup.rebalanceMixture(df, "source",
+          Map("a" -> 1L, "b" -> 1L, "c" -> 1L), seed = 7).count()
+      }
+    }
   }
 
   test("rebalanceMixture: token-count-scale weights do not overflow the threshold") {
@@ -3295,6 +3303,11 @@ class OperatorsSpec extends SparkSpec {
       (1L, 3L, 2L, 0L, 0L)))
     assert(got.head._6 == graft.functions.FixedMath.wilsonLbQ9(4L, 3L))
     assert(got(1)._6 == graft.functions.FixedMath.wilsonLbQ9(2L, 0L))
+    // a pair whose games are all n=0 has no rate (NULL), not a failed job
+    val zero = graft.operators.Analytics.winRateMatrix(
+        Seq((4L, 5L, 0L), (5L, 4L, 0L)).toDF("winner", "loser", "n"))
+      .as[(Long, Long, Long, Long, Option[Long], Long)].collect().toList
+    assert(zero == List((4L, 5L, 0L, 0L, None, 0L)))
   }
 
   test("preferenceCycles: a rock-paper-scissors triple is cyclic; a transitive one is not; ties drop") {

@@ -638,9 +638,7 @@ class SourcesSpec extends SparkSpec {
       .mkString("\n").getBytes("UTF-8"))
     // force Spark to split the single file into many partitions — the
     // monolithic-ingest case the file-ordinal strategy funnels
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
-    try {
+    withConf("spark.sql.files.maxPartitionBytes", "8192") {
       val df = DocumentSource.read(spark, jsonl.toString,
         idStrategy = "split-ordinal")
       assert(df.rdd.getNumPartitions > 4,
@@ -657,7 +655,7 @@ class SourcesSpec extends SparkSpec {
       val fileOrd = DocumentSource.read(spark, jsonl.toString)
         .select("doc_id").as[Long].collect()
       assert(fileOrd.length == n && fileOrd.toSet.size == n)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    }
   }
 
   test("scoreLinear weights load from text and parquet sidecars identically") {

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
+/** Benchmark main: runs the headline queries
+  * ([[Query.headline]] entries of [[SparkEntry.registry]], ascending
+  * numeric id) on SPARK_GRAFT_SF_DIR, prints ONE JSON line with
+  * per-query seconds.
   *
   * Queries are warmed once (JIT + codegen + file-listing) then timed; the
   * timed run executes the full plan to completion via a count-ish action
@@ -27,124 +29,6 @@ import org.apache.spark.sql.SparkSession
   * per-query ratios, preferring mt when both records carry it.
   */
 object Bench {
-
-  /** Headline subset: one per operator family, weighted toward the
-    * shuffle/join/agg paths that dominate at scale.
-    */
-  private val headline = Seq(
-    "q01_pricing_summary", // scan+agg
-    "q02_filter_project",  // pushdown filter
-    "q03_revenue_by_nation", // 5-way join
-    "q04_topk_orders",     // sort+limit
-    "q06_window_rank",     // window
-    "q16_having",          // group+having
-    "q17_events_minutely", // event-time agg
-    "q18_sessionize",      // session window
-    "q20_dedup_exact",     // md5 dedup
-    "q22_text_stats",      // text HOFs
-    "q23_langid",          // language id
-    "q26_split_chunks",    // posexplode
-    "q34_minhash_neardup", // LSH self-join
-    "q37_knn_brute",       // ANN broadcast
-    "q43_range_join",      // key+range join
-    "q45_sessions",        // session windows
-    "q49_image_features",  // multimodal decode
-    "q56_neardup_keep",    // end-to-end near-dedup (LSH → cluster → keep)
-    "q58_asof_join",       // as-of union+window
-    "q61_analytic_ranks",  // two-phase global ranking
-    "q67_tfidf_buckets",   // feature-hashing vectorization
-    "q79_pack_sequences",  // exact global prefix sum (two-phase)
-    "q80_quality_filter",  // broadcast-weights linear scorer
-    "q81_embed_quantize",  // embedding norm + int8 quantization
-    "q84_knn_pq",          // PQ ADC code scan (NEW r7)
-    "q88_bpe_tokens",      // loadable-BPE merge walk (NEW r7)
-    "q90_perplexity_score", // bigram-LM scoring fold (NEW r7)
-    "q94_semantic_dedup",  // SemDeDup: int-Lloyd cells + in-cell prune (NEW r7)
-    "q96_gopher_rules",    // Gopher quality rules, scan-speed (NEW r7)
-    "q97_chunk_words",     // context-window chunking generator (NEW r7)
-    "q110_boilerplate_lines", // corpus boilerplate: digest count + broadcast rebuild (NEW r8)
-    "q111_url_dedup",      // URL canonicalization + min-id keep (NEW r8)
-    "q113_bpe_train",      // BPE training loop on the vocab table (NEW r8)
-    "q114_curation_pipeline", // the composed 4-stage curation chain (NEW r8)
-    "q115_export_manifest", // seeded-permutation shard manifest (NEW r8)
-    "q141_hll_distinct",   // HLL sketch-as-table + exact-integer estimate (NEW r9)
-    "q142_heavy_hitters",  // CMS screen + exact verify (NEW r9)
-    "q145_ks_drift",       // two-phase exact KS statistic (NEW r9)
-    "q147_copurchase_rank", // 3-round integer PageRank, iterated joins (NEW r9)
-    "q154_components_distributed", // pointer-doubled connected components (NEW r9)
-    "q157_also_bought",    // item-item cosine recommender (NEW r9)
-    "q160_session_paths",  // sessionized path mining (NEW r9)
-    "q161_join_size_est",  // CMS join-size pre-flight (NEW r9)
-    "q162_triangles",      // degree-ordered triangle count (NEW r9)
-    "q178_setsim_join",    // exact prefix-filtered set-similarity join (NEW r9)
-    "q180_skyline",        // 2D Pareto frontier, window prune (NEW r9)
-    "q183_topk_native",    // native bounded top-k aggregate (NEW r9)
-    "q189_kmv_distinct",   // native KMV bottom-k sketch (NEW r9)
-    "q191_asof_native",    // custom-plan as-of merge exec (NEW r9)
-    "q202_psi_drift",      // PSI drift on the integer log kernel (NEW r11)
-    "q203_ppr_related",    // personalized PageRank rounds (NEW r11)
-    "q204_kmv_setops",     // KMV set-operation tables (NEW r11)
-    "q208_fuzzy_decontaminate", // cross-corpus MinHash screen (NEW r11)
-    "q209_containment_join", // exact directed containment join (NEW r11)
-    "q210_random_projection", // JL sign-matrix reduction (NEW r11)
-    "q211_sssp",           // bounded-round weighted SSSP (NEW r11)
-    "q212_readability",    // FK readability, scan-speed (NEW r11)
-    "q233_dominant_direction", // int8 Gram build + power iteration (NEW r11)
-    "q234_mmr_topk",       // MMR: bounded top-k pool + greedy re-rank (NEW r11)
-    "q236_hybrid_rrf",     // lexical+semantic fusion, two corpus passes (NEW r11)
-    "q237_robust_stats",   // grouped order statistics, per-group windows (NEW r11)
-    "q238_budget_sample",  // Hamilton quotas + md5-ranked picks (NEW r11)
-    "q241_dyadic_quantiles", // bounded-state histogram sketch + readout (NEW r11)
-    "q243_pit_features",   // leakage-proof RANGE-frame features (NEW r11)
-    "q246_shard_migration", // HRW consistent sharding, native splitmix (NEW r11)
-    "q266_heaps_growth",   // vocabulary-growth curve, explode+first-seen (NEW r12)
-    "q267_link_predict",   // Adamic-Adar common-neighbor join (NEW r12)
-    "q269_kcenter_coreset", // farthest-point rounds, literal-center maps (NEW r12)
-    "q271_textrank_keywords", // word-graph weighted PageRank (NEW r12)
-    "q273_ndcg",           // graded ranking quality, ln-kernel terms (NEW r12)
-    "q274_silhouette",     // IVF cluster-quality readout, int8 map (NEW r12)
-    "q282_domain_overlap", // token-keyed domain Jaccard matrix (NEW r13)
-    "q284_dup_inflation",  // digest-cells size histogram (NEW r13)
-    "q286_group_conformal", // per-group conformal coverage (NEW r13)
-    "q291_ann_recall",     // IVF vs brute-truth recall audit (NEW r13)
-    "q292_stationary",     // Markov chain power iteration (NEW r13)
-    "q296_ivf_balance",    // IVF cell-balance report (NEW r14)
-    "q297_domain_divergence", // pairwise JS over unigram dists (NEW r14)
-    "q298_psi_over_time",  // PSI per day vs global baseline (NEW r14)
-    "q299_token_budget",   // per-domain BPE token budget (NEW r14)
-    "q300_dup_ngram_share", // exact-substring dup exposure (NEW r14)
-    "q310_bradley_terry",  // preference-rating MM fixed point (NEW r14)
-    "q315_ivf_probe_plan", // IVF nProbe recall/cost sweep, one scoring pass (NEW r15)
-    "q316_dedup_threshold_sweep", // per-tau dedup bite off one pair join (NEW r15)
-    "q318_epochs_plan",    // mixture-epochs planner over the BPE supply cells (NEW r15)
-    "q319_pq_refine_plan", // PQ refine-depth recall/cost curve, one ADC pass (NEW r15)
-    "q320_dup_cluster_domains", // near-dup cluster domain-spread histogram (NEW r15)
-    "q321_judge_agreement", // per-judge-pair kappa + panel alpha (NEW r16)
-    "q322_curation_costs",  // per-stage byte economics off the trace scan (NEW r16)
-    "q323_judge_bias",      // leave-one-out consensus agreement + Wilson (NEW r16)
-    "q325_bt_confidence",   // BT Fisher info + isqrt se over the game cells (NEW r16, post-record)
-    "q326_temperature_sweep", // iterated-isqrt α grid over the mixture cells (NEW r16, post-record)
-    "q328_join_skew_preflight", // exact per-key pair products + skew factor (NEW r16, post-record)
-    "q329_split_leakage",   // exact-dup groups straddling xval folds (NEW r16, post-record)
-    "q330_neardup_split_leakage", // near-dup clusters straddling folds (NEW r17)
-    "q332_neardup_aware_kfold", // cluster-rep folds + both zero-leak audits (NEW r17)
-    "q333_mixture_feasibility", // per-alpha demand vs epoch cap off the mixture cells (NEW r17)
-    "q334_shard_skew_preflight", // planned-shard token loads before the write (NEW r17)
-    "q335_token_shard_plan", // token-budget shard boundaries, two-phase prefix sum (NEW r17)
-    "q336_anneal_mixture_plan", // two-phase anneal schedule off the mixture cells (NEW r17)
-    "q338_semantic_split_leakage", // SemDeDup components straddling folds (NEW r17)
-    "q339_salt_plan",       // join-skew remedy: fan-outs + repl cost off q328's cells (NEW r17)
-    "q340_t_closeness",     // privacy triad leg 3: exact Q9 ordered EMD per class (NEW r17)
-    "q341_kanon_suppression", // k-anon remedy: suppression cost ladder (NEW r17)
-    "q343_salted_join",     // salted equi-join EXECUTION, ≡ plain join (NEW r17)
-    "q344_fold_parity",     // per-fold composition vs corpus, Q6 TVD (NEW r17)
-    "q345_kanon_generalization", // rollup ladder, the other k-anon remedy axis (NEW r17)
-    "q347_stratified_parity", // the parity remedy: stratify on the audited attribute (NEW r17)
-    "q348_freshness",       // ingest lag + window ratio off minute cells (NEW r17)
-    "q350_semantic_fold_parity", // fold-centroid cosines vs corpus, q193 machinery (NEW r17)
-    "q351_ivf_staleness",   // frozen-centroid appendix routing, re-index trigger (NEW r17)
-    "q352_t_closeness_classes", // per-class EMD attribution, the remediation worklist (NEW r17)
-    "q353_semantic_decontaminate") // benchmark decontamination, semantic tier (NEW r18)
 
   /** Fixed-work single-thread calibration loop (~1.6e8 xorshift64 steps
     * after a JIT warm pass). Its wall time on an idle core is a machine
@@ -213,11 +97,17 @@ object Bench {
   private def numericId(name: String): String = name.drop(1).takeWhile(_.isDigit)
 
   def main(args: Array[String]): Unit = {
-    // the short stdout lines key queries by numeric id, so two headline
-    // queries sharing one would silently merge their seconds
-    val ids = headline.map(numericId)
-    require(ids.distinct.size == ids.size,
-      s"headline numeric ids collide: ${ids.diff(ids.distinct).mkString(",")}")
+    val headline = SparkEntry.registry.filter(_.headline)
+    // optional subset (comma-separated names): re-baseline one query at
+    // clean calibration without paying for the whole headline set
+    val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    subset.foreach { s =>
+      val unknown = s -- headline.map(_.name)
+      require(unknown.isEmpty, "SPARK_GRAFT_BENCH_QUERIES names " +
+        s"non-headline queries: ${unknown.toSeq.sorted.mkString(",")}")
+    }
+    val toRun = subset.fold(headline)(s => headline.filter(q => s(q.name)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // environment snapshot BEFORE Spark starts: ambient load + a
     // single-thread fixed-work loop time (see calibMs) so a judge can
@@ -236,12 +126,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val qs = SparkEntry.queries
-    // optional subset (comma-separated names): re-baseline one query at
-    // clean calibration without paying for the whole headline set
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = subset.fold(headline)(s => headline.filter(s))
     // clock zero for per-query timestamps + interleaved calibration
     // ticks: the record must be able to attribute a sustained load
     // window to wall-clock position on its own (r14 verdict item #1)
@@ -253,7 +137,6 @@ object Bench {
       ticks += ((done, t, calibMs(warm = false),
         calibMtMs(cpus.toInt, warm = false)))
     }
-    val toRun = selected.filter(qs.contains)
     // tick cadence: every N queries, DEFAULT 1 (a tick after every
     // query's 3-run block). The r15 driver record left 86-156 s
     // unsampled gaps at the old default of 10 and five load-inflated
@@ -275,8 +158,8 @@ object Bench {
       }
     }
     tick(0)
-    val results = toRun.zipWithIndex.map { case (name, idx) =>
-      val fn = qs(name)
+    val results = toRun.zipWithIndex.map { case (q, idx) =>
+      val (name, fn) = (q.name, q.plan)
       try { fn(spark, sfDir).queryExecution.executedPlan; fn(spark, sfDir).count() } // warm
       catch { case _: Throwable => () }
       // 3 timed runs; BOTH the median (robust to one outlier — the
@@ -354,8 +237,8 @@ object Bench {
     // with long names (~3.2k chars) never fit, so the driver's per-query
     // and scaling comparisons ran empty both optimization rounds
     // (PERF_r18 per_query: {}). This variant keys each query by its
-    // NUMERIC id ("315" for q315_ivf_probe_plan — main requires them
-    // unique) at 2 decimals: ~1.3k chars for 113 queries, fits the
+    // NUMERIC id ("315" for q315_ivf_probe_plan — Query.registry
+    // requires them unique) at 2 decimals: ~1.3k chars for 113 queries, fits the
     // capture with headroom. Full names + min/raw/ticks stay in
     // bench_last.json; this is a measurement-path fix only — no query
     // was removed or renamed (the id is a 1:1 projection of the name).

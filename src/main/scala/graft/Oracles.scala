@@ -1,6 +1,10 @@
 package graft
 
-/** Generated DuckDB oracle SQL for the similarity/dedup queries whose
+/** DuckDB oracle SQL named by [[SparkEntry.registry]] entries; a def
+  * shared by several entries is one relational truth checked against
+  * several engine paths.
+  *
+  * Generated DuckDB oracle SQL for the similarity/dedup queries whose
   * kernels live in [[graft.functions.Hashing]] (FNV-1a + splitmix64 +
   * fixed-seed hyperplanes — all deterministic integer/IEEE math, chosen in
   * part so an independent engine can recompute them exactly).
@@ -3709,7 +3713,6 @@ object Oracles {
     head + values + body
   }
 
-  /** Map of generated oracles, merged into [[SparkEntry.oracleSql]]. */
   /** q90: `TextAnalysis.perplexityScore` — the hash-derived bigram lp
     * (−500 − md5₃₂("lm#a#b") mod 4500) replayed with the same md5-int
     * idiom as the q83 val-mask sampling; mean via the positive domain so
@@ -7018,283 +7021,4 @@ object Oracles {
       |    (CAST(n_tokens AS HUGEINT) * 100000000) // n_bytes END
       |    AS BIGINT) AS fertility_q6
       |FROM c, t ORDER BY lang_pred""".stripMargin
-
-  def generated: Map[String, String] = Map(
-    "q315_ivf_probe_plan" -> q315IvfProbePlan,
-    "q316_dedup_threshold_sweep" -> q316DedupThresholdSweep,
-    "q313_seq_len_profile" -> q313SeqLenProfile,
-    "q314_lang_token_budget" -> q314LangTokenBudget,
-    "q311_win_rate_matrix" -> q311WinRateMatrix,
-    // q317 = q311's win table built by the streaming state store (the
-    // q281 emit-counter discipline — one relational truth, two paths)
-    "q317_stream_win_matrix" -> q311WinRateMatrix,
-    "q312_preference_cycles" -> q312PreferenceCycles,
-    "q321_judge_agreement" -> q321JudgeAgreement,
-    "q323_judge_bias" -> q323JudgeBias,
-    // q324 = q323's judged wins built by the streaming state store
-    // (the q317 discipline — one relational truth, two engine paths)
-    "q324_stream_judge_bias" -> q323JudgeBias,
-    "q325_bt_confidence" -> q325BtConfidence,
-    "q307_cross_domain_dups" -> q307CrossDomainDups,
-    "q308_mrr" -> q308Mrr,
-    "q309_table_diff" -> q309SnapshotDiff,
-    "q310_bradley_terry" -> q310BradleyTerry,
-    "q303_context_plan" -> q303ContextPlan,
-    "q304_knn_hubness" -> q304KnnHubness,
-    "q305_zipf_slope" -> q305ZipfSlope,
-    "q306_norm_profile" -> q306NormProfile,
-    "q296_ivf_balance" -> q296IvfBalance,
-    "q297_domain_divergence" -> q297DomainDivergence,
-    "q298_psi_over_time" -> q298PsiOverTime,
-    // q301 = q298's cells through the streaming state store (the
-    // q272/q280/q285 discipline — one cell builder, two engine paths)
-    "q301_stream_psi_over_time" -> q298PsiOverTime,
-    "q299_token_budget" -> q299TokenBudget,
-    // q302 = q299's cells through the streaming state store
-    "q302_stream_token_budget" -> q299TokenBudget,
-    "q300_dup_ngram_share" -> q300DupNgramShare,
-    "q319_pq_refine_plan" -> q319PqRefinePlan,
-    "q320_dup_cluster_domains" -> q320DupClusterDomains,
-    "q318_epochs_plan" -> q318EpochsPlan(
-      (0 until 20).map(i => (s"src$i", if (i < 10) 80L else 20L)),
-      budgetTokens = 200000L, maxEpochsQ3 = 4000L),
-    "q270_calibration" -> q270Calibration,
-    // q272 = q270's cells through the streaming state store: one
-    // relational truth, two engine paths (the q205/q255 discipline)
-    "q272_stream_calibration" -> q270Calibration,
-    "q273_ndcg" -> q273Ndcg,
-    "q274_silhouette" -> q274Silhouette,
-    "q275_domain_terms" -> q275DomainTerms,
-    "q276_hill_tail" -> q276HillTail,
-    "q277_conformal" -> q277Conformal,
-    "q278_signflip_test" -> q278SignFlip,
-    // q280 = q265's cells through the streaming state store (the
-    // q272/q255 discipline — one relational truth, two engine paths)
-    "q280_stream_mixture" -> q265DomainMixture,
-    "q271_textrank_keywords" -> q271TextRank,
-    "q282_domain_overlap" -> q282DomainOverlap,
-    "q283_cms_plan" -> q283CmsPlan,
-    "q284_dup_inflation" -> q284DupInflation,
-    // q285 = q284's digest cells through the streaming state store
-    // (the q272/q280 discipline — one cell builder, two engine paths)
-    "q285_stream_dup_inflation" -> q284DupInflation,
-    "q286_group_conformal" -> q286GroupConformal,
-    "q287_domain_dup_rate" -> q287DomainDupRate,
-    "q288_lang_mix" -> q288LangMix,
-    "q289_temperature_mixture" -> q289TemperatureMixture,
-    "q326_temperature_sweep" -> q326TemperatureSweep,
-    // q327 = q326's cells built by the streaming state store (the
-    // q280 discipline — one relational truth, two engine paths)
-    "q327_stream_temperature_sweep" -> q326TemperatureSweep,
-    "q328_join_skew_preflight" -> q328JoinSkewPreflight,
-    "q329_split_leakage" -> q329SplitLeakage,
-    // q337 = q329's cells built by the streaming state store (the
-    // q285 discipline — one relational truth, two engine paths)
-    "q337_stream_split_leakage" -> q329SplitLeakage,
-    "q330_neardup_split_leakage" -> q330NearDupSplitLeakage,
-    "q331_dedup_aware_kfold" -> q331DedupAwareKfold,
-    "q338_semantic_split_leakage" -> q338SemanticSplitLeakage,
-    "q332_neardup_aware_kfold" -> q332NearDupAwareKfold,
-    "q333_mixture_feasibility" -> q333MixtureFeasibility,
-    "q334_shard_skew_preflight" -> q334ShardSkewPreflight,
-    "q335_token_shard_plan" -> q335TokenShardPlan,
-    "q336_anneal_mixture_plan" -> q336AnnealMixturePlan,
-    "q339_salt_plan" -> q339SaltPlan,
-    "q340_t_closeness" -> q340TCloseness,
-    // q342 = q340's cells built by the streaming state store (the
-    // q290 discipline — one relational truth, two engine paths)
-    "q342_stream_t_closeness" -> q340TCloseness,
-    "q341_kanon_suppression" -> q341KanonSuppression,
-    "q343_salted_join" -> q343SaltedJoin,
-    "q344_fold_parity" -> q344FoldParity,
-    // q346 = q344's cells built by the streaming state store (the
-    // q337/q342 discipline — one relational truth, two engine paths)
-    "q346_stream_fold_parity" -> q344FoldParity,
-    "q345_kanon_generalization" -> q345KanonGeneralization,
-    "q347_stratified_parity" -> q347StratifiedParity,
-    "q348_freshness" -> q348Freshness,
-    // q349 = q348's cells built by the streaming state store (the
-    // q346 discipline — one relational truth, two engine paths)
-    "q349_stream_freshness" -> q348Freshness,
-    "q350_semantic_fold_parity" -> q350SemanticFoldParity,
-    "q351_ivf_staleness" -> q351IvfStaleness,
-    "q352_t_closeness_classes" -> q352TClosenessClasses,
-    "q353_semantic_decontaminate" -> q353SemanticDecontaminate,
-    "q291_ann_recall" -> q291AnnRecall,
-    "q292_stationary" -> q292Stationary,
-    "q294_pinball_loss" -> q294PinballLoss,
-    "q295_dedup_rate_by_domain" -> q295DedupRateByDomain,
-    "q264_l_diversity" -> q264LDiversity,
-    "q265_domain_mixture" -> q265DomainMixture,
-    "q266_heaps_growth" -> q266HeapsGrowth,
-    "q267_link_predict" -> q267LinkPredict,
-    "q268_lsh_plan" -> q268LshPlan,
-    "q269_kcenter_coreset" -> q269KCenterCoreset,
-    "q153_wau_sketch" -> q153WauSketch,
-    "q147_copurchase_rank" -> q147CopurchaseRank,
-    "q203_ppr_related" -> q203PprRelated,
-    "q204_kmv_setops" -> q204KmvSetOps,
-    "q206_cdc_chunks" -> q206CdcChunks(16, 128, 6),
-    "q141_hll_distinct" -> q141HllDistinct,
-    "q155_hll_overlap" -> q155HllOverlap,
-    "q161_join_size_est" -> q161JoinSizeEstimate,
-    "q166_kcore" -> q166KCore,
-    "q169_communities" -> q169Communities,
-    "q225_modularity" -> q225Modularity,
-    "q226_hits" -> q226Hits,
-    "q179_bfs_hops" -> q179BfsHops,
-    "q211_sssp" -> q211Sssp,
-    "q189_kmv_distinct" -> q189KmvDistinct,
-    // q200 = q189's sketch through the streaming state store: one
-    // truth, two engine paths (the q146/q150 HLL discipline)
-    "q200_stream_kmv" -> q189KmvDistinct,
-    "q173_weighted_rank" -> q173WeightedRank,
-    // q154 = q127's component truth through the forced-distributed
-    // pointer-doubling path: one oracle, two engine formulations
-    "q154_components_distributed" -> q127DedupClusters,
-    // q146/q150 = q141's sketch through the streaming state store and
-    // the native TypedImperativeAggregate: one oracle, three
-    // independent engine formulations (q116 discipline)
-    "q146_stream_hll" -> q141HllDistinct,
-    "q150_hll_native_agg" -> q141HllDistinct,
-    "q151_hll_rollup" -> q151HllRollup,
-    "q94_semantic_dedup" -> q94SemanticDedup,
-    "q99_neardup_keep_best" -> q99NearDupKeepBest,
-    "q100_corpus_report" -> q100CorpusReport,
-    "q101_dedup_lines" -> q101DedupLines,
-    "q102_exact_incremental" -> q102ExactIncremental,
-    "q103_remove_spans" -> q103RemoveSpans,
-    "q104_knn_classify" -> q104KnnClassify,
-    "q105_bigram_counts" -> q105BigramCounts,
-    "q106_hard_negatives" -> q106HardNegatives,
-    "q107_ppl_terciles" -> q107PplTerciles,
-    "q95_dsir_select" -> q95DsirSelect,
-    "q96_gopher_rules" -> q96GopherRules,
-    "q97_chunk_words" -> q97ChunkWords,
-    "q98_rebalance_mixture" -> q98RebalanceMixture,
-    "q88_bpe_tokens" -> q88BpeTokens,
-    "q108_bpe_byte_tokens" -> q108BpeByteTokens,
-    "q89_knn_pq_refine" -> q89PqRefine,
-    "q90_perplexity_score" -> q90PerplexityScore,
-    "q91_ccnet_sample" -> q91CcnetSample,
-    "q92_dedup_incremental" -> q92DedupIncremental,
-    // q109 = q102's relational semantics through the bloom-screened
-    // engine path: one oracle, two independent engine formulations
-    "q109_bloom_incremental" -> q102ExactIncremental,
-    "q110_boilerplate_lines" -> q110BoilerplateLines,
-    "q111_url_dedup" -> q111UrlDedup,
-    "q112_domain_cap" -> q112DomainCap,
-    "q113_bpe_train" -> q113BpeTrain,
-    "q114_curation_pipeline" -> q114CurationPipeline,
-    "q115_export_manifest" -> q115ExportManifest,
-    "q120_curation_trace" -> q120CurationTrace,
-    "q121_curation_funnel" -> q121CurationFunnel,
-    "q322_curation_costs" -> q322CurationCosts,
-    "q122_pps_sample" -> q122PpsSample,
-    "q123_bm25_topk" -> q123Bm25TopK,
-    "q124_normalize_nfc" -> q124NormalizeNfc,
-    "q125_gapfill_daily" -> q125GapfillDaily,
-    "q126_event_funnel" -> q126EventFunnel,
-    "q127_dedup_clusters" -> q127DedupClusters,
-    "q129_spelling_variants" -> q129SpellingVariants,
-    "q130_histogram" -> q130Histogram,
-    "q131_mad_outliers" -> q131MadOutliers,
-    "q132_funnel_counts" -> q132FunnelCounts,
-    "q133_zorder_key" -> q133ZorderKey,
-    "q229_hilbert_key" -> q229HilbertKey,
-    "q231_zonemap_pruning" -> q231ZonemapPruning,
-    "q232_markov_attribution" -> q232MarkovAttribution,
-    "q233_dominant_direction" -> q233DominantDirection,
-    "q234_mmr_topk" -> q234MmrTopK,
-    "q235_ewma_chart" -> q235EwmaChart,
-    // streaming twin: same truth, state-store path
-    "q240_stream_ewma" -> q235EwmaChart,
-    "q236_hybrid_rrf" -> q236HybridRrf,
-    "q237_robust_stats" -> q237RobustStats,
-    "q238_budget_sample" -> q238BudgetSample,
-    "q239_table_profile" -> q239TableProfile,
-    "q241_dyadic_quantiles" -> q241DyadicQuantiles,
-    "q242_code_switch" -> q242CodeSwitch,
-    "q243_pit_features" -> q243PitFeatures,
-    "q244_target_encode" -> q244TargetEncode,
-    "q245_equifreq_bins" -> q245EquifreqBins,
-    "q246_shard_migration" -> q246ShardMigration,
-    "q247_anisotropy" -> q247Anisotropy,
-    "q248_set_cover" -> q248SetCover,
-    "q249_rec_eval" -> q249RecEval,
-    "q250_auc_exact" -> q250AucExact,
-    "q251_decile_lift" -> q251DecileLift,
-    "q252_emd_drift" -> q252EmdDrift,
-    "q253_transitions" -> q253Transitions,
-    // q281 = q253's LEAD pairs through the keyed state store (one
-    // relational truth, two engine paths — the q152/q272 discipline)
-    "q281_stream_transitions" -> q253Transitions,
-    "q254_auc_by_group" -> q254AucByGroup,
-    "q255_stream_emd" -> q252EmdDrift,
-    "q256_robust_outliers" -> q256RobustOutliers,
-    "q257_cohen_kappa" -> q257CohenKappa,
-    "q258_abc_classes" -> q258AbcClasses,
-    "q259_log_rank" -> q259LogRank,
-    "q260_zipf_profile" -> q260ZipfProfile,
-    "q261_matryoshka" -> q261Matryoshka,
-    "q262_k_anonymity" -> q262KAnonymity,
-    // q290 = q262's cells through the streaming state store (the
-    // q272/q280/q285 discipline — one cell builder, two engine paths)
-    "q290_stream_kanon" -> q262KAnonymity,
-    "q263_zone_map" -> q263ZoneMap,
-    "q134_pivot_events" -> q134PivotEvents,
-    "q135_unpivot_events" -> q135UnpivotEvents,
-    "q136_time_weighted_avg" -> q136TimeWeightedAvg,
-    "q137_drift_alerts" -> q137DriftAlerts,
-    // q138 = q126's semantics through the incremental streaming path:
-    // one oracle, two independent engine formulations (q116 discipline)
-    "q138_stream_funnel" -> q126EventFunnel,
-    "q139_event_transitions" -> q139EventTransitions,
-    "q140_rfm_scores" -> q140RfmScores,
-    "q128_cohort_retention" -> q128CohortRetention,
-    "q93_duplicate_spans" -> q93DuplicateSpans,
-    "q82_stream_interval_join" -> q82StreamIntervalJoin,
-    "q57_knn_ivf" -> q57KnnIvf,
-    // q116 = q57's relational semantics through the persisted-index
-    // engine path: one oracle, two independent engine formulations
-    "q116_knn_ivf_indexed" -> q57KnnIvf,
-    "q117_tokenizer_fit" -> q117TokenizerFit,
-    "q84_knn_pq" -> q84PqTopK,
-    "q85_knn_ivfpq" -> q85IvfPq,
-    "q86_stream_neardup" -> q86StreamNearDup,
-    "q81_embed_quantize" -> q81EmbedQuantize,
-    "q210_random_projection" -> q210RandomProjection,
-    "q217_kmv_quantiles" -> q217KmvQuantiles,
-    "q80_quality_filter" -> q80QualityFilter,
-    "q79_pack_sequences" -> q79PackSequences,
-    "q118_packing_report" -> q118PackingReport,
-    "q119_snapshot_diff" -> q119SnapshotDiff,
-    "q77_dedup_segments" -> q77DedupSegments,
-    "q78_top_ngrams" -> q78TopNgrams,
-    "q74_pii_redaction" -> q74PiiRedaction,
-    "q75_decontaminate" -> q75Decontaminate,
-    "q223_ngram_novelty" -> q223NgramNovelty,
-    "q224_ams_f2" -> q224AmsF2,
-    "q76_weighted_sample" -> q76WeightedSample,
-    "q71_repetition" -> q71Repetition,
-    "q72_top_supplier" -> q72TopSupplier,
-    "q73_cap_per_source" -> q73CapPerSource,
-    "q49_image_features" -> q49ImageFeatures,
-    "q219_perceptual_dedup" -> q219PerceptualDedup,
-    "q66_quality_score" -> q66QualityScore,
-    "q67_tfidf_buckets" -> q67TfidfBuckets,
-    "q68_salted_agg" -> q68SaltedAgg,
-    "q69_stream_dedup" -> q69StreamDedup,
-    "q70_colocated_join" -> q70ColocatedJoin,
-    "q34_minhash_neardup" -> q34MinhashNearDup,
-    "q208_fuzzy_decontaminate" -> q208FuzzyDecontaminate,
-    // one relational truth, two engine paths (batch band join vs
-    // stream-static join through the state store)
-    "q216_stream_decontaminate" -> q208FuzzyDecontaminate,
-    "q35_simhash_neardup" -> q35SimhashNearDup,
-    "q36_jaccard_verify" -> q36JaccardVerify,
-    "q37_knn_brute" -> q37KnnBrute,
-    "q38_knn_lsh" -> q38KnnLsh,
-    "q39_embedding_neardup" -> q39EmbeddingNearDup,
-    "q56_neardup_keep" -> q56NearDupKeep)
 }

@@ -9,13 +9,12 @@ import graft.functions.{AggregationProcessor, Chain, FFTProcessor, Framing, Proc
 import graft.operators.{Analytics, Asof, Curation, Dedup, Graphs, Layout, Multimodal, Packing, Retrieval, Sampling, Similarity, Sketches, Skew, TextAnalysis, Timeseries, Validation, Xval}
 import graft.streaming.EventStreams
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query surface (SURVEY.md §7).
   *
-  * Every entry in [[queries]] is one operator from SURVEY.md §2 (or the
-  * north-star extensions) exercised over the driver test tables; entries
-  * with a matching [[oracleSql]] are hash-compared against DuckDB at
-  * sf0.01, the rest get rows-only checks (non-SQL-expressible kernels:
-  * xxhash64-based LSH, FFT, ANN) and are covered by ScalaTest goldens.
+  * Every entry in [[registry]] is one operator from SURVEY.md §2 (or the
+  * north-star extensions) exercised over the test tables, together
+  * with the DuckDB SQL its result is hash-compared against at sf0.01.
+  * [[queries]] and [[oracleSql]] are name-keyed views of the registry.
   *
   * Oracle-matching discipline (driver compares after sorting columns by
   * name): identical aliases on both sides; sums of doubles go through
@@ -127,14 +126,18 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query with its oracle, in ascending numeric id. Adding a query
+    * is adding one entry here; an oracle shared by several queries is one
+    * def ([[Oracles]] or a private helper below).
+    */
+  val registry: Seq[Query] = Query.registry(
 
     // ---- sketch tier: HLL distinct-count, sketch-as-table ----
     // Register table = one partial-agg'd groupBy (≤ |groups|·256 rows),
     // estimate = exact integer arithmetic end-to-end (register terms
     // are dyadic rationals summed in DECIMAL; one BigInt floor-div) —
     // the whole sketch replays bit-for-bit in the DuckDB oracle.
-    "q141_hll_distinct" -> ((s, dir) => {
+    Query("q141_hll_distinct", Oracles.q141HllDistinct, headline = true)((s, dir) => {
       Sketches.hllEstimate(
           Sketches.hllRegisters(events(s, dir), Seq("event_type"), "event_id"),
           Seq("event_type"))
@@ -146,7 +149,7 @@ object SparkEntry {
     // partial/final merged like sum — the 100 TB-preferred form; no
     // register-row shuffle at all). Oracle = q141's SQL: one relational
     // truth, THREE engine paths (table / stream / native agg).
-    "q150_hll_native_agg" -> ((s, dir) => {
+    Query("q150_hll_native_agg", Oracles.q141HllDistinct)((s, dir) => {
       events(s, dir)
         .groupBy("event_type")
         .agg(graft.plans.GraftExtensions.hllNative(
@@ -160,7 +163,7 @@ object SparkEntry {
     // total distinct counts in ONE aggregation — the sketch composes
     // with Catalyst's grouping-set machinery like any built-in agg
     // (subtotal keys coalesced to engine-stable labels).
-    "q151_hll_rollup" -> ((s, dir) => {
+    Query("q151_hll_rollup", Oracles.q151HllRollup)((s, dir) => {
       events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
         .rollup("day", "event_type")
@@ -178,7 +181,10 @@ object SparkEntry {
     // how much data flows through. Oracle = q141's SQL exactly (one
     // oracle, two engine paths — the q138/q109 discipline); the
     // estimate runs batch-side on the final register snapshot.
-    "q146_stream_hll" -> ((s, dir) => {
+    // q146/q150 = q141's sketch through the streaming state store and
+    // the native TypedImperativeAggregate: one oracle, three
+    // independent engine formulations (q116 discipline)
+    Query("q146_stream_hll", Oracles.q141HllDistinct)((s, dir) => {
       val regs = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Sketches.hllRegisters(df, Seq("event_type"), "event_id"),
         s"hll_sink_${System.nanoTime()}")
@@ -190,7 +196,7 @@ object SparkEntry {
     // Daily register tables fan out to their window's target days and
     // merge by max — the rolling-distinct dashboard from sketch-sized
     // state, no raw-history re-scan. Every step exact-integer.
-    "q153_wau_sketch" -> ((s, dir) => {
+    Query("q153_wau_sketch", Oracles.q153WauSketch)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val regs = Sketches.hllRegisters(ev, Seq("day"), "user_id")
@@ -204,13 +210,36 @@ object SparkEntry {
     // no false negatives); only survivors get exact counts, so the
     // output is exactly HAVING n·120 ≥ total — the oracle needs no
     // sketch replay, gating the screen's superset property on data.
-    "q142_heavy_hitters" -> ((s, dir) => {
+    // The heavy-hitter oracle is deliberately sketch-free: the engine's
+    // CMS screen must be output-invisible (superset property + exact
+    // verify), so plain GROUP BY/HAVING is the correct reference.
+    Query("q142_heavy_hitters",
+      """WITH t AS (SELECT COUNT(*) AS total FROM events)
+        |SELECT user_id, COUNT(*) AS n FROM events, t
+        |GROUP BY user_id, total HAVING COUNT(*) * 120 >= total
+        |ORDER BY user_id""".stripMargin, headline = true)((s, dir) => {
       Sketches.heavyHitters(events(s, dir), "user_id", relDen = 120L)
         .orderBy("user_id")
     }),
 
     // ---- validation tier: Deequ-style constraint suite, one scan ----
-    "q143_constraint_report" -> ((s, dir) => {
+    Query("q143_constraint_report",
+      """WITH a AS (SELECT COUNT(*) AS n, COUNT(text) AS ct,
+        |    COUNT(DISTINCT doc_id) AS cd,
+        |    SUM(CASE WHEN n_chars >= 0 THEN 1 ELSE 0 END) AS cn,
+        |    SUM(CASE WHEN lang IN ('en','de','fr','es','zh') THEN 1 ELSE 0 END) AS cl,
+        |    SUM(CASE WHEN length(text) > 0 THEN 1 ELSE 0 END) AS ce,
+        |    SUM(n_chars) AS sc
+        |  FROM documents)
+        |SELECT * FROM (
+        |  SELECT 'complete_text' AS "constraint", CAST(ct AS BIGINT) AS observed,
+        |    CAST(n AS BIGINT) AS expected, ct = n AS passed FROM a
+        |  UNION ALL SELECT 'unique_doc_id', CAST(cd AS BIGINT), CAST(n AS BIGINT), cd = n FROM a
+        |  UNION ALL SELECT 'nonneg_n_chars', CAST(cn AS BIGINT), CAST(n AS BIGINT), cn = n FROM a
+        |  UNION ALL SELECT 'lang_in_domain', CAST(cl AS BIGINT), CAST(n AS BIGINT), cl = n FROM a
+        |  UNION ALL SELECT 'text_nonempty', CAST(ce AS BIGINT), CAST(n AS BIGINT), ce = n FROM a
+        |  UNION ALL SELECT 'sum_chars_floor', CAST(sc AS BIGINT), CAST(n * 100 AS BIGINT), sc >= n * 100 FROM a
+        |) ORDER BY "constraint"""".stripMargin)((s, dir) => {
       Validation.constraintReport(documents(s, dir),
           Validation.documentSuite(Seq("en", "de", "fr", "es", "zh")))
         .orderBy("constraint")
@@ -219,7 +248,19 @@ object SparkEntry {
     // ---- validation tier: SCD2 dimension history merge ----
     // Base snapshot (ver 0) + first-urgent-order upgrades (ver = event
     // µs) → validity-ranged history; one union + one per-key window.
-    "q144_scd2_history" -> ((s, dir) => {
+    Query("q144_scd2_history",
+      """WITH base AS (
+        |  SELECT c_custkey, c_mktsegment AS segment, CAST(0 AS BIGINT) AS ver
+        |  FROM customer),
+        |upd AS (
+        |  SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
+        |    MIN(epoch_us(o_orderdate)) AS ver
+        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
+        |all_v AS (SELECT * FROM base UNION ALL SELECT * FROM upd)
+        |SELECT c_custkey, segment, ver AS valid_from,
+        |  lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) AS valid_to,
+        |  lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) IS NULL AS is_current
+        |FROM all_v ORDER BY c_custkey, valid_from""".stripMargin)((s, dir) => {
       val base = customer(s, dir).select(col("c_custkey"),
         col("c_mktsegment").as("segment"), lit(0L).as("ver"))
       val upd = orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
@@ -233,7 +274,19 @@ object SparkEntry {
     // ---- validation tier: exact two-sample KS drift statistic ----
     // click-value vs purchase-value distributions; D kept exact by
     // cross-multiplied integer CDFs over the two-phase global order.
-    "q145_ks_drift" -> ((s, dir) => {
+    Query("q145_ks_drift",
+      """WITH s AS (
+        |  SELECT value, CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS f
+        |  FROM events WHERE event_type IN ('click', 'purchase')),
+        |v AS (SELECT value, SUM(1 - f) AS c1, SUM(f) AS c2 FROM s GROUP BY value),
+        |t AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2 FROM v),
+        |c AS (SELECT SUM(c1) OVER (ORDER BY value) AS cum1,
+        |             SUM(c2) OVER (ORDER BY value) AS cum2 FROM v)
+        |SELECT n1, n2,
+        |  CAST(MAX(ABS(cum1 * n2 - cum2 * n1)) AS BIGINT) AS ks_num,
+        |  CAST(MAX(ABS(cum1 * n2 - cum2 * n1)) AS BIGINT)::DOUBLE
+        |    / (n1 * n2)::DOUBLE AS ks
+        |FROM c, t GROUP BY n1, n2""".stripMargin, headline = true)((s, dir) => {
       Analytics.ksDrift(
           events(s, dir).filter(col("event_type").isin("click", "purchase")),
           "value", col("event_type") === "purchase")
@@ -242,7 +295,23 @@ object SparkEntry {
     // ---- validation tier: per-source constraint report ----
     // q143's suite keyed by source (Deequ group-by analyzers): one
     // partial-agg'd shuffle emits every source's health row.
-    "q149_constraints_by_source" -> ((s, dir) => {
+    Query("q149_constraints_by_source",
+      """WITH a AS (SELECT source, COUNT(*) AS n, COUNT(text) AS ct,
+        |    COUNT(DISTINCT doc_id) AS cd,
+        |    SUM(CASE WHEN n_chars >= 0 THEN 1 ELSE 0 END) AS cn,
+        |    SUM(CASE WHEN lang IN ('en','de','fr','es','zh') THEN 1 ELSE 0 END) AS cl,
+        |    SUM(CASE WHEN length(text) > 0 THEN 1 ELSE 0 END) AS ce,
+        |    SUM(n_chars) AS sc
+        |  FROM documents GROUP BY source)
+        |SELECT * FROM (
+        |  SELECT source, 'complete_text' AS "constraint", CAST(ct AS BIGINT) AS observed,
+        |    CAST(n AS BIGINT) AS expected, ct = n AS passed FROM a
+        |  UNION ALL SELECT source, 'unique_doc_id', CAST(cd AS BIGINT), CAST(n AS BIGINT), cd = n FROM a
+        |  UNION ALL SELECT source, 'nonneg_n_chars', CAST(cn AS BIGINT), CAST(n AS BIGINT), cn = n FROM a
+        |  UNION ALL SELECT source, 'lang_in_domain', CAST(cl AS BIGINT), CAST(n AS BIGINT), cl = n FROM a
+        |  UNION ALL SELECT source, 'text_nonempty', CAST(ce AS BIGINT), CAST(n AS BIGINT), ce = n FROM a
+        |  UNION ALL SELECT source, 'sum_chars_floor', CAST(sc AS BIGINT), CAST(n * 100 AS BIGINT), sc >= n * 100 FROM a
+        |) ORDER BY source, "constraint"""".stripMargin)((s, dir) => {
       Validation.constraintReportBy(documents(s, dir), Seq("source"),
           Validation.documentSuite(Seq("en", "de", "fr", "es", "zh")))
         .orderBy("source", "constraint")
@@ -252,7 +321,7 @@ object SparkEntry {
     // event_type mix on even vs odd epoch-days; every IEEE op has
     // exactly-representable operands in a fixed order, cells summed by
     // an ordered fold — bit-identical across engines.
-    "q148_chisq_drift" -> ((s, dir) => {
+    Query("q148_chisq_drift", chisqDriftSql)((s, dir) => {
       Analytics.chisqDrift(events(s, dir), "event_type",
         pmod(expr("unix_micros(ts) DIV 86400000000"), lit(2)) === 1)
     }),
@@ -261,7 +330,9 @@ object SparkEntry {
     // built as bounded streaming state (groupBy-sum over |categories|
     // keys); the exact fold runs batch-side on the final snapshot.
     // Oracle = q148's SQL (one relational truth, two engine paths).
-    "q152_stream_chisq" -> ((s, dir) => {
+    // q152 = q148's statistic with the cells built through streaming
+    // state: one relational truth, two engine paths (q116 discipline)
+    Query("q152_stream_chisq", chisqDriftSql)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Analytics.chisqCells(df, "event_type",
           pmod(expr("unix_micros(ts) DIV 86400000000"), lit(2)) === 1),
@@ -273,7 +344,8 @@ object SparkEntry {
     // The domain/URL-ranking family of web-corpus curation (CCNet /
     // RefinedWeb source weighting) as iterated co-partitioned joins;
     // every hop is floor arithmetic, so DuckDB replays all 3 rounds.
-    "q147_copurchase_rank" -> ((s, dir) => {
+    Query("q147_copurchase_rank",
+      Oracles.q147CopurchaseRank, headline = true)((s, dir) => {
       val edges = Graphs.coOccurrenceEdges(
         lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false)
       Graphs.pageRankInt(edges, iters = 3, symmetric = true)
@@ -289,7 +361,10 @@ object SparkEntry {
     // union-find): one oracle, two engine paths — the q109/q138
     // discipline, here for the component solver a 100 TB near-dup
     // graph actually runs.
-    "q154_components_distributed" -> ((s, dir) => {
+    // q154 = q127's component truth through the forced-distributed
+    // pointer-doubling path: one oracle, two engine formulations
+    Query("q154_components_distributed",
+      Oracles.q127DedupClusters, headline = true)((s, dir) => {
       Dedup.clusterReport(documents(s, dir), numHashes = 32,
           rowsPerBand = 4, k = 5, threshold = 0.5, driverMaxEdges = 0)
         .orderBy("doc_id")
@@ -299,7 +374,7 @@ object SparkEntry {
     // click∩purchase distinct users ≈ est(A)+est(B)−est(A∪B); the union
     // sketch is the register-wise max (exact identity), every term on
     // the exact integer estimate path — replayed bit-for-bit.
-    "q155_hll_overlap" -> ((s, dir) => {
+    Query("q155_hll_overlap", Oracles.q155HllOverlap)((s, dir) => {
       Sketches.hllOverlapEstimate(events(s, dir),
         col("event_type") === "click", col("event_type") === "purchase",
         "user_id")
@@ -308,7 +383,26 @@ object SparkEntry {
     // ---- analytics tier: first-touch attribution ----
     // Each purchase credits its session's opening event type; revenue
     // summed DECIMAL-exact, cast to double once at the end.
-    "q156_first_touch" -> ((s, dir) => {
+    Query("q156_first_touch",
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (
+        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e),
+        |r AS (SELECT user_id, sid, event_type,
+        |    row_number() OVER (PARTITION BY user_id, sid ORDER BY us, event_id) AS rn
+        |  FROM s),
+        |f AS (SELECT user_id, sid, event_type AS first_type FROM r WHERE rn = 1),
+        |c AS (SELECT user_id, sid, COUNT(*) AS nc,
+        |    SUM(CAST(value AS DECIMAL(18,4))) AS rev
+        |  FROM s WHERE event_type = 'purchase' GROUP BY user_id, sid)
+        |SELECT f.first_type, CAST(SUM(c.nc) AS BIGINT) AS n_conversions,
+        |  CAST(CAST(SUM(c.rev) AS VARCHAR) AS DOUBLE) AS revenue
+        |FROM c JOIN f USING (user_id, sid)
+        |GROUP BY f.first_type ORDER BY f.first_type""".stripMargin)((s, dir) => {
       Analytics.firstTouchAttribution(events(s, dir), convType = "purchase")
         .orderBy("first_type")
     }),
@@ -317,7 +411,21 @@ object SparkEntry {
     // "also bought": top-3 neighbours per part by integer-scaled squared
     // cosine over order co-membership counts; window per item, never a
     // global sort.
-    "q157_also_bought" -> ((s, dir) => {
+    Query("q157_also_bought",
+      """WITH e0 AS (SELECT l_orderkey AS g, l_partkey AS i FROM lineitem),
+        |ok AS (SELECT g, i FROM e0 WHERE g NOT IN (
+        |  SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 1000)),
+        |d AS (SELECT DISTINCT g, i FROM ok),
+        |pc AS (SELECT a.i AS src, b.i AS dst, COUNT(*) AS n_both
+        |  FROM d a JOIN d b ON a.g = b.g AND a.i <> b.i GROUP BY a.i, b.i),
+        |ic AS (SELECT i, COUNT(*) AS n FROM d GROUP BY i),
+        |sc AS (SELECT src, dst, n_both,
+        |  CAST((n_both::HUGEINT * n_both * 1000000) // (ia.n::HUGEINT * ib.n) AS BIGINT) AS score
+        |  FROM pc JOIN ic ia ON ia.i = pc.src JOIN ic ib ON ib.i = pc.dst),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY score DESC, dst) AS rank
+        |  FROM sc)
+        |SELECT src AS item, dst AS nbr, n_both, score, CAST(rank AS INT) AS rank
+        |FROM r WHERE rank <= 3 ORDER BY item, rank""".stripMargin, headline = true)((s, dir) => {
       Graphs.itemSimilarityTopK(lineitem(s, dir), "l_orderkey",
           "l_partkey", k = 3)
         .orderBy("item", "rank")
@@ -327,7 +435,12 @@ object SparkEntry {
     // Daily partial-agg state (count + DECIMAL sum) persists to parquet
     // and folds back to per-type totals; the oracle recomputes from the
     // raw events — merged shards must equal the full scan bit-for-bit.
-    "q158_agg_state_merge" -> ((s, dir) => {
+    // q158's merged parquet state must equal the full recompute — the
+    // oracle IS the full recompute (count + DECIMAL-exact sum).
+    Query("q158_agg_state_merge",
+      """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS val_sum
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val path = TempDirs.scratch("aggstate")
@@ -343,7 +456,8 @@ object SparkEntry {
     // "How big is lineitem ⋈ lineitem on partkey?" answered from two
     // 8 KB counter tables (est = min-row dot product, an overestimate
     // by construction); the exact Σn² rides along to gate the bound.
-    "q161_join_size_est" -> ((s, dir) => {
+    Query("q161_join_size_est",
+      Oracles.q161JoinSizeEstimate, headline = true)((s, dir) => {
       val li = lineitem(s, dir)
       Sketches.cmsJoinSizeEstimate(li, "l_partkey", li, "l_partkey")
     }),
@@ -352,7 +466,22 @@ object SparkEntry {
     // Clustering structure of the co-purchase graph; wedges generate
     // only from each edge's (degree,id)-lower endpoint, so the count
     // costs O(m^1.5) instead of Σ deg².
-    "q162_triangles" -> ((s, dir) => {
+    Query("q162_triangles",
+      """WITH e0 AS (SELECT l_orderkey AS g, l_partkey AS i FROM lineitem),
+        |ok AS (SELECT g, i FROM e0 WHERE g NOT IN (
+        |  SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 1000)),
+        |c AS (SELECT DISTINCT least(x.i, y.i) AS a, greatest(x.i, y.i) AS b
+        |  FROM ok x JOIN ok y ON x.g = y.g AND x.i <> y.i),
+        |nd AS (SELECT COUNT(DISTINCT n) AS n_nodes FROM (
+        |  SELECT a AS n FROM c UNION ALL SELECT b FROM c)),
+        |ed AS (SELECT COUNT(*) AS n_edges FROM c),
+        |tri AS (SELECT COUNT(*) AS n_triangles FROM c e1
+        |  JOIN c e2 ON e2.a = e1.a AND e2.b > e1.b
+        |  JOIN c e3 ON e3.a = e1.b AND e3.b = e2.b)
+        |SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
+        |  CAST(n_edges AS BIGINT) AS n_edges,
+        |  CAST(n_triangles AS BIGINT) AS n_triangles
+        |FROM nd, ed, tri""".stripMargin, headline = true)((s, dir) => {
       Graphs.triangleCount(Graphs.coOccurrenceEdges(
         lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false))
     }),
@@ -360,7 +489,15 @@ object SparkEntry {
     // ---- validation tier: type-1 upsert (latest-wins MERGE) ----
     // q144's inputs collapsed to the CURRENT snapshot instead of
     // type-2 history: one union + one per-key window.
-    "q163_upsert_latest" -> ((s, dir) => {
+    Query("q163_upsert_latest",
+      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
+        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
+        |    MIN(epoch_us(o_orderdate)) AS ver
+        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
+        |a AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) AS rn FROM a)
+        |SELECT c_custkey, segment, ver FROM r WHERE rn = 1
+        |ORDER BY c_custkey""".stripMargin)((s, dir) => {
       val base = customer(s, dir).select(col("c_custkey"),
         col("c_mktsegment").as("segment"), lit(0L).as("ver"))
       val upd = orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
@@ -377,7 +514,13 @@ object SparkEntry {
     // snapshot. Oracle = q142's sketch-free HAVING (one relational
     // truth, two engine paths) — and since the counters only screen,
     // the exact verify keeps the output identical by construction.
-    "q164_stream_heavy" -> ((s, dir) => {
+    // q164 = q142's semantics with the counter table built through
+    // streaming state: one relational truth, two engine paths
+    Query("q164_stream_heavy",
+      """WITH t AS (SELECT COUNT(*) AS total FROM events)
+        |SELECT user_id, COUNT(*) AS n FROM events, t
+        |GROUP BY user_id, total HAVING COUNT(*) * 120 >= total
+        |ORDER BY user_id""".stripMargin)((s, dir) => {
       val counters = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Sketches.cmsCounters(df, "user_id"),
         s"cms_sink_${System.nanoTime()}")
@@ -393,7 +536,18 @@ object SparkEntry {
     // merge rule (a new session starts when the gap is ≥ 5 min — the
     // built-in merges only OVERLAPPING [ts, ts+gap) intervals) with
     // end = last_ts + gap.
-    "q165_stream_sessions" -> ((s, dir) => {
+    Query("q165_stream_sessions",
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (
+        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us >= 300000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e)
+        |SELECT user_id, MIN(us) AS start_us, MAX(us) + 300000000 AS end_us,
+        |  COUNT(*) AS n_events
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin)((s, dir) => {
       val agg = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => df.groupBy(col("user_id"),
             session_window(col("ts"), "5 minutes"))
@@ -410,7 +564,7 @@ object SparkEntry {
     // 3 synchronous rounds of dropping degree-<90 nodes from the
     // co-purchase graph; each peel is one agg + two semi-joins, and
     // the oracle unrolls every round as CTEs (the q147 discipline).
-    "q166_kcore" -> ((s, dir) => {
+    Query("q166_kcore", Oracles.q166KCore)((s, dir) => {
       Graphs.kCorePeel(Graphs.coOccurrenceEdges(
           lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false),
           k = 90, rounds = 3)
@@ -422,7 +576,21 @@ object SparkEntry {
     // (us ∈ [valid_from, valid_to)): the warehouse "as-of transaction
     // time" lookup — an equi hash join on the key with the validity
     // range as residual condition, never a cartesian.
-    "q167_pit_enrich" -> ((s, dir) => {
+    Query("q167_pit_enrich",
+      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
+        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
+        |    MIN(epoch_us(o_orderdate)) AS ver
+        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
+        |all_v AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
+        |h AS (SELECT c_custkey, segment, ver AS valid_from,
+        |    lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) AS valid_to
+        |  FROM all_v),
+        |o AS (SELECT o_orderkey, o_custkey AS c_custkey, epoch_us(o_orderdate) AS us
+        |  FROM orders)
+        |SELECT o.o_orderkey, h.segment
+        |FROM o JOIN h USING (c_custkey)
+        |WHERE o.us >= h.valid_from AND (h.valid_to IS NULL OR o.us < h.valid_to)
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
       val base = customer(s, dir).select(col("c_custkey"),
         col("c_mktsegment").as("segment"), lit(0L).as("ver"))
       val upd = orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
@@ -445,7 +613,16 @@ object SparkEntry {
     // Streaming events broadcast-joined to a batch-derived user-tier
     // dimension inside the stream, aggregated per (tier, type) through
     // the state store. Oracle = the same enrichment as batch SQL.
-    "q168_stream_enrich" -> ((s, dir) => {
+    Query("q168_stream_enrich",
+      """WITH dim AS (
+        |  SELECT user_id,
+        |    CASE WHEN COUNT(*) >= 20 THEN 'whale'
+        |         WHEN COUNT(*) >= 10 THEN 'regular'
+        |         ELSE 'light' END AS tier
+        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id)
+        |SELECT COALESCE(d.tier, 'none') AS tier, e.event_type, COUNT(*) AS n
+        |FROM events e LEFT JOIN dim d USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) => {
       val dim = events(s, dir).filter(col("event_type") === "purchase")
         .groupBy("user_id").agg(count(lit(1)).as("n_purch"))
         .withColumn("tier", when(col("n_purch") >= 20, "whale")
@@ -464,7 +641,7 @@ object SparkEntry {
     // Two synchronous rounds of adopt-the-majority-neighbour-label
     // (ties → min label) over the co-purchase graph; deterministic by
     // construction, every round unrolled in the oracle.
-    "q169_communities" -> ((s, dir) => {
+    Query("q169_communities", Oracles.q169Communities)((s, dir) => {
       Graphs.labelPropagate(Graphs.coOccurrenceEdges(
           lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false),
           rounds = 2)
@@ -477,7 +654,7 @@ object SparkEntry {
     // integer Q_c·4m² = 4m·L_c − D_c² (no doubles emitted; Q = Σ
     // q_num / q_den is one division away). The quality gate a
     // community-detection pipeline ships with.
-    "q225_modularity" -> ((s, dir) => {
+    Query("q225_modularity", Oracles.q225Modularity)((s, dir) => {
       val edges = Graphs.coOccurrenceEdges(
         lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false)
       Graphs.modularity(edges, Graphs.labelPropagate(edges, rounds = 2))
@@ -490,7 +667,7 @@ object SparkEntry {
     // suppliers selling to well-connected customers, authority =
     // customers buying from strong hubs. Max-normalized (no L2 sqrt) —
     // every score an exact BIGINT, rounds unrolled in the oracle.
-    "q226_hits" -> ((s, dir) => {
+    Query("q226_hits", Oracles.q226Hits)((s, dir) => {
       val li = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
       val o = orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val edges = li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -505,7 +682,7 @@ object SparkEntry {
     // probability drop when the channel's inbound transitions are
     // redirected to NULL. Six bounded absorption rounds in 10⁻¹² fixed
     // point, every round unrolled in the oracle.
-    "q232_markov_attribution" -> ((s, dir) => {
+    Query("q232_markov_attribution", Oracles.q232MarkovAttribution)((s, dir) => {
       Analytics.markovAttribution(events(s, dir), convType = "purchase",
           gapUs = 604800000000L, rounds = 6)
         .orderBy("event_type")
@@ -518,7 +695,7 @@ object SparkEntry {
     // scored against a fixed query box by the row-group skipping rule.
     // Hilbert ≤ Z-order ≤ compound in files scanned — measured, not
     // asserted. All integer; both native layout expressions replayed.
-    "q231_zonemap_pruning" -> ((s, dir) => {
+    Query("q231_zonemap_pruning", Oracles.q231ZonemapPruning)((s, dir) => {
       val o = orders(s, dir)
       val x16 = pmod(floor(col("o_custkey") / 1).cast("long"), lit(65536L))
       val y16 = pmod(floor(col("o_totalprice") / 100).cast("long"), lit(65536L))
@@ -543,7 +720,29 @@ object SparkEntry {
     // naive previous-day forecast; error sums in exact integer 10⁻⁴
     // units, MASE as one DECIMAL-floor division. The "is weekly
     // seasonality real here" gate before any heavier model.
-    "q230_seasonal_backtest" -> ((s, dir) => {
+    // Calendar-lag self-joins (gaps → NULL, never the previous
+    // OBSERVED day) over integer-tenk daily revenue; MASE one HUGEINT
+    // floor division.
+    Query("q230_seasonal_backtest",
+      """WITH daily AS (SELECT c_mktsegment AS k,
+        |    epoch_us(o_orderdate) // 86400000000 AS d,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) * 10000 AS BIGINT) AS v
+        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2),
+        |s AS (SELECT a.k, a.d, a.v, b.v AS vs, c.v AS vn
+        |  FROM daily a
+        |  LEFT JOIN daily b ON b.k = a.k AND b.d = a.d - 7
+        |  LEFT JOIN daily c ON c.k = a.k AND c.d = a.d - 1)
+        |SELECT k AS c_mktsegment, COUNT(*)::BIGINT AS n_days,
+        |  COUNT(vs)::BIGINT AS c_seasonal, COUNT(vn)::BIGINT AS c_naive,
+        |  COALESCE(CAST(SUM(ABS(v - vs)) AS BIGINT), 0) AS err_seasonal_tenk,
+        |  COALESCE(CAST(SUM(ABS(v - vn)) AS BIGINT), 0) AS err_naive_tenk,
+        |  CASE WHEN COUNT(vs) > 0 AND COUNT(vn) > 0
+        |      AND COALESCE(SUM(ABS(v - vn)), 0) > 0
+        |    THEN CAST((1000000::HUGEINT * CAST(SUM(ABS(v - vs)) AS HUGEINT)
+        |      * COUNT(vn)) // (CAST(SUM(ABS(v - vn)) AS HUGEINT)
+        |      * COUNT(vs)) AS BIGINT)
+        |  END AS mase_q6
+        |FROM s GROUP BY k ORDER BY k""".stripMargin)((s, dir) => {
       val df = orders(s, dir)
         .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
         .withColumn("day", expr("unix_micros(o_orderdate) DIV 86400000000"))
@@ -557,7 +756,27 @@ object SparkEntry {
     // support/confidence/lift (‰ and 10⁻⁶ fixed point, DECIMAL-floor
     // divisions) over distinct order-membership, skew-capped baskets;
     // the rule miner behind "frequently bought together".
-    "q228_assoc_rules" -> ((s, dir) => {
+    // Distinct membership + capped baskets + self-join pair counts;
+    // every metric an exact HUGEINT floor division.
+    Query("q228_assoc_rules",
+      """WITH slim AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
+        |  FROM lineitem),
+        |ok AS (SELECT b FROM slim GROUP BY b HAVING COUNT(*) <= 1000),
+        |m AS (SELECT s.b, s.i FROM slim s JOIN ok USING (b)),
+        |nb AS (SELECT COUNT(DISTINCT b)::BIGINT AS n FROM m),
+        |ic AS (SELECT i, COUNT(*)::BIGINT AS c FROM m GROUP BY i),
+        |p AS (SELECT a.i AS item_a, b2.i AS item_b, COUNT(*)::BIGINT AS c_ab
+        |  FROM m a JOIN m b2 ON a.b = b2.b AND a.i <> b2.i
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
+        |SELECT item_a, item_b, ca.c AS c_a, cb.c AS c_b, c_ab,
+        |  nb.n AS n_baskets,
+        |  CAST((1000 * c_ab) // nb.n AS BIGINT) AS support_permille,
+        |  CAST((1000 * c_ab) // ca.c AS BIGINT) AS confidence_permille,
+        |  CAST((1000000::HUGEINT * c_ab * nb.n)
+        |    // (ca.c::HUGEINT * cb.c) AS BIGINT) AS lift_q6
+        |FROM p JOIN ic ca ON ca.i = item_a JOIN ic cb ON cb.i = item_b
+        |CROSS JOIN nb
+        |ORDER BY item_a, item_b""".stripMargin)((s, dir) => {
       Graphs.associationRules(lineitem(s, dir), "l_orderkey", "l_partkey",
           minPairCount = 2)
         .orderBy("item_a", "item_b")
@@ -569,7 +788,15 @@ object SparkEntry {
     // arrival order is irrelevant). Oracle = the batch window truth —
     // one relational answer, two engine paths (the q183/q200
     // discipline).
-    "q227_stream_topk" -> ((s, dir) => {
+    // The batch window truth for the streaming bounded top-k — value
+    // DESC with event_id tie-break, exactly the state-store sort.
+    Query("q227_stream_topk",
+      """SELECT event_type, rn, value, event_id FROM (
+        |  SELECT event_type, value, event_id,
+        |    row_number() OVER (PARTITION BY event_type
+        |      ORDER BY value DESC, event_id) AS rn
+        |  FROM events WHERE value IS NOT NULL)
+        |WHERE rn <= 5 ORDER BY event_type, rn""".stripMargin)((s, dir) => {
       val out = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => EventStreams.topKStream(s, df, 5),
         s"topk_sink_${System.nanoTime()}",
@@ -586,7 +813,9 @@ object SparkEntry {
     // q189's bottom-k minima through the streaming state store (k
     // longs of bounded state per key), read out by the same integer
     // estimate — one oracle, two engine paths.
-    "q200_stream_kmv" -> ((s, dir) => {
+    // q200 = q189's sketch through the streaming state store: one
+    // truth, two engine paths (the q146/q150 HLL discipline)
+    Query("q200_stream_kmv", Oracles.q189KmvDistinct)((s, dir) => {
       val out = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => EventStreams.kmvStream(s, df, 256),
         s"kmv_sink_${System.nanoTime()}",
@@ -604,7 +833,29 @@ object SparkEntry {
     // ---- analytics tier: behavioral entropy per user ----
     // Shannon entropy of each user's event-type mix, every −p·ln p
     // term in 10⁻¹² fixed-point so the sum is exact and order-free.
-    "q199_user_entropy" -> ((s, dir) => {
+    // Shared integer log kernel (FixedMath.lnCteSql — the exact
+    // bit-recurrence Spark runs via graft_ln_q12): no libm ln anywhere,
+    // so the hash is a property of the data, not the oracle's build.
+    // E = n·L(n) − Σ c·L(c); entropy_q = E // n (floor ≡ DIV on ≥ 0).
+    Query("q199_user_entropy",
+      ("""WITH RECURSIVE
+        |c AS (SELECT user_id, event_type, COUNT(*) AS c
+        |  FROM events GROUP BY 1, 2),
+        |t AS (SELECT user_id, c,
+        |    CAST(SUM(c) OVER (PARTITION BY user_id) AS BIGINT) AS n FROM c),
+        |_ks AS (SELECT DISTINCT k FROM
+        |  (SELECT c AS k FROM t UNION SELECT n FROM t)),
+        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
+        |q AS (SELECT t.user_id, t.c, t.n, lc.l AS lc, lnn.l AS lnn
+        |  FROM t JOIN _lnq lc ON lc.k = t.c
+        |         JOIN _lnq lnn ON lnn.k = t.n),
+        |e AS (SELECT user_id, MAX(n) AS n_events, COUNT(*) AS n_cats,
+        |    MAX(n)::HUGEINT * MAX(lnn) - SUM(c::HUGEINT * lc) AS e
+        |  FROM q GROUP BY user_id)
+        |SELECT user_id, n_events, n_cats,
+        |  CAST(e // CAST(n_events AS HUGEINT) AS BIGINT) AS entropy_q,
+        |  CAST(CAST(e // CAST(n_events AS HUGEINT) AS BIGINT) AS DOUBLE) / 1e12 AS entropy
+        |FROM e ORDER BY user_id""".stripMargin))((s, dir) => {
       Analytics.categoryEntropy(events(s, dir), "user_id", "event_type")
         .orderBy("user_id")
     }),
@@ -613,7 +864,31 @@ object SparkEntry {
     // Revenue concentration across customers per market segment:
     // exact rank-weighted DECIMAL sums, two IEEE ops — "how unequal is
     // this segment's spend".
-    "q198_gini" -> ((s, dir) => {
+    Query("q198_gini",
+      """WITH rev AS (
+        |  SELECT o_custkey,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS rev
+        |  FROM orders GROUP BY 1),
+        |x AS (
+        |  SELECT c_mktsegment, c_custkey,
+        |    COALESCE(rev, CAST(0 AS DECIMAL(18,4))) AS rev
+        |  FROM customer LEFT JOIN rev ON c_custkey = o_custkey),
+        |r AS (
+        |  SELECT c_mktsegment, rev, row_number() OVER (
+        |    PARTITION BY c_mktsegment ORDER BY rev, c_custkey) AS i
+        |  FROM x),
+        |m AS (
+        |  SELECT c_mktsegment, COUNT(*) AS n, SUM(rev) AS sx,
+        |    SUM(rev * CAST(i AS DECIMAL(12,0))) AS six
+        |  FROM r GROUP BY 1),
+        |d AS (
+        |  SELECT c_mktsegment, n, CAST(n AS DOUBLE) AS nd,
+        |    CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS sxd,
+        |    CAST(CAST(six AS VARCHAR) AS DOUBLE) AS sixd
+        |  FROM m)
+        |SELECT c_mktsegment, n, sxd AS total,
+        |  2.0 * sixd / (nd * sxd) - (nd + 1.0) / nd AS gini
+        |FROM d ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
       val rev = orders(s, dir).groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast("decimal(18,4)"))
           .cast("decimal(18,4)").as("rev"))
@@ -629,7 +904,34 @@ object SparkEntry {
     // Market-basket lift between event types over 5-min-gap sessions:
     // exact counts, one double division; pair explosion bounded by
     // #types² per session, never by rows.
-    "q197_session_lift" -> ((s, dir) => {
+    Query("q197_session_lift",
+      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (SELECT *, SUM(CASE WHEN prev_us IS NULL
+        |      OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id
+        |      ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e),
+        |st AS (SELECT DISTINCT user_id, sid, event_type FROM s),
+        |ns AS (SELECT COUNT(*) AS n_sessions
+        |  FROM (SELECT DISTINCT user_id, sid FROM st)),
+        |si AS (SELECT event_type AS t, COUNT(*) AS n FROM st GROUP BY 1),
+        |pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+        |    COUNT(*) AS n_ab
+        |  FROM st a JOIN st b ON a.user_id = b.user_id AND a.sid = b.sid
+        |    AND a.event_type < b.event_type
+        |  GROUP BY 1, 2)
+        |SELECT type_a, type_b, na.n AS n_a, nb.n AS n_b, n_ab,
+        |  ns.n_sessions,
+        |  CAST(n_ab * ns.n_sessions AS DOUBLE)
+        |    / CAST(na.n * nb.n AS DOUBLE) AS lift
+        |FROM pr
+        |JOIN si na ON na.t = type_a
+        |JOIN si nb ON nb.t = type_b
+        |CROSS JOIN ns
+        |ORDER BY type_a, type_b""".stripMargin)((s, dir) => {
       Analytics.sessionLift(events(s, dir))
         .orderBy("type_a", "type_b")
     }),
@@ -638,7 +940,37 @@ object SparkEntry {
     // User lifetime (first→last event day) survival: d/n at risk per
     // duration, running product in 10⁻¹² fixed-point log space —
     // order-independent across engines and window implementations.
-    "q196_survival_km" -> ((s, dir) => {
+    // Same integer log kernel as q199; the survival curve is gated in
+    // log space (log_surv_q = Σ L(n−d) − L(n), exact longs) — the
+    // round-9 exp(·) terminal double was a libm property, not a data
+    // property, and is deliberately not emitted. d = n (the necessarily
+    // final row) pins log_surv_q to NULL (S = 0).
+    Query("q196_survival_km",
+      ("""WITH RECURSIVE
+        |life AS (
+        |  SELECT user_id,
+        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t
+        |  FROM events GROUP BY user_id),
+        |g AS (SELECT t, COUNT(*) AS d FROM life GROUP BY t),
+        |r AS (SELECT t, d,
+        |    SUM(d) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
+        |    SUM(d) OVER () AS tot
+        |  FROM g),
+        |kk AS (SELECT t, d, CAST(tot - cum + d AS BIGINT) AS n_at_risk FROM r),
+        |_ks AS (SELECT DISTINCT k FROM (
+        |  SELECT n_at_risk AS k FROM kk WHERE d < n_at_risk
+        |  UNION SELECT n_at_risk - d FROM kk WHERE d < n_at_risk)),
+        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
+        |q AS (SELECT kk.t, kk.d, kk.n_at_risk,
+        |    CASE WHEN kk.d = kk.n_at_risk THEN NULL
+        |      ELSE lnd.l - lnn.l END AS lq
+        |  FROM kk LEFT JOIN _lnq lnn ON lnn.k = kk.n_at_risk
+        |          LEFT JOIN _lnq lnd ON lnd.k = kk.n_at_risk - kk.d)
+        |SELECT t, d, n_at_risk,
+        |  CASE WHEN d = n_at_risk THEN NULL
+        |    ELSE CAST(SUM(lq) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
+        |  END AS log_surv_q
+        |FROM q ORDER BY t""".stripMargin))((s, dir) => {
       val life = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
         .groupBy("user_id")
@@ -652,7 +984,39 @@ object SparkEntry {
     // they leave the risk set without a death term (the standard KM
     // estimator; q196 is the no-censoring special case). Gated in log
     // space over the shared integer-log kernel like q196.
-    "q201_km_censored" -> ((s, dir) => {
+    // q196's estimator with censoring: censored subjects (never-
+    // purchasers) shrink the risk set without a death term; d = 0
+    // rows carry the running sum unchanged.
+    Query("q201_km_censored",
+      ("""WITH RECURSIVE
+        |life AS (
+        |  SELECT user_id,
+        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t,
+        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS evt
+        |  FROM events GROUP BY user_id),
+        |g AS (SELECT t, CAST(SUM(evt) AS BIGINT) AS d,
+        |    CAST(SUM(1 - evt) AS BIGINT) AS c
+        |  FROM life GROUP BY t),
+        |r AS (SELECT t, d, c,
+        |    SUM(d + c) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
+        |    SUM(d + c) OVER () AS tot
+        |  FROM g),
+        |kk AS (SELECT t, d, c, CAST(tot - cum + d + c AS BIGINT) AS n_at_risk FROM r),
+        |_ks AS (SELECT DISTINCT k FROM (
+        |  SELECT n_at_risk AS k FROM kk WHERE d > 0 AND d < n_at_risk
+        |  UNION SELECT n_at_risk - d FROM kk WHERE d > 0 AND d < n_at_risk)),
+        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
+        |q AS (SELECT kk.t, kk.d, kk.c, kk.n_at_risk,
+        |    CASE WHEN kk.d = 0 THEN 0
+        |      WHEN kk.d = kk.n_at_risk THEN NULL
+        |      ELSE lnd.l - lnn.l END AS lq
+        |  FROM kk LEFT JOIN _lnq lnn ON lnn.k = kk.n_at_risk
+        |          LEFT JOIN _lnq lnd ON lnd.k = kk.n_at_risk - kk.d)
+        |SELECT t, d, c, n_at_risk,
+        |  CASE WHEN d = n_at_risk THEN NULL
+        |    ELSE CAST(SUM(lq) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
+        |  END AS log_surv_q
+        |FROM q ORDER BY t""".stripMargin))((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val life = ev.groupBy("user_id")
@@ -667,7 +1031,7 @@ object SparkEntry {
     // tables for click-users and purchase-users, union re-rank, match
     // count -> Jaccard + intersection estimates, every selection pure
     // hash order (the q189 sketch as a mergeable TABLE).
-    "q204_kmv_setops" -> ((s, dir) => {
+    Query("q204_kmv_setops", Oracles.q204KmvSetOps, headline = true)((s, dir) => {
       val ev = events(s, dir)
       val a = Sketches.kmvMinsTable(
         ev.filter(col("event_type") === "click"), Nil, "user_id", 256)
@@ -681,7 +1045,7 @@ object SparkEntry {
     // bottom-256 hash sample — mergeable, integer-exact selection
     // (pure hash/rank arithmetic, no t-digest float centroids), exact
     // when distinct count < k.
-    "q217_kmv_quantiles" -> ((s, dir) => {
+    Query("q217_kmv_quantiles", Oracles.q217KmvQuantiles)((s, dir) => {
       Sketches.kmvQuantiles(
         lineitem(s, dir).withColumn("cents",
           (col("l_extendedprice").cast("decimal(18,2)") * 100)
@@ -696,7 +1060,8 @@ object SparkEntry {
     // band join; a doc is contaminated when its estimated Jaccard vs
     // ANY benchmark doc reaches 0.3. Exact n-gram decontamination is
     // q75; this catches the lightly-edited copies it misses.
-    "q208_fuzzy_decontaminate" -> ((s, dir) => {
+    Query("q208_fuzzy_decontaminate",
+      Oracles.q208FuzzyDecontaminate, headline = true)((s, dir) => {
       val d = documents(s, dir)
       Dedup.fuzzyDecontaminate(
           d.filter(col("doc_id") % 13 =!= 0),
@@ -712,7 +1077,9 @@ object SparkEntry {
     // aggregation; readout left-joins the roster. Oracle = q208's SQL
     // (one relational truth, two engine paths — the q86/q205
     // discipline).
-    "q216_stream_decontaminate" -> ((s, dir) => {
+    // one relational truth, two engine paths (batch band join vs
+    // stream-static join through the state store)
+    Query("q216_stream_decontaminate", Oracles.q208FuzzyDecontaminate)((s, dir) => {
       val d = documents(s, dir)
       val benchIdx = Dedup.minhashIndex(
         d.filter(col("doc_id") % 13 === 0), 32, 4, 5)
@@ -738,7 +1105,24 @@ object SparkEntry {
     // duplication whose symmetric Jaccard stays small. Prefix filter
     // on the RAREST digests of the contained side, recall 1; oracle is
     // the unfiltered pairwise truth.
-    "q209_containment_join" -> ((s, dir) => {
+    // q209 = the unfiltered pairwise containment truth: directed pairs,
+    // containment = inter / |A| over distinct 12-char shingles, one
+    // IEEE division of exact integers (engine-identical).
+    Query("q209_containment_join",
+      """WITH tk AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
+        |    i -> substring(lower(text), i, 12)))) AS tok
+        |  FROM documents),
+        |sz AS (SELECT doc_id, COUNT(*) AS s FROM tk GROUP BY doc_id),
+        |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+        |  FROM tk a JOIN tk b ON a.tok = b.tok AND a.doc_id != b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
+        |  inter::DOUBLE / sa.s AS containment
+        |FROM pr JOIN sz sa ON sa.doc_id = id_a
+        |WHERE inter::DOUBLE / sa.s >= 0.9
+        |ORDER BY id_a, id_b""".stripMargin, headline = true)((s, dir) => {
       Dedup.containmentJoin(documents(s, dir), tau = 0.9)
         .orderBy("id_a", "id_b")
     }),
@@ -748,7 +1132,38 @@ object SparkEntry {
     // by shingle SET, join representatives only, report multiplicities
     // (Σ n_pairs ≡ the plain join's pair count) — output linear in
     // DISTINCT sets where the 100× clone corpus made q178 Θ(clones²).
-    "q207_setsim_collapsed" -> ((s, dir) => {
+    // unfiltered pairwise truth: the engine's prefix filter must lose
+    // NOTHING relative to this
+    // q207 = q178's truth on collapsed exact-duplicate groups: reps by
+    // min doc_id per distinct shingle set, pairwise over reps only,
+    // intra-group multiplicity rows carry the clone pairs.
+    Query("q207_setsim_collapsed",
+      """WITH tk AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
+        |    i -> substring(lower(text), i, 12)))) AS tok
+        |  FROM documents),
+        |ds AS (SELECT doc_id, list_sort(list(tok)) AS toks
+        |  FROM tk GROUP BY doc_id),
+        |g AS (SELECT toks, MIN(doc_id) AS id, COUNT(*) AS n
+        |  FROM ds GROUP BY toks),
+        |pr AS (SELECT a.id AS id_a, b.id AS id_b,
+        |    len(list_intersect(a.toks, b.toks)) AS inter,
+        |    len(a.toks) AS sa, len(b.toks) AS sb,
+        |    a.n AS n_a, b.n AS n_b
+        |  FROM g a JOIN g b ON a.id < b.id),
+        |interg AS (SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
+        |    inter::DOUBLE / (sa + sb - inter) AS jaccard,
+        |    CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+        |    CAST(n_a * n_b AS BIGINT) AS n_pairs
+        |  FROM pr WHERE inter::DOUBLE / (sa + sb - inter) >= 0.8),
+        |intrag AS (SELECT id AS id_a, id AS id_b,
+        |    CAST(len(toks) AS BIGINT) AS inter, 1.0::DOUBLE AS jaccard,
+        |    CAST(n AS BIGINT) AS n_a, CAST(n AS BIGINT) AS n_b,
+        |    CAST(n * (n - 1) // 2 AS BIGINT) AS n_pairs
+        |  FROM g WHERE n > 1)
+        |SELECT * FROM (SELECT * FROM interg UNION ALL SELECT * FROM intrag)
+        |ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
       Dedup.setSimJoinCollapsed(documents(s, dir), tau = 0.8)
         .orderBy("id_a", "id_b")
     }),
@@ -758,7 +1173,7 @@ object SparkEntry {
     // reshapes only the chunks it touches), corpus-frequency view of
     // the repeated chunks — the storage-dedup complement to q93's
     // fixed-window spans. Oracle replays the walk as a recursive CTE.
-    "q206_cdc_chunks" -> ((s, dir) => {
+    Query("q206_cdc_chunks", Oracles.q206CdcChunks(16, 128, 6))((s, dir) => {
       Dedup.cdcDuplicateChunks(documents(s, dir))
         .orderBy(col("n_chunks").desc, col("digest"))
         .limit(20)
@@ -768,7 +1183,12 @@ object SparkEntry {
     // q202's cells maintained by a Complete-mode streaming aggregation
     // (the q152 chi-sq shape), PSI readout shared with the batch path —
     // one truth, two engine paths.
-    "q205_stream_psi" -> ((s, dir) => {
+    // PSI via the shared integer log kernel: smoothed cross products
+    // (b+1)·nA' and (a+1)·nB' feed _lnq; each term and the sum are
+    // exact integers, one floor division at the end — the q199 shape.
+    // q205 = the same cells through the streaming state store: one
+    // truth, two engine paths (the q152/q200 discipline).
+    Query("q205_stream_psi", psiOracleSql)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Analytics.chisqCells(df, "event_type",
           pmod(expr("unix_micros(ts) DIV 86400000000"), lit(2)) === 1),
@@ -781,7 +1201,7 @@ object SparkEntry {
     // with the most distinct orders (desc count, asc id — total order),
     // 2 integer rounds on the co-purchase graph; the oracle unrolls
     // the same recurrence with the same seed rule.
-    "q203_ppr_related" -> ((s, dir) => {
+    Query("q203_ppr_related", Oracles.q203PprRelated, headline = true)((s, dir) => {
       val li = lineitem(s, dir)
       val seeds = li.groupBy("l_partkey")
         .agg(countDistinct("l_orderkey").as("_c"))
@@ -800,7 +1220,7 @@ object SparkEntry {
     // The third drift statistic beside KS (q145) and chi-sq (q149):
     // even-day event-type mix as "expected", odd-day as "actual",
     // add-one smoothed, integer log kernel — psi_q replayed exactly.
-    "q202_psi_drift" -> ((s, dir) => {
+    Query("q202_psi_drift", psiOracleSql, headline = true)((s, dir) => {
       val ev = events(s, dir)
       Analytics.psiDrift(ev, "event_type",
         pmod(expr("unix_micros(ts) DIV 86400000000"), lit(2)) === 1)
@@ -810,7 +1230,24 @@ object SparkEntry {
     // q170 for EVERY source pair in one pass: per-shingle source sets
     // explode into pair counts (bounded by #sources², never rows) —
     // the "which crawls overlap" dashboard.
-    "q195_corpus_matrix" -> ((s, dir) => {
+    Query("q195_corpus_matrix",
+      """WITH sh AS (
+        |  SELECT source, unnest(list_distinct(list_transform(
+        |    generate_series(1, greatest(1, strlen(lower(text)) - 4)),
+        |    i -> substring(lower(text), i, 5)))) AS s
+        |  FROM documents),
+        |d AS (SELECT DISTINCT source, s FROM sh),
+        |n AS (SELECT source, COUNT(*) AS n FROM d GROUP BY 1),
+        |pr AS (SELECT a.source AS source_a, b.source AS source_b,
+        |    COUNT(*) AS inter
+        |  FROM d a JOIN d b ON a.s = b.s AND a.source < b.source
+        |  GROUP BY 1, 2)
+        |SELECT source_a, source_b, na.n AS n_a, nb.n AS n_b, inter,
+        |  inter::DOUBLE / (na.n + nb.n - inter) AS jaccard
+        |FROM pr
+        |JOIN n na ON na.source = source_a
+        |JOIN n nb ON nb.source = source_b
+        |ORDER BY source_a, source_b""".stripMargin)((s, dir) => {
       Dedup.corpusJaccardMatrix(documents(s, dir), "source", k = 5)
         .orderBy("source_a", "source_b")
     }),
@@ -819,7 +1256,45 @@ object SparkEntry {
     // Share of ≥10-order customers per market segment, ranked by the
     // CONSERVATIVE Wilson lower bound (the "5/5 beats 900/1000" fix);
     // exact counts → one closed-form double, engine-identical.
-    "q194_wilson_ranking" -> ((s, dir) => {
+    // Integer Wilson (FixedMath.wilsonLbQ9 / isqrtCteSql): z = 49/25 as
+    // a RATIONAL — the round-9 form's `1.96` literal parses DOUBLE on
+    // DuckDB 1.0.x but DECIMAL(3,2) on newer builds, so `1.96*1.96`
+    // constant-folds to a different double and the hash flips on
+    // exactly the DuckDB versions the tests do not run. All integer
+    // ops + floor-isqrt; the derived doubles are single
+    // correctly-rounded divisions of exactly-representable values.
+    Query("q194_wilson_ranking",
+      ("""WITH RECURSIVE
+        |o AS (SELECT o_custkey, COUNT(*) AS n_ord
+        |  FROM orders GROUP BY 1),
+        |c AS (SELECT c_mktsegment, COALESCE(n_ord, 0) AS n_ord
+        |  FROM customer LEFT JOIN o ON c_custkey = o_custkey),
+        |m AS (SELECT c_mktsegment, COUNT(*) AS trials,
+        |    CAST(SUM(CASE WHEN n_ord >= 10 THEN 1 ELSE 0 END) AS BIGINT) AS conversions
+        |  FROM c GROUP BY 1),
+        |_sa AS (SELECT c_mktsegment AS id,
+        |    CASE WHEN trials > 477525395
+        |      THEN CAST(error('q194 oracle: trials exceeds the HUGEINT radicand ceiling 477525395 (worst case s=n/2) - rescale or switch to the engine-side BigInteger path') AS HUGEINT)
+        |      ELSE CAST(2500 AS HUGEINT)
+        |      * (CAST(2500 AS HUGEINT) * conversions * (trials - conversions)
+        |         + CAST(2401 AS HUGEINT) * trials)
+        |      * trials * 1000000 END AS a
+        |  FROM m),
+        |""".stripMargin + graft.functions.FixedMath.isqrtCteSql + """
+        |SELECT m.c_mktsegment, m.trials, m.conversions,
+        |  CAST(m.conversions AS DOUBLE) / CAST(m.trials AS DOUBLE) AS rate,
+        |  CAST((CAST(62500000 AS HUGEINT) * m.conversions * m.trials
+        |      + CAST(120050000 AS HUGEINT) * m.trials
+        |      - CAST(49 AS HUGEINT) * i.r) * 1000000000
+        |    // (CAST(100000 AS HUGEINT) * m.trials
+        |        * (CAST(625 AS HUGEINT) * m.trials + 2401)) AS BIGINT) AS wilson_lb_q9,
+        |  CAST(CAST((CAST(62500000 AS HUGEINT) * m.conversions * m.trials
+        |      + CAST(120050000 AS HUGEINT) * m.trials
+        |      - CAST(49 AS HUGEINT) * i.r) * 1000000000
+        |    // (CAST(100000 AS HUGEINT) * m.trials
+        |        * (CAST(625 AS HUGEINT) * m.trials + 2401)) AS BIGINT) AS DOUBLE) / 1e9 AS wilson_lb
+        |FROM m JOIN _isq i ON i.id = m.c_mktsegment
+        |ORDER BY m.c_mktsegment""".stripMargin))((s, dir) => {
       val ords = orders(s, dir).groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_ord"))
       val cust = customer(s, dir)
@@ -833,7 +1308,29 @@ object SparkEntry {
     // Class/source separation in embedding space: cosine(Σ int8 v) per
     // label pair — centroid drift as exact integer sums + one IEEE
     // division, never a materialized centroid.
-    "q193_centroid_shift" -> ((s, dir) => {
+    // q81's quantization replay feeding exact per-(label, dim) integer
+    // sums; dot/norms stay < 2^53 so the doubles are engine-identical
+    Query("q193_centroid_shift",
+      """WITH base AS (
+        |  SELECT label, embedding,
+        |    COALESCE(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 0.0) AS maxabs
+        |  FROM embeddings),
+        |qv AS (
+        |  SELECT label, list_transform(embedding, x -> CAST(floor(x::DOUBLE *
+        |      (CASE WHEN maxabs = 0.0 THEN 1.0 ELSE 127.0 / maxabs END) + 0.5) AS BIGINT)) AS q
+        |  FROM base),
+        |ex AS (SELECT label, unnest(range(1, len(q) + 1)) AS i, q FROM qv),
+        |sv AS (SELECT label, i AS pos, CAST(SUM(q[i]) AS BIGINT) AS v
+        |  FROM ex GROUP BY 1, 2),
+        |pr AS (
+        |  SELECT a.label AS label_a, b.label AS label_b,
+        |    CAST(SUM(a.v * b.v) AS DOUBLE) AS dot,
+        |    CAST(SUM(a.v * a.v) AS DOUBLE) AS na2,
+        |    CAST(SUM(b.v * b.v) AS DOUBLE) AS nb2
+        |  FROM sv a JOIN sv b ON a.label < b.label AND a.pos = b.pos
+        |  GROUP BY 1, 2)
+        |SELECT label_a, label_b, dot / (sqrt(na2) * sqrt(nb2)) AS cosine
+        |FROM pr ORDER BY label_a, label_b""".stripMargin)((s, dir) => {
       graft.operators.Embeddings.labelCentroidCosines(embeddings(s, dir))
         .orderBy("label_a", "label_b")
     }),
@@ -842,7 +1339,32 @@ object SparkEntry {
     // Daily-revenue slope per event type from exact moments (x
     // rebased to the corpus' first day), q181's identical-IEEE
     // discipline for the closed form.
-    "q192_trend_slopes" -> ((s, dir) => {
+    Query("q192_trend_slopes",
+      """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS y
+        |  FROM events GROUP BY 1, 2),
+        |b AS (SELECT MIN(day) AS d0 FROM daily),
+        |m AS (
+        |  SELECT event_type, COUNT(*) AS n,
+        |    SUM(day - d0) AS sx, SUM((day - d0) * (day - d0)) AS sx2,
+        |    SUM(y) AS sy, SUM(y * CAST(day - d0 AS DECIMAL(10,0))) AS sxy
+        |  FROM daily, b GROUP BY 1),
+        |d AS (
+        |  SELECT event_type, n,
+        |    CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+        |    CAST(sx2 AS DOUBLE) AS sx2d,
+        |    CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS syd,
+        |    CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS sxyd
+        |  FROM m),
+        |s AS (
+        |  SELECT event_type, n,
+        |    (nd * sxyd - sxd * syd) / (nd * sx2d - sxd * sxd) AS slope,
+        |    nd, sxd, syd
+        |  FROM d)
+        |SELECT event_type, n, slope,
+        |  (syd - slope * sxd) / nd AS intercept
+        |FROM s ORDER BY event_type""".stripMargin)((s, dir) => {
       val daily = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
         .groupBy(col("event_type"), col("day"))
@@ -862,7 +1384,17 @@ object SparkEntry {
     // MAX formulation: one truth, three engine paths (q58 union+window,
     // q172 nearest, this exec). Sides read the table twice — fresh
     // attribute ids, the self-join contract of the custom node.
-    "q191_asof_native" -> ((s, dir) => {
+    // independent correlated formulation; ties collapse to MAX exactly
+    // like the exec's last-in-sort-order match
+    Query("q191_asof_native",
+      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS us
+        |  FROM events WHERE event_type = 'click'),
+        |p AS (SELECT user_id, epoch_us(ts) AS pus
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT c.user_id, c.event_id, c.us,
+        |  (SELECT MAX(pus) FROM p
+        |   WHERE p.user_id = c.user_id AND p.pus <= c.us) AS prev_purchase_us
+        |FROM c ORDER BY user_id, event_id""".stripMargin, headline = true)((s, dir) => {
       val clicks = events(s, dir).filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us"))
@@ -881,7 +1413,13 @@ object SparkEntry {
     // rows map-side through a broadcast Bloom of the small side's keys
     // before any shuffle; false positives die in the join, so the
     // result IS the inner join (the oracle).
-    "q190_bloom_join" -> ((s, dir) => {
+    Query("q190_bloom_join",
+      """SELECT s_suppkey, s_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  COUNT(*) AS n_items
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE s_acctbal > 9000
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin)((s, dir) => {
       val rich = supplier(s, dir)
         .filter(col("s_acctbal") > 9000)
         .select("s_suppkey", "s_name")
@@ -898,7 +1436,7 @@ object SparkEntry {
     // aggregate (k=256 smallest splitmix64 hashes as state): exact
     // below k, integer-exact estimate above — q141's HLL discipline,
     // different sketch family, same replayed-hash oracle.
-    "q189_kmv_distinct" -> ((s, dir) => {
+    Query("q189_kmv_distinct", Oracles.q189KmvDistinct, headline = true)((s, dir) => {
       events(s, dir)
         .groupBy("event_type")
         .agg(graft.plans.GraftExtensions.kmvNative(col("user_id"), 256)
@@ -912,7 +1450,13 @@ object SparkEntry {
     // Which part keys fail l_partkey → l_suppkey (all of them — parts
     // have multiple suppliers): the "is this a key" profiling check,
     // one grouped count-distinct, witnesses included.
-    "q187_fd_violations" -> ((s, dir) => {
+    Query("q187_fd_violations",
+      """SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS n_dep,
+        |  COUNT(*) AS n_rows,
+        |  MIN(l_suppkey) AS dep_min, MAX(l_suppkey) AS dep_max
+        |FROM lineitem GROUP BY l_partkey
+        |HAVING COUNT(DISTINCT l_suppkey) > 1
+        |ORDER BY l_partkey""".stripMargin)((s, dir) => {
       Validation.fdViolations(lineitem(s, dir), "l_partkey", "l_suppkey")
         .orderBy("l_partkey")
     }),
@@ -924,7 +1468,7 @@ object SparkEntry {
     // 1000·n_obs − permille·N. TPC-H prices are uniform-ish, so the
     // report SHOWS the non-Benford excess — that's the point of an
     // audit row.
-    "q214_benford_audit" -> ((s, dir) => {
+    Query("q214_benford_audit", benfordSql)((s, dir) => {
       Validation.benfordAudit(lineitem(s, dir), "l_extendedprice")
         .orderBy("digit")
     }),
@@ -933,7 +1477,22 @@ object SparkEntry {
     // Purchases whose latest preceding view is not separated from them
     // by any click — A…B-with-no-C-between via two running-max window
     // columns over one per-user sort (no self-join, no state machine).
-    "q188_pattern_negation" -> ((s, dir) => {
+    Query("q188_pattern_negation",
+      """WITH e AS (SELECT user_id, event_id, event_type,
+        |    epoch_us(ts) AS us FROM events),
+        |r AS (SELECT user_id, event_id, event_type, us,
+        |    MAX(CASE WHEN event_type = 'view' THEN us END)
+        |      OVER (PARTITION BY user_id ORDER BY us, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt,
+        |    MAX(CASE WHEN event_type = 'click' THEN us END)
+        |      OVER (PARTITION BY user_id ORDER BY us, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lb
+        |  FROM e)
+        |SELECT user_id, event_id, us AS conv_us, lt AS trigger_us
+        |FROM r
+        |WHERE event_type = 'purchase' AND lt IS NOT NULL
+        |  AND (lb IS NULL OR lb < lt)
+        |ORDER BY user_id, event_id""".stripMargin)((s, dir) => {
       Analytics.patternWithNegation(events(s, dir),
           trigger = "view", blocker = "click", conv = "purchase")
         .orderBy("user_id", "event_id")
@@ -943,7 +1502,22 @@ object SparkEntry {
     // Per user, the longest run of consecutive active days (the
     // day − dense_rank island idiom), multiplicity collapsed BEFORE
     // the per-key window; earliest start breaks length ties.
-    "q186_longest_streak" -> ((s, dir) => {
+    Query("q186_longest_streak",
+      """WITH d AS (SELECT DISTINCT user_id,
+        |    epoch_us(ts) // 86400000000 AS day FROM events),
+        |i AS (SELECT user_id, day,
+        |    day - dense_rank() OVER (PARTITION BY user_id ORDER BY day) AS isl
+        |  FROM d),
+        |g AS (SELECT user_id, isl, COUNT(*) AS len, MIN(day) AS strt
+        |  FROM i GROUP BY 1, 2)
+        |SELECT user_id, len AS streak_days, strt AS streak_start_day,
+        |  n_islands
+        |FROM (
+        |  SELECT user_id, len, strt,
+        |    COUNT(*) OVER (PARTITION BY user_id) AS n_islands,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY len DESC, strt) AS rn
+        |  FROM g) WHERE rn = 1 ORDER BY user_id""".stripMargin)((s, dir) => {
       Timeseries.longestStreak(events(s, dir))
         .orderBy("user_id")
     }),
@@ -953,7 +1527,16 @@ object SparkEntry {
     // bounded state pairs per key through the streaming state store —
     // the q183 top-k semantics' third engine path (window SQL, native
     // aggregate, streaming state), one oracle.
-    "q185_stream_first_n" -> ((s, dir) => {
+    // q183's discipline with ASC order: the window truth gates the
+    // streaming-state path
+    Query("q185_stream_first_n",
+      """SELECT user_id, CAST(rn AS BIGINT) AS rn, ts_us, event_id
+        |FROM (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(ts), event_id) AS rn
+        |  FROM events)
+        |WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin)((s, dir) => {
       val out = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => EventStreams.firstNStream(s, df, 3),
         s"firstn_sink_${System.nanoTime()}",
@@ -970,7 +1553,14 @@ object SparkEntry {
     // Customer names within 1 Levenshtein edit, blocked by nation:
     // the entity-resolution candidate generator — quadratic only
     // inside a block, early-exit threshold distance doing the filter.
-    "q184_record_linkage" -> ((s, dir) => {
+    Query("q184_record_linkage",
+      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+        |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
+        |FROM customer a
+        |JOIN customer b ON a.c_nationkey = b.c_nationkey
+        |  AND a.c_custkey < b.c_custkey
+        |WHERE levenshtein(a.c_name, b.c_name) <= 1
+        |ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
       Dedup.blockedLinkPairs(customer(s, dir),
           idCol = "c_custkey", keyCol = "c_name",
           blockCol = "c_nationkey", maxDist = 1)
@@ -983,7 +1573,25 @@ object SparkEntry {
     // name of the smallest key, balances merged on the exact DECIMAL
     // discipline. Oracle = recursive-CTE closure over the same pair
     // SQL (the q56/q127 discipline).
-    "q213_entity_resolution" -> ((s, dir) => {
+    Query("q213_entity_resolution",
+      """WITH RECURSIVE
+        |p AS (SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
+        |  FROM customer a JOIN customer b ON a.c_nationkey = b.c_nationkey
+        |    AND a.c_custkey < b.c_custkey
+        |  WHERE levenshtein(a.c_name, b.c_name) <= 1),
+        |edges AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM p
+        |  UNION SELECT id_b, id_a FROM p),
+        |reach(s, d) AS (SELECT s, d FROM edges
+        |  UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
+        |minr AS (SELECT s AS id, least(s, min(d)) AS cid FROM reach GROUP BY s),
+        |ent AS (SELECT c.c_custkey, c.c_name, c.c_acctbal,
+        |    COALESCE(m.cid, c.c_custkey) AS entity_id
+        |  FROM customer c LEFT JOIN minr m ON m.id = c.c_custkey)
+        |SELECT entity_id, COUNT(*)::BIGINT AS n_records,
+        |  min_by(c_name, c_custkey) AS canonical_name,
+        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE)
+        |    AS total_acctbal
+        |FROM ent GROUP BY entity_id ORDER BY entity_id""".stripMargin)((s, dir) => {
       Dedup.resolveEntities(customer(s, dir),
           idCol = "c_custkey", keyCol = "c_name",
           blockCol = "c_nationkey", maxDist = 1)
@@ -1001,7 +1609,16 @@ object SparkEntry {
     // map-side partials — the window formulation sorts every row).
     // Oracle = the row_number window truth: one relational answer,
     // two engine paths (the q150 discipline).
-    "q183_topk_native" -> ((s, dir) => {
+    // the window formulation IS the oracle for the native aggregate
+    Query("q183_topk_native",
+      """SELECT l_returnflag, CAST(rn AS BIGINT) AS rn,
+        |  l_extendedprice, l_orderkey
+        |FROM (
+        |  SELECT l_returnflag, l_extendedprice, l_orderkey,
+        |    row_number() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_extendedprice DESC, l_orderkey) AS rn
+        |  FROM lineitem)
+        |WHERE rn <= 5 ORDER BY l_returnflag, rn""".stripMargin, headline = true)((s, dir) => {
       lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(graft.plans.GraftExtensions.topKNative(
@@ -1019,7 +1636,21 @@ object SparkEntry {
     // pre-collapsed, integer thresholds (den·cum ≥ num·W), both
     // quantiles from one window pass. Complements q44's unweighted
     // exact median.
-    "q182_weighted_quantiles" -> ((s, dir) => {
+    Query("q182_weighted_quantiles",
+      """WITH g AS (
+        |  SELECT l_returnflag, l_extendedprice AS v,
+        |    SUM(CAST(l_quantity AS BIGINT)) AS w
+        |  FROM lineitem GROUP BY 1, 2),
+        |c AS (
+        |  SELECT l_returnflag, v, w,
+        |    SUM(w) OVER (PARTITION BY l_returnflag) AS tw,
+        |    SUM(w) OVER (PARTITION BY l_returnflag ORDER BY v
+        |      ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM g)
+        |SELECT l_returnflag,
+        |  MIN(CASE WHEN cum * 2 >= tw THEN v END) AS p50_weighted,
+        |  MIN(CASE WHEN cum * 10 >= tw * 9 THEN v END) AS p90_weighted
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) => {
       Analytics.weightedQuantiles(lineitem(s, dir),
           "l_returnflag", "l_extendedprice", "l_quantity",
           Seq((1, 2, "p50_weighted"), (9, 10, "p90_weighted")))
@@ -1030,7 +1661,45 @@ object SparkEntry {
     // Arms by user-id parity, metric = per-user total purchase value;
     // exact DECIMAL moments per arm, then identical-IEEE double math —
     // the q148 chi-square discipline applied to the t-test.
-    "q181_ab_ttest" -> ((s, dir) => {
+    // same exact-DECIMAL moments, same IEEE double expressions — an
+    // independent engine must land on the identical bits
+    Query("q181_ab_ttest",
+      """WITH u AS (
+        |  SELECT user_id,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS x
+        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+        |a AS (
+        |  SELECT user_id % 2 AS arm, COUNT(*) AS n, SUM(x) AS s1,
+        |    SUM(x * x) AS s2
+        |  FROM u GROUP BY 1),
+        |w AS (
+        |  SELECT
+        |    MAX(CASE WHEN arm = 0 THEN n END) AS n0,
+        |    MAX(CASE WHEN arm = 0 THEN s1 END) AS s1_0,
+        |    MAX(CASE WHEN arm = 0 THEN s2 END) AS s2_0,
+        |    MAX(CASE WHEN arm = 1 THEN n END) AS n1,
+        |    MAX(CASE WHEN arm = 1 THEN s1 END) AS s1_1,
+        |    MAX(CASE WHEN arm = 1 THEN s2 END) AS s2_1
+        |  FROM a),
+        |-- decimal→double via VARCHAR: DuckDB's direct decimal cast is
+        |-- not correctly rounded (hugeint/10^s as two float ops); the
+        |-- string round-trip is, matching Java BigDecimal.doubleValue
+        |d AS (
+        |  SELECT n0, n1,
+        |    CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) / CAST(n0 AS DOUBLE) AS mean0,
+        |    CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) / CAST(n1 AS DOUBLE) AS mean1,
+        |    (CAST(CAST(s2_0 AS VARCHAR) AS DOUBLE) - CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) * CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) / CAST(n0 AS DOUBLE))
+        |      / (CAST(n0 AS DOUBLE) - 1.0) AS var0,
+        |    (CAST(CAST(s2_1 AS VARCHAR) AS DOUBLE) - CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) * CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) / CAST(n1 AS DOUBLE))
+        |      / (CAST(n1 AS DOUBLE) - 1.0) AS var1
+        |  FROM w)
+        |SELECT n0, n1, mean0, mean1, var0, var1,
+        |  (mean1 - mean0) / sqrt(var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE)) AS t_stat,
+        |  (var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE))
+        |    * (var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE))
+        |    / ((var0 / CAST(n0 AS DOUBLE)) * (var0 / CAST(n0 AS DOUBLE)) / (CAST(n0 AS DOUBLE) - 1.0)
+        |      + (var1 / CAST(n1 AS DOUBLE)) * (var1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) AS df_welch
+        |FROM d""".stripMargin)((s, dir) => {
       val perUser = events(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
@@ -1044,7 +1713,15 @@ object SparkEntry {
     // partitioned window + a prefix-max over the DISTINCT price groups
     // + a broadcast join back — never a quadratic dominance check.
     // Oracle IS the quadratic NOT EXISTS truth.
-    "q180_skyline" -> ((s, dir) => {
+    // the quadratic dominance truth the engine's window formulation
+    // must reproduce exactly (incl. duplicate-point survival)
+    Query("q180_skyline",
+      """SELECT p_partkey, p_retailprice, p_size FROM part p
+        |WHERE NOT EXISTS (SELECT 1 FROM part q
+        |  WHERE q.p_retailprice <= p.p_retailprice
+        |    AND q.p_size >= p.p_size
+        |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
+        |ORDER BY p_retailprice, p_partkey""".stripMargin, headline = true)((s, dir) => {
       Analytics.skyline2d(
           part(s, dir).select("p_partkey", "p_retailprice", "p_size"),
           minCol = "p_retailprice", maxCol = "p_size")
@@ -1060,14 +1737,14 @@ object SparkEntry {
     // 1000000 div co-occurrence count (stronger ties are shorter), 3
     // Bellman-Ford rounds with a label-correcting frontier; oracle
     // unrolls each round as a union+min CTE (the q147/q179 discipline).
-    "q211_sssp" -> ((s, dir) => {
+    Query("q211_sssp", Oracles.q211Sssp, headline = true)((s, dir) => {
       val ew = Graphs.coOccurrenceWeighted(
           lineitem(s, dir), "l_orderkey", "l_partkey")
         .withColumn("weight", expr("1000000 div weight"))
       Graphs.ssspInt(ew, rounds = 3).orderBy("node")
     }),
 
-    "q179_bfs_hops" -> ((s, dir) => {
+    Query("q179_bfs_hops", Oracles.q179BfsHops)((s, dir) => {
       Graphs.bfsHops(Graphs.coOccurrenceEdges(
           lineitem(s, dir), "l_orderkey", "l_partkey"), maxHops = 3)
         .orderBy("hops", "node")
@@ -1077,14 +1754,46 @@ object SparkEntry {
     // "How similar are these two crawls" as one exact number: distinct
     // 5-shingle sets per side tagged in ONE groupBy, then a single
     // global agg — nothing pairwise.
-    "q170_corpus_jaccard" -> ((s, dir) => {
+    Query("q170_corpus_jaccard",
+      """WITH sh AS (
+        |  SELECT source, unnest(list_distinct(list_transform(
+        |    generate_series(1, greatest(1, strlen(lower(text)) - 4)),
+        |    i -> substring(lower(text), i, 5)))) AS s
+        |  FROM documents WHERE source IN ('src0', 'src1')),
+        |g AS (SELECT s,
+        |    MAX(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ina,
+        |    MAX(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS inb
+        |  FROM sh GROUP BY s)
+        |SELECT CAST(SUM(ina) AS BIGINT) AS n_a, CAST(SUM(inb) AS BIGINT) AS n_b,
+        |  CAST(SUM(ina * inb) AS BIGINT) AS n_inter,
+        |  CAST(COUNT(*) AS BIGINT) AS n_union,
+        |  CAST(SUM(ina * inb) AS BIGINT)::DOUBLE / COUNT(*) AS jaccard
+        |FROM g ORDER BY n_a""".stripMargin)((s, dir) => {
       Dedup.corpusJaccard(documents(s, dir), "source", "src0", "src1", k = 5)
     }),
 
     // ---- analytics tier: windowed funnel (convert within T) ----
     // q126's chain with each step additionally required to land within
     // 1 hour of the previous step's first completion.
-    "q171_funnel_windowed" -> ((s, dir) => {
+    Query("q171_funnel_windowed",
+      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
+        |  WHERE event_type = 'view' GROUP BY user_id),
+        |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2 FROM events e
+        |  JOIN s1 ON e.user_id = s1.user_id
+        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
+        |    AND epoch_us(e.ts) <= s1.t1 + 3600000000 GROUP BY e.user_id),
+        |s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t3 FROM events e
+        |  JOIN s2 ON e.user_id = s2.user_id
+        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2
+        |    AND epoch_us(e.ts) <= s2.t2 + 3600000000 GROUP BY e.user_id)
+        |SELECT u.user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us,
+        |  (CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
+        |        WHEN t1 IS NOT NULL THEN 1 ELSE 0 END)::INT AS step_reached
+        |FROM (SELECT DISTINCT user_id FROM events) u
+        |LEFT JOIN s1 ON u.user_id = s1.user_id
+        |LEFT JOIN s2 ON u.user_id = s2.user_id
+        |LEFT JOIN s3 ON u.user_id = s3.user_id
+        |ORDER BY u.user_id""".stripMargin)((s, dir) => {
       Analytics.funnel(events(s, dir), Seq("view", "click", "purchase"),
           maxGapUs = Some(3600000000L))
         .orderBy("user_id")
@@ -1095,7 +1804,26 @@ object SparkEntry {
     // nearest purchase of the same user within ±10 min (ties →
     // backward), via BOTH-direction union+window passes — never a
     // non-equi join. Oracle is an independent correlated formulation.
-    "q172_asof_nearest" -> ((s, dir) => {
+    // independent correlated formulation of the engine's two-direction
+    // union+window nearest join
+    Query("q172_asof_nearest",
+      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
+        |  WHERE event_type = 'click'),
+        |p AS (SELECT user_id, epoch_us(ts) AS pus FROM events
+        |  WHERE event_type = 'purchase'),
+        |b AS (SELECT c.user_id, c.event_id, c.us, MAX(p.pus) AS bt
+        |  FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pus <= c.us
+        |  GROUP BY c.user_id, c.event_id, c.us),
+        |f AS (SELECT c.user_id, c.event_id, MIN(p.pus) AS ft
+        |  FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pus > c.us
+        |  GROUP BY c.user_id, c.event_id)
+        |SELECT b.user_id, b.event_id, b.us,
+        |  CASE WHEN b.bt IS NOT NULL AND b.us - b.bt <= 600000000
+        |         AND (f.ft IS NULL OR b.us - b.bt <= f.ft - b.us) THEN b.bt
+        |       WHEN f.ft IS NOT NULL AND f.ft - b.us <= 600000000 THEN f.ft
+        |  END AS nearest_us
+        |FROM b JOIN f ON b.user_id = f.user_id AND b.event_id = f.event_id
+        |ORDER BY b.user_id, b.event_id""".stripMargin)((s, dir) => {
       val ev = events(s, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"),
@@ -1112,7 +1840,7 @@ object SparkEntry {
     // often the pair co-occurs (the CCNet-style weighted source
     // ranking); every hop floor((score·85·w)/(wdeg·100)), unrolled in
     // the oracle like q147.
-    "q173_weighted_rank" -> ((s, dir) => {
+    Query("q173_weighted_rank", Oracles.q173WeightedRank)((s, dir) => {
       val edges = Graphs.coOccurrenceWeighted(
         lineitem(s, dir), "l_orderkey", "l_partkey")
       Graphs.pageRankIntWeighted(edges, iters = 3)
@@ -1125,7 +1853,34 @@ object SparkEntry {
     // Each purchase's value splits EXACTLY (integer 10⁻⁴ units,
     // remainder to the earliest touches) across its session's prior
     // events; Σ credits ≡ Σ purchase values bit-for-bit.
-    "q174_linear_attribution" -> ((s, dir) => {
+    Query("q174_linear_attribution",
+      """WITH e0 AS (
+        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |e AS (
+        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e0),
+        |conv AS (SELECT user_id, sid, us AS pus, event_id AS pord,
+        |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vt
+        |  FROM e WHERE event_type = 'purchase'),
+        |t AS (SELECT c.user_id, c.sid, c.pord, c.vt, e.us, e.event_id, e.event_type
+        |  FROM conv c JOIN e ON e.user_id = c.user_id AND e.sid = c.sid
+        |    AND (e.us < c.pus OR (e.us = c.pus AND e.event_id < c.pord))),
+        |r AS (SELECT *,
+        |    row_number() OVER (PARTITION BY user_id, sid, pord ORDER BY us, event_id) AS rk,
+        |    COUNT(*) OVER (PARTITION BY user_id, sid, pord) AS n
+        |  FROM t),
+        |cr AS (SELECT event_type, (vt - ((vt % n) + n) % n) // n
+        |    + CASE WHEN rk <= ((vt % n) + n) % n THEN 1 ELSE 0 END AS credit FROM r),
+        |selfc AS (SELECT 'purchase' AS event_type, vt AS credit FROM conv c
+        |  WHERE NOT EXISTS (SELECT 1 FROM t
+        |    WHERE t.user_id = c.user_id AND t.sid = c.sid AND t.pord = c.pord))
+        |SELECT event_type, COUNT(*) AS n_credits,
+        |  CAST(SUM(credit) AS BIGINT) AS credit_tenk
+        |FROM (SELECT * FROM cr UNION ALL SELECT * FROM selfc)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)((s, dir) => {
       Analytics.linearAttribution(events(s, dir), convType = "purchase")
         .orderBy("event_type")
     }),
@@ -1136,7 +1891,47 @@ object SparkEntry {
     // the pmod floor discipline and remainder to the latest touches.
     // 7-day sessions so multi-day deltas (decay weights 2^30..2^21 on
     // this data) are live, not degenerate-to-linear.
-    "q221_timedecay_attribution" -> ((s, dir) => {
+    // q221 = q174's sessionization with the dyadic 2^(-days) split:
+    // num = 1 << (30 - min(30, days)), floor division via pmod,
+    // remainder to the latest touches — all exact integers.
+    Query("q221_timedecay_attribution",
+      """WITH e0 AS (
+        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |e AS (
+        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 604800000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e0),
+        |conv AS (SELECT user_id, sid, us AS pus, event_id AS pord,
+        |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vt
+        |  FROM e WHERE event_type = 'purchase'),
+        |t AS (SELECT c.user_id, c.sid, c.pord, c.pus, c.vt, e.us, e.event_id, e.event_type
+        |  FROM conv c JOIN e ON e.user_id = c.user_id AND e.sid = c.sid
+        |    AND (e.us < c.pus OR (e.us = c.pus AND e.event_id < c.pord))),
+        |r AS (SELECT *,
+        |    (1::BIGINT << CAST(30 - least(30, (pus - us) // 86400000000) AS INT)) AS num
+        |  FROM t),
+        |r2 AS (SELECT *,
+        |    SUM(num) OVER (PARTITION BY user_id, sid, pord) AS den,
+        |    row_number() OVER (PARTITION BY user_id, sid, pord
+        |      ORDER BY us DESC, event_id DESC) AS rk
+        |  FROM r),
+        |r3 AS (SELECT *,
+        |    (vt*num - (((vt*num) % den) + den) % den) // den AS base
+        |  FROM r2),
+        |r4 AS (SELECT *,
+        |    SUM(base) OVER (PARTITION BY user_id, sid, pord) AS sb
+        |  FROM r3),
+        |cr AS (SELECT event_type,
+        |    base + CASE WHEN rk <= vt - sb THEN 1 ELSE 0 END AS credit FROM r4),
+        |selfc AS (SELECT 'purchase' AS event_type, vt AS credit FROM conv c
+        |  WHERE NOT EXISTS (SELECT 1 FROM t
+        |    WHERE t.user_id = c.user_id AND t.sid = c.sid AND t.pord = c.pord))
+        |SELECT event_type, COUNT(*) AS n_credits,
+        |  CAST(SUM(credit) AS BIGINT) AS credit_tenk
+        |FROM (SELECT * FROM cr UNION ALL SELECT * FROM selfc)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)((s, dir) => {
       Analytics.timeDecayAttribution(events(s, dir), convType = "purchase",
           gapUs = 604800000000L)
         .orderBy("event_type")
@@ -1148,7 +1943,32 @@ object SparkEntry {
     // ⌊d·10¹²/n⌋ — one integer division per distinct duration, no log
     // kernel, no libm. Same life table as q201 so the two estimators
     // cross-validate the risk-set machinery.
-    "q222_nelson_aalen" -> ((s, dir) => {
+    // q201's life table with the additive estimator: each hazard
+    // increment is the exact HUGEINT floor (d·10¹²)//n (positive, so
+    // floor ≡ trunc ≡ Spark's DECIMAL DIV); the running sum is an
+    // exact BIGINT in both engines.
+    Query("q222_nelson_aalen",
+      """WITH
+        |life AS (
+        |  SELECT user_id,
+        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t,
+        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS evt
+        |  FROM events GROUP BY user_id),
+        |g AS (SELECT t, CAST(SUM(evt) AS BIGINT) AS d,
+        |    CAST(SUM(1 - evt) AS BIGINT) AS c
+        |  FROM life GROUP BY t),
+        |r AS (SELECT t, d, c,
+        |    SUM(d + c) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
+        |    SUM(d + c) OVER () AS tot
+        |  FROM g),
+        |kk AS (SELECT t, d, c, CAST(tot - cum + d + c AS BIGINT) AS n_at_risk FROM r),
+        |h AS (SELECT t, d, c, n_at_risk,
+        |    CAST((CAST(d AS HUGEINT) * 1000000000000) // n_at_risk AS BIGINT) AS h_q12
+        |  FROM kk)
+        |SELECT t, d, c, n_at_risk, h_q12,
+        |  CAST(SUM(h_q12) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
+        |    AS cum_hazard_q12
+        |FROM h ORDER BY t""".stripMargin)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val life = ev.groupBy("user_id")
@@ -1164,7 +1984,7 @@ object SparkEntry {
     // snapshot (doc_id % 3 = 0) — the novelty signal a dedup-aware
     // data-valuation pass ranks on. Raw-string grams so DuckDB
     // replays the join; a spec asserts the hashed path agrees.
-    "q223_ngram_novelty" -> ((s, dir) => {
+    Query("q223_ngram_novelty", Oracles.q223NgramNovelty)((s, dir) => {
       val d = documents(s, dir)
       TextAnalysis.ngramNovelty(
           d.filter(col("doc_id") % 3 =!= 0),
@@ -1180,7 +2000,7 @@ object SparkEntry {
     // sketch a join planner consults before picking a strategy. Every
     // sign is a splitmix64 low bit, every sum an exact integer, so the
     // whole walk replays in DuckDB.
-    "q224_ams_f2" -> ((s, dir) => {
+    Query("q224_ams_f2", Oracles.q224AmsF2)((s, dir) => {
       Sketches.amsF2Estimate(
         Sketches.amsF2Counters(events(s, dir), "user_id", k = 32))
     }),
@@ -1190,7 +2010,17 @@ object SparkEntry {
     // streaming state store (per-key min urgent-order time — bounded
     // state) and the snapshot merge batch-side. Oracle = q163's SQL:
     // one relational truth, two engine paths.
-    "q175_stream_upsert" -> ((s, dir) => {
+    // q175 = q163's semantics with the update side folded through
+    // streaming state: one relational truth, two engine paths
+    Query("q175_stream_upsert",
+      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
+        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
+        |    MIN(epoch_us(o_orderdate)) AS ver
+        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
+        |a AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) AS rn FROM a)
+        |SELECT c_custkey, segment, ver FROM r WHERE rn = 1
+        |ORDER BY c_custkey""".stripMargin)((s, dir) => {
       val updAgg = EventStreams.runOnceOnParquet(s, s"$dir/orders.parquet",
         df => df.filter(col("o_orderpriority") === "1-URGENT")
           .groupBy(col("o_custkey").as("c_custkey"))
@@ -1208,7 +2038,13 @@ object SparkEntry {
     // integer days. The window is partition-less BY DESIGN: it runs on
     // the already-aggregated daily table (dashboard-sized — one row
     // per day), never on raw events.
-    "q176_trailing_revenue" -> ((s, dir) => {
+    Query("q176_trailing_revenue",
+      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
+        |    SUM(CAST(value AS DECIMAL(18,4))) AS rev
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1)
+        |SELECT day, CAST(SUM(rev) OVER (ORDER BY day
+        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev_7d
+        |FROM d ORDER BY day""".stripMargin)((s, dir) => {
       val daily = events(s, dir).filter(col("event_type") === "purchase")
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
         .groupBy("day")
@@ -1224,7 +2060,13 @@ object SparkEntry {
     // range — the scan touches only the seven matching partition dirs
     // (LayoutSpec asserts pruning; here the VALUES are oracle-gated
     // against a direct filter over the raw table).
-    "q177_partitioned_scan" -> ((s, dir) => {
+    Query("q177_partitioned_scan",
+      """WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day, value FROM events),
+        |b AS (SELECT MIN(day) + 7 AS lo FROM e)
+        |SELECT day, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS rev
+        |FROM e, b WHERE day BETWEEN lo AND lo + 6
+        |GROUP BY day ORDER BY day""".stripMargin)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val path = TempDirs.scratch("part")
@@ -1249,7 +2091,23 @@ object SparkEntry {
     // 1.5M candidates for 256 true pairs; at k=12 the same 256 pairs
     // emerge from 17k candidates). Oracle is the unfiltered pairwise
     // truth.
-    "q178_setsim_join" -> ((s, dir) => {
+    Query("q178_setsim_join",
+      """WITH tk AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
+        |    i -> substring(lower(text), i, 12)))) AS tok
+        |  FROM documents),
+        |sz AS (SELECT doc_id, COUNT(*) AS s FROM tk GROUP BY doc_id),
+        |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+        |  FROM tk a JOIN tk b ON a.tok = b.tok AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
+        |  inter::DOUBLE / (sa.s + sb.s - inter) AS jaccard
+        |FROM pr
+        |JOIN sz sa ON sa.doc_id = id_a
+        |JOIN sz sb ON sb.doc_id = id_b
+        |WHERE inter::DOUBLE / (sa.s + sb.s - inter) >= 0.8
+        |ORDER BY id_a, id_b""".stripMargin, headline = true)((s, dir) => {
       Dedup.setSimJoin(documents(s, dir), tau = 0.8)
         .orderBy("id_a", "id_b")
         .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"))
@@ -1258,20 +2116,47 @@ object SparkEntry {
     // ---- ops tier: per-key group-size skew report ----
     // The diagnostic behind every salting/broadcast decision: key
     // count, exact p50/p90/p99 group sizes, heaviest key.
-    "q159_skew_report" -> ((s, dir) => {
+    Query("q159_skew_report",
+      """WITH c AS (SELECT l_partkey AS k, COUNT(*) AS n FROM lineitem GROUP BY l_partkey)
+        |SELECT COUNT(*) AS n_keys, MAX(n) AS max_size,
+        |  ROUND(quantile_cont(n, 0.5), 4) AS p50_size,
+        |  ROUND(quantile_cont(n, 0.9), 4) AS p90_size,
+        |  ROUND(quantile_cont(n, 0.99), 4) AS p99_size,
+        |  (SELECT k FROM c ORDER BY n DESC, k LIMIT 1) AS top_key,
+        |  (SELECT n FROM c ORDER BY n DESC, k LIMIT 1) AS top_size
+        |FROM c""".stripMargin)((s, dir) => {
       Analytics.groupSizeSkew(lineitem(s, dir), "l_partkey")
     }),
 
     // ---- analytics tier: top session paths ----
     // First 8 event types per session joined with '>', counted per
     // distinct path — top-20 navigation flows.
-    "q160_session_paths" -> ((s, dir) => {
+    Query("q160_session_paths",
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (
+        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e),
+        |p AS (SELECT array_to_string((list(event_type ORDER BY us, event_id))[1:8], '>') AS path
+        |  FROM s GROUP BY user_id, sid)
+        |SELECT path, COUNT(*) AS n_sessions FROM p
+        |GROUP BY path ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin, headline = true)((s, dir) => {
       Analytics.sessionPaths(events(s, dir), maxLen = 8)
         .orderBy(col("n_sessions").desc, col("path")).limit(20)
     }),
 
     // ---- §2.4 aggregation: TPC-H Q1 pricing summary ----
-    "q01_pricing_summary" -> ((s, dir) => {
+    Query("q01_pricing_summary",
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS sum_disc_price,
+        |  COUNT(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin, headline = true)((s, dir) => {
       lineitem(s, dir)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -1284,7 +2169,11 @@ object SparkEntry {
     }),
 
     // ---- §2.2 filter + projection (SelectAbstract predicate form) ----
-    "q02_filter_project" -> ((s, dir) => {
+    Query("q02_filter_project",
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4)) AS DOUBLE) AS disc_amount
+        |FROM lineitem WHERE l_quantity > 30 AND l_discount >= 0.05
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin, headline = true)((s, dir) => {
       lineitem(s, dir)
         .filter(col("l_quantity") > 30 && col("l_discount") >= 0.05)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -1294,10 +2183,21 @@ object SparkEntry {
     }),
 
     // ---- §2.3 joins: 5-table join w/ broadcast dims ----
-    "q03_revenue_by_nation" -> ((s, dir) => revenueByNation(s, dir)),
+    Query("q03_revenue_by_nation",
+      """SELECT r_name, n_name,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue,
+        |  COUNT(*) AS n_items
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin, headline = true)((s, dir) => revenueByNation(s, dir)),
 
     // ---- §2.6 sort + limit (top-k) ----
-    "q04_topk_orders" -> ((s, dir) => {
+    Query("q04_topk_orders",
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin, headline = true)((s, dir) => {
       orders(s, dir)
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(20)
@@ -1305,12 +2205,17 @@ object SparkEntry {
     }),
 
     // ---- §2.4 distinct ----
-    "q05_distinct_segments" -> ((s, dir) => {
+    Query("q05_distinct_segments",
+      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment")((s, dir) => {
       customer(s, dir).select("c_mktsegment").distinct().orderBy("c_mktsegment")
     }),
 
     // ---- §2.5 SQL window: rank per partition ----
-    "q06_window_rank" -> ((s, dir) => {
+    Query("q06_window_rank",
+      """SELECT o_custkey, o_orderkey, rn FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INT) AS rn
+        |  FROM orders) t WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin, headline = true)((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       orders(s, dir)
@@ -1321,7 +2226,10 @@ object SparkEntry {
     }),
 
     // ---- §2.5 SQL window: lag ----
-    "q07_window_lag" -> ((s, dir) => {
+    Query("q07_window_lag",
+      """SELECT o_custkey, o_orderkey,
+        |  COALESCE(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 0.0) AS prev_price
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       orders(s, dir)
@@ -1331,7 +2239,10 @@ object SparkEntry {
     }),
 
     // ---- §2.4 grouping sets / rollup ----
-    "q08_rollup_counts" -> ((s, dir) => {
+    Query("q08_rollup_counts",
+      """SELECT COALESCE(c_mktsegment, 'ALL') AS segment, COUNT(*) AS n,
+        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_bal
+        |FROM customer GROUP BY ROLLUP(c_mktsegment) ORDER BY segment""".stripMargin)((s, dir) => {
       customer(s, dir)
         .rollup("c_mktsegment")
         .agg(count(lit(1)).as("n"),
@@ -1342,7 +2253,11 @@ object SparkEntry {
     }),
 
     // ---- §2.7 set ops: UNION ----
-    "q09_union_priority" -> ((s, dir) => {
+    Query("q09_union_priority",
+      """SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |UNION
+        |SELECT o_orderkey FROM orders WHERE o_totalprice > 300000
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
       val o = orders(s, dir)
       o.filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
         .union(o.filter(col("o_totalprice") > 300000).select("o_orderkey"))
@@ -1351,7 +2266,13 @@ object SparkEntry {
     }),
 
     // ---- §2.7 set ops: INTERSECT / EXCEPT ----
-    "q10_intersect_except" -> ((s, dir) => {
+    Query("q10_intersect_except",
+      """(SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
+        | INTERSECT
+        | SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
+        |EXCEPT
+        |SELECT o_custkey FROM orders WHERE o_totalprice > 400000
+        |ORDER BY o_custkey""".stripMargin)((s, dir) => {
       val o = orders(s, dir)
       val withO = o.filter(col("o_orderstatus") === "O").select("o_custkey")
       val withF = o.filter(col("o_orderstatus") === "F").select("o_custkey")
@@ -1361,7 +2282,11 @@ object SparkEntry {
     }),
 
     // ---- §2.3 anti join (customers with no URGENT order) ----
-    "q11_anti_join" -> ((s, dir) => {
+    Query("q11_anti_join",
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+        |ORDER BY c_custkey""".stripMargin)((s, dir) => {
       customer(s, dir).join(
           orders(s, dir).filter(col("o_orderpriority") === "1-URGENT"),
           col("c_custkey") === col("o_custkey"), "anti")
@@ -1370,7 +2295,11 @@ object SparkEntry {
     }),
 
     // ---- §2.3 semi join ----
-    "q12_semi_join" -> ((s, dir) => {
+    Query("q12_semi_join",
+      """SELECT c_custkey, c_mktsegment FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey AND o_totalprice > 350000)
+        |ORDER BY c_custkey""".stripMargin)((s, dir) => {
       customer(s, dir).join(
           orders(s, dir).filter(col("o_totalprice") > 350000),
           col("c_custkey") === col("o_custkey"), "semi")
@@ -1379,7 +2308,15 @@ object SparkEntry {
     }),
 
     // ---- §2.8 scalar functions (string/date/math built-ins) ----
-    "q13_scalar_funcs" -> ((s, dir) => {
+    Query("q13_scalar_funcs",
+      """SELECT p_partkey,
+        |  UPPER(p_brand) AS brand_u,
+        |  SUBSTRING(p_name, 1, 8) AS name_prefix,
+        |  CONCAT_WS('/', p_brand, p_type) AS brand_type,
+        |  CAST(LENGTH(p_name) AS BIGINT) AS name_len,
+        |  CAST(ABS(p_size - 25) AS BIGINT) AS size_dist,
+        |  CAST(ROUND(CAST(p_retailprice AS DECIMAL(18,2)) * 2, 2) AS DOUBLE) AS double_price
+        |FROM part ORDER BY p_partkey""".stripMargin)((s, dir) => {
       part(s, dir).select(
         col("p_partkey"),
         upper(col("p_brand")).as("brand_u"),
@@ -1392,7 +2329,12 @@ object SparkEntry {
     }),
 
     // ---- §2.4 conditional aggregation ----
-    "q14_conditional_agg" -> ((s, dir) => {
+    Query("q14_conditional_agg",
+      """SELECT o_orderpriority,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_finished,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
+        |  COUNT(*) AS n_total
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)((s, dir) => {
       orders(s, dir)
         .groupBy("o_orderpriority")
         .agg(
@@ -1403,7 +2345,11 @@ object SparkEntry {
     }),
 
     // ---- §2.4 agg + subquery comparison (above-average parts) ----
-    "q15_above_avg" -> ((s, dir) => {
+    Query("q15_above_avg",
+      """SELECT p_partkey, p_retailprice FROM part
+        |WHERE CAST(p_retailprice AS DECIMAL(18,2)) * (SELECT COUNT(*) FROM part)
+        |      > (SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2))) FROM part)
+        |ORDER BY p_partkey""".stripMargin)((s, dir) => {
       val p = part(s, dir)
       val stats = p.agg(
         sum(dec(col("p_retailprice"), 2)).as("tot"),
@@ -1416,7 +2362,11 @@ object SparkEntry {
     }),
 
     // ---- §2.4 group having ----
-    "q16_having" -> ((s, dir) => {
+    Query("q16_having",
+      """SELECT o_custkey, COUNT(*) AS n_orders,
+        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_spent
+        |FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 3
+        |ORDER BY o_custkey""".stripMargin, headline = true)((s, dir) => {
       orders(s, dir)
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
@@ -1426,7 +2376,11 @@ object SparkEntry {
     }),
 
     // ---- §2.9 event-time tumbling window (batch mode) ----
-    "q17_events_minutely" -> ((s, dir) => {
+    Query("q17_events_minutely",
+      """SELECT CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) AS minute_bucket,
+        |  event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, headline = true)((s, dir) => {
       events(s, dir)
         .groupBy((floor(unix_micros(col("ts")) / 60000000L)).as("minute_bucket"),
           col("event_type"))
@@ -1436,7 +2390,18 @@ object SparkEntry {
     }),
 
     // ---- §2.9 sessionization (gap-based, batch) ----
-    "q18_sessionize" -> ((s, dir) => {
+    Query("q18_sessionize",
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (
+        |  SELECT user_id, event_id, us,
+        |    SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM e)
+        |SELECT user_id, CAST(session_id AS INT) AS session_id, COUNT(*) AS n_events
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin, headline = true)((s, dir) => {
       val byUser = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
       val e = events(s, dir)
@@ -1454,7 +2419,12 @@ object SparkEntry {
     }),
 
     // ---- §2.3 as-of (most recent prior purchase per user) ----
-    "q19_asof_prev_purchase" -> ((s, dir) => {
+    Query("q19_asof_prev_purchase",
+      """SELECT user_id, event_id,
+        |  MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
+        |    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_purchase_us
+        |FROM events ORDER BY user_id, event_id""".stripMargin)((s, dir) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1468,19 +2438,38 @@ object SparkEntry {
     }),
 
     // ---- north star: exact dedup ----
-    "q20_dedup_exact" -> ((s, dir) => {
+    Query("q20_dedup_exact",
+      """SELECT md5(text) AS digest, MIN(doc_id) AS keep_id, COUNT(*) AS dup_count
+        |FROM documents GROUP BY md5(text) ORDER BY digest""".stripMargin, headline = true)((s, dir) => {
       Dedup.exact(documents(s, dir)).orderBy("digest")
     }),
 
     // ---- north star: exact-dedup survivors ----
-    "q21_dedup_keep" -> ((s, dir) => {
+    Query("q21_dedup_keep",
+      """SELECT doc_id, lang FROM documents
+        |WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY md5(text))
+        |ORDER BY doc_id""".stripMargin)((s, dir) => {
       Dedup.exactKeep(documents(s, dir))
         .select("doc_id", "lang")
         .orderBy("doc_id")
     }),
 
     // ---- north star: text statistics ----
-    "q22_text_stats" -> ((s, dir) => {
+    Query("q22_text_stats",
+      """WITH w AS (
+        |  SELECT doc_id, w FROM documents,
+        |    unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
+        |  WHERE w <> ''),
+        |tok AS (
+        |  SELECT doc_id, tk FROM documents,
+        |    unnest(regexp_split_to_array(text, '\s+')) AS t(tk)
+        |  WHERE tk <> '')
+        |SELECT d.doc_id,
+        |  CAST(LENGTH(d.text) AS BIGINT) AS n_chars,
+        |  (SELECT COUNT(*) FROM tok WHERE tok.doc_id = d.doc_id) AS n_tokens,
+        |  (SELECT COUNT(*) FROM w WHERE w.doc_id = d.doc_id) AS n_words,
+        |  (SELECT COUNT(DISTINCT w) FROM w WHERE w.doc_id = d.doc_id) AS n_unique_words
+        |FROM documents d ORDER BY d.doc_id""".stripMargin, headline = true)((s, dir) => {
       // _ws materialized: two references of an inline words() would
       // run the regex split twice (HOFs sit outside codegen CSE)
       documents(s, dir)
@@ -1495,14 +2484,50 @@ object SparkEntry {
     }),
 
     // ---- north star: language ID heuristic ----
-    "q23_langid" -> ((s, dir) => {
+    Query("q23_langid",
+      """WITH w AS (
+        |  SELECT doc_id, w FROM documents,
+        |    unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
+        |  WHERE w <> ''),
+        |h AS (
+        |  SELECT doc_id,
+        |    SUM(CASE WHEN w IN ('der','die','das','und','ist','nicht','ein','eine','zu','mit') THEN 1 ELSE 0 END) AS h_de,
+        |    SUM(CASE WHEN w IN ('the','and','of','to','in','is','that','it','was','for') THEN 1 ELSE 0 END) AS h_en,
+        |    SUM(CASE WHEN w IN ('el','la','los','las','y','es','un','una','que','por') THEN 1 ELSE 0 END) AS h_es,
+        |    SUM(CASE WHEN w IN ('le','la','les','et','est','une','un','que','pour','dans') THEN 1 ELSE 0 END) AS h_fr,
+        |    SUM(CASE WHEN w IN ('il','la','di','e','che','un','una','per','non','sono') THEN 1 ELSE 0 END) AS h_it,
+        |    SUM(CASE WHEN w IN ('de','het','een','en','van','is','dat','niet','met','op') THEN 1 ELSE 0 END) AS h_nl
+        |  FROM w GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  CASE
+        |    WHEN h.doc_id IS NULL OR GREATEST(h_de,h_en,h_es,h_fr,h_it,h_nl) = 0 THEN 'und'
+        |    WHEN h_de >= GREATEST(h_en,h_es,h_fr,h_it,h_nl) THEN 'de'
+        |    WHEN h_en >= GREATEST(h_es,h_fr,h_it,h_nl) THEN 'en'
+        |    WHEN h_es >= GREATEST(h_fr,h_it,h_nl) THEN 'es'
+        |    WHEN h_fr >= GREATEST(h_it,h_nl) THEN 'fr'
+        |    WHEN h_it >= h_nl THEN 'it'
+        |    ELSE 'nl' END AS lang_pred
+        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
+        |ORDER BY d.doc_id""".stripMargin, headline = true)((s, dir) => {
       documents(s, dir)
         .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id")
     }),
 
     // ---- north star: content fingerprint (md5-min over word 8-grams) ----
-    "q24_fingerprint" -> ((s, dir) => {
+    Query("q24_fingerprint",
+      """WITH w AS (
+        |  SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id) AS pos
+        |  FROM (SELECT doc_id, w FROM documents,
+        |          unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
+        |        WHERE w <> '') z),
+        |g AS (
+        |  SELECT a.doc_id, md5(string_agg(b.w, ' ' ORDER BY b.pos)) AS gram
+        |  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos BETWEEN a.pos AND a.pos + 7
+        |  GROUP BY a.doc_id, a.pos
+        |  HAVING COUNT(*) = 8)
+        |SELECT doc_id, MIN(gram) AS fingerprint FROM g GROUP BY doc_id
+        |ORDER BY doc_id""".stripMargin)((s, dir) => {
       // _ws materialized: wordNgrams' two internal references of an
       // inline words() re-tokenize (HOFs sit outside codegen CSE)
       documents(s, dir)
@@ -1515,7 +2540,19 @@ object SparkEntry {
     }),
 
     // ---- north star: n-gram vocabulary per doc ----
-    "q25_ngram_count" -> ((s, dir) => {
+    Query("q25_ngram_count",
+      """WITH w AS (
+        |  SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id) AS pos
+        |  FROM (SELECT doc_id, w FROM documents,
+        |          unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
+        |        WHERE w <> '') z),
+        |g AS (
+        |  SELECT a.doc_id, string_agg(b.w, ' ' ORDER BY b.pos) AS gram
+        |  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos BETWEEN a.pos AND a.pos + 2
+        |  GROUP BY a.doc_id, a.pos
+        |  HAVING COUNT(*) = 3)
+        |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_distinct_3grams
+        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin)((s, dir) => {
       documents(s, dir)
         .withColumn("_ws", TextAnalysis.words(col("text")))
         .select(col("doc_id"),
@@ -1526,7 +2563,15 @@ object SparkEntry {
     }),
 
     // ---- §2.5 split: fixed-size chunking of array cells ----
-    "q26_split_chunks" -> ((s, dir) => {
+    Query("q26_split_chunks",
+      """SELECT vec_id, CAST(gs AS INT) AS chunk_id,
+        |  array_to_string(list_transform(list_slice(embedding, gs*16 + 1, gs*16 + 16),
+        |    x -> CAST(CAST(FLOOR(CAST(x AS DOUBLE) * 1e9) AS BIGINT) AS VARCHAR)), ',') AS chunk
+        |FROM (
+        |  SELECT vec_id, embedding,
+        |    unnest(generate_series(0, GREATEST(1, CAST(FLOOR((len(embedding) - 16.0)/16.0) AS BIGINT) + 1) - 1)) AS gs
+        |  FROM embeddings) t
+        |ORDER BY vec_id, chunk_id""".stripMargin, headline = true)((s, dir) => {
       val win = 16
       val e = embeddings(s, dir)
       val n = greatest(lit(1),
@@ -1548,7 +2593,11 @@ object SparkEntry {
     }),
 
     // ---- §2.5 sample replicate (1 row → factor rows) ----
-    "q27_sample_replicate" -> ((s, dir) => {
+    Query("q27_sample_replicate",
+      """SELECT n_nationkey, CAST(rep_i AS INT) AS rep_i FROM (
+        |  SELECT n_nationkey, unnest(generate_series(1, n_regionkey + 1)) AS rep_i
+        |  FROM nation) t
+        |ORDER BY n_nationkey, rep_i""".stripMargin)((s, dir) => {
       nation(s, dir)
         .select(col("n_nationkey"),
           explode(sequence(lit(1), col("n_regionkey") + 1)).as("rep_i"))
@@ -1556,7 +2605,10 @@ object SparkEntry {
     }),
 
     // ---- §2.12 xval: sequential k-fold (ntile per group) ----
-    "q28_xval_sequential" -> ((s, dir) => {
+    Query("q28_xval_sequential",
+      """SELECT c_custkey,
+        |  CAST(ntile(4) OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) - 1 AS INT) AS fold
+        |FROM customer ORDER BY c_custkey""".stripMargin)((s, dir) => {
       Xval.sequentialKfold(customer(s, dir), 4, "c_mktsegment", "c_custkey")
         .select(col("c_custkey"), col("fold"))
         .orderBy("c_custkey")
@@ -1564,7 +2616,15 @@ object SparkEntry {
 
     // ---- §2.12 xval: seeded group-random k-fold (balanced permutation of
     // the distinct group set; members follow their group — xval.py:27-43) ----
-    "q65_group_random_kfold" -> ((s, dir) => {
+    // md5-permuted distinct groups, position mod k — engine-independent
+    // shuffle, so DuckDB reproduces the exact fold assignment
+    Query("q65_group_random_kfold",
+      """SELECT c_custkey, c_nationkey, f.fold FROM customer JOIN (
+        |  SELECT c_nationkey,
+        |    CAST((row_number() OVER (
+        |      ORDER BY md5('7#' || CAST(c_nationkey AS VARCHAR)), c_nationkey) - 1) % 4 AS INT) AS fold
+        |  FROM (SELECT DISTINCT c_nationkey FROM customer)
+        |) f USING (c_nationkey) ORDER BY c_custkey""".stripMargin)((s, dir) => {
       Xval.groupRandomKfold(customer(s, dir), 4, "c_nationkey", seed = 7)
         .select(col("c_custkey"), col("c_nationkey"), col("fold"))
         .orderBy("c_custkey")
@@ -1573,7 +2633,21 @@ object SparkEntry {
     // ---- §2.12 xval train/val/test masks (reference val_frac semantics:
     // val sampled out of each fold's train side, xval.py:69-78; sampling is
     // the engine's md5-uniform so DuckDB replays it bit-for-bit) ----
-    "q83_xval_val_masks" -> ((s, dir) => {
+    // md5-uniform val sampling: u_k = first-8-hex(md5('seed#tag#key'))/2^32
+    // — an exact integer over 2^32, so the double and the < compare are
+    // engine-identical (same layout-independent sample as the engine)
+    Query("q83_xval_val_masks",
+      """WITH f AS (SELECT doc_id,
+        |    CAST(CAST(CONCAT('0x', SUBSTRING(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
+        |  FROM documents),
+        |u AS (SELECT doc_id, fold,
+        |    CAST(CONCAT('0x', SUBSTRING(md5('7#1000#' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)::DOUBLE / 4294967296.0 AS u0,
+        |    CAST(CONCAT('0x', SUBSTRING(md5('7#1001#' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)::DOUBLE / 4294967296.0 AS u1
+        |  FROM f)
+        |SELECT doc_id, fold,
+        |  CASE WHEN fold = 0 THEN 'test' WHEN u0 < 1.0/3 THEN 'val' ELSE 'train' END AS set_f0,
+        |  CASE WHEN fold = 1 THEN 'test' WHEN u1 < 1.0/3 THEN 'val' ELSE 'train' END AS set_f1
+        |FROM u ORDER BY doc_id""".stripMargin)((s, dir) => {
       val d = Xval.md5Kfold(documents(s, dir).select(col("doc_id")), 4, "doc_id")
       val m = Xval.foldMasksVal(d, 4, valFrac = 1.0 / 3, valKey = "doc_id", seed = 7)
       m.select(col("doc_id"), col("fold"),
@@ -1585,7 +2659,11 @@ object SparkEntry {
     }),
 
     // ---- §2.4+§2.8 fitted normalizer (minmax agg → broadcast apply) ----
-    "q29_normalize_minmax" -> ((s, dir) => {
+    Query("q29_normalize_minmax",
+      """SELECT c_custkey,
+        |  (c_acctbal - (SELECT MIN(c_acctbal) FROM customer))
+        |    / ((SELECT MAX(c_acctbal) FROM customer) - (SELECT MIN(c_acctbal) FROM customer)) AS bal_norm
+        |FROM customer ORDER BY c_custkey""".stripMargin)((s, dir) => {
       val c = customer(s, dir)
       val r = c.agg(min("c_acctbal"), max("c_acctbal")).head()
       val (lo, hi) = (r.getDouble(0), r.getDouble(1))
@@ -1595,7 +2673,11 @@ object SparkEntry {
     }),
 
     // ---- §2.4 cube ----
-    "q30_cube_counts" -> ((s, dir) => {
+    Query("q30_cube_counts",
+      """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+        |  COALESCE(l_linestatus, 'ALL') AS status, COUNT(*) AS n
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+        |ORDER BY flag, status""".stripMargin)((s, dir) => {
       lineitem(s, dir)
         .cube("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"))
@@ -1605,7 +2687,10 @@ object SparkEntry {
     }),
 
     // ---- §2.4 exact count-distinct per group ----
-    "q31_count_distinct" -> ((s, dir) => {
+    Query("q31_count_distinct",
+      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
+        |  COUNT(DISTINCT l_suppkey) AS n_supps
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) => {
       lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
@@ -1614,7 +2699,12 @@ object SparkEntry {
     }),
 
     // ---- §2.2 positional ops: slice-select on _idx (DabDataset) ----
-    "q32_positional_slice" -> ((s, dir) => {
+    Query("q32_positional_slice",
+      """SELECT o_orderkey FROM (
+        |  SELECT o_orderkey, row_number() OVER (ORDER BY o_orderkey) - 1 AS idx
+        |  FROM orders) t
+        |WHERE idx >= 10 AND idx < 110 AND (idx - 10) % 3 = 0
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
       // deterministic position = sorted order on o_orderkey
       val ds = DabDataset.fromDataFrame(orders(s, dir).orderBy("o_orderkey"))
       ds.selectSlice(10, 110, 3).df
@@ -1623,7 +2713,20 @@ object SparkEntry {
     }),
 
     // ---- §2.7 concat with dataset_id offset (Dataset.concat) ----
-    "q33_concat_datasets" -> ((s, dir) => {
+    Query("q33_concat_datasets",
+      """WITH a AS (
+        |  SELECT c_custkey, row_number() OVER (ORDER BY c_custkey) - 1 AS _idx,
+        |         0 AS dataset_id
+        |  FROM customer WHERE c_mktsegment = 'BUILDING'),
+        |b AS (
+        |  SELECT c_custkey,
+        |         row_number() OVER (ORDER BY c_custkey) - 1 + (SELECT COUNT(*) FROM a) AS _idx,
+        |         1 AS dataset_id
+        |  FROM customer WHERE c_mktsegment = 'MACHINERY')
+        |SELECT _idx, c_custkey, dataset_id FROM a
+        |UNION ALL
+        |SELECT _idx, c_custkey, dataset_id FROM b
+        |ORDER BY _idx""".stripMargin)((s, dir) => {
       val a = DabDataset.dataset(
         customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
           .orderBy("c_custkey"), "a")
@@ -1635,8 +2738,9 @@ object SparkEntry {
         .orderBy("_idx")
     }),
 
-    // ---- north star (rows-only): MinHash LSH near-dup candidates ----
-    "q34_minhash_neardup" -> ((s, dir) => {
+    // ---- north star: MinHash LSH near-dup candidates ----
+    Query("q34_minhash_neardup",
+      Oracles.q34MinhashNearDup, headline = true)((s, dir) => {
       Dedup.minhashCandidates(documents(s, dir), numHashes = 32,
           rowsPerBand = 4, k = 5, threshold = 0.3)
         .orderBy("id_a", "id_b")
@@ -1646,7 +2750,7 @@ object SparkEntry {
     // The stateful per-bucket LSH (streaming/StreamingDedup) yields the
     // same candidate set as the batch band join, so the q34 oracle gates
     // the streaming code path too (distinct pairs; est = agreement/32).
-    "q86_stream_neardup" -> ((s, dir) => {
+    Query("q86_stream_neardup", Oracles.q86StreamNearDup)((s, dir) => {
       val reps = Dedup.exactKeep(documents(s, dir))
       graft.streaming.StreamingDedup.nearDupCandidates(s, reps,
           numHashes = 32, rowsPerBand = 4, k = 5, threshold = 0.3,
@@ -1656,7 +2760,19 @@ object SparkEntry {
     }),
 
     // ---- north star: C4-style line-level cleaning (pre-scoring pass) ----
-    "q87_clean_lines" -> ((s, dir) => {
+    // C4 line filter: same trim/split/regex semantics in DuckDB (both
+    // trims are space-only; both regex engines anchor $ without multiline;
+    // both split on \r?\n so CRLF input is LF-normalized identically)
+    Query("q87_clean_lines",
+      """WITH kept AS (
+        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\r?\n'),
+        |    l -> len(regexp_split_to_array(trim(l), '\s+')) >= 3
+        |         AND regexp_matches(trim(l), '[.!?]$')) AS ls
+        |  FROM documents)
+        |SELECT doc_id,
+        |  COALESCE(array_to_string(ls, chr(10)), '') AS clean_text,
+        |  len(ls)::BIGINT AS n_kept
+        |FROM kept ORDER BY doc_id""".stripMargin)((s, dir) => {
       documents(s, dir)
         .select(col("doc_id"),
           TextAnalysis.cleanLines(col("text"), minWords = 3).as("clean_text"),
@@ -1673,7 +2789,7 @@ object SparkEntry {
     // old = ids < 400 as-is; new = ids ≥ 100 with every 5th body edited —
     // so [0,100) remove, [100,400) split unchanged/changed by the mod-5
     // rule, [400,500) add. Per-(source,status) counts, dashboard-sized
-    "q119_snapshot_diff" -> ((s, dir) => {
+    Query("q119_snapshot_diff", Oracles.q119SnapshotDiff)((s, dir) => {
       val d = documents(s, dir)
       val older = d.filter(col("doc_id") < 400)
       val newer = d.filter(col("doc_id") >= 100)
@@ -1689,7 +2805,7 @@ object SparkEntry {
     // capacity − tokens = the padding a training run pays for; spanning
     // docs matter when the loader can't split. One partial agg over the
     // q79 layout; oracle wraps q79's replay in the same aggregate
-    "q118_packing_report" -> ((s, dir) => {
+    Query("q118_packing_report", Oracles.q118PackingReport)((s, dir) => {
       Packing.packingReport(
         Packing.packSequences(documents(s, dir), budget = 2048), budget = 2048)
     }),
@@ -1699,7 +2815,7 @@ object SparkEntry {
     // BPE token count, and single-char-token count (fragmentation). All
     // integers, one scan + one partial-agg; the oracle replays the q88
     // merge walk and aggregates per source
-    "q117_tokenizer_fit" -> ((s, dir) => {
+    Query("q117_tokenizer_fit", Oracles.q117TokenizerFit)((s, dir) => {
       import graft.functions.Bpe
       val toks = coalesce(Bpe.tokens(col("text")), array().cast("array<string>"))
       documents(s, dir)
@@ -1723,7 +2839,9 @@ object SparkEntry {
     // query-many path. Same math as q57's inline train+search, so the
     // q57 oracle gates this second engine formulation (the q109≡q102
     // discipline: one relational truth, two engine paths)
-    "q116_knn_ivf_indexed" -> ((s, dir) => {
+    // q116 = q57's relational semantics through the persisted-index
+    // engine path: one oracle, two independent engine formulations
+    Query("q116_knn_ivf_indexed", Oracles.q57KnnIvf)((s, dir) => {
       val e = embeddings(s, dir)
       val (cents, assigned) = Similarity.ivfIndexInt8(e, nCells = 16, iters = 2)
       val tmp = TempDirs.scratch("ivf")
@@ -1739,7 +2857,8 @@ object SparkEntry {
     // global position (no global window) → size-bounded shard ids →
     // per-shard id digest. The oracle replays the permutation with a
     // plain window; the engine's bucketed sort must agree bit-for-bit
-    "q115_export_manifest" -> ((s, dir) => {
+    Query("q115_export_manifest",
+      Oracles.q115ExportManifest, headline = true)((s, dir) => {
       import graft.sources.TrainingExport
       TrainingExport.manifest(documents(s, dir), rowsPerShard = 64, seed = 11)
         .orderBy("shard")
@@ -1750,7 +2869,8 @@ object SparkEntry {
     // the chain a production pipeline actually runs: URL dedup → exact
     // dedup → Gopher filter → domain blocklist + cap. One query, one
     // oracle, four stages — survivors + their domain and word count
-    "q114_curation_pipeline" -> ((s, dir) => {
+    Query("q114_curation_pipeline",
+      Oracles.q114CurationPipeline, headline = true)((s, dir) => {
       import s.implicits._
       val v = pmod(col("doc_id"), lit(4))
       val g = expr("doc_id DIV 4")
@@ -1787,7 +2907,7 @@ object SparkEntry {
     // sequential filters: every input document gets the FIRST stage that
     // dropped it ('kept' for survivors) — the why-is-my-doc-missing
     // debug view a filtered corpus alone cannot answer.
-    "q120_curation_trace" -> ((s, dir) => {
+    Query("q120_curation_trace", Oracles.q120CurationTrace)((s, dir) => {
       import s.implicits._
       val bl = Seq("site0.test", "site3.test").toDF("domain")
       Curation.trace(curationWrappedDocs(s, dir), bl,
@@ -1798,7 +2918,7 @@ object SparkEntry {
     // ---- north star: stage-by-stage curation funnel ----
     // Docs/words entering, dropped, and surviving each stage — the
     // removal-rate table curation papers publish (RefinedWeb Table 2).
-    "q121_curation_funnel" -> ((s, dir) => {
+    Query("q121_curation_funnel", Oracles.q121CurationFunnel)((s, dir) => {
       import s.implicits._
       val bl = Seq("site0.test", "site3.test").toDF("domain")
       Curation.funnel(Curation.trace(curationWrappedDocs(s, dir), bl,
@@ -1812,7 +2932,8 @@ object SparkEntry {
     // (the deterministic stand-in for wall share), and the downstream
     // bytes its drops spare later stages — why cheap dedup runs first.
     // One instrumented pass: rides the q120 trace's single corpus scan.
-    "q322_curation_costs" -> ((s, dir) => {
+    Query("q322_curation_costs",
+      Oracles.q322CurationCosts, headline = true)((s, dir) => {
       import s.implicits._
       val bl = Seq("site0.test", "site3.test").toDF("domain")
       Curation.stageCosts(Curation.trace(curationWrappedDocs(s, dir), bl,
@@ -1825,7 +2946,7 @@ object SparkEntry {
     // probability ∝ size (weight = n_chars): systematic PPS pins over an
     // exact integer prefix sum in seeded order — bit-exact on any
     // engine, Σ n_hits = n
-    "q122_pps_sample" -> ((s, dir) => {
+    Query("q122_pps_sample", Oracles.q122PpsSample)((s, dir) => {
       Sampling.ppsSystematic(documents(s, dir), n = 100,
           weightCol = "n_chars", seed = 7)
         .orderBy("doc_id")
@@ -1835,7 +2956,7 @@ object SparkEntry {
     // The targeted-retrieval shape of decontamination sweeps and
     // domain-adjacent corpus pulls: one stats pass (N, Σdl, df), integer
     // micro-idf, one map-side scoring pass, TakeOrdered per query
-    "q123_bm25_topk" -> ((s, dir) => {
+    Query("q123_bm25_topk", Oracles.q123Bm25TopK)((s, dir) => {
       Retrieval.bm25TopK(documents(s, dir), bm25Queries, k = 15)
         .orderBy("query_id", "rank")
     }),
@@ -1845,7 +2966,7 @@ object SparkEntry {
     // codegen'd Catalyst UnaryExpression (plans/UnicodeNormalize) — the
     // canonicalization pass run before hashing/dedup. Inputs get a
     // decomposed suffix so the composition is actually exercised
-    "q124_normalize_nfc" -> ((s, dir) => {
+    Query("q124_normalize_nfc", Oracles.q124NormalizeNfc)((s, dir) => {
       val raw = concat(coalesce(col("text"), lit("")),
         lit(" Cafe\u0301 nai\u0308ve"))
       documents(s, dir)
@@ -1860,7 +2981,7 @@ object SparkEntry {
     // ---- north star: time-grid resample + forward fill ----
     // Per-user daily grid from first to last active day, value = daily
     // max carried across gaps; per-key explode + per-key window only
-    "q125_gapfill_daily" -> ((s, dir) => {
+    Query("q125_gapfill_daily", Oracles.q125GapfillDaily)((s, dir) => {
       // day emitted as yyyy-MM-dd text — the q62 date-compare discipline
       Timeseries.gapFillDaily(events(s, dir))
         .select(col("user_id"),
@@ -1875,7 +2996,7 @@ object SparkEntry {
     // only; every shuffle hashes user_id so the exchange is reused
     // across the chain. Timestamps compared as epoch-micros (q62
     // discipline); every user appears, step_reached 0..3.
-    "q126_event_funnel" -> ((s, dir) => {
+    Query("q126_event_funnel", Oracles.q126EventFunnel)((s, dir) => {
       Analytics.funnel(events(s, dir), Seq("view", "click", "purchase"))
         .orderBy("user_id")
     }),
@@ -1883,7 +3004,7 @@ object SparkEntry {
     // ---- north star: event-type Markov transition counts ----
     // lag() per user (total-ordered by ts, event_id) → pair counts;
     // |types|² output.
-    "q139_event_transitions" -> ((s, dir) => {
+    Query("q139_event_transitions", Oracles.q139EventTransitions)((s, dir) => {
       Analytics.eventTransitions(events(s, dir))
         .orderBy("from_type", "to_type")
     }),
@@ -1892,7 +3013,7 @@ object SparkEntry {
     // Recency/frequency/monetary as exact integers (µs, count, cents),
     // tercile fences as exact percentiles over those integers — scores
     // engine-exact, no global window.
-    "q140_rfm_scores" -> ((s, dir) => {
+    Query("q140_rfm_scores", Oracles.q140RfmScores)((s, dir) => {
       Analytics.rfmScores(orders(s, dir))
         .orderBy("o_custkey")
     }),
@@ -1902,7 +3023,9 @@ object SparkEntry {
     // flatMapGroupsWithState; per-step time lists in state make the
     // streaming answer equal the batch answer under any arrival order,
     // so the oracle is exactly q126's SQL.
-    "q138_stream_funnel" -> ((s, dir) => {
+    // q138 = q126's semantics through the incremental streaming path:
+    // one oracle, two independent engine formulations (q116 discipline)
+    Query("q138_stream_funnel", Oracles.q126EventFunnel)((s, dir) => {
       EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
           df => EventStreams.funnelStream(s, df,
             Seq("view", "click", "purchase")),
@@ -1920,7 +3043,7 @@ object SparkEntry {
     // Σ v·Δt / Σ Δt per user; integer-micros weights × DECIMAL values
     // keep the weighted sum exact; one lead() window + one agg, both
     // partitioned by the key.
-    "q136_time_weighted_avg" -> ((s, dir) => {
+    Query("q136_time_weighted_avg", Oracles.q136TimeWeightedAvg)((s, dir) => {
       Timeseries.timeWeightedAvg(events(s, dir))
         .orderBy("user_id")
     }),
@@ -1929,7 +3052,7 @@ object SparkEntry {
     // Running deviation-from-own-mean sum climbing > 500 above its
     // running minimum; the ×n scaling keeps every compared quantity
     // DECIMAL-exact (no mean division inside the predicate).
-    "q137_drift_alerts" -> ((s, dir) => {
+    Query("q137_drift_alerts", Oracles.q137DriftAlerts)((s, dir) => {
       Timeseries.driftAlerts(events(s, dir), threshold = 500.0)
         .orderBy("user_id", "event_id")
     }),
@@ -1940,7 +3063,7 @@ object SparkEntry {
     // distinct scan over the pivot column and caps it at
     // spark.sql.pivotMaxValues; with it the plan is one partial-agg'd
     // groupBy, schema fixed at plan time. Oracle = FILTERed counts.
-    "q134_pivot_events" -> ((s, dir) => {
+    Query("q134_pivot_events", Oracles.q134PivotEvents)((s, dir) => {
       events(s, dir)
         .groupBy("user_id")
         .pivot("event_type",
@@ -1953,7 +3076,7 @@ object SparkEntry {
     // ---- §2.7 unpivot: wide → long (melt) ----
     // The inverse direction over q134's wide shape, via Dataset.unpivot
     // — one map-side explode, no shuffle beyond the upstream pivot's.
-    "q135_unpivot_events" -> ((s, dir) => {
+    Query("q135_unpivot_events", Oracles.q135UnpivotEvents)((s, dir) => {
       val wide = events(s, dir)
         .groupBy("user_id")
         .pivot("event_type",
@@ -1971,7 +3094,7 @@ object SparkEntry {
     // Value-based bucketing of o_totalprice into 20 × 25k buckets;
     // bounds are exact double arithmetic (lo + k·width) on both
     // engines.
-    "q130_histogram" -> ((s, dir) => {
+    Query("q130_histogram", Oracles.q130Histogram)((s, dir) => {
       Analytics.histogram(orders(s, dir), "o_totalprice",
           lo = 0.0, width = 25000.0, nBuckets = 20)
         .orderBy("bucket")
@@ -1979,7 +3102,7 @@ object SparkEntry {
 
     // ---- north star: funnel step-conversion summary ----
     // Aggregate of q126's per-user funnel: entities reaching each step.
-    "q132_funnel_counts" -> ((s, dir) => {
+    Query("q132_funnel_counts", Oracles.q132FunnelCounts)((s, dir) => {
       Analytics.funnelCounts(
           Analytics.funnel(events(s, dir), Seq("view", "click", "purchase")),
           nSteps = 3)
@@ -1990,7 +3113,7 @@ object SparkEntry {
     // Customers by first-order month; distinct customers active k
     // months later. Integer month index (year*12+month) keeps the
     // offset engine-exact.
-    "q128_cohort_retention" -> ((s, dir) => {
+    Query("q128_cohort_retention", Oracles.q128CohortRetention)((s, dir) => {
       Analytics.cohortRetention(orders(s, dir))
         .orderBy("cohort_month", "month_offset")
     }),
@@ -2001,7 +3124,7 @@ object SparkEntry {
     // re-laid-out files tight min/max rectangles in BOTH filter
     // dimensions. Oracle replays the interleave as a 32-term integer
     // bit sum.
-    "q133_zorder_key" -> ((s, dir) => {
+    Query("q133_zorder_key", Oracles.q133ZorderKey)((s, dir) => {
       val o = orders(s, dir)
       val x16 = pmod(floor(col("o_custkey") / 1).cast("long"), lit(65536L))
       val y16 = pmod(floor(col("o_totalprice") / 100).cast("long"), lit(65536L))
@@ -2016,7 +3139,7 @@ object SparkEntry {
     // range-partitioned files get tighter min/max rectangles than
     // Z-order at the same file count. Oracle unrolls the 16
     // reflect-swap rounds as chained CTEs.
-    "q229_hilbert_key" -> ((s, dir) => {
+    Query("q229_hilbert_key", Oracles.q229HilbertKey)((s, dir) => {
       val o = orders(s, dir)
       val x16 = pmod(floor(col("o_custkey") / 1).cast("long"), lit(65536L))
       val y16 = pmod(floor(col("o_totalprice") / 100).cast("long"), lit(65536L))
@@ -2030,7 +3153,7 @@ object SparkEntry {
     // interpolated medians on both engines make the predicate
     // engine-exact (events.value is long-tailed, so MAD bites where
     // mean/stddev would be dragged by the tail itself).
-    "q131_mad_outliers" -> ((s, dir) => {
+    Query("q131_mad_outliers", Oracles.q131MadOutliers)((s, dir) => {
       Analytics.madOutliers(events(s, dir), "value", "event_type")
         .select("event_id", "event_type", "value", "abs_dev",
           "group_median", "group_mad")
@@ -2045,7 +3168,7 @@ object SparkEntry {
     // corpus has no organic typos, so every 17th doc gets a
     // deterministic OCR-noise suffix (q124's injection discipline) and
     // the miner recovers exactly those variant↔canonical pairs.
-    "q129_spelling_variants" -> ((s, dir) => {
+    Query("q129_spelling_variants", Oracles.q129SpellingVariants)((s, dir) => {
       val noisy = documents(s, dir).withColumn("text",
         concat(coalesce(col("text"), lit("")),
           when(pmod(col("doc_id"), lit(17)) === 0,
@@ -2060,7 +3183,7 @@ object SparkEntry {
     // pair count → deterministic argmax → greedy left-to-right fuse,
     // all on the vocab table. The oracle replays every iteration as a
     // generated CTE chain (parity-run islands ≡ the engine's left fold)
-    "q113_bpe_train" -> ((s, dir) => {
+    Query("q113_bpe_train", Oracles.q113BpeTrain, headline = true)((s, dir) => {
       import s.implicits._
       import graft.functions.Bpe
       Bpe.train(documents(s, dir), nMerges = 8).zipWithIndex
@@ -2069,7 +3192,7 @@ object SparkEntry {
         .orderBy("merge_rank")
     }),
 
-    "q88_bpe_tokens" -> ((s, dir) => {
+    Query("q88_bpe_tokens", Oracles.q88BpeTokens, headline = true)((s, dir) => {
       import graft.functions.Bpe
       documents(s, dir)
         .select(col("doc_id"),
@@ -2085,7 +3208,7 @@ object SparkEntry {
     // byte↔unicode map (space → Ġ). Gated on the ASCII-only, whitespace-
     // normalized subset, where the GPT-2 pre-tokenizer's lookahead branch
     // can never fire — exactly the fragment RE2 (DuckDB) can replay.
-    "q108_bpe_byte_tokens" -> ((s, dir) => {
+    Query("q108_bpe_byte_tokens", Oracles.q108BpeByteTokens)((s, dir) => {
       import graft.functions.Bpe
       val ct = trim(regexp_replace(lower(col("text")), "[ \\t\\n\\f\\r\\x0B]+", " "))
       documents(s, dir)
@@ -2102,14 +3225,15 @@ object SparkEntry {
     // ---- north star: CCNet-style bigram-LM perplexity scoring ----
     // Hash-derived stand-in log-probs (the q80 seed-weights discipline);
     // real models load a sidecar via TextAnalysis.scoreBigramLm
-    "q90_perplexity_score" -> ((s, dir) => {
+    Query("q90_perplexity_score",
+      Oracles.q90PerplexityScore, headline = true)((s, dir) => {
       TextAnalysis.perplexityScore(documents(s, dir)).orderBy("doc_id")
     }),
 
     // ---- north star: CCNet composition — score, bucket, mixture-sample ----
     // thresholds are the sf0.01 mean_lp terciles (fixed constants: the
     // split is a pure function of the score; see ccnetSample's contract)
-    "q91_ccnet_sample" -> ((s, dir) => {
+    Query("q91_ccnet_sample", Oracles.q91CcnetSample)((s, dir) => {
       TextAnalysis.ccnetSample(documents(s, dir), headLp = -2695L,
           tailLp = -2849L,
           fractions = Map("head" -> 1.0, "middle" -> 0.5, "tail" -> 0.1),
@@ -2121,7 +3245,7 @@ object SparkEntry {
     // ---- north star: incremental dedup (new shard vs signature index) ----
     // index = first 400 docs' banded signatures (production persists this
     // as parquet); incoming = last 100; candidates across only
-    "q92_dedup_incremental" -> ((s, dir) => {
+    Query("q92_dedup_incremental", Oracles.q92DedupIncremental)((s, dir) => {
       val d = documents(s, dir)
       val index = Dedup.minhashIndex(d.filter(col("doc_id") < 400),
         numHashes = 32, rowsPerBand = 4, k = 5)
@@ -2131,7 +3255,7 @@ object SparkEntry {
     }),
 
     // ---- north star: duplicated-span detection (ExactSubstr-style) ----
-    "q93_duplicate_spans" -> ((s, dir) => {
+    Query("q93_duplicate_spans", Oracles.q93DuplicateSpans)((s, dir) => {
       Dedup.duplicateSpans(documents(s, dir), window = 5)
         .orderBy("doc_id", "span_start")
     }),
@@ -2142,7 +3266,7 @@ object SparkEntry {
     // INCLUDING the auto-scaled cell count (⌈N/1024⌉ capped at 65536 —
     // nCells <= 0 triggers the auto rule; the oracle derives the same
     // number from count(*))
-    "q94_semantic_dedup" -> ((s, dir) => {
+    Query("q94_semantic_dedup", Oracles.q94SemanticDedup, headline = true)((s, dir) => {
       // maxCell pinned to no-drop: the skew cap is a production guard the
       // oracle deliberately doesn't replay — the gate must stay exact at
       // any sf the driver runs it at
@@ -2154,7 +3278,7 @@ object SparkEntry {
     // ---- north star: DSIR importance resampling (top-n selection) ----
     // target/background LMs are the hash-derived fixed-point stand-ins
     // (q80/q90 discipline); real LMs load as sidecar tables
-    "q95_dsir_select" -> ((s, dir) => {
+    Query("q95_dsir_select", Oracles.q95DsirSelect)((s, dir) => {
       TextAnalysis.dsirSelect(documents(s, dir), n = 100)
         .orderBy(col("weight").desc, col("doc_id"))
     }),
@@ -2165,7 +3289,7 @@ object SparkEntry {
     // chain (trigram -> 0.4*bigram -> 0.16*unigram, OOV skipped),
     // every tier a sum of shared-kernel integer logs. Train = docs
     // with doc_id % 7 != 0; scored = the held-out %7 == 0 split.
-    "q220_stupid_backoff" -> ((s, dir) => {
+    Query("q220_stupid_backoff", sbOracleSql)((s, dir) => {
       val d = documents(s, dir)
       TextAnalysis.stupidBackoffScore(
           d.filter(col("doc_id") % 7 =!= 0),
@@ -2177,7 +3301,24 @@ object SparkEntry {
     // Tokenizer planning: share of corpus tokens covered by a top-K
     // vocabulary, K in {100, 1k, 10k} — two-phase global vocab rank,
     // exact integer coverage + floor permille.
-    "q218_vocab_coverage" -> ((s, dir) => {
+    Query("q218_vocab_coverage",
+      """WITH wc AS (SELECT w, COUNT(*) AS c FROM (
+        |    SELECT unnest(list_filter(string_split_regex(
+        |      lower(COALESCE(text, '')), '[^a-z0-9'']+'),
+        |      x -> length(x) > 0)) AS w
+        |    FROM documents) GROUP BY w),
+        |rk AS (SELECT c, row_number() OVER (ORDER BY c DESC, w) AS rn,
+        |    COUNT(*) OVER () AS vocab
+        |  FROM wc),
+        |t AS (SELECT SUM(c) AS tot FROM wc),
+        |ks(k) AS (VALUES (100), (1000), (10000))
+        |SELECT ks.k::BIGINT AS k,
+        |  COALESCE(SUM(CASE WHEN rn <= ks.k THEN c END), 0)::BIGINT AS n_covered,
+        |  MAX(t.tot)::BIGINT AS total_tokens,
+        |  MAX(vocab)::BIGINT AS vocab_size,
+        |  (1000 * COALESCE(SUM(CASE WHEN rn <= ks.k THEN c END), 0)
+        |    // MAX(t.tot))::BIGINT AS coverage_permille
+        |FROM ks CROSS JOIN rk CROSS JOIN t GROUP BY ks.k ORDER BY k""".stripMargin)((s, dir) => {
       TextAnalysis.vocabCoverage(documents(s, dir))
     }),
 
@@ -2185,7 +3326,7 @@ object SparkEntry {
     // Adjacent-pair pointwise mutual information on the shared integer
     // log kernel: pmi_q12 = L(c_ab·N²) − L(c_a·c_b·B), exact BIGINT at
     // 10⁻¹², top-20 by TakeOrderedAndProject.
-    "q215_pmi_collocations" -> ((s, dir) => {
+    Query("q215_pmi_collocations", pmiOracleSql)((s, dir) => {
       TextAnalysis.pmiCollocations(documents(s, dir), minCount = 5,
         topN = 20)
     }),
@@ -2194,22 +3335,39 @@ object SparkEntry {
     // Exact integer counts (words / word-bearing sentences / vowel-run
     // syllables) and the grade as ONE IEEE division of exact integers —
     // engine-identical, no float accumulation anywhere.
-    "q212_readability" -> ((s, dir) => {
+    // q212 = the same three integer counts and the single-division
+    // grade; CASE w=0 mirrors the engine's NULL for wordless docs.
+    Query("q212_readability",
+      """WITH base AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(COALESCE(text, '')),
+        |      '[^a-z0-9'']+'), x -> length(x) > 0) AS ws,
+        |    list_filter(string_split_regex(lower(COALESCE(text, '')),
+        |      '[.!?]+'), s -> regexp_matches(s, '[a-z0-9]')) AS sents
+        |  FROM documents),
+        |c AS (SELECT doc_id, len(ws)::BIGINT AS w, len(sents)::BIGINT AS s,
+        |    COALESCE(list_sum(list_transform(ws,
+        |      x -> greatest(1, len(regexp_extract_all(x, '[aeiouy]+'))))),
+        |      0)::BIGINT AS y
+        |  FROM base)
+        |SELECT doc_id, w AS n_words, s AS n_sentences, y AS n_syllables,
+        |  CASE WHEN w = 0 THEN NULL ELSE
+        |    (39*w*w + 1180*y*s - 1559*s*w)::DOUBLE / (100*s*w) END AS fk_grade
+        |FROM c ORDER BY doc_id""".stripMargin, headline = true)((s, dir) => {
       TextAnalysis.readability(documents(s, dir)).orderBy("doc_id")
     }),
 
-    "q96_gopher_rules" -> ((s, dir) => {
+    Query("q96_gopher_rules", Oracles.q96GopherRules, headline = true)((s, dir) => {
       TextAnalysis.gopherRules(documents(s, dir)).orderBy("doc_id")
     }),
 
     // ---- north star: context-window chunking (win 50, stride 40) ----
-    "q97_chunk_words" -> ((s, dir) => {
+    Query("q97_chunk_words", Oracles.q97ChunkWords, headline = true)((s, dir) => {
       TextAnalysis.chunkByWords(documents(s, dir), win = 50, stride = 40)
         .orderBy("doc_id", "chunk_id")
     }),
 
     // ---- north star: near-dup keep-best (longest survives per cluster) ----
-    "q99_neardup_keep_best" -> ((s, dir) => {
+    Query("q99_neardup_keep_best", Oracles.q99NearDupKeepBest)((s, dir) => {
       Dedup.nearDupKeepBy(documents(s, dir), score = col("n_chars"),
           numHashes = 32, rowsPerBand = 4, k = 5, threshold = 0.5)
         .select("doc_id", "n_chars", "lang")
@@ -2217,17 +3375,17 @@ object SparkEntry {
     }),
 
     // ---- north star: one-scan corpus health report per source ----
-    "q100_corpus_report" -> ((s, dir) => {
+    Query("q100_corpus_report", Oracles.q100CorpusReport)((s, dir) => {
       TextAnalysis.corpusReport(documents(s, dir)).orderBy("source")
     }),
 
     // ---- north star: exact CCNet tercile thresholds (two-phase rank) ----
-    "q107_ppl_terciles" -> ((s, dir) => {
+    Query("q107_ppl_terciles", Oracles.q107PplTerciles)((s, dir) => {
       TextAnalysis.pplTerciles(documents(s, dir))
     }),
 
     // ---- north star: hard-negative mining (contrastive training prep) ----
-    "q106_hard_negatives" -> ((s, dir) => {
+    Query("q106_hard_negatives", Oracles.q106HardNegatives)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.hardNegatives(e, e.filter(col("vec_id") < 20), k = 5)
         .withColumn("rank", col("rank").cast("long"))
@@ -2235,26 +3393,26 @@ object SparkEntry {
     }),
 
     // ---- north star: bigram-LM training pass (corpus frequency table) ----
-    "q105_bigram_counts" -> ((s, dir) => {
+    Query("q105_bigram_counts", Oracles.q105BigramCounts)((s, dir) => {
       TextAnalysis.bigramCounts(documents(s, dir), topN = 200)
         .orderBy(col("n").desc, col("a"), col("b"))
     }),
 
     // ---- north star: kNN label propagation (embedding classifier) ----
-    "q104_knn_classify" -> ((s, dir) => {
+    Query("q104_knn_classify", Oracles.q104KnnClassify)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.knnClassify(e, e.filter(col("vec_id") < 20), k = 5)
         .orderBy("query_id")
     }),
 
     // ---- north star: duplicate-span REMOVAL (keep global first copy) ----
-    "q103_remove_spans" -> ((s, dir) => {
+    Query("q103_remove_spans", Oracles.q103RemoveSpans)((s, dir) => {
       Dedup.removeDuplicateSpans(documents(s, dir), window = 5)
         .orderBy("doc_id")
     }),
 
     // ---- north star: intra-doc line dedup (RefinedWeb boilerplate) ----
-    "q101_dedup_lines" -> ((s, dir) => {
+    Query("q101_dedup_lines", Oracles.q101DedupLines)((s, dir) => {
       TextAnalysis.dedupLinesWithinDoc(documents(s, dir)).orderBy("doc_id")
     }),
 
@@ -2263,7 +3421,7 @@ object SparkEntry {
     // tracking-param variants per (doc_id DIV 4) group — variant 0 has
     // no query (its own canonical), variants 1-3 normalize identically,
     // so every normalization step is load-bearing in the survivor set
-    "q111_url_dedup" -> ((s, dir) => {
+    Query("q111_url_dedup", Oracles.q111UrlDedup, headline = true)((s, dir) => {
       val v = pmod(col("doc_id"), lit(4))
       val g = expr("doc_id DIV 4")
       val d = documents(s, dir).withColumn("url", concat(
@@ -2284,7 +3442,7 @@ object SparkEntry {
     // Same four-variant URL view as q111; two of the seven synthetic
     // domains are blocklisted, survivors capped at 10 docs/domain by the
     // seeded md5 permutation (the q73 idiom keyed on registered domain)
-    "q112_domain_cap" -> ((s, dir) => {
+    Query("q112_domain_cap", Oracles.q112DomainCap)((s, dir) => {
       val v = pmod(col("doc_id"), lit(4))
       val g = expr("doc_id DIV 4")
       val d = documents(s, dir).withColumn("url", concat(
@@ -2308,7 +3466,8 @@ object SparkEntry {
     // removal (first copy included), and the order-preserving map-side
     // rebuild are all load-bearing; the oracle replays the wrap and a
     // direct relational formulation
-    "q110_boilerplate_lines" -> ((s, dir) => {
+    Query("q110_boilerplate_lines",
+      Oracles.q110BoilerplateLines, headline = true)((s, dir) => {
       val d = documents(s, dir).withColumn("text",
         concat_ws("\n", lit("NAV"), col("text"),
           concat(lit("footer "), col("source"))))
@@ -2316,7 +3475,7 @@ object SparkEntry {
     }),
 
     // ---- north star: incremental EXACT dedup (shard vs digest index) ----
-    "q102_exact_incremental" -> ((s, dir) => {
+    Query("q102_exact_incremental", Oracles.q102ExactIncremental)((s, dir) => {
       val d = documents(s, dir)
       Dedup.exactKeepAgainst(
           Dedup.exactIndex(d.filter(col("doc_id") < 400)),
@@ -2330,7 +3489,9 @@ object SparkEntry {
     // (broadcast bloom rules digests out map-side; maybes confirm
     // against the real index) — the established cross-validation
     // pattern: one oracle, two independent formulations must agree
-    "q109_bloom_incremental" -> ((s, dir) => {
+    // q109 = q102's relational semantics through the bloom-screened
+    // engine path: one oracle, two independent engine formulations
+    Query("q109_bloom_incremental", Oracles.q102ExactIncremental)((s, dir) => {
       val d = documents(s, dir)
       val idx = Dedup.exactIndex(d.filter(col("doc_id") < 400))
       Dedup.exactKeepAgainstBloom(
@@ -2342,7 +3503,7 @@ object SparkEntry {
     // ---- north star: mixture rebalance to target source weights ----
     // src0:5 src1:3 src2:2 src3:1 (others dropped), seed 7 — counts →
     // max feasible total → integer thresholds → md5 keep rule
-    "q98_rebalance_mixture" -> ((s, dir) => {
+    Query("q98_rebalance_mixture", Oracles.q98RebalanceMixture)((s, dir) => {
       Dedup.rebalanceMixture(documents(s, dir), "source",
           weights = Map("src0" -> 5L, "src1" -> 3L, "src2" -> 2L, "src3" -> 1L),
           seed = 7)
@@ -2350,15 +3511,15 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // ---- north star (rows-only): SimHash near-dup candidates ----
-    "q35_simhash_neardup" -> ((s, dir) => {
+    // ---- north star: SimHash near-dup candidates ----
+    Query("q35_simhash_neardup", Oracles.q35SimhashNearDup)((s, dir) => {
       Dedup.simhashCandidates(documents(s, dir))
         .filter(col("hamming") <= 16)
         .orderBy("id_a", "id_b")
     }),
 
-    // ---- north star (rows-only): exact Jaccard verify on LSH candidates ----
-    "q36_jaccard_verify" -> ((s, dir) => {
+    // ---- north star: exact Jaccard verify on LSH candidates ----
+    Query("q36_jaccard_verify", Oracles.q36JaccardVerify)((s, dir) => {
       val d = documents(s, dir)
       val cands = Dedup.minhashCandidates(d, numHashes = 32, rowsPerBand = 4,
         k = 5, threshold = 0.3)
@@ -2367,16 +3528,16 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
 
-    // ---- north star (rows-only): brute-force cosine top-k ANN ----
-    "q37_knn_brute" -> ((s, dir) => {
+    // ---- north star: brute-force cosine top-k ANN ----
+    Query("q37_knn_brute", Oracles.q37KnnBrute, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20), k = 5)
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     }),
 
-    // ---- north star (rows-only): LSH-bucketed ANN ----
-    "q38_knn_lsh" -> ((s, dir) => {
+    // ---- north star: LSH-bucketed ANN ----
+    Query("q38_knn_lsh", Oracles.q38KnnLsh)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.lshTopK(e, e.filter(col("vec_id") < 20), k = 5,
           nPlanes = 10, tables = 8)
@@ -2390,7 +3551,7 @@ object SparkEntry {
     // bit-for-bit (Oracles.q57KnnIvf). The float-cosine path
     // (Similarity.ivfTopK, same plan shape) keeps its ScalaTest recall
     // gate vs bruteForceTopK.
-    "q57_knn_ivf" -> ((s, dir) => {
+    Query("q57_knn_ivf", Oracles.q57KnnIvf)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.ivfTopKInt8(e, e.filter(col("vec_id") < 20), k = 5,
           nCells = 16, nProbe = 4, iters = 2)
@@ -2401,7 +3562,7 @@ object SparkEntry {
     // Integer-exact end to end (int8 quantize → per-sub integer Lloyd →
     // code join), so DuckDB replays encode + asymmetric-distance scoring
     // bit-for-bit (Oracles.q84PqTopK).
-    "q84_knn_pq" -> ((s, dir) => {
+    Query("q84_knn_pq", Oracles.q84PqTopK, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.pqTopKInt8(e, e.filter(col("vec_id") < 20), k = 5,
           m = 8, ksub = 16, iters = 2)
@@ -2412,7 +3573,7 @@ object SparkEntry {
     // ADC shortlist of k×4 per query, exact integer-L2 re-rank of only
     // the shortlist (broadcast back against the corpus — point lookups,
     // not a rescan); oracle replays shortlist + re-rank (Oracles.q89PqRefine)
-    "q89_knn_pq_refine" -> ((s, dir) => {
+    Query("q89_knn_pq_refine", Oracles.q89PqRefine)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.pqRefineTopK(e, e.filter(col("vec_id") < 20), k = 5,
           refineFactor = 4, m = 8, ksub = 16, iters = 2)
@@ -2422,25 +3583,30 @@ object SparkEntry {
     // ---- north star: IVF-PQ ANN (residual encoding, the FAISS shape) ----
     // Coarse cells prune, residual PQ codes score; all-integer so DuckDB
     // replays both trainings + ADC bit-for-bit (Oracles.q85IvfPq).
-    "q85_knn_ivfpq" -> ((s, dir) => {
+    Query("q85_knn_ivfpq", Oracles.q85IvfPq)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.ivfPqTopKInt8(e, e.filter(col("vec_id") < 20), k = 5,
           nCells = 16, nProbe = 4, m = 8, ksub = 16, iters = 2)
         .orderBy("query_id", "rank")
     }),
 
-    // ---- north star (rows-only): embedding near-dup pairs ----
+    // ---- north star: embedding near-dup pairs ----
     // (driver embeddings are near-orthogonal — max pairwise cosine ≈0.46 —
     // so the threshold exercises the top of the real distribution)
-    "q39_embedding_neardup" -> ((s, dir) => {
+    Query("q39_embedding_neardup", Oracles.q39EmbeddingNearDup)((s, dir) => {
       Similarity.embeddingNearDup(embeddings(s, dir), threshold = 0.35,
           nPlanes = 8, tables = 8)
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
     }),
 
-    // ---- §2.8 DSP chain (rows-only): Framing → FFT → Aggregation ----
-    "q40_dsp_chain" -> ((s, dir) => {
+    // ---- §2.8 DSP chain: Framing → FFT → Aggregation ----
+    // q40 emits only the deterministic feature dimensionality (the values
+    // come from the FFT kernel, not SQL-expressible): the oracle pins the
+    // expected dim for every row, so a chain shape regression fails the gate
+    Query("q40_dsp_chain",
+      """SELECT vec_id, CAST(18 AS BIGINT) AS feat_dim
+        |FROM embeddings ORDER BY vec_id""".stripMargin)((s, dir) => {
       // embeddings as 64-sample signals @ fs=64 (structure test; ScalaTest
       // holds the numeric goldens vs a reference DFT)
       val chain = Chain(Seq(
@@ -2457,8 +3623,11 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
 
-    // ---- north star (rows-only): multimodal binary plumbing ----
-    "q41_media_stats" -> ((s, dir) => {
+    // ---- north star: multimodal binary plumbing ----
+    Query("q41_media_stats",
+      """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
+        |  md5(text) AS digest, 'unknown' AS format
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) => {
       documents(s, dir)
         .select(col("doc_id"),
           Multimodal.mediaStats(encode(col("text"), "utf-8")).as("m"))
@@ -2468,7 +3637,11 @@ object SparkEntry {
     }),
 
     // ---- §2.3 key+range (as-of-style) join, via the SQL frontend ----
-    "q43_range_join" -> ((s, dir) => {
+    Query("q43_range_join",
+      """SELECT o_orderkey, COUNT(*) AS n_shipped_60d
+        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+        |  AND (CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE)) BETWEEN 0 AND 60
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin, headline = true)((s, dir) => {
       lineitem(s, dir).createOrReplaceTempView("lineitem_v")
       orders(s, dir).createOrReplaceTempView("orders_v")
       s.sql(
@@ -2479,7 +3652,11 @@ object SparkEntry {
     }),
 
     // ---- §2.4 exact percentile (sort-based, not approx) ----
-    "q44_median" -> ((s, dir) => {
+    Query("q44_median",
+      """SELECT o_orderpriority,
+        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
+        |  ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90_price
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)((s, dir) => {
       orders(s, dir)
         .groupBy("o_orderpriority")
         .agg(round(expr("percentile(o_totalprice, 0.5)"), 4).as("median_price"),
@@ -2488,7 +3665,18 @@ object SparkEntry {
     }),
 
     // ---- §2.9 session windows (gap-based merge) ----
-    "q45_sessions" -> ((s, dir) => {
+    Query("q45_sessions",
+      """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS us,
+        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+        |  FROM events),
+        |s AS (
+        |  SELECT user_id, us,
+        |    SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e)
+        |SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_us""".stripMargin, headline = true)((s, dir) => {
       EventStreams.sessions(events(s, dir), "5 minutes")
         .select(col("user_id"),
           unix_micros(col("session_start")).as("session_start_us"),
@@ -2500,7 +3688,10 @@ object SparkEntry {
     // 100 TB shape: rank only the tiny DISTINCT set (a global window over
     // 5 rows), broadcast-join the ids back — the big table never sees a
     // single-partition shuffle.
-    "q46_unique_encode" -> ((s, dir) => {
+    Query("q46_unique_encode",
+      """SELECT c_custkey, c_mktsegment,
+        |  CAST(dense_rank() OVER (ORDER BY c_mktsegment) - 1 AS INT) AS seg_id
+        |FROM customer ORDER BY c_custkey""".stripMargin)((s, dir) => {
       val segs = customer(s, dir).select("c_mktsegment").distinct()
         .withColumn("seg_id",
           (dense_rank().over(Window.orderBy("c_mktsegment")) - 1))
@@ -2511,7 +3702,11 @@ object SparkEntry {
     }),
 
     // ---- §2.2 KeyAbstract: union with missing columns null-filled ----
-    "q47_union_missing_cols" -> ((s, dir) => {
+    Query("q47_union_missing_cols",
+      """SELECT c_custkey, c_acctbal, NULL AS c_mktsegment, 'a' AS src FROM customer
+        |UNION ALL
+        |SELECT c_custkey, NULL, c_mktsegment, 'b' AS src FROM customer
+        |ORDER BY src, c_custkey""".stripMargin)((s, dir) => {
       val c = customer(s, dir)
       val a = c.select(col("c_custkey"), col("c_acctbal")).withColumn("src", lit("a"))
       val b = c.select(col("c_custkey"), col("c_mktsegment")).withColumn("src", lit("b"))
@@ -2520,7 +3715,10 @@ object SparkEntry {
     }),
 
     // ---- §2.12 group k-fold via content hash (engine-independent md5) ----
-    "q48_hash_kfold" -> ((s, dir) => {
+    Query("q48_hash_kfold",
+      """SELECT c_custkey,
+        |  CAST(CAST(CONCAT('0x', SUBSTRING(md5(c_name), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
+        |FROM customer ORDER BY c_custkey""".stripMargin)((s, dir) => {
       customer(s, dir)
         .select(col("c_custkey"),
           (conv(substring(md5(col("c_name")), 1, 8), 16, 10).cast("long") % 4)
@@ -2528,15 +3726,15 @@ object SparkEntry {
         .orderBy("c_custkey")
     }),
 
-    // ---- north star (rows-only): image decode→resize→pool pipeline ----
-    "q49_image_features" -> ((s, dir) => {
+    // ---- north star: image decode→resize→pool pipeline ----
+    Query("q49_image_features", Oracles.q49ImageFeatures, headline = true)((s, dir) => {
       val d = documents(s, dir)
         .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
       d.select(col("doc_id"),
           Multimodal.decodeResize(col("payload"), 8, 8).as("pixels"))
         .select(col("doc_id"),
-          // String-serialized so the driver's pandas comparator can sort it
-          // (rows-only check; raw arrays are covered in OperatorsSpec).
+          // String-serialized so the oracle compare's pandas code can sort
+          // it (raw arrays are covered in OperatorsSpec).
           array_join(transform(Multimodal.channelMeans(col("pixels")),
             x => round(x, 6).cast("string")), ",").as("rgb_means"),
           size(col("pixels")).cast("long").as("n_px"))
@@ -2544,7 +3742,18 @@ object SparkEntry {
     }),
 
     // ---- §2.3 as-of JOIN of two tables (union+window operator) ----
-    "q58_asof_join" -> ((s, dir) => {
+    Query("q58_asof_join",
+      """WITH c AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
+        |  WHERE event_type = 'click'),
+        |p AS (
+        |  SELECT user_id, epoch_us(ts) AS us, value, event_id FROM events
+        |  WHERE event_type = 'purchase')
+        |SELECT c.user_id, c.event_id,
+        |  (SELECT p.value FROM p
+        |   WHERE p.user_id = c.user_id AND p.us <= c.us
+        |   ORDER BY p.us DESC, p.event_id DESC LIMIT 1) AS purchase_value
+        |FROM c ORDER BY c.user_id, c.event_id""".stripMargin, headline = true)((s, dir) => {
       val ev = events(s, dir).withColumn("us", unix_micros(col("ts")))
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "us")
@@ -2559,7 +3768,13 @@ object SparkEntry {
     }),
 
     // ---- §2.4 explicit GROUPING SETS (via the SQL frontend) ----
-    "q64_grouping_sets" -> ((s, dir) => {
+    Query("q64_grouping_sets",
+      """SELECT COALESCE(l_returnflag, '-') AS flag,
+        |  COALESCE(l_linestatus, '-') AS status,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+        |ORDER BY flag, status""".stripMargin)((s, dir) => {
       lineitem(s, dir).createOrReplaceTempView("lineitem_gs")
       s.sql(
         """SELECT COALESCE(l_returnflag, '-') AS flag,
@@ -2571,7 +3786,15 @@ object SparkEntry {
     }),
 
     // ---- §2.8 date/time scalar functions ----
-    "q62_date_funcs" -> ((s, dir) => {
+    Query("q62_date_funcs",
+      """SELECT o_orderkey,
+        |  strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS due_date,
+        |  strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end,
+        |  CAST(year(o_orderdate) AS INT) AS y,
+        |  CAST(quarter(o_orderdate) AS INT) AS q,
+        |  CAST(month(o_orderdate) AS INT) AS m,
+        |  CAST(dayofweek(CAST(o_orderdate AS DATE)) AS INT) AS dow
+        |FROM orders ORDER BY o_orderkey""".stripMargin)((s, dir) => {
       orders(s, dir).select(
         col("o_orderkey"),
         date_format(date_add(to_date(col("o_orderdate")), 30), "yyyy-MM-dd").as("due_date"),
@@ -2584,7 +3807,14 @@ object SparkEntry {
     }),
 
     // ---- §2.8 string scalar functions (pads/translate/levenshtein) ----
-    "q63_string_funcs" -> ((s, dir) => {
+    Query("q63_string_funcs",
+      """SELECT p_partkey,
+        |  lpad(p_brand, 12, '*') AS brand_padded,
+        |  rpad(p_name, 20, '.') AS name_padded,
+        |  translate(p_type, 'aeiou', 'AEIOU') AS type_translated,
+        |  reverse(p_brand) AS brand_rev,
+        |  CAST(levenshtein(p_name, p_brand) AS INT) AS edit_dist
+        |FROM part ORDER BY p_partkey""".stripMargin)((s, dir) => {
       part(s, dir).select(
         col("p_partkey"),
         lpad(col("p_brand"), 12, "*").as("brand_padded"),
@@ -2596,7 +3826,12 @@ object SparkEntry {
     }),
 
     // ---- §2.5 window frame spec: running per-customer spend ----
-    "q60_running_total" -> ((s, dir) => {
+    Query("q60_running_total",
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+        |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |          ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS running_spend
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -2612,7 +3847,13 @@ object SparkEntry {
     // parallel windows + broadcast offsets — no partition-less window over
     // the fact table (the naive Window.orderBy form funnels all of `orders`
     // through one task; a scale-killer at 100 TB).
-    "q61_analytic_ranks" -> ((s, dir) => {
+    Query("q61_analytic_ranks",
+      """SELECT o_orderkey, pr, cd FROM (
+        |  SELECT o_orderkey,
+        |    percent_rank() OVER (ORDER BY o_totalprice, o_orderkey) AS pr,
+        |    cume_dist() OVER (ORDER BY o_totalprice, o_orderkey) AS cd
+        |  FROM orders) t
+        |WHERE pr >= 0.99 ORDER BY o_orderkey""".stripMargin, headline = true)((s, dir) => {
       graft.operators.Ranking.withGlobalRanks(
           orders(s, dir).select("o_orderkey", "o_totalprice"),
           Seq("o_totalprice", "o_orderkey"), tieFree = true)
@@ -2622,7 +3863,18 @@ object SparkEntry {
     }),
 
     // ---- §2.3 interval containment via the binned range-join operator ----
-    "q59_interval_join" -> ((s, dir) => {
+    Query("q59_interval_join",
+      """WITH c AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
+        |  WHERE event_type = 'click'),
+        |w AS (
+        |  SELECT user_id, epoch_us(ts) AS w_start, epoch_us(ts) + 7200000000 AS w_end
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT c.user_id, c.event_id, COUNT(*) AS n_windows
+        |FROM c JOIN w ON c.user_id = w.user_id
+        |  AND c.us >= w.w_start AND c.us <= w.w_end
+        |GROUP BY c.user_id, c.event_id
+        |ORDER BY c.user_id, c.event_id""".stripMargin)((s, dir) => {
       val ev = events(s, dir).withColumn("us", unix_micros(col("ts")))
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "us")
@@ -2637,8 +3889,8 @@ object SparkEntry {
         .orderBy("user_id", "event_id")
     }),
 
-    // ---- north star (rows-only): LSH → cluster → canonical survivors ----
-    "q56_neardup_keep" -> ((s, dir) => {
+    // ---- north star: LSH → cluster → canonical survivors ----
+    Query("q56_neardup_keep", Oracles.q56NearDupKeep, headline = true)((s, dir) => {
       Dedup.nearDupKeep(documents(s, dir), numHashes = 32, rowsPerBand = 4,
           k = 5, threshold = 0.5)
         .select("doc_id", "lang")
@@ -2651,14 +3903,24 @@ object SparkEntry {
     // min-label propagation), every clustered doc with its component
     // id, component size, and canonical flag. Oracle replays the
     // closure as a recursive CTE.
-    "q127_dedup_clusters" -> ((s, dir) => {
+    Query("q127_dedup_clusters", Oracles.q127DedupClusters)((s, dir) => {
       Dedup.clusterReport(documents(s, dir), numHashes = 32,
           rowsPerBand = 4, k = 5, threshold = 0.5)
         .orderBy("doc_id")
     }),
 
     // ---- north star: exact n-gram Jaccard on a deterministic pair set ----
-    "q55_jaccard_pairs" -> ((s, dir) => {
+    Query("q55_jaccard_pairs",
+      """WITH sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(generate_series(1, strlen(lower(text)) - 4),
+        |      i -> substring(lower(text), i, 5))) AS s
+        |  FROM documents WHERE strlen(text) > 10)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+        |    / len(list_distinct(a.s || b.s)) AS jaccard
+        |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
+        |ORDER BY id_a""".stripMargin)((s, dir) => {
       val d = documents(s, dir).filter(length(col("text")) > 10)
       val pairs = d.select(col("doc_id").as("id_a"),
         (col("doc_id") + 1).as("id_b"))
@@ -2667,7 +3929,11 @@ object SparkEntry {
     }),
 
     // ---- §2.8 JSON scalar functions over the events props column ----
-    "q54_json_extract" -> ((s, dir) => {
+    Query("q54_json_extract",
+      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
+        |FROM events GROUP BY k_mod ORDER BY k_mod""".stripMargin)((s, dir) => {
       events(s, dir)
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -2677,7 +3943,12 @@ object SparkEntry {
     }),
 
     // ---- §3.1 config-driven construction (the DDL path, helpers.py:14-93) ----
-    "q53_config_pipeline" -> ((s, dir) => {
+    Query("q53_config_pipeline",
+      """SELECT doc_id,
+        |  CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS dataset_id,
+        |  CAST(CAST(CONCAT('0x', SUBSTRING(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
+        |FROM documents WHERE lang IN ('en', 'de') AND n_chars > 50
+        |ORDER BY doc_id""".stripMargin)((s, dir) => {
       val cfg =
         """{"datasets": [
           |   {"table": "documents", "name": "en_docs", "select": "lang = 'en'"},
@@ -2690,7 +3961,13 @@ object SparkEntry {
     }),
 
     // ---- §2.9 sliding event-time windows (5 min window, 1 min slide) ----
-    "q52_sliding" -> ((s, dir) => {
+    Query("q52_sliding",
+      """WITH x AS (
+        |  SELECT event_type,
+        |    (CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) - k) * 60000000 AS w_start_us
+        |  FROM events, generate_series(0, 4) AS t(k))
+        |SELECT w_start_us, event_type, COUNT(*) AS n
+        |FROM x GROUP BY w_start_us, event_type ORDER BY w_start_us, event_type""".stripMargin)((s, dir) => {
       EventStreams.slidingCounts(events(s, dir), "5 minutes", "1 minute")
         .select(unix_micros(col("w_start")).as("w_start_us"),
           col("event_type"), col("n"))
@@ -2698,7 +3975,10 @@ object SparkEntry {
     }),
 
     // ---- §2.4 get_unique with member ids (dataset.py:636-701) ----
-    "q51_unique_members" -> ((s, dir) => {
+    Query("q51_unique_members",
+      """SELECT lang, COUNT(*) AS n_members,
+        |  array_to_string(list_sort(list(doc_id)), ',') AS member_ids
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)((s, dir) => {
       documents(s, dir)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_members"),
@@ -2708,7 +3988,9 @@ object SparkEntry {
     }),
 
     // ---- §2.4 summary: counts per group (dataset.py:260-271) ----
-    "q50_summary" -> ((s, dir) => {
+    Query("q50_summary",
+      """SELECT lang, source, COUNT(*) AS n, MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
+        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin)((s, dir) => {
       documents(s, dir)
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n"),
@@ -2717,7 +3999,7 @@ object SparkEntry {
     }),
 
     // ---- north star: C4/Gopher-style quality scoring ----
-    "q66_quality_score" -> ((s, dir) => {
+    Query("q66_quality_score", Oracles.q66QualityScore)((s, dir) => {
       // two-Project shape (r14): inline, the 6 feature references each
       // re-tokenize — HOFs are outside codegen subexpression
       // elimination; a multi-referenced non-cheap alias is not
@@ -2739,7 +4021,7 @@ object SparkEntry {
     // (integer tf/df so the oracle is float-free; the ln-smoothed idf
     // multiply on top is covered by ProcessorsSpec — libm ln is not
     // bit-portable across engines)
-    "q67_tfidf_buckets" -> ((s, dir) => {
+    Query("q67_tfidf_buckets", Oracles.q67TfidfBuckets, headline = true)((s, dir) => {
       val tf = documents(s, dir)
         .select(col("doc_id"),
           posexplode(TextAnalysis.hashingTf(col("text"), 1024))
@@ -2758,7 +4040,7 @@ object SparkEntry {
     // over the ~|suppliers| aggregate table — tiny by construction —
     // never over lineitem; revenue stays DECIMAL until the final cast so
     // the max-equality compare is exact.
-    "q72_top_supplier" -> ((s, dir) => {
+    Query("q72_top_supplier", Oracles.q72TopSupplier)((s, dir) => {
       val rev = lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
@@ -2780,7 +4062,7 @@ object SparkEntry {
     }),
 
     // ---- north star: per-source cap (corpus curation, ≤10 docs/source) ----
-    "q73_cap_per_source" -> ((s, dir) => {
+    Query("q73_cap_per_source", Oracles.q73CapPerSource)((s, dir) => {
       Dedup.capPerKey(documents(s, dir), "source", n = 10, seed = 7)
         .select("doc_id", "source", "lang")
         .orderBy("doc_id")
@@ -2790,7 +4072,7 @@ object SparkEntry {
     // The synthetic corpus carries no natural PII, so the query injects a
     // deterministic doc_id-derived email+ip+phone suffix (identically in
     // the oracle SQL) — every row exercises all three regexes for real.
-    "q74_pii_redaction" -> ((s, dir) => {
+    Query("q74_pii_redaction", Oracles.q74PiiRedaction)((s, dir) => {
       val pii = concat(col("text"),
         lit(" contact user"), col("doc_id").cast("string"),
         lit("@mail.example.com ip 10."), (col("doc_id") % 256).cast("string"),
@@ -2809,7 +4091,7 @@ object SparkEntry {
     }),
 
     // ---- north star: benchmark decontamination (eval-leak scrub) ----
-    "q75_decontaminate" -> ((s, dir) => {
+    Query("q75_decontaminate", Oracles.q75Decontaminate)((s, dir) => {
       val docs = documents(s, dir)
       Dedup.decontaminate(docs, docs.filter(col("doc_id") % 97 === 0),
           n = 3, threshold = 50, hashNgrams = false)
@@ -2817,7 +4099,7 @@ object SparkEntry {
     }),
 
     // ---- north star: weighted per-source mixture sampling ----
-    "q76_weighted_sample" -> ((s, dir) => {
+    Query("q76_weighted_sample", Oracles.q76WeightedSample)((s, dir) => {
       Dedup.weightedSample(documents(s, dir), "source",
           fractions = Map("src0" -> 0.75, "src1" -> 0.5, "src2" -> 0.25),
           default = 0.1, seed = 11)
@@ -2826,30 +4108,30 @@ object SparkEntry {
     }),
 
     // ---- north star: segment-level exact dedup (C4-style span removal) ----
-    "q77_dedup_segments" -> ((s, dir) => {
+    Query("q77_dedup_segments", Oracles.q77DedupSegments)((s, dir) => {
       Dedup.dedupSegments(documents(s, dir), segWords = 10)
         .orderBy("doc_id")
     }),
 
     // ---- north star: top-k n-gram vocabulary (boilerplate mining) ----
-    "q78_top_ngrams" -> ((s, dir) => {
+    Query("q78_top_ngrams", Oracles.q78TopNgrams)((s, dir) => {
       TextAnalysis.topNgrams(documents(s, dir), n = 2, k = 100)
     }),
 
     // ---- north star: sequence packing (concat-and-chunk layout) ----
-    "q79_pack_sequences" -> ((s, dir) => {
+    Query("q79_pack_sequences", Oracles.q79PackSequences, headline = true)((s, dir) => {
       Packing.packSequences(documents(s, dir), budget = 2048)
         .orderBy("doc_id")
     }),
 
     // ---- north star: model-based quality filtering (linear apply) ----
-    "q80_quality_filter" -> ((s, dir) => {
+    Query("q80_quality_filter", Oracles.q80QualityFilter, headline = true)((s, dir) => {
       TextAnalysis.scoreLinear(documents(s, dir), dim = 1024, seed = 42L)
         .orderBy("doc_id")
     }),
 
     // ---- north star: embedding L2 norm + int8 quantization ----
-    "q81_embed_quantize" -> ((s, dir) => {
+    Query("q81_embed_quantize", Oracles.q81EmbedQuantize, headline = true)((s, dir) => {
       graft.operators.Embeddings.withInt8Quantized(embeddings(s, dir))
         .select(col("vec_id"),
           size(col("embedding")).cast("long").as("n_dims"),
@@ -2865,7 +4147,8 @@ object SparkEntry {
     // vectors: projection matrix is a pure splitmix64 hash of
     // (seed, j, d) folded in as literals — map-side, zero shuffle,
     // integer-exact (oracle replays quantization + sign walk + sums).
-    "q210_random_projection" -> ((s, dir) => {
+    Query("q210_random_projection",
+      Oracles.q210RandomProjection, headline = true)((s, dir) => {
       graft.operators.Embeddings.randomProjection(
           embeddings(s, dir), outDim = 16, seed = 2026L)
         .orderBy("vec_id", "dim")
@@ -2876,7 +4159,8 @@ object SparkEntry {
     // dominant-component readout (ABTT's "all-but-the-top" step 1) with
     // every round exact and oracle-unrolled. The only corpus-sized pass
     // is the d²-cell Gram aggregate.
-    "q233_dominant_direction" -> ((s, dir) => {
+    Query("q233_dominant_direction",
+      Oracles.q233DominantDirection, headline = true)((s, dir) => {
       graft.operators.Embeddings.dominantDirection(
           embeddings(s, dir), dim = 64, rounds = 8)
         .orderBy("dim")
@@ -2888,7 +4172,7 @@ object SparkEntry {
     // greedy lambda=1/2 MMR re-rank on the collected pool. Sims are
     // the q193 int-dot + one-IEEE-division discipline, so the oracle
     // unrolls the greedy rounds exactly.
-    "q234_mmr_topk" -> ((s, dir) => {
+    Query("q234_mmr_topk", Oracles.q234MmrTopK, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       graft.operators.Similarity.mmrTopK(
           e, e.filter(col("vec_id") < 3), k = 8, poolSize = 40)
@@ -2904,7 +4188,7 @@ object SparkEntry {
     // order-dependent recurrence is exactly why it is NOT a window agg:
     // one calendar-bounded array per key, oracle-replayed by a
     // recursive CTE.
-    "q235_ewma_chart" -> ((s, dir) => {
+    Query("q235_ewma_chart", Oracles.q235EwmaChart)((s, dir) => {
       Timeseries.ewmaChart(events(s, dir), alphaDen = 8, relDen = 4)
         .orderBy("event_type", "day")
     }),
@@ -2915,7 +4199,7 @@ object SparkEntry {
     // the two scorers' scales never meet. doc_id ≡ vec_id in the
     // driver corpus. Both per-list rankings ride the bounded native
     // top-k aggregate; fusion touches ≤ 2·topN rows per query.
-    "q236_hybrid_rrf" -> ((s, dir) => {
+    Query("q236_hybrid_rrf", Oracles.q236HybridRrf, headline = true)((s, dir) => {
       graft.operators.Retrieval.hybridRrf(
           documents(s, dir), embeddings(s, dir),
           nQueries = 3, topN = 20, fuseK = 10)
@@ -2927,7 +4211,7 @@ object SparkEntry {
     // integer order statistics in tenk units — the outlier-resistant
     // triple. Order statistics read a value AT a rank, so duplicate
     // ties can't flip the result.
-    "q237_robust_stats" -> ((s, dir) => {
+    Query("q237_robust_stats", Oracles.q237RobustStats, headline = true)((s, dir) => {
       Analytics.robustStats(orders(s, dir), "o_orderpriority", "o_totalprice")
         .orderBy("o_orderpriority")
     }),
@@ -2936,7 +4220,7 @@ object SparkEntry {
     // Exactly 100 docs, per-source quotas by Hamilton largest-
     // remainder, members picked by md5 order — the reproducible
     // training-mix assembly step. Integer-only allocation.
-    "q238_budget_sample" -> ((s, dir) => {
+    Query("q238_budget_sample", Oracles.q238BudgetSample, headline = true)((s, dir) => {
       graft.operators.Sampling.budgetSample(
           documents(s, dir), k = 100L, strataCol = "source")
         .orderBy("source", "pick_rank")
@@ -2946,7 +4230,7 @@ object SparkEntry {
     // Per-column null/cardinality profile from a single aggregation
     // (Expand-planned multi-distinct — one scan, one shuffle, never
     // #cols jobs).
-    "q239_table_profile" -> ((s, dir) => {
+    Query("q239_table_profile", Oracles.q239TableProfile)((s, dir) => {
       Validation.profileTable(documents(s, dir)).orderBy("column")
     }),
 
@@ -2960,7 +4244,7 @@ object SparkEntry {
     // d < 125 also German — marker lines: those docs MUST trip
     // n_langs/mixed/entropy, keeping the voting path live rather than
     // vacuously green.
-    "q242_code_switch" -> ((s, dir) => {
+    Query("q242_code_switch", Oracles.q242CodeSwitch)((s, dir) => {
       val esLine = "el la los las y es un una que por"
       val deLine = "der die das und ist nicht ein eine zu mit"
       val d = documents(s, dir).select(col("doc_id"), col("text"))
@@ -2976,7 +4260,7 @@ object SparkEntry {
     // OLS slope of ln(count) vs ln(rank) over the top-1000 tokens —
     // integer lnQ12 logs, exact decimal moments, signed truncating Q9
     // division. Corpus-health: natural text sits near −1.
-    "q260_zipf_profile" -> ((s, dir) => {
+    Query("q260_zipf_profile", Oracles.q260ZipfProfile)((s, dir) => {
       TextAnalysis.zipfProfile(documents(s, dir), topK = 1000)
     }),
 
@@ -2984,7 +4268,7 @@ object SparkEntry {
     // Per prefix length {16,32,48}: exact squared cosine between each
     // int8 vector and its truncation (pure integer ratio Sk/Sd — no
     // sqrt), mean/min/max per prefix.
-    "q261_matryoshka" -> ((s, dir) => {
+    Query("q261_matryoshka", Oracles.q261Matryoshka)((s, dir) => {
       graft.operators.Embeddings.matryoshkaProfile(embeddings(s, dir))
         .orderBy("prefix_dim")
     }),
@@ -2992,7 +4276,7 @@ object SparkEntry {
     // ---- validation tier: k-anonymity audit (NEW r11) ----
     // Equivalence classes on (nation, segment): min class size and the
     // rows exposed in classes under k=10 — the privacy-QA readout.
-    "q262_k_anonymity" -> ((s, dir) => {
+    Query("q262_k_anonymity", Oracles.q262KAnonymity)((s, dir) => {
       Validation.kAnonymityAudit(customer(s, dir),
         Seq("c_nationkey", "c_mktsegment"), k = 10)
     }),
@@ -3002,7 +4286,7 @@ object SparkEntry {
     // orders — hash(orderkey) vs range(orderdate) — the measurement
     // behind "sort before you write 100 TB": range layout prunes,
     // hash layout reads everything.
-    "q263_zone_map" -> ((s, dir) => {
+    Query("q263_zone_map", Oracles.q263ZoneMap)((s, dir) => {
       val d = Dedup.materialize(orders(s, dir).select(col("o_orderkey"),
         expr("unix_micros(o_orderdate) DIV 86400000000").as("day")))
       val mm = d.agg(min("day"), max("day")).head()
@@ -3020,7 +4304,7 @@ object SparkEntry {
     // single-valued on the sensitive attribute is still exposed
     // (homogeneity attack). Sensitive = account-balance band (exact
     // cents, shifted positive so floor = truncate in both engines).
-    "q264_l_diversity" -> ((s, dir) => {
+    Query("q264_l_diversity", Oracles.q264LDiversity)((s, dir) => {
       Validation.lDiversityAudit(
         customer(s, dir).withColumn("bal_band", expr(
           "(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
@@ -3033,7 +4317,7 @@ object SparkEntry {
     // per-domain keep rate toward a target permille mix (downsample-
     // only), kept-token projection, ACHIEVED mix after capping — all
     // exact floor arithmetic. src0-9 target 80‰, src10-19 20‰.
-    "q265_domain_mixture" -> ((s, dir) => {
+    Query("q265_domain_mixture", Oracles.q265DomainMixture)((s, dir) => {
       val targets = (0 until 20).map(i =>
         (s"src$i", if (i < 10) 80L else 20L))
       Sampling.domainMixturePlan(documents(s, dir), targets)
@@ -3045,7 +4329,7 @@ object SparkEntry {
     // the corpus in doc_id order — the vocabulary-growth curve that
     // separates natural text from OCR noise (keeps climbing) and
     // boilerplate (flattens early).
-    "q266_heaps_growth" -> ((s, dir) => {
+    Query("q266_heaps_growth", Oracles.q266HeapsGrowth, headline = true)((s, dir) => {
       TextAnalysis.heapsGrowth(documents(s, dir)).orderBy("ckpt")
     }),
 
@@ -3058,7 +4342,7 @@ object SparkEntry {
     // ~all-pairs (measured 101M pairs / 90 s at sf0.1 uncapped) while
     // adding ~0 AA signal — the cap keeps exactly the informative
     // rare-neighbor evidence (oracle mirrors it).
-    "q267_link_predict" -> ((s, dir) => {
+    Query("q267_link_predict", Oracles.q267LinkPredict, headline = true)((s, dir) => {
       Graphs.linkPredict(Graphs.coOccurrenceEdges(
         lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false),
         maxDegree = 64)
@@ -3068,7 +4352,7 @@ object SparkEntry {
     // The S-curve table — P(candidate | J) = 1 − (1 − J^r)^b in exact
     // Q6 truncating fixed point — a 100 TB dedup run reads to pick
     // (bands, rows) before signing the corpus.
-    "q268_lsh_plan" -> ((s, dir) =>
+    Query("q268_lsh_plan", Oracles.q268LshPlan)((s, dir) =>
       Dedup.lshPlan(s).orderBy("n_bands", "n_rows", "j_q6")),
 
     // ---- embedding tier: greedy k-center coreset (NEW r12) ----
@@ -3076,7 +4360,8 @@ object SparkEntry {
     // min-id seed, then 5 rounds of argmax min-distance-to-centers on
     // int8 codes — the diverse annotation-budget pick, radius sequence
     // included. Complements q248 (coverage) and q234 (query-relative).
-    "q269_kcenter_coreset" -> ((s, dir) => {
+    Query("q269_kcenter_coreset",
+      Oracles.q269KCenterCoreset, headline = true)((s, dir) => {
       graft.operators.Embeddings.kCenterSelect(embeddings(s, dir), k = 6)
         .orderBy("round")
     }),
@@ -3085,7 +4370,7 @@ object SparkEntry {
     // q250 ranks, this checks the score VALUES: price-derived Q4
     // pseudo-propensity in 10 fixed value bins, mean-pred vs observed
     // return rate, and the exact single-floor ECE.
-    "q270_calibration" -> ((s, dir) => {
+    Query("q270_calibration", Oracles.q270Calibration)((s, dir) => {
       val ret = lineitem(s, dir).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey").as("_rk")).distinct()
       val d = orders(s, dir)
@@ -3103,14 +4388,16 @@ object SparkEntry {
     // unsupervised keyword extractor; counts capped at 1e5 per the
     // pageRankIntWeighted long-range bound (cap mirrored in the
     // oracle).
-    "q271_textrank_keywords" -> ((s, dir) =>
+    Query("q271_textrank_keywords", Oracles.q271TextRank, headline = true)((s, dir) =>
       TextAnalysis.textRankKeywords(documents(s, dir))),
 
     // ---- streaming tier: calibration cells via state store (NEW r12) ----
     // q270's ≤10 cells built by the streaming engine (stream orders,
     // static returns table, Complete-mode agg — the q205/q255
     // discipline), batch ECE readout; oracle = q270's SQL verbatim.
-    "q272_stream_calibration" -> ((s, dir) => {
+    // q272 = q270's cells through the streaming state store: one
+    // relational truth, two engine paths (the q205/q255 discipline)
+    Query("q272_stream_calibration", Oracles.q270Calibration)((s, dir) => {
       val ret = lineitem(s, dir).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey").as("_rk")).distinct()
       val cells = EventStreams.runOnceOnParquet(s, s"$dir/orders.parquet",
@@ -3130,7 +4417,7 @@ object SparkEntry {
     // shared lnQ12 kernel (rel/log2(r+1) = rel·ln2/ln(r+1)), one Q6
     // terminal division. The ranking-quality readout the q249 MRR
     // can't give (MRR sees only the first hit).
-    "q273_ndcg" -> ((s, dir) => {
+    Query("q273_ndcg", Oracles.q273Ndcg, headline = true)((s, dir) => {
       val base = lineitem(s, dir)
         .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
@@ -3152,7 +4439,7 @@ object SparkEntry {
     // "Was the clustering any good?" for the IVF family (the q225
     // question asked of q57's cells): per-cell simplified silhouette
     // (b−a)/max(a,b) on exact int8 squared distances, Q6.
-    "q274_silhouette" -> ((s, dir) => {
+    Query("q274_silhouette", Oracles.q274Silhouette, headline = true)((s, dir) => {
       graft.operators.Embeddings.silhouetteProfile(embeddings(s, dir))
         .orderBy("cell")
     }),
@@ -3162,7 +4449,7 @@ object SparkEntry {
     // q123 libm-free Robertson idf — corpus-wide stopwords score ≈ 0
     // with no stopword list. The "what makes src7 different" readout
     // a mixture curator pairs with q265.
-    "q275_domain_terms" -> ((s, dir) => {
+    Query("q275_domain_terms", Oracles.q275DomainTerms)((s, dir) => {
       TextAnalysis.domainTopTerms(documents(s, dir), k = 5)
         .orderBy("source", "rank")
     }),
@@ -3171,7 +4458,7 @@ object SparkEntry {
     // How heavy is the length tail (α ≤ 2 ⇒ infinite variance: plan
     // for stragglers)? Top-100 n_chars through the shared ln kernel,
     // one terminal Q6 division.
-    "q276_hill_tail" -> ((s, dir) =>
+    Query("q276_hill_tail", Oracles.q276HillTail)((s, dir) =>
       TextAnalysis.hillTailIndex(documents(s, dir), "n_chars", k = 100)),
 
     // ---- ML-eval tier: split-conformal coverage (NEW r12) ----
@@ -3179,7 +4466,7 @@ object SparkEntry {
     // at 1−α = 0.9 (exact order statistic via the q250 cell cumsum),
     // test-half coverage — the guarantee check a prediction service
     // ships next to q270's calibration curve.
-    "q277_conformal" -> ((s, dir) => {
+    Query("q277_conformal", Oracles.q277Conformal)((s, dir) => {
       val d = lineitem(s, dir)
         .withColumn("y", expr(
           "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
@@ -3194,7 +4481,7 @@ object SparkEntry {
     // normality assumption): per-user even−odd-day purchase diff in
     // tenk units, 64 deterministic splitmix sign patterns (the q224
     // tug-of-war family), permille p-value.
-    "q278_signflip_test" -> ((s, dir) => {
+    Query("q278_signflip_test", Oracles.q278SignFlip)((s, dir) => {
       val e = events(s, dir)
         .filter(col("event_type") === "purchase" &&
           col("user_id").isNotNull)
@@ -3212,7 +4499,9 @@ object SparkEntry {
     // q214's 9 digit cells built by the streaming engine (Complete-mode
     // agg over streamed lineitem), batch excess readout — oracle =
     // q214's SQL verbatim (one truth, two engine paths).
-    "q279_stream_benford" -> ((s, dir) => {
+    // q279 = q214's digit cells through the streaming state store (one
+    // relational truth, two engine paths — the q152/q272 discipline)
+    Query("q279_stream_benford", benfordSql)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/lineitem.parquet",
         df => Validation.benfordDigitCells(df, "l_extendedprice"),
@@ -3224,7 +4513,9 @@ object SparkEntry {
     // q265's per-domain token sums through the streaming state store
     // (the live corpus-mixture monitor a 100 TB ingest runs), batch
     // rate-plan readout — oracle = q265's SQL verbatim.
-    "q280_stream_mixture" -> ((s, dir) => {
+    // q280 = q265's cells through the streaming state store (the
+    // q272/q255 discipline — one relational truth, two engine paths)
+    Query("q280_stream_mixture", Oracles.q265DomainMixture)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => Sampling.domainTokenCells(df),
@@ -3239,7 +4530,9 @@ object SparkEntry {
     // event buffer, funnelStream exactness: late events splice pairs,
     // so each trigger re-derives), cells summed batch-side, shared
     // top-k readout — oracle = q253's SQL verbatim.
-    "q281_stream_transitions" -> ((s, dir) => {
+    // q281 = q253's LEAD pairs through the keyed state store (one
+    // relational truth, two engine paths — the q152/q272 discipline)
+    Query("q281_stream_transitions", Oracles.q253Transitions)((s, dir) => {
       val emitted = EventStreams.runOnceOnParquet(s,
         s"$dir/events.parquet",
         df => EventStreams.transitionPairsStream(s, df),
@@ -3261,7 +4554,8 @@ object SparkEntry {
     // pairwise companion to q275's what-makes-a-source-different.
     // Token-keyed self-join of the collapsed (domain, token) table:
     // ≤|domains|² pair rows per token, never a doc-pair blow-up.
-    "q282_domain_overlap" -> ((s, dir) =>
+    Query("q282_domain_overlap",
+      Oracles.q282DomainOverlap, headline = true)((s, dir) =>
       TextAnalysis.domainVocabOverlap(documents(s, dir))
         .orderBy("domain_a", "domain_b")),
 
@@ -3269,7 +4563,7 @@ object SparkEntry {
     // q268's planning discipline for the CMS family: width = ceil(e/eps)
     // with e pinned to the Q6 constant 2718282, depth = ceil(ln(1/d))
     // through the shared lnQ12 kernel, bytes = w*d*8. Zero corpus touch.
-    "q283_cms_plan" -> ((s, dir) =>
+    Query("q283_cms_plan", Oracles.q283CmsPlan)((s, dir) =>
       graft.operators.Sketches.cmsPlan(s).orderBy("eps_ppm", "delta_inv")),
 
     // ---- dedup tier: duplicate-inflation histogram (NEW r13) ----
@@ -3277,13 +4571,15 @@ object SparkEntry {
     // shape report read BEFORE choosing a dedup strategy (fat size-2
     // head vs few giant boilerplate clusters behave differently; the
     // r11 q178 clones-squared incident is a row of this table).
-    "q284_dup_inflation" -> ((s, dir) =>
+    Query("q284_dup_inflation", Oracles.q284DupInflation, headline = true)((s, dir) =>
       Dedup.dupInflation(documents(s, dir)).orderBy("cluster_size")),
 
     // ---- streaming tier: dup-inflation cells via state store (NEW r13) ----
     // q284's digest cells built by the streaming engine (the q272/q280
     // discipline: one cell builder, two engine paths), shared readout.
-    "q285_stream_dup_inflation" -> ((s, dir) => {
+    // q285 = q284's digest cells through the streaming state store
+    // (the q272/q280 discipline — one cell definition, two engine paths)
+    Query("q285_stream_dup_inflation", Oracles.q284DupInflation)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => Dedup.digestCells(df),
@@ -3297,7 +4593,8 @@ object SparkEntry {
     // gets its own calibration quantile. Cumsum window PARTITIONED by
     // group over per-group distinct-residual cells; |groups|-row q-hat
     // table broadcasts to the test aggregate.
-    "q286_group_conformal" -> ((s, dir) => {
+    Query("q286_group_conformal",
+      Oracles.q286GroupConformal, headline = true)((s, dir) => {
       val d = lineitem(s, dir)
         .withColumn("y", expr(
           "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
@@ -3312,14 +4609,14 @@ object SparkEntry {
     // source: (n_docs, n_distinct, n_redundant, dup_rate_q6) per
     // domain, the number that prices per-source dedup before q265's
     // mixture plan trusts per-domain token counts.
-    "q287_domain_dup_rate" -> ((s, dir) =>
+    Query("q287_domain_dup_rate", Oracles.q287DomainDupRate)((s, dir) =>
       Dedup.domainDupReport(documents(s, dir)).orderBy("source")),
 
     // ---- curation tier: per-domain language mix (NEW r13) ----
     // q23's langId heuristic crosstabbed by source with exact Q6
     // shares — language targets can't be planned from domain targets
     // alone, and a 40%-und domain is an OCR/boilerplate flag.
-    "q288_lang_mix" -> ((s, dir) =>
+    Query("q288_lang_mix", Oracles.q288LangMix)((s, dir) =>
       TextAnalysis.langMixBySource(documents(s, dir))
         .orderBy("source", "lang_pred")),
 
@@ -3328,7 +4625,7 @@ object SparkEntry {
     // w = floor(sqrt(toks)) via the shared isqrt kernel (Newton-CTE
     // replayable), raw vs tempered Q6 shares side by side — the
     // flattening a curator signs off on before q265's plan runs.
-    "q289_temperature_mixture" -> ((s, dir) =>
+    Query("q289_temperature_mixture", Oracles.q289TemperatureMixture)((s, dir) =>
       Sampling.temperatureMixturePlan(documents(s, dir))
         .orderBy("source")),
 
@@ -3337,7 +4634,9 @@ object SparkEntry {
     // q272/q280/q285 discipline) — the live release-safety monitor a
     // continuously-updated projection needs; shared 1-row readout,
     // oracle = q262's SQL verbatim.
-    "q290_stream_kanon" -> ((s, dir) => {
+    // q290 = q262's cells through the streaming state store (the
+    // q272/q280/q285 discipline — one cell definition, two engine paths)
+    Query("q290_stream_kanon", Oracles.q262KAnonymity)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/customer.parquet",
         df => Validation.kAnonymityCells(df,
@@ -3352,7 +4651,7 @@ object SparkEntry {
     // gate: per-query hits + Q6 recall, macro recall as the summary
     // column. Both sides replay exactly in DuckDB, so the oracle is
     // the composed CTEs of both.
-    "q291_ann_recall" -> ((s, dir) => {
+    Query("q291_ann_recall", Oracles.q291AnnRecall, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       val qs = e.filter(col("vec_id") < 20)
       val truth = Similarity.bruteForceTopK(e, qs, k = 5)
@@ -3365,7 +4664,7 @@ object SparkEntry {
     // q253's transition matrix power-iterated 8 rounds from uniform —
     // "long-run where do users sit", all exact integers (Q9 matrix,
     // Q12 mass, term-wise floors; oracle unrolls the rounds).
-    "q292_stationary" -> ((s, dir) =>
+    Query("q292_stationary", Oracles.q292Stationary, headline = true)((s, dir) =>
       Analytics.transitionStationary(events(s, dir), rounds = 8)
         .orderBy("state")),
 
@@ -3373,7 +4672,7 @@ object SparkEntry {
     // q202's smoothed integer-log PSI keyed by user cohort (user_id%4)
     // — the drift dashboard: a stable marginal can hide one cohort
     // drifting hard against another drifting back.
-    "q293_psi_by_cohort" -> ((s, dir) =>
+    Query("q293_psi_by_cohort", psiByCohortOracleSql)((s, dir) =>
       Analytics.psiByGroup(events(s, dir),
           pmod(col("user_id"), lit(4)).as("cohort"), "event_type",
           pmod(expr("unix_micros(ts) DIV 86400000000"), lit(2)) === 1)
@@ -3385,7 +4684,7 @@ object SparkEntry {
     // 0.1/0.5/0.9 — coverage says the interval contains, pinball says
     // the quantile prediction is sharp; per-row loss is ONE integer
     // multiply (tau permille), summed exactly.
-    "q294_pinball_loss" -> ((s, dir) => {
+    Query("q294_pinball_loss", Oracles.q294PinballLoss)((s, dir) => {
       val d = lineitem(s, dir)
         .withColumn("y", expr(
           "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
@@ -3407,7 +4706,7 @@ object SparkEntry {
     // trench coat. The dashboard's incrementally-correct pieces ARE
     // twinned (q285 dup-inflation over digest cells); the
     // arrival-order-relative near-dup contract is q86's.
-    "q295_dedup_rate_by_domain" -> ((s, dir) => {
+    Query("q295_dedup_rate_by_domain", Oracles.q295DedupRateByDomain)((s, dir) => {
       val docs = documents(s, dir)
       val kept = Dedup.nearDupKeep(docs, numHashes = 32,
         rowsPerBand = 4, k = 5, threshold = 0.5)
@@ -3427,7 +4726,7 @@ object SparkEntry {
     // cell its row count and Q6 corpus share, plus the global max/mean
     // imbalance factor repeated per row — "will nProbe cost what the
     // planner thinks?" before the index serves traffic.
-    "q296_ivf_balance" -> ((s, dir) =>
+    Query("q296_ivf_balance", Oracles.q296IvfBalance, headline = true)((s, dir) =>
       graft.operators.Embeddings.ivfBalanceReport(embeddings(s, dir))
         .orderBy("cell")),
 
@@ -3437,7 +4736,8 @@ object SparkEntry {
     // q282's set Jaccard (shared vocabulary at different rates).
     // Intersection-only token join; disjoint mass folds in as
     // (mass)*ln2 from the broadcast totals.
-    "q297_domain_divergence" -> ((s, dir) =>
+    Query("q297_domain_divergence",
+      Oracles.q297DomainDivergence, headline = true)((s, dir) =>
       TextAnalysis.domainDivergence(documents(s, dir))
         .orderBy("domain_a", "domain_b")),
 
@@ -3446,7 +4746,7 @@ object SparkEntry {
     // baseline distribution — drift as a time series (which buckets
     // drifted, and when it started); absent categories enter at 0 so
     // every bucket's k is the global category count.
-    "q298_psi_over_time" -> ((s, dir) =>
+    Query("q298_psi_over_time", Oracles.q298PsiOverTime, headline = true)((s, dir) =>
       Analytics.psiVsBaseline(events(s, dir),
           expr("unix_micros(ts) DIV 86400000000").as("bucket"),
           "event_type")
@@ -3457,7 +4757,7 @@ object SparkEntry {
     // walk), Q6 share of the corpus token budget, Q6 fertility
     // (tokens per 100 bytes) — the table a pretraining mixture is
     // planned from, with real token counts instead of doc proxies.
-    "q299_token_budget" -> ((s, dir) =>
+    Query("q299_token_budget", Oracles.q299TokenBudget, headline = true)((s, dir) =>
       TextAnalysis.tokenBudgetBySource(documents(s, dir))
         .orderBy("source")),
 
@@ -3466,7 +4766,8 @@ object SparkEntry {
     // per-doc distinct char-12-gram shingles (q178/q209 convention)
     // that recur in another document — where a span-level dedup pass
     // would bite, at linear cost (no pair join).
-    "q300_dup_ngram_share" -> ((s, dir) =>
+    Query("q300_dup_ngram_share",
+      Oracles.q300DupNgramShare, headline = true)((s, dir) =>
       Dedup.dupNgramShare(documents(s, dir))
         .orderBy("source")),
 
@@ -3475,7 +4776,9 @@ object SparkEntry {
     // streaming count (the q272/q280/q285 discipline: one cell builder,
     // two engine paths), shared psiVsBaseline readout, q298's oracle
     // verbatim.
-    "q301_stream_psi_over_time" -> ((s, dir) => {
+    // q301 = q298's cells through the streaming state store (the
+    // q272/q280/q285 discipline — one cell definition, two engine paths)
+    Query("q301_stream_psi_over_time", Oracles.q298PsiOverTime)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Analytics.psiTimeCells(df,
           expr("unix_micros(ts) DIV 86400000000").as("bucket"),
@@ -3492,7 +4795,8 @@ object SparkEntry {
     // q299's per-domain (docs, bytes, tokens) cells through the state
     // store — the BPE count is per-row map-side work in both engines;
     // shared readout, q299's oracle verbatim.
-    "q302_stream_token_budget" -> ((s, dir) => {
+    // q302 = q299's cells through the streaming state store
+    Query("q302_stream_token_budget", Oracles.q299TokenBudget)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => TextAnalysis.tokenBudgetCells(df),
@@ -3504,7 +4808,7 @@ object SparkEntry {
     // Per candidate max_len: docs truncated and Q6 token share lost —
     // the cost table read BEFORE committing to a packing budget (q79
     // whitespace-token convention; one scan, |budgets|-row output).
-    "q303_context_plan" -> ((s, dir) =>
+    Query("q303_context_plan", Oracles.q303ContextPlan)((s, dir) =>
       graft.operators.Packing.contextLengthPlan(documents(s, dir))
         .orderBy("max_len")),
 
@@ -3514,7 +4818,7 @@ object SparkEntry {
     // means the neighborhoods carry little information — the
     // Radovanović high-dimensionality pathology check, cross-read with
     // q247 anisotropy.
-    "q304_knn_hubness" -> ((s, dir) =>
+    Query("q304_knn_hubness", Oracles.q304KnnHubness)((s, dir) =>
       Similarity.knnHubness(embeddings(s, dir), nQueries = 100, k = 5)
         .orderBy("in_degree")),
 
@@ -3523,14 +4827,14 @@ object SparkEntry {
     // top-100 tokens, reported as alpha = -slope in Q6 — the third
     // power law next to q266 Heaps and q276 Hill; bounded top-k pull,
     // driver-side BigInt regression, CTE-replayed ln kernel.
-    "q305_zipf_slope" -> ((s, dir) =>
+    Query("q305_zipf_slope", Oracles.q305ZipfSlope)((s, dir) =>
       TextAnalysis.zipfSlope(documents(s, dir))),
 
     // ---- embedding-QA tier: norm profile (NEW r14) ----
     // Dyadic octave histogram of int8 squared norms with zero vectors
     // on their own row — failed-embed / padding-row detection before
     // any index build (the q241 octave discipline).
-    "q306_norm_profile" -> ((s, dir) =>
+    Query("q306_norm_profile", Oracles.q306NormProfile)((s, dir) =>
       graft.operators.Embeddings.normProfile(embeddings(s, dir))
         .orderBy("octave")),
 
@@ -3540,7 +4844,7 @@ object SparkEntry {
     // side. Driver corpus has no natural cross-domain copies, so a
     // deterministic 'mirror' domain re-publishes doc_id<50 (the q242
     // augmentation pattern, replayed verbatim in the oracle).
-    "q307_cross_domain_dups" -> ((s, dir) => {
+    Query("q307_cross_domain_dups", Oracles.q307CrossDomainDups)((s, dir) => {
       val d = documents(s, dir)
       val aug = d.select(col("source"), col("text"))
         .unionByName(d.filter(col("doc_id") < 50)
@@ -3552,7 +4856,7 @@ object SparkEntry {
     // The q273 protocol (recs from even days, truth from odd days),
     // graded on first-relevant rank instead of graded gain — the RAG
     // retriever's two headline numbers next to nDCG.
-    "q308_mrr" -> ((s, dir) => {
+    Query("q308_mrr", Oracles.q308Mrr)((s, dir) => {
       val base = lineitem(s, dir)
         .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
@@ -3575,7 +4879,7 @@ object SparkEntry {
     // (before misses %11 keys, after misses %13 and bumps %7 prices):
     // added/removed/changed/unchanged counts + Q6 shares — the
     // dataset-versioning audit next to q44's constraint suite.
-    "q309_table_diff" -> ((s, dir) => {
+    Query("q309_table_diff", Oracles.q309SnapshotDiff)((s, dir) => {
       val base = orders(s, dir).select(col("o_orderkey"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
           .as("price_c"),
@@ -3595,7 +4899,7 @@ object SparkEntry {
     // "contests" (higher line price beats lower, suppkey<=100 pool),
     // MM fixed point in exact Q6 with per-round mean-1e6 renorm,
     // oracle unrolls the rounds as CTEs (the q292 discipline).
-    "q310_bradley_terry" -> ((s, dir) =>
+    Query("q310_bradley_terry", Oracles.q310BradleyTerry, headline = true)((s, dir) =>
       Analytics.bradleyTerryFromWins(supplierWins(s, dir), rounds = 6)
         .orderBy("item")),
 
@@ -3606,7 +4910,8 @@ object SparkEntry {
     // share + the α's head share, the flattening curve a curator
     // picks a temperature FROM. One corpus collapse, every α read
     // off the same |domains|-row table.
-    "q326_temperature_sweep" -> ((s, dir) =>
+    Query("q326_temperature_sweep",
+      Oracles.q326TemperatureSweep, headline = true)((s, dir) =>
       Sampling.temperatureSweep(documents(s, dir))
         .orderBy(col("alpha_q3").desc, col("source"))),
 
@@ -3619,7 +4924,7 @@ object SparkEntry {
     // Corpus mirror-augmented with exact clones under NEW ids (the
     // q307/q320 pattern — the raw synthetic corpus has no exact dups):
     // same text, different fold key = precisely the hazard audited.
-    "q329_split_leakage" -> ((s, dir) => {
+    Query("q329_split_leakage", Oracles.q329SplitLeakage, headline = true)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("text"))
       val aug = d.unionByName(d.filter(col("doc_id") < 200)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
@@ -3634,7 +4939,9 @@ object SparkEntry {
     // ships. The mirror augmentation happens inside the streaming
     // plan (union of the stream with its own shifted projection);
     // shared FromCells readout, oracle is q329's SQL verbatim.
-    "q337_stream_split_leakage" -> ((s, dir) => {
+    // q337 = q329's cells built by the streaming state store (the
+    // q285 discipline — one relational truth, two engine paths)
+    Query("q337_stream_split_leakage", Oracles.q329SplitLeakage)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => {
@@ -3657,7 +4964,8 @@ object SparkEntry {
     // augmented with near-dup mirrors (suffix-edited, q320 pattern)
     // AND exact clones of some mirrored docs (+2e6 ids) — the clone
     // lands in a third fold and must be counted via its digest's rep.
-    "q330_neardup_split_leakage" -> ((s, dir) => {
+    Query("q330_neardup_split_leakage",
+      Oracles.q330NearDupSplitLeakage, headline = true)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("text"))
       val aug = d
         .unionByName(d.filter(col("doc_id") < 50)
@@ -3678,7 +4986,8 @@ object SparkEntry {
     // clone-augmented (vec_id<50 under +1e6 ids, identical vectors →
     // certain semantic dups landing in different folds). Same readout
     // as q330, one code path.
-    "q338_semantic_split_leakage" -> ((s, dir) => {
+    Query("q338_semantic_split_leakage",
+      Oracles.q338SemanticSplitLeakage, headline = true)((s, dir) => {
       val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val aug = e.unionByName(e.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -3693,7 +5002,7 @@ object SparkEntry {
     // the 256-pair target, the replication rows that costs, and the
     // residual task load — folded to a per-fan-out histogram off the
     // SAME joinSkewCells build (one cells site, audit + remedy).
-    "q339_salt_plan" -> ((s, dir) => {
+    Query("q339_salt_plan", Oracles.q339SaltPlan, headline = true)((s, dir) => {
       val li = lineitem(s, dir)
       Validation.saltPlan(li, li, "l_partkey", targetPairs = 256L)
         .orderBy("salt_fanout")
@@ -3705,7 +5014,7 @@ object SparkEntry {
     // sensitive DISTRIBUTION deviates — exact Q9 ordered EMD via
     // cross-multiplied integer cumulative counts, the q264 balance
     // bands as the ordered sensitive attribute, t = 0.15.
-    "q340_t_closeness" -> ((s, dir) => {
+    Query("q340_t_closeness", Oracles.q340TCloseness, headline = true)((s, dir) => {
       Validation.tClosenessAudit(
         customer(s, dir).withColumn("bal_band", expr(
           "(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
@@ -3719,7 +5028,8 @@ object SparkEntry {
     // the release loses (groups/rows suppressed, Q6 kept share) and
     // what it then guarantees (min kept class ≥ k; post-suppression
     // re-audit reads zero, spec-gated) — pick k off the curve.
-    "q341_kanon_suppression" -> ((s, dir) => {
+    Query("q341_kanon_suppression",
+      Oracles.q341KanonSuppression, headline = true)((s, dir) => {
       Validation.kAnonSuppressionLadder(customer(s, dir),
         Seq("c_nationkey", "c_mktsegment"), Seq(2, 5, 10, 25, 50))
         .orderBy("k")
@@ -3732,7 +5042,7 @@ object SparkEntry {
     // pairs/task so the plan engages at every sf), then an exact
     // aggregate the oracle reproduces off a PLAIN join: the remedy
     // preserves join semantics row-for-row, hash-gated.
-    "q343_salted_join" -> ((s, dir) => {
+    Query("q343_salted_join", Oracles.q343SaltedJoin, headline = true)((s, dir) => {
       val li = lineitem(s, dir)
       val stats = li.groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("n_lines"))
@@ -3753,7 +5063,7 @@ object SparkEntry {
     // but "does each fold REPRESENT the corpus" — per fold the exact
     // Q6 worst per-source share deviation and total variation
     // distance vs the corpus mix, over the md5Kfold split.
-    "q344_fold_parity" -> ((s, dir) => {
+    Query("q344_fold_parity", Oracles.q344FoldParity, headline = true)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("source"))
       Xval.foldParityAudit(Xval.md5Kfold(d, 4, "doc_id"), "source")
         .orderBy("fold")
@@ -3764,7 +5074,9 @@ object SparkEntry {
     // live split monitor next to q337's leakage monitor: fold and
     // composition checked WHILE documents stream in. Shared FromCells
     // readout, oracle is q344's SQL verbatim.
-    "q346_stream_fold_parity" -> ((s, dir) => {
+    // q346 = q344's cells built by the streaming state store (the
+    // q337/q342 discipline — one relational truth, two engine paths)
+    Query("q346_stream_fold_parity", Oracles.q344FoldParity)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => Xval.foldParityCells(
@@ -3779,7 +5091,8 @@ object SparkEntry {
     // need represented. stratifiedKfold (md5-ordered, layout-
     // independent) on source, then the SAME parity readout — per-fold
     // TVD collapses to the integer-remainder floor by construction.
-    "q347_stratified_parity" -> ((s, dir) => {
+    Query("q347_stratified_parity",
+      Oracles.q347StratifiedParity, headline = true)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("source"))
       Xval.foldParityAudit(
         Xval.stratifiedKfold(d, 4, "source", seed = 0,
@@ -3792,7 +5105,7 @@ object SparkEntry {
     // vs the global newest minute and trailing-vs-previous 60-minute
     // window counts (Q6 ratio) — stalls and slowdowns as exact
     // integers off (type, minute) cells, one partial-agg'd scan.
-    "q348_freshness" -> ((s, dir) => {
+    Query("q348_freshness", Oracles.q348Freshness, headline = true)((s, dir) => {
       Timeseries.freshnessAudit(events(s, dir), windowMinutes = 60)
         .orderBy("event_type")
     }),
@@ -3802,7 +5115,9 @@ object SparkEntry {
     // natural home for a freshness monitor (lag read live off the
     // ingest stream); shared FromCells readout, oracle is q348's SQL
     // verbatim.
-    "q349_stream_freshness" -> ((s, dir) => {
+    // q349 = q348's cells built by the streaming state store (the
+    // q346 discipline — one relational truth, two engine paths)
+    Query("q349_stream_freshness", Oracles.q348Freshness)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/events.parquet",
         df => Timeseries.freshnessCells(df),
@@ -3816,7 +5131,8 @@ object SparkEntry {
     // this: embedding distribution): cosine between each fold's int8
     // centroid and every other fold's + the corpus ('_all') — q193's
     // exact-integer-sums machinery over the md5Kfold split.
-    "q350_semantic_fold_parity" -> ((s, dir) => {
+    Query("q350_semantic_fold_parity",
+      Oracles.q350SemanticFoldParity, headline = true)((s, dir) => {
       val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
       Xval.semanticFoldParity(Xval.md5Kfold(e, 4, "vec_id"))
         .orderBy("label_a", "label_b")
@@ -3826,7 +5142,8 @@ object SparkEntry {
     // The per-class attribution q340's 1-row readout hides: WHICH
     // quasi-classes carry the distributional leak — top 10 by Q9 EMD,
     // ties on the quasi tuple. The remediation worklist.
-    "q352_t_closeness_classes" -> ((s, dir) => {
+    Query("q352_t_closeness_classes",
+      Oracles.q352TClosenessClasses, headline = true)((s, dir) => {
       val cells = Validation.tClosenessCells(
         customer(s, dir).withColumn("bal_band", expr(
           "(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
@@ -3847,7 +5164,8 @@ object SparkEntry {
     // clone id) as the "benchmark",
     // so contamination is guaranteed by construction and the verdict
     // columns (hit id, count) are hash-gated.
-    "q353_semantic_decontaminate" -> ((s, dir) => {
+    Query("q353_semantic_decontaminate",
+      Oracles.q353SemanticDecontaminate, headline = true)((s, dir) => {
       val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val bench = e.filter(col("vec_id") % 7 === 3)
         .select((col("vec_id") + 1000000000000L).as("vec_id"), col("embedding"))
@@ -3859,7 +5177,7 @@ object SparkEntry {
     // base (vec_id % 5 != 0), route the 20% appendix to the FROZEN
     // centroids, read per-cell growth + the imbalance factor before
     // vs after — the re-index trigger as a number.
-    "q351_ivf_staleness" -> ((s, dir) => {
+    Query("q351_ivf_staleness", Oracles.q351IvfStaleness, headline = true)((s, dir) => {
       val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
       Similarity.ivfStalenessAudit(
         e.filter(col("vec_id") % 5 =!= 0),
@@ -3872,7 +5190,8 @@ object SparkEntry {
     // columns): the release audited at every rollup level of the
     // quasi tuple in ONE scan — the first zero-violation level is the
     // minimum generalization, its class collapse the utility price.
-    "q345_kanon_generalization" -> ((s, dir) => {
+    Query("q345_kanon_generalization",
+      Oracles.q345KanonGeneralization, headline = true)((s, dir) => {
       Validation.kAnonGeneralizationLadder(customer(s, dir),
         Seq("c_nationkey", "c_mktsegment"), k = 10)
         .orderBy("level")
@@ -3882,7 +5201,9 @@ object SparkEntry {
     // q340's (class × band) cells built by the streaming engine (the
     // q290 state-store path — the live release monitor), shared
     // FromCells readout, oracle is q340's SQL verbatim.
-    "q342_stream_t_closeness" -> ((s, dir) => {
+    // q342 = q340's cells built by the streaming state store (the
+    // q290 discipline — one relational truth, two engine paths)
+    Query("q342_stream_t_closeness", Oracles.q340TCloseness)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/customer.parquet",
         df => Validation.tClosenessCells(df.withColumn("bal_band", expr(
@@ -3900,7 +5221,7 @@ object SparkEntry {
     // leakageAuditOn that catches q329's straddle reads ZERO rows here
     // (n_leaks cross-joined onto the fold histogram so the zero is
     // hash-gated, not just asserted). Same augmented corpus as q329.
-    "q331_dedup_aware_kfold" -> ((s, dir) => {
+    Query("q331_dedup_aware_kfold", Oracles.q331DedupAwareKfold)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("text"))
       val aug = d.unionByName(d.filter(col("doc_id") < 200)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
@@ -3920,7 +5241,8 @@ object SparkEntry {
     // digests and near-dup clusters, same LSH parameters — read ZERO
     // rows over the split by construction; both zeros ride the output
     // (hash-gated). Same augmented corpus as q330.
-    "q332_neardup_aware_kfold" -> ((s, dir) => {
+    Query("q332_neardup_aware_kfold",
+      Oracles.q332NearDupAwareKfold, headline = true)((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("text"))
       val aug = d
         .unionByName(d.filter(col("doc_id") < 50)
@@ -3958,7 +5280,8 @@ object SparkEntry {
     // implied demand, forced epochs, cap breach and shortfall; per α
     // the feasible verdict and total shortfall. Same domainTokenCells
     // collapse as q326, everything downstream exact integers.
-    "q333_mixture_feasibility" -> ((s, dir) =>
+    Query("q333_mixture_feasibility",
+      Oracles.q333MixtureFeasibility, headline = true)((s, dir) =>
       Sampling.mixtureFeasibility(documents(s, dir),
           budgetTokens = 10000000L, maxEpochsQ3 = 4000)
         .orderBy(col("alpha_q3").desc, col("source"))),
@@ -3969,7 +5292,8 @@ object SparkEntry {
     // bytes move) rows + token load vs the mean, flagged outside
     // ±10% — the stalled-reader predictor. n_rows ties to q115's
     // manifest exactly (spec-asserted).
-    "q334_shard_skew_preflight" -> ((s, dir) =>
+    Query("q334_shard_skew_preflight",
+      Oracles.q334ShardSkewPreflight, headline = true)((s, dir) =>
       graft.sources.TrainingExport.shardSkewPreflight(
           documents(s, dir), rowsPerShard = 64, seed = 11)
         .orderBy("shard")),
@@ -3981,7 +5305,8 @@ object SparkEntry {
     // sources are up-weighted in the anneal; the epoch cap binds on
     // each source's TOTAL reuse across phases. q333's arithmetic with
     // a phase dimension, same domainTokenCells collapse.
-    "q336_anneal_mixture_plan" -> ((s, dir) =>
+    Query("q336_anneal_mixture_plan",
+      Oracles.q336AnnealMixturePlan, headline = true)((s, dir) =>
       Sampling.annealMixturePlan(documents(s, dir),
           budgetTokens = 10000000L,
           phases = Seq(("main", 900L, 1000L), ("anneal", 100L, 250L)),
@@ -3994,7 +5319,8 @@ object SparkEntry {
     // of row counts — every non-tail shard reads load_q6 ≈ 10⁶ and
     // the preflight's flags vanish; same readout as q334 so audit and
     // remedy are comparable number for number.
-    "q335_token_shard_plan" -> ((s, dir) =>
+    Query("q335_token_shard_plan",
+      Oracles.q335TokenShardPlan, headline = true)((s, dir) =>
       graft.sources.TrainingExport.tokenShardPlan(
           documents(s, dir), tokensPerShard = 20000L, seed = 11)
         .orderBy("shard")),
@@ -4007,7 +5333,8 @@ object SparkEntry {
     // via the bounded native aggregate, total output size + Q6 skew
     // factor broadcast on every row. Complements q161's one-pass CMS
     // estimate with exact per-key attribution.
-    "q328_join_skew_preflight" -> ((s, dir) => {
+    Query("q328_join_skew_preflight",
+      Oracles.q328JoinSkewPreflight, headline = true)((s, dir) => {
       val li = lineitem(s, dir)
       Validation.joinSkewPreflight(li, li, "l_partkey", k = 10)
         .orderBy("rank")
@@ -4018,7 +5345,9 @@ object SparkEntry {
     // q280 state-store path — the live ingest monitor a curator reads
     // the flattening curve from); shared FromCells readout, oracle is
     // q326's SQL verbatim.
-    "q327_stream_temperature_sweep" -> ((s, dir) => {
+    // q327 = q326's cells built by the streaming state store (the
+    // q280 discipline — one relational truth, two engine paths)
+    Query("q327_stream_temperature_sweep", Oracles.q326TemperatureSweep)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s,
         s"$dir/documents.parquet",
         df => Sampling.domainTokenCells(df),
@@ -4032,7 +5361,7 @@ object SparkEntry {
     // each item's log-rating at the fitted ratings (exact Q12 cells)
     // and se = 1/sqrt(I) in Q6 via the native floor-isqrt — the
     // leaderboard's error bar, same game cells as the rating itself.
-    "q325_bt_confidence" -> ((s, dir) =>
+    Query("q325_bt_confidence", Oracles.q325BtConfidence, headline = true)((s, dir) =>
       Analytics.bradleyTerryConfidence(supplierWins(s, dir), rounds = 6)
         .orderBy("item")),
 
@@ -4040,7 +5369,7 @@ object SparkEntry {
     // The arena dashboard behind q310's scalar rating: per unordered
     // pair the games, a-wins, Q6 win rate, and the q194 Wilson Q9
     // lower bound (2-0 records read LOW, not 100%).
-    "q311_win_rate_matrix" -> ((s, dir) =>
+    Query("q311_win_rate_matrix", Oracles.q311WinRateMatrix)((s, dir) =>
       Analytics.winRateMatrix(supplierWins(s, dir))
         .orderBy("item_a", "item_b")),
 
@@ -4048,7 +5377,7 @@ object SparkEntry {
     // Dyadic octave histogram of per-doc whitespace token counts (the
     // q241 sketch over the q79 convention) — the corpus length SHAPE
     // q303's budget costs are read against.
-    "q313_seq_len_profile" -> ((s, dir) =>
+    Query("q313_seq_len_profile", Oracles.q313SeqLenProfile)((s, dir) =>
       graft.operators.Sketches.dyadicHistogram(
           documents(s, dir).select(greatest(lit(0L), coalesce(
             TextAnalysis.tokenCountWs(col("text")).cast("long"),
@@ -4060,7 +5389,7 @@ object SparkEntry {
     // q299's budget question in LANGUAGE space (domains mix languages;
     // a multilingual mixture is planned per language) — q23's langId
     // heuristic crosstabbed with bytes + q79 whitespace tokens.
-    "q314_lang_token_budget" -> ((s, dir) =>
+    Query("q314_lang_token_budget", Oracles.q314LangTokenBudget)((s, dir) =>
       TextAnalysis.langTokenBudget(documents(s, dir))
         .orderBy("lang_pred")),
 
@@ -4069,7 +5398,8 @@ object SparkEntry {
     // share per probe count, from ONE index build + ONE scoring pass
     // at max(nProbes) — q291 audits one operating point, this sweeps
     // the knob a serving team actually sets.
-    "q315_ivf_probe_plan" -> ((s, dir) => {
+    Query("q315_ivf_probe_plan",
+      Oracles.q315IvfProbePlan, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.ivfProbePlan(e, e.filter(col("vec_id") < 20), k = 5,
           nProbes = Seq(1, 2, 4, 8), nCells = 16, iters = 2)
@@ -4081,7 +5411,8 @@ object SparkEntry {
     // truth + exact-rescore cost per refine factor, from ONE ADC pass
     // at the deepest shortlist (ADC ranks nest) + ONE broadcast
     // re-score + ONE heap-bounded truth pass.
-    "q319_pq_refine_plan" -> ((s, dir) => {
+    Query("q319_pq_refine_plan",
+      Oracles.q319PqRefinePlan, headline = true)((s, dir) => {
       val e = embeddings(s, dir)
       Similarity.pqRefinePlan(e, e.filter(col("vec_id") < 20), k = 5,
           refineFactors = Seq(1, 2, 4, 8), m = 8, ksub = 16, iters = 2)
@@ -4092,7 +5423,8 @@ object SparkEntry {
     // "How much does each Jaccard cutoff bite?" — exact pair counts,
     // groups and docs touched per τ, all read off ONE collapsed
     // pair join at τ_min (the q207 duplicate-saturation-proof path).
-    "q316_dedup_threshold_sweep" -> ((s, dir) =>
+    Query("q316_dedup_threshold_sweep",
+      Oracles.q316DedupThresholdSweep, headline = true)((s, dir) =>
       Dedup.dedupThresholdSweep(documents(s, dir),
           taus = Seq(0.7, 0.8, 0.9, 0.95, 1.0))
         .orderBy("tau_q6")),
@@ -4105,7 +5437,9 @@ object SparkEntry {
     // re-derive equals batch under arbitrary arrival order); consumer
     // keeps max-emit per order, sums (winner, loser) cells, reads out
     // through the SHARED winRateMatrix — oracle is q311's SQL verbatim.
-    "q317_stream_win_matrix" -> ((s, dir) => {
+    // q317 = q311's win table built by the streaming state store (the
+    // q281 emit-counter discipline — one relational truth, two paths)
+    Query("q317_stream_win_matrix", Oracles.q311WinRateMatrix)((s, dir) => {
       val emitted = EventStreams.runOnceOnParquet(s,
         s"$dir/lineitem.parquet",
         df => EventStreams.winPairsStream(s,
@@ -4132,7 +5466,8 @@ object SparkEntry {
     // matrix). Corpus mirror-augmented with EDITED copies (suffix
     // appended) so they survive the exact collapse — the q307
     // augmentation pattern, near-dup edition.
-    "q320_dup_cluster_domains" -> ((s, dir) => {
+    Query("q320_dup_cluster_domains",
+      Oracles.q320DupClusterDomains, headline = true)((s, dir) => {
       val d = documents(s, dir)
       val aug = d.select(col("doc_id"), col("source"), col("text"))
         .unionByName(d.filter(col("doc_id") < 50)
@@ -4149,7 +5484,11 @@ object SparkEntry {
     // and token budget, how many epochs must each source repeat (exact
     // BPE supply from the q299 cells), who exceeds the ~4-epoch
     // data-constrained cap, and what shortfall the cap leaves.
-    "q318_epochs_plan" -> ((s, dir) => {
+    Query("q318_epochs_plan",
+      Oracles.q318EpochsPlan(
+        (0 until 20).map(i => (s"src$i", if (i < 10) 80L else 20L)),
+        budgetTokens = 200000L, maxEpochsQ3 = 4000L),
+      headline = true)((s, dir) => {
       val targets = (0 until 20).map(i =>
         (s"src$i", if (i < 10) 80L else 20L))
       TextAnalysis.epochsPlan(documents(s, dir), targets,
@@ -4161,7 +5500,7 @@ object SparkEntry {
     // Among triples with three strict-majority edges, the share
     // forming a directed 3-cycle — intransitive preference data means
     // q310's scalar rating is averaging away real structure.
-    "q312_preference_cycles" -> ((s, dir) =>
+    Query("q312_preference_cycles", Oracles.q312PreferenceCycles)((s, dir) =>
       Analytics.preferenceCycles(supplierWins(s, dir))),
 
     // ---- preference tier: inter-rater agreement (NEW r16) ----
@@ -4172,7 +5511,8 @@ object SparkEntry {
     // integer ratio — num/den, no intermediate rounding — read out in
     // signed Q6 via positive floor division (engine-identical on
     // Spark DIV vs DuckDB //).
-    "q321_judge_agreement" -> ((s, dir) =>
+    Query("q321_judge_agreement",
+      Oracles.q321JudgeAgreement, headline = true)((s, dir) =>
       Analytics.judgeAgreement(judgedSupplierWins(s, dir))
         .orderBy("judge_a", "judge_b")),
 
@@ -4181,7 +5521,7 @@ object SparkEntry {
     // each judge's agreement with the LEAVE-ONE-OUT panel majority
     // (own vote excluded), Wilson-lower-bounded so thin records read
     // low — the judge-QA table an arena reads before weighting votes.
-    "q323_judge_bias" -> ((s, dir) =>
+    Query("q323_judge_bias", Oracles.q323JudgeBias, headline = true)((s, dir) =>
       Analytics.judgeConsensusBias(judgedSupplierWins(s, dir))
         .orderBy("judge")),
 
@@ -4192,7 +5532,9 @@ object SparkEntry {
     // pure function of the stream key, so it needs no extra state),
     // sums (judge, winner, loser) cells, and reads them out through
     // the SHARED judgeConsensusBias — oracle is q323's SQL verbatim.
-    "q324_stream_judge_bias" -> ((s, dir) => {
+    // q324 = q323's judged wins built by the streaming state store
+    // (the q317 discipline — one relational truth, two engine paths)
+    Query("q324_stream_judge_bias", Oracles.q323JudgeBias)((s, dir) => {
       val emitted = EventStreams.runOnceOnParquet(s,
         s"$dir/lineitem.parquet",
         df => EventStreams.winPairsStream(s,
@@ -4214,7 +5556,7 @@ object SparkEntry {
     // q252's cells built by the streaming engine (the q205 discipline:
     // one cell builder, two engine paths), batch EMD readout — the
     // oracle is q252's SQL verbatim.
-    "q255_stream_emd" -> ((s, dir) => {
+    Query("q255_stream_emd", Oracles.q252EmdDrift)((s, dir) => {
       val cells = EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => Analytics.chisqCells(
           df.withColumn("hour",
@@ -4228,7 +5570,7 @@ object SparkEntry {
     // ---- validation tier: robust outlier profile (NEW r11) ----
     // q237's median/MAD broadcast back over the rows: modified z-score
     // flags (k=3) per priority, exact Q9 outlier rate.
-    "q256_robust_outliers" -> ((s, dir) => {
+    Query("q256_robust_outliers", Oracles.q256RobustOutliers)((s, dir) => {
       Analytics.robustOutliers(orders(s, dir), "o_orderpriority",
           "o_totalprice", k = 3)
         .orderBy("o_orderpriority")
@@ -4238,7 +5580,7 @@ object SparkEntry {
     // Chance-corrected agreement between the labeled lang column and
     // the q23 langid heuristic — the annotator-QA readout; signed Q9
     // floor (pmod form = DuckDB //).
-    "q257_cohen_kappa" -> ((s, dir) => {
+    Query("q257_cohen_kappa", Oracles.q257CohenKappa)((s, dir) => {
       val d = documents(s, dir).select(col("lang"),
         TextAnalysis.langId(col("text")).as("lang_pred"))
       Analytics.cohenKappa(d, "lang", "lang_pred")
@@ -4247,7 +5589,7 @@ object SparkEntry {
     // ---- analytics tier: ABC / Pareto classes (NEW r11) ----
     // Parts by revenue, 80/95 permille cuts on the exact two-phase
     // running total — which SKUs carry the corpus.
-    "q258_abc_classes" -> ((s, dir) => {
+    Query("q258_abc_classes", Oracles.q258AbcClasses)((s, dir) => {
       val rev = lineitem(s, dir).groupBy("l_partkey")
         .agg(sum(col("l_extendedprice").cast("decimal(18,4)")).as("rev"))
       Analytics.abcClassification(rev, "l_partkey", "rev")
@@ -4257,7 +5599,7 @@ object SparkEntry {
     // ---- analytics tier: log-rank test (NEW r11) ----
     // q201's censored lifetimes split into odd/even user arms: the
     // two-cohort survival comparison as floor-per-term Q9 integers.
-    "q259_log_rank" -> ((s, dir) => {
+    Query("q259_log_rank", Oracles.q259LogRank)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("day", expr("unix_micros(ts) DIV 86400000000"))
       val life = ev.groupBy("user_id")
@@ -4272,7 +5614,7 @@ object SparkEntry {
     // "Does price rank return-orders above clean ones" — the tie-aware
     // rank-sum AUC as one exact Q9 integer. Cells per distinct score,
     // two-phase bucketed cumsum, no global window.
-    "q250_auc_exact" -> ((s, dir) => {
+    Query("q250_auc_exact", Oracles.q250AucExact)((s, dir) => {
       val ret = lineitem(s, dir).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey").as("_rk")).distinct()
       val d = orders(s, dir).join(ret, col("o_orderkey") === col("_rk"),
@@ -4284,7 +5626,7 @@ object SparkEntry {
     // Rank-determined score deciles (descending, o_orderkey tiebreak):
     // per-decile population/positives/rate plus cumulative capture and
     // lift, all exact Q9 floor divisions.
-    "q251_decile_lift" -> ((s, dir) => {
+    Query("q251_decile_lift", Oracles.q251DecileLift)((s, dir) => {
       val ret = lineitem(s, dir).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey").as("_rk")).distinct()
       val d = orders(s, dir).join(ret, col("o_orderkey") === col("_rk"),
@@ -4298,7 +5640,7 @@ object SparkEntry {
     // Wasserstein-1 between odd- and even-day hour-of-day histograms —
     // the adjacency-aware companion to q202's PSI. Post-1970 data
     // invariant (truncating DIV = floor), the q196/q201 convention.
-    "q252_emd_drift" -> ((s, dir) => {
+    Query("q252_emd_drift", Oracles.q252EmdDrift)((s, dir) => {
       val ev = events(s, dir)
         .withColumn("hour",
           pmod(expr("unix_micros(ts) DIV 3600000000"), lit(24)))
@@ -4309,14 +5651,14 @@ object SparkEntry {
     // ---- ML-eval tier: transition top-k (NEW r11) ----
     // First-order Markov transition table over user event streams:
     // per source type the top-3 next types with exact Q9 probability.
-    "q253_transitions" -> ((s, dir) => {
+    Query("q253_transitions", Oracles.q253Transitions)((s, dir) => {
       Analytics.transitionTopK(events(s, dir)).orderBy("src", "rank")
     }),
 
     // ---- ML-eval tier: per-segment exact AUC (NEW r11) ----
     // q250 within each order priority — the per-cohort ranker check;
     // grouped cells + per-group cumsum window (groups parallelize).
-    "q254_auc_by_group" -> ((s, dir) => {
+    Query("q254_auc_by_group", Oracles.q254AucByGroup)((s, dir) => {
       val ret = lineitem(s, dir).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey").as("_rk")).distinct()
       val d = orders(s, dir).join(ret, col("o_orderkey") === col("_rk"),
@@ -4330,7 +5672,7 @@ object SparkEntry {
     // The q157 co-occurrence recommender evaluated properly: temporal
     // 80/20 basket split, train-side item-item counts, top-5 per
     // customer, hit-rate + integer-MRR against held-out purchases.
-    "q249_rec_eval" -> ((s, dir) => {
+    Query("q249_rec_eval", Oracles.q249RecEval)((s, dir) => {
       val b = lineitem(s, dir)
         .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey"), col("l_orderkey"), col("l_partkey"),
@@ -4344,7 +5686,7 @@ object SparkEntry {
     // most uncovered distinct tokens — high-coverage eval-set
     // assembly. Rounds are bounded; each is one token-keyed anti-join,
     // argmax through the native top-1 aggregate.
-    "q248_set_cover" -> ((s, dir) => {
+    Query("q248_set_cover", Oracles.q248SetCover)((s, dir) => {
       Curation.greedySetCover(documents(s, dir), k = 8).orderBy("round")
     }),
 
@@ -4353,7 +5695,7 @@ object SparkEntry {
     // cosine to the dominant direction in Q6 — the mean says whether
     // this space needs mean-centering before cosine retrieval. One
     // extra map pass with w as 64 literals.
-    "q247_anisotropy" -> ((s, dir) => {
+    Query("q247_anisotropy", Oracles.q247Anisotropy)((s, dir) => {
       graft.operators.Embeddings.anisotropyProfile(
           embeddings(s, dir), dim = 64, rounds = 8)
         .orderBy("vec_id")
@@ -4365,7 +5707,8 @@ object SparkEntry {
     // (~(20-16)/20 of the corpus), vs a ~15/16 reshuffle under mod-k.
     // splitmix64 runs as a codegen'd native expression (the Column
     // form would trip ANSI overflow on the wrapping multiplies).
-    "q246_shard_migration" -> ((s, dir) => {
+    Query("q246_shard_migration",
+      Oracles.q246ShardMigration, headline = true)((s, dir) => {
       graft.operators.Layout.shardMigration(
           documents(s, dir), "doc_id", kFrom = 16, kTo = 20)
         .orderBy("shard")
@@ -4375,7 +5718,7 @@ object SparkEntry {
     // Decile discretization of order totals: rank-determined bin
     // populations, exact [min,max] edge table — what a scorer
     // broadcast-joins to bin unseen rows.
-    "q245_equifreq_bins" -> ((s, dir) => {
+    Query("q245_equifreq_bins", Oracles.q245EquifreqBins)((s, dir) => {
       Analytics.equiFrequencyBins(orders(s, dir), "o_totalprice", bins = 10)
         .orderBy("bin")
     }),
@@ -4384,7 +5727,7 @@ object SparkEntry {
     // Category -> shrunk mean target (m=10 pseudo-observations of the
     // global mean), the leakage-prone ML step done exactly: one
     // integer formula, no float means.
-    "q244_target_encode" -> ((s, dir) => {
+    Query("q244_target_encode", Oracles.q244TargetEncode)((s, dir) => {
       Analytics.targetEncode(lineitem(s, dir), "l_returnflag",
           "l_extendedprice", m = 10)
         .orderBy("l_returnflag")
@@ -4395,7 +5738,7 @@ object SparkEntry {
     // spend / event count / purchase recency AS OF the click — RANGE
     // frames anchored at event time make future leakage impossible by
     // construction. One per-user window computes all three.
-    "q243_pit_features" -> ((s, dir) => {
+    Query("q243_pit_features", Oracles.q243PitFeatures, headline = true)((s, dir) => {
       graft.operators.Features.pointInTimeFeatures(events(s, dir))
         .orderBy("user_id", "us", "event_id")
     }),
@@ -4405,7 +5748,8 @@ object SparkEntry {
     // ≤ 64·8 cells of state at any corpus size — with p50/p90/p99 read
     // out as bracketing [lo, hi) edges: relative error ≤ 1/8 by
     // construction, every step exact integer.
-    "q241_dyadic_quantiles" -> ((s, dir) => {
+    Query("q241_dyadic_quantiles",
+      Oracles.q241DyadicQuantiles, headline = true)((s, dir) => {
       val v = lineitem(s, dir).select(
         (col("l_extendedprice").cast("decimal(18,4)") * 10000)
           .cast("long").as("v"))
@@ -4419,7 +5763,8 @@ object SparkEntry {
     // q235's recurrence through flatMapGroupsWithState — two longs of
     // state per key — sharing q235's oracle verbatim: one relational
     // truth, two engine paths (batch array walk, streaming state).
-    "q240_stream_ewma" -> ((s, dir) => {
+    // streaming twin: same truth, state-store path
+    Query("q240_stream_ewma", Oracles.q235EwmaChart)((s, dir) => {
       EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
         df => EventStreams.ewmaChartStream(s, df, alphaDen = 8, relDen = 4),
         s"ewma_sink_${System.nanoTime()}",
@@ -4435,7 +5780,7 @@ object SparkEntry {
     // gradient bits -> 32-bit halves.
     // every 10th doc re-ingested under a shifted id (the q119 crawl
     // view) so the grouping path is live: those pairs MUST collapse
-    "q219_perceptual_dedup" -> ((s, dir) => {
+    Query("q219_perceptual_dedup", Oracles.q219PerceptualDedup)((s, dir) => {
       val d = documents(s, dir)
         .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
       val reingested = d.filter(col("doc_id") % 10 === 0)
@@ -4445,7 +5790,7 @@ object SparkEntry {
     }),
 
     // ---- north star: duplicate-ngram repetition filter (Gopher-style) ----
-    "q71_repetition" -> ((s, dir) => {
+    Query("q71_repetition", Oracles.q71Repetition)((s, dir) => {
       // _ws AND _ng materialized: inline, this query built the 3-gram
       // string array FOUR times (size + distinct + twice inside the
       // ratio), each build itself tokenizing twice — 8 corpus regex
@@ -4466,7 +5811,7 @@ object SparkEntry {
     // DECIMAL partials make the aggregate exact and therefore
     // salting-order-independent — the salted plan must equal a plain
     // GROUP BY bit-for-bit, which the oracle checks.
-    "q68_salted_agg" -> ((s, dir) => {
+    Query("q68_salted_agg", Oracles.q68SaltedAgg)((s, dir) => {
       val li = lineitem(s, dir)
         .withColumn("qty_dec", col("l_quantity").cast("decimal(18,4)"))
       graft.operators.Skew.saltedAgg(li, "l_suppkey", saltBuckets = 32,
@@ -4480,7 +5825,7 @@ object SparkEntry {
     // ---- §2.9 streaming dedup within the watermark horizon ----
     // The bounded source is self-unioned so every event arrives twice;
     // dropDuplicatesWithinWatermark must emit each event_id once.
-    "q69_stream_dedup" -> ((s, dir) => {
+    Query("q69_stream_dedup", Oracles.q69StreamDedup)((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
           df => {
@@ -4497,7 +5842,7 @@ object SparkEntry {
     // Both sides are written bucketed on the join key, so the join plans
     // with zero Exchange (asserted in LayoutSpec); the oracle checks the
     // layout is semantics-preserving vs a plain join.
-    "q70_colocated_join" -> ((s, dir) => {
+    Query("q70_colocated_join", Oracles.q70ColocatedJoin)((s, dir) => {
       graft.operators.Layout.writeBucketed(
         orders(s, dir).select(col("o_custkey").as("custkey"),
           col("o_totalprice")),
@@ -4517,7 +5862,7 @@ object SparkEntry {
 
     // ---- §2.9 structured streaming (AvailableNow over parquet) ----
     // ---- §2.9 stream-stream interval join (real Append-mode stream) ----
-    "q82_stream_interval_join" -> ((s, dir) => {
+    Query("q82_stream_interval_join", Oracles.q82StreamIntervalJoin)((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
           df => EventStreams.clickPurchaseJoin(Tables.normalizeTs(df)),
@@ -4526,7 +5871,10 @@ object SparkEntry {
         .orderBy("user_id", "click_id", "purchase_id")
     }),
 
-    "q42_stream_tumbling" -> ((s, dir) => {
+    Query("q42_stream_tumbling",
+      """SELECT CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) * 60000000 AS w_start_us,
+        |  event_type, COUNT(*) AS n
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       EventStreams.runOnceOnParquet(s, s"$dir/events.parquet",
           df => EventStreams.tumblingCounts(Tables.normalizeTs(df), "1 minute"),
@@ -4536,13 +5884,18 @@ object SparkEntry {
         .orderBy("w_start_us", "event_type")
     }))
 
-  // ------------------------------------------------------------- oracle SQL
+  /** Name → plan. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.plan).toMap
 
-  /** DuckDB-runnable equivalents; keys without entries get rows-only
-    * checks (documented per-query above).
-    */
-  /** q148/q152 share this relational truth (batch vs streaming cells). */
-  private val benfordSql: String =
+  /** Name → DuckDB oracle SQL; evaluates every oracle. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
+
+  // ----------------------------------------------------- shared oracle SQL
+
+  /** q214/q279 share this relational truth (batch vs streaming cells). */
+  private def benfordSql: String =
     """WITH v0 AS (SELECT
       |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
       |  FROM lineitem),
@@ -4559,7 +5912,8 @@ object SparkEntry {
       |FROM e CROSS JOIN t LEFT JOIN o ON o.digit = e.digit
       |ORDER BY digit""".stripMargin
 
-  private val chisqDriftSql: String =
+  /** q148/q152 share this relational truth (batch vs streaming cells). */
+  private def chisqDriftSql: String =
     """WITH s AS (
       |  SELECT event_type AS cat,
       |    CASE WHEN (epoch_us(ts) // 86400000000) % 2 = 1 THEN 1 ELSE 0 END AS f
@@ -4585,7 +5939,7 @@ object SparkEntry {
   /** q202/q205 shared PSI oracle — batch cells and streaming
     * state-store cells are gated against the SAME SQL truth.
     */
-  private val psiOracleSql: String =
+  private def psiOracleSql: String =
     ("""WITH RECURSIVE
         |cells AS (SELECT event_type,
         |    CAST(SUM(CASE WHEN (epoch_us(ts) // 86400000000) % 2 = 1 THEN 0 ELSE 1 END) AS BIGINT) AS a,
@@ -4612,7 +5966,7 @@ object SparkEntry {
   /** q293 — [[psiOracleSql]] with every stage keyed by the user
     * cohort (user_id % 4).
     */
-  private val psiByCohortOracleSql: String =
+  private def psiByCohortOracleSql: String =
     ("""WITH RECURSIVE
         |cells AS (SELECT user_id % 4 AS g, event_type,
         |    CAST(SUM(CASE WHEN (epoch_us(ts) // 86400000000) % 2 = 1 THEN 0 ELSE 1 END) AS BIGINT) AS a,
@@ -4639,7 +5993,7 @@ object SparkEntry {
         |  CAST(CAST(s2 // (CAST(na + k AS HUGEINT) * (nb + k)) AS BIGINT) AS DOUBLE) / 1e12 AS psi
         |FROM agg ORDER BY cohort""".stripMargin)
 
-  private val pmiOracleSql: String =
+  private def pmiOracleSql: String =
     ("""WITH RECURSIVE
        |base AS (SELECT list_filter(string_split_regex(lower(COALESCE(text, '')),
        |    '[^a-z0-9'']+'), x -> length(x) > 0) AS ws FROM documents),
@@ -4664,7 +6018,7 @@ object SparkEntry {
        |  c2::BIGINT AS n_w2, pmi_q12
        |FROM t ORDER BY pmi_q12 DESC, w1, w2 LIMIT 20""".stripMargin)
 
-  private val sbOracleSql: String =
+  private def sbOracleSql: String =
     ("""WITH RECURSIVE
        |base AS (SELECT doc_id, list_filter(string_split_regex(lower(COALESCE(text, '')),
        |    '[^a-z0-9'']+'), x -> length(x) > 0) AS ws FROM documents),
@@ -4716,1502 +6070,4 @@ object SparkEntry {
        |  COALESCE(a.score_q12, 0)::BIGINT AS score_q12
        |FROM (SELECT DISTINCT doc_id FROM sc) s LEFT JOIN agg a USING (doc_id)
        |ORDER BY s.doc_id""".stripMargin)
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q215_pmi_collocations" -> pmiOracleSql,
-    "q220_stupid_backoff" -> sbOracleSql,
-
-    "q218_vocab_coverage" ->
-      """WITH wc AS (SELECT w, COUNT(*) AS c FROM (
-        |    SELECT unnest(list_filter(string_split_regex(
-        |      lower(COALESCE(text, '')), '[^a-z0-9'']+'),
-        |      x -> length(x) > 0)) AS w
-        |    FROM documents) GROUP BY w),
-        |rk AS (SELECT c, row_number() OVER (ORDER BY c DESC, w) AS rn,
-        |    COUNT(*) OVER () AS vocab
-        |  FROM wc),
-        |t AS (SELECT SUM(c) AS tot FROM wc),
-        |ks(k) AS (VALUES (100), (1000), (10000))
-        |SELECT ks.k::BIGINT AS k,
-        |  COALESCE(SUM(CASE WHEN rn <= ks.k THEN c END), 0)::BIGINT AS n_covered,
-        |  MAX(t.tot)::BIGINT AS total_tokens,
-        |  MAX(vocab)::BIGINT AS vocab_size,
-        |  (1000 * COALESCE(SUM(CASE WHEN rn <= ks.k THEN c END), 0)
-        |    // MAX(t.tot))::BIGINT AS coverage_permille
-        |FROM ks CROSS JOIN rk CROSS JOIN t GROUP BY ks.k ORDER BY k""".stripMargin,
-
-    // The heavy-hitter oracle is deliberately sketch-free: the engine's
-    // CMS screen must be output-invisible (superset property + exact
-    // verify), so plain GROUP BY/HAVING is the correct reference.
-    "q142_heavy_hitters" ->
-      """WITH t AS (SELECT COUNT(*) AS total FROM events)
-        |SELECT user_id, COUNT(*) AS n FROM events, t
-        |GROUP BY user_id, total HAVING COUNT(*) * 120 >= total
-        |ORDER BY user_id""".stripMargin,
-
-    // q164 = q142's semantics with the counter table built through
-    // streaming state: one relational truth, two engine paths
-    "q164_stream_heavy" ->
-      """WITH t AS (SELECT COUNT(*) AS total FROM events)
-        |SELECT user_id, COUNT(*) AS n FROM events, t
-        |GROUP BY user_id, total HAVING COUNT(*) * 120 >= total
-        |ORDER BY user_id""".stripMargin,
-
-    "q165_stream_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us >= 300000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e)
-        |SELECT user_id, MIN(us) AS start_us, MAX(us) + 300000000 AS end_us,
-        |  COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin,
-
-    // Shared integer log kernel (FixedMath.lnCteSql — the exact
-    // bit-recurrence Spark runs via graft_ln_q12): no libm ln anywhere,
-    // so the hash is a property of the data, not the oracle's build.
-    // E = n·L(n) − Σ c·L(c); entropy_q = E // n (floor ≡ DIV on ≥ 0).
-    "q199_user_entropy" ->
-      ("""WITH RECURSIVE
-        |c AS (SELECT user_id, event_type, COUNT(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT user_id, c,
-        |    CAST(SUM(c) OVER (PARTITION BY user_id) AS BIGINT) AS n FROM c),
-        |_ks AS (SELECT DISTINCT k FROM
-        |  (SELECT c AS k FROM t UNION SELECT n FROM t)),
-        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
-        |q AS (SELECT t.user_id, t.c, t.n, lc.l AS lc, lnn.l AS lnn
-        |  FROM t JOIN _lnq lc ON lc.k = t.c
-        |         JOIN _lnq lnn ON lnn.k = t.n),
-        |e AS (SELECT user_id, MAX(n) AS n_events, COUNT(*) AS n_cats,
-        |    MAX(n)::HUGEINT * MAX(lnn) - SUM(c::HUGEINT * lc) AS e
-        |  FROM q GROUP BY user_id)
-        |SELECT user_id, n_events, n_cats,
-        |  CAST(e // CAST(n_events AS HUGEINT) AS BIGINT) AS entropy_q,
-        |  CAST(CAST(e // CAST(n_events AS HUGEINT) AS BIGINT) AS DOUBLE) / 1e12 AS entropy
-        |FROM e ORDER BY user_id""".stripMargin),
-
-    "q198_gini" ->
-      """WITH rev AS (
-        |  SELECT o_custkey,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS rev
-        |  FROM orders GROUP BY 1),
-        |x AS (
-        |  SELECT c_mktsegment, c_custkey,
-        |    COALESCE(rev, CAST(0 AS DECIMAL(18,4))) AS rev
-        |  FROM customer LEFT JOIN rev ON c_custkey = o_custkey),
-        |r AS (
-        |  SELECT c_mktsegment, rev, row_number() OVER (
-        |    PARTITION BY c_mktsegment ORDER BY rev, c_custkey) AS i
-        |  FROM x),
-        |m AS (
-        |  SELECT c_mktsegment, COUNT(*) AS n, SUM(rev) AS sx,
-        |    SUM(rev * CAST(i AS DECIMAL(12,0))) AS six
-        |  FROM r GROUP BY 1),
-        |d AS (
-        |  SELECT c_mktsegment, n, CAST(n AS DOUBLE) AS nd,
-        |    CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS sxd,
-        |    CAST(CAST(six AS VARCHAR) AS DOUBLE) AS sixd
-        |  FROM m)
-        |SELECT c_mktsegment, n, sxd AS total,
-        |  2.0 * sixd / (nd * sxd) - (nd + 1.0) / nd AS gini
-        |FROM d ORDER BY c_mktsegment""".stripMargin,
-
-    "q197_session_lift" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (SELECT *, SUM(CASE WHEN prev_us IS NULL
-        |      OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e),
-        |st AS (SELECT DISTINCT user_id, sid, event_type FROM s),
-        |ns AS (SELECT COUNT(*) AS n_sessions
-        |  FROM (SELECT DISTINCT user_id, sid FROM st)),
-        |si AS (SELECT event_type AS t, COUNT(*) AS n FROM st GROUP BY 1),
-        |pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |    COUNT(*) AS n_ab
-        |  FROM st a JOIN st b ON a.user_id = b.user_id AND a.sid = b.sid
-        |    AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, na.n AS n_a, nb.n AS n_b, n_ab,
-        |  ns.n_sessions,
-        |  CAST(n_ab * ns.n_sessions AS DOUBLE)
-        |    / CAST(na.n * nb.n AS DOUBLE) AS lift
-        |FROM pr
-        |JOIN si na ON na.t = type_a
-        |JOIN si nb ON nb.t = type_b
-        |CROSS JOIN ns
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    // Same integer log kernel as q199; the survival curve is gated in
-    // log space (log_surv_q = Σ L(n−d) − L(n), exact longs) — the
-    // round-9 exp(·) terminal double was a libm property, not a data
-    // property, and is deliberately not emitted. d = n (the necessarily
-    // final row) pins log_surv_q to NULL (S = 0).
-    "q196_survival_km" ->
-      ("""WITH RECURSIVE
-        |life AS (
-        |  SELECT user_id,
-        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT t, COUNT(*) AS d FROM life GROUP BY t),
-        |r AS (SELECT t, d,
-        |    SUM(d) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
-        |    SUM(d) OVER () AS tot
-        |  FROM g),
-        |kk AS (SELECT t, d, CAST(tot - cum + d AS BIGINT) AS n_at_risk FROM r),
-        |_ks AS (SELECT DISTINCT k FROM (
-        |  SELECT n_at_risk AS k FROM kk WHERE d < n_at_risk
-        |  UNION SELECT n_at_risk - d FROM kk WHERE d < n_at_risk)),
-        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
-        |q AS (SELECT kk.t, kk.d, kk.n_at_risk,
-        |    CASE WHEN kk.d = kk.n_at_risk THEN NULL
-        |      ELSE lnd.l - lnn.l END AS lq
-        |  FROM kk LEFT JOIN _lnq lnn ON lnn.k = kk.n_at_risk
-        |          LEFT JOIN _lnq lnd ON lnd.k = kk.n_at_risk - kk.d)
-        |SELECT t, d, n_at_risk,
-        |  CASE WHEN d = n_at_risk THEN NULL
-        |    ELSE CAST(SUM(lq) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |  END AS log_surv_q
-        |FROM q ORDER BY t""".stripMargin),
-
-    // q196's estimator with censoring: censored subjects (never-
-    // purchasers) shrink the risk set without a death term; d = 0
-    // rows carry the running sum unchanged.
-    "q201_km_censored" ->
-      ("""WITH RECURSIVE
-        |life AS (
-        |  SELECT user_id,
-        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t,
-        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS evt
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT t, CAST(SUM(evt) AS BIGINT) AS d,
-        |    CAST(SUM(1 - evt) AS BIGINT) AS c
-        |  FROM life GROUP BY t),
-        |r AS (SELECT t, d, c,
-        |    SUM(d + c) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
-        |    SUM(d + c) OVER () AS tot
-        |  FROM g),
-        |kk AS (SELECT t, d, c, CAST(tot - cum + d + c AS BIGINT) AS n_at_risk FROM r),
-        |_ks AS (SELECT DISTINCT k FROM (
-        |  SELECT n_at_risk AS k FROM kk WHERE d > 0 AND d < n_at_risk
-        |  UNION SELECT n_at_risk - d FROM kk WHERE d > 0 AND d < n_at_risk)),
-        |""".stripMargin + graft.functions.FixedMath.lnCteSql + """,
-        |q AS (SELECT kk.t, kk.d, kk.c, kk.n_at_risk,
-        |    CASE WHEN kk.d = 0 THEN 0
-        |      WHEN kk.d = kk.n_at_risk THEN NULL
-        |      ELSE lnd.l - lnn.l END AS lq
-        |  FROM kk LEFT JOIN _lnq lnn ON lnn.k = kk.n_at_risk
-        |          LEFT JOIN _lnq lnd ON lnd.k = kk.n_at_risk - kk.d)
-        |SELECT t, d, c, n_at_risk,
-        |  CASE WHEN d = n_at_risk THEN NULL
-        |    ELSE CAST(SUM(lq) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |  END AS log_surv_q
-        |FROM q ORDER BY t""".stripMargin),
-
-    // Calendar-lag self-joins (gaps → NULL, never the previous
-    // OBSERVED day) over integer-tenk daily revenue; MASE one HUGEINT
-    // floor division.
-    "q230_seasonal_backtest" ->
-      """WITH daily AS (SELECT c_mktsegment AS k,
-        |    epoch_us(o_orderdate) // 86400000000 AS d,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) * 10000 AS BIGINT) AS v
-        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2),
-        |s AS (SELECT a.k, a.d, a.v, b.v AS vs, c.v AS vn
-        |  FROM daily a
-        |  LEFT JOIN daily b ON b.k = a.k AND b.d = a.d - 7
-        |  LEFT JOIN daily c ON c.k = a.k AND c.d = a.d - 1)
-        |SELECT k AS c_mktsegment, COUNT(*)::BIGINT AS n_days,
-        |  COUNT(vs)::BIGINT AS c_seasonal, COUNT(vn)::BIGINT AS c_naive,
-        |  COALESCE(CAST(SUM(ABS(v - vs)) AS BIGINT), 0) AS err_seasonal_tenk,
-        |  COALESCE(CAST(SUM(ABS(v - vn)) AS BIGINT), 0) AS err_naive_tenk,
-        |  CASE WHEN COUNT(vs) > 0 AND COUNT(vn) > 0
-        |      AND COALESCE(SUM(ABS(v - vn)), 0) > 0
-        |    THEN CAST((1000000::HUGEINT * CAST(SUM(ABS(v - vs)) AS HUGEINT)
-        |      * COUNT(vn)) // (CAST(SUM(ABS(v - vn)) AS HUGEINT)
-        |      * COUNT(vs)) AS BIGINT)
-        |  END AS mase_q6
-        |FROM s GROUP BY k ORDER BY k""".stripMargin,
-
-    // Distinct membership + capped baskets + self-join pair counts;
-    // every metric an exact HUGEINT floor division.
-    "q228_assoc_rules" ->
-      """WITH slim AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |  FROM lineitem),
-        |ok AS (SELECT b FROM slim GROUP BY b HAVING COUNT(*) <= 1000),
-        |m AS (SELECT s.b, s.i FROM slim s JOIN ok USING (b)),
-        |nb AS (SELECT COUNT(DISTINCT b)::BIGINT AS n FROM m),
-        |ic AS (SELECT i, COUNT(*)::BIGINT AS c FROM m GROUP BY i),
-        |p AS (SELECT a.i AS item_a, b2.i AS item_b, COUNT(*)::BIGINT AS c_ab
-        |  FROM m a JOIN m b2 ON a.b = b2.b AND a.i <> b2.i
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT item_a, item_b, ca.c AS c_a, cb.c AS c_b, c_ab,
-        |  nb.n AS n_baskets,
-        |  CAST((1000 * c_ab) // nb.n AS BIGINT) AS support_permille,
-        |  CAST((1000 * c_ab) // ca.c AS BIGINT) AS confidence_permille,
-        |  CAST((1000000::HUGEINT * c_ab * nb.n)
-        |    // (ca.c::HUGEINT * cb.c) AS BIGINT) AS lift_q6
-        |FROM p JOIN ic ca ON ca.i = item_a JOIN ic cb ON cb.i = item_b
-        |CROSS JOIN nb
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    // The batch window truth for the streaming bounded top-k — value
-    // DESC with event_id tie-break, exactly the state-store sort.
-    "q227_stream_topk" ->
-      """SELECT event_type, rn, value, event_id FROM (
-        |  SELECT event_type, value, event_id,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id) AS rn
-        |  FROM events WHERE value IS NOT NULL)
-        |WHERE rn <= 5 ORDER BY event_type, rn""".stripMargin,
-
-    // q201's life table with the additive estimator: each hazard
-    // increment is the exact HUGEINT floor (d·10¹²)//n (positive, so
-    // floor ≡ trunc ≡ Spark's DECIMAL DIV); the running sum is an
-    // exact BIGINT in both engines.
-    "q222_nelson_aalen" ->
-      """WITH
-        |life AS (
-        |  SELECT user_id,
-        |    MAX(epoch_us(ts) // 86400000000) - MIN(epoch_us(ts) // 86400000000) AS t,
-        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS evt
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT t, CAST(SUM(evt) AS BIGINT) AS d,
-        |    CAST(SUM(1 - evt) AS BIGINT) AS c
-        |  FROM life GROUP BY t),
-        |r AS (SELECT t, d, c,
-        |    SUM(d + c) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cum,
-        |    SUM(d + c) OVER () AS tot
-        |  FROM g),
-        |kk AS (SELECT t, d, c, CAST(tot - cum + d + c AS BIGINT) AS n_at_risk FROM r),
-        |h AS (SELECT t, d, c, n_at_risk,
-        |    CAST((CAST(d AS HUGEINT) * 1000000000000) // n_at_risk AS BIGINT) AS h_q12
-        |  FROM kk)
-        |SELECT t, d, c, n_at_risk, h_q12,
-        |  CAST(SUM(h_q12) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |    AS cum_hazard_q12
-        |FROM h ORDER BY t""".stripMargin,
-
-    // PSI via the shared integer log kernel: smoothed cross products
-    // (b+1)·nA' and (a+1)·nB' feed _lnq; each term and the sum are
-    // exact integers, one floor division at the end — the q199 shape.
-    // q205 = the same cells through the streaming state store: one
-    // truth, two engine paths (the q152/q200 discipline).
-    "q205_stream_psi" -> psiOracleSql,
-    "q202_psi_drift" -> psiOracleSql,
-    "q293_psi_by_cohort" -> psiByCohortOracleSql,
-
-    "q195_corpus_matrix" ->
-      """WITH sh AS (
-        |  SELECT source, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(1, strlen(lower(text)) - 4)),
-        |    i -> substring(lower(text), i, 5)))) AS s
-        |  FROM documents),
-        |d AS (SELECT DISTINCT source, s FROM sh),
-        |n AS (SELECT source, COUNT(*) AS n FROM d GROUP BY 1),
-        |pr AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    COUNT(*) AS inter
-        |  FROM d a JOIN d b ON a.s = b.s AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, na.n AS n_a, nb.n AS n_b, inter,
-        |  inter::DOUBLE / (na.n + nb.n - inter) AS jaccard
-        |FROM pr
-        |JOIN n na ON na.source = source_a
-        |JOIN n nb ON nb.source = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    // Integer Wilson (FixedMath.wilsonLbQ9 / isqrtCteSql): z = 49/25 as
-    // a RATIONAL — the round-9 form's `1.96` literal parses DOUBLE on
-    // DuckDB 1.0.x but DECIMAL(3,2) on newer builds, so `1.96*1.96`
-    // constant-folds to a different double and the hash flips on
-    // exactly the builds the builder can't test against. All integer
-    // ops + floor-isqrt; the derived doubles are single
-    // correctly-rounded divisions of exactly-representable values.
-    "q194_wilson_ranking" ->
-      ("""WITH RECURSIVE
-        |o AS (SELECT o_custkey, COUNT(*) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |c AS (SELECT c_mktsegment, COALESCE(n_ord, 0) AS n_ord
-        |  FROM customer LEFT JOIN o ON c_custkey = o_custkey),
-        |m AS (SELECT c_mktsegment, COUNT(*) AS trials,
-        |    CAST(SUM(CASE WHEN n_ord >= 10 THEN 1 ELSE 0 END) AS BIGINT) AS conversions
-        |  FROM c GROUP BY 1),
-        |_sa AS (SELECT c_mktsegment AS id,
-        |    CASE WHEN trials > 477525395
-        |      THEN CAST(error('q194 oracle: trials exceeds the HUGEINT radicand ceiling 477525395 (worst case s=n/2) - rescale or switch to the engine-side BigInteger path') AS HUGEINT)
-        |      ELSE CAST(2500 AS HUGEINT)
-        |      * (CAST(2500 AS HUGEINT) * conversions * (trials - conversions)
-        |         + CAST(2401 AS HUGEINT) * trials)
-        |      * trials * 1000000 END AS a
-        |  FROM m),
-        |""".stripMargin + graft.functions.FixedMath.isqrtCteSql + """
-        |SELECT m.c_mktsegment, m.trials, m.conversions,
-        |  CAST(m.conversions AS DOUBLE) / CAST(m.trials AS DOUBLE) AS rate,
-        |  CAST((CAST(62500000 AS HUGEINT) * m.conversions * m.trials
-        |      + CAST(120050000 AS HUGEINT) * m.trials
-        |      - CAST(49 AS HUGEINT) * i.r) * 1000000000
-        |    // (CAST(100000 AS HUGEINT) * m.trials
-        |        * (CAST(625 AS HUGEINT) * m.trials + 2401)) AS BIGINT) AS wilson_lb_q9,
-        |  CAST(CAST((CAST(62500000 AS HUGEINT) * m.conversions * m.trials
-        |      + CAST(120050000 AS HUGEINT) * m.trials
-        |      - CAST(49 AS HUGEINT) * i.r) * 1000000000
-        |    // (CAST(100000 AS HUGEINT) * m.trials
-        |        * (CAST(625 AS HUGEINT) * m.trials + 2401)) AS BIGINT) AS DOUBLE) / 1e9 AS wilson_lb
-        |FROM m JOIN _isq i ON i.id = m.c_mktsegment
-        |ORDER BY m.c_mktsegment""".stripMargin),
-
-    // q81's quantization replay feeding exact per-(label, dim) integer
-    // sums; dot/norms stay < 2^53 so the doubles are engine-identical
-    "q193_centroid_shift" ->
-      """WITH base AS (
-        |  SELECT label, embedding,
-        |    COALESCE(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 0.0) AS maxabs
-        |  FROM embeddings),
-        |qv AS (
-        |  SELECT label, list_transform(embedding, x -> CAST(floor(x::DOUBLE *
-        |      (CASE WHEN maxabs = 0.0 THEN 1.0 ELSE 127.0 / maxabs END) + 0.5) AS BIGINT)) AS q
-        |  FROM base),
-        |ex AS (SELECT label, unnest(range(1, len(q) + 1)) AS i, q FROM qv),
-        |sv AS (SELECT label, i AS pos, CAST(SUM(q[i]) AS BIGINT) AS v
-        |  FROM ex GROUP BY 1, 2),
-        |pr AS (
-        |  SELECT a.label AS label_a, b.label AS label_b,
-        |    CAST(SUM(a.v * b.v) AS DOUBLE) AS dot,
-        |    CAST(SUM(a.v * a.v) AS DOUBLE) AS na2,
-        |    CAST(SUM(b.v * b.v) AS DOUBLE) AS nb2
-        |  FROM sv a JOIN sv b ON a.label < b.label AND a.pos = b.pos
-        |  GROUP BY 1, 2)
-        |SELECT label_a, label_b, dot / (sqrt(na2) * sqrt(nb2)) AS cosine
-        |FROM pr ORDER BY label_a, label_b""".stripMargin,
-
-    "q192_trend_slopes" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS y
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT MIN(day) AS d0 FROM daily),
-        |m AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    SUM(day - d0) AS sx, SUM((day - d0) * (day - d0)) AS sx2,
-        |    SUM(y) AS sy, SUM(y * CAST(day - d0 AS DECIMAL(10,0))) AS sxy
-        |  FROM daily, b GROUP BY 1),
-        |d AS (
-        |  SELECT event_type, n,
-        |    CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-        |    CAST(sx2 AS DOUBLE) AS sx2d,
-        |    CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS syd,
-        |    CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS sxyd
-        |  FROM m),
-        |s AS (
-        |  SELECT event_type, n,
-        |    (nd * sxyd - sxd * syd) / (nd * sx2d - sxd * sxd) AS slope,
-        |    nd, sxd, syd
-        |  FROM d)
-        |SELECT event_type, n, slope,
-        |  (syd - slope * sxd) / nd AS intercept
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    // independent correlated formulation; ties collapse to MAX exactly
-    // like the exec's last-in-sort-order match
-    "q191_asof_native" ->
-      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, epoch_us(ts) AS pus
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT c.user_id, c.event_id, c.us,
-        |  (SELECT MAX(pus) FROM p
-        |   WHERE p.user_id = c.user_id AND p.pus <= c.us) AS prev_purchase_us
-        |FROM c ORDER BY user_id, event_id""".stripMargin,
-
-    "q190_bloom_join" ->
-      """SELECT s_suppkey, s_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE s_acctbal > 9000
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    "q214_benford_audit" -> benfordSql,
-    // q279 = q214's digit cells through the streaming state store (one
-    // relational truth, two engine paths — the q152/q272 discipline)
-    "q279_stream_benford" -> benfordSql,
-
-    "q187_fd_violations" ->
-      """SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS n_dep,
-        |  COUNT(*) AS n_rows,
-        |  MIN(l_suppkey) AS dep_min, MAX(l_suppkey) AS dep_max
-        |FROM lineitem GROUP BY l_partkey
-        |HAVING COUNT(DISTINCT l_suppkey) > 1
-        |ORDER BY l_partkey""".stripMargin,
-
-    "q188_pattern_negation" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us FROM events),
-        |r AS (SELECT user_id, event_id, event_type, us,
-        |    MAX(CASE WHEN event_type = 'view' THEN us END)
-        |      OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt,
-        |    MAX(CASE WHEN event_type = 'click' THEN us END)
-        |      OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lb
-        |  FROM e)
-        |SELECT user_id, event_id, us AS conv_us, lt AS trigger_us
-        |FROM r
-        |WHERE event_type = 'purchase' AND lt IS NOT NULL
-        |  AND (lb IS NULL OR lb < lt)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q186_longest_streak" ->
-      """WITH d AS (SELECT DISTINCT user_id,
-        |    epoch_us(ts) // 86400000000 AS day FROM events),
-        |i AS (SELECT user_id, day,
-        |    day - dense_rank() OVER (PARTITION BY user_id ORDER BY day) AS isl
-        |  FROM d),
-        |g AS (SELECT user_id, isl, COUNT(*) AS len, MIN(day) AS strt
-        |  FROM i GROUP BY 1, 2)
-        |SELECT user_id, len AS streak_days, strt AS streak_start_day,
-        |  n_islands
-        |FROM (
-        |  SELECT user_id, len, strt,
-        |    COUNT(*) OVER (PARTITION BY user_id) AS n_islands,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY len DESC, strt) AS rn
-        |  FROM g) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    // q183's discipline with ASC order: the window truth gates the
-    // streaming-state path
-    "q185_stream_first_n" ->
-      """SELECT user_id, CAST(rn AS BIGINT) AS rn, ts_us, event_id
-        |FROM (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS rn
-        |  FROM events)
-        |WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-
-    "q213_entity_resolution" ->
-      """WITH RECURSIVE
-        |p AS (SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
-        |  FROM customer a JOIN customer b ON a.c_nationkey = b.c_nationkey
-        |    AND a.c_custkey < b.c_custkey
-        |  WHERE levenshtein(a.c_name, b.c_name) <= 1),
-        |edges AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach(s, d) AS (SELECT s, d FROM edges
-        |  UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-        |minr AS (SELECT s AS id, least(s, min(d)) AS cid FROM reach GROUP BY s),
-        |ent AS (SELECT c.c_custkey, c.c_name, c.c_acctbal,
-        |    COALESCE(m.cid, c.c_custkey) AS entity_id
-        |  FROM customer c LEFT JOIN minr m ON m.id = c.c_custkey)
-        |SELECT entity_id, COUNT(*)::BIGINT AS n_records,
-        |  min_by(c_name, c_custkey) AS canonical_name,
-        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE)
-        |    AS total_acctbal
-        |FROM ent GROUP BY entity_id ORDER BY entity_id""".stripMargin,
-
-    "q184_record_linkage" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a
-        |JOIN customer b ON a.c_nationkey = b.c_nationkey
-        |  AND a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // the window formulation IS the oracle for the native aggregate
-    "q183_topk_native" ->
-      """SELECT l_returnflag, CAST(rn AS BIGINT) AS rn,
-        |  l_extendedprice, l_orderkey
-        |FROM (
-        |  SELECT l_returnflag, l_extendedprice, l_orderkey,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey) AS rn
-        |  FROM lineitem)
-        |WHERE rn <= 5 ORDER BY l_returnflag, rn""".stripMargin,
-
-    "q182_weighted_quantiles" ->
-      """WITH g AS (
-        |  SELECT l_returnflag, l_extendedprice AS v,
-        |    SUM(CAST(l_quantity AS BIGINT)) AS w
-        |  FROM lineitem GROUP BY 1, 2),
-        |c AS (
-        |  SELECT l_returnflag, v, w,
-        |    SUM(w) OVER (PARTITION BY l_returnflag) AS tw,
-        |    SUM(w) OVER (PARTITION BY l_returnflag ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM g)
-        |SELECT l_returnflag,
-        |  MIN(CASE WHEN cum * 2 >= tw THEN v END) AS p50_weighted,
-        |  MIN(CASE WHEN cum * 10 >= tw * 9 THEN v END) AS p90_weighted
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // same exact-DECIMAL moments, same IEEE double expressions — an
-    // independent engine must land on the identical bits
-    "q181_ab_ttest" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS x
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id),
-        |a AS (
-        |  SELECT user_id % 2 AS arm, COUNT(*) AS n, SUM(x) AS s1,
-        |    SUM(x * x) AS s2
-        |  FROM u GROUP BY 1),
-        |w AS (
-        |  SELECT
-        |    MAX(CASE WHEN arm = 0 THEN n END) AS n0,
-        |    MAX(CASE WHEN arm = 0 THEN s1 END) AS s1_0,
-        |    MAX(CASE WHEN arm = 0 THEN s2 END) AS s2_0,
-        |    MAX(CASE WHEN arm = 1 THEN n END) AS n1,
-        |    MAX(CASE WHEN arm = 1 THEN s1 END) AS s1_1,
-        |    MAX(CASE WHEN arm = 1 THEN s2 END) AS s2_1
-        |  FROM a),
-        |-- decimal→double via VARCHAR: DuckDB's direct decimal cast is
-        |-- not correctly rounded (hugeint/10^s as two float ops); the
-        |-- string round-trip is, matching Java BigDecimal.doubleValue
-        |d AS (
-        |  SELECT n0, n1,
-        |    CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) / CAST(n0 AS DOUBLE) AS mean0,
-        |    CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) / CAST(n1 AS DOUBLE) AS mean1,
-        |    (CAST(CAST(s2_0 AS VARCHAR) AS DOUBLE) - CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) * CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) / CAST(n0 AS DOUBLE))
-        |      / (CAST(n0 AS DOUBLE) - 1.0) AS var0,
-        |    (CAST(CAST(s2_1 AS VARCHAR) AS DOUBLE) - CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) * CAST(CAST(s1_1 AS VARCHAR) AS DOUBLE) / CAST(n1 AS DOUBLE))
-        |      / (CAST(n1 AS DOUBLE) - 1.0) AS var1
-        |  FROM w)
-        |SELECT n0, n1, mean0, mean1, var0, var1,
-        |  (mean1 - mean0) / sqrt(var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE)) AS t_stat,
-        |  (var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE))
-        |    * (var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE))
-        |    / ((var0 / CAST(n0 AS DOUBLE)) * (var0 / CAST(n0 AS DOUBLE)) / (CAST(n0 AS DOUBLE) - 1.0)
-        |      + (var1 / CAST(n1 AS DOUBLE)) * (var1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) AS df_welch
-        |FROM d""".stripMargin,
-
-    // the quadratic dominance truth the engine's window formulation
-    // must reproduce exactly (incl. duplicate-point survival)
-    "q180_skyline" ->
-      """SELECT p_partkey, p_retailprice, p_size FROM part p
-        |WHERE NOT EXISTS (SELECT 1 FROM part q
-        |  WHERE q.p_retailprice <= p.p_retailprice
-        |    AND q.p_size >= p.p_size
-        |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        |ORDER BY p_retailprice, p_partkey""".stripMargin,
-
-    // unfiltered pairwise truth: the engine's prefix filter must lose
-    // NOTHING relative to this
-    // q207 = q178's truth on collapsed exact-duplicate groups: reps by
-    // min doc_id per distinct shingle set, pairwise over reps only,
-    // intra-group multiplicity rows carry the clone pairs.
-    "q207_setsim_collapsed" ->
-      """WITH tk AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
-        |    i -> substring(lower(text), i, 12)))) AS tok
-        |  FROM documents),
-        |ds AS (SELECT doc_id, list_sort(list(tok)) AS toks
-        |  FROM tk GROUP BY doc_id),
-        |g AS (SELECT toks, MIN(doc_id) AS id, COUNT(*) AS n
-        |  FROM ds GROUP BY toks),
-        |pr AS (SELECT a.id AS id_a, b.id AS id_b,
-        |    len(list_intersect(a.toks, b.toks)) AS inter,
-        |    len(a.toks) AS sa, len(b.toks) AS sb,
-        |    a.n AS n_a, b.n AS n_b
-        |  FROM g a JOIN g b ON a.id < b.id),
-        |interg AS (SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-        |    inter::DOUBLE / (sa + sb - inter) AS jaccard,
-        |    CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |    CAST(n_a * n_b AS BIGINT) AS n_pairs
-        |  FROM pr WHERE inter::DOUBLE / (sa + sb - inter) >= 0.8),
-        |intrag AS (SELECT id AS id_a, id AS id_b,
-        |    CAST(len(toks) AS BIGINT) AS inter, 1.0::DOUBLE AS jaccard,
-        |    CAST(n AS BIGINT) AS n_a, CAST(n AS BIGINT) AS n_b,
-        |    CAST(n * (n - 1) // 2 AS BIGINT) AS n_pairs
-        |  FROM g WHERE n > 1)
-        |SELECT * FROM (SELECT * FROM interg UNION ALL SELECT * FROM intrag)
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // q212 = the same three integer counts and the single-division
-    // grade; CASE w=0 mirrors the engine's NULL for wordless docs.
-    "q212_readability" ->
-      """WITH base AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(COALESCE(text, '')),
-        |      '[^a-z0-9'']+'), x -> length(x) > 0) AS ws,
-        |    list_filter(string_split_regex(lower(COALESCE(text, '')),
-        |      '[.!?]+'), s -> regexp_matches(s, '[a-z0-9]')) AS sents
-        |  FROM documents),
-        |c AS (SELECT doc_id, len(ws)::BIGINT AS w, len(sents)::BIGINT AS s,
-        |    COALESCE(list_sum(list_transform(ws,
-        |      x -> greatest(1, len(regexp_extract_all(x, '[aeiouy]+'))))),
-        |      0)::BIGINT AS y
-        |  FROM base)
-        |SELECT doc_id, w AS n_words, s AS n_sentences, y AS n_syllables,
-        |  CASE WHEN w = 0 THEN NULL ELSE
-        |    (39*w*w + 1180*y*s - 1559*s*w)::DOUBLE / (100*s*w) END AS fk_grade
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // q209 = the unfiltered pairwise containment truth: directed pairs,
-    // containment = inter / |A| over distinct 12-char shingles, one
-    // IEEE division of exact integers (engine-identical).
-    "q209_containment_join" ->
-      """WITH tk AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
-        |    i -> substring(lower(text), i, 12)))) AS tok
-        |  FROM documents),
-        |sz AS (SELECT doc_id, COUNT(*) AS s FROM tk GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        |  FROM tk a JOIN tk b ON a.tok = b.tok AND a.doc_id != b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-        |  inter::DOUBLE / sa.s AS containment
-        |FROM pr JOIN sz sa ON sa.doc_id = id_a
-        |WHERE inter::DOUBLE / sa.s >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q178_setsim_join" ->
-      """WITH tk AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(1, strlen(lower(text)) - 11)),
-        |    i -> substring(lower(text), i, 12)))) AS tok
-        |  FROM documents),
-        |sz AS (SELECT doc_id, COUNT(*) AS s FROM tk GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        |  FROM tk a JOIN tk b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-        |  inter::DOUBLE / (sa.s + sb.s - inter) AS jaccard
-        |FROM pr
-        |JOIN sz sa ON sa.doc_id = id_a
-        |JOIN sz sb ON sb.doc_id = id_b
-        |WHERE inter::DOUBLE / (sa.s + sb.s - inter) >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q176_trailing_revenue" ->
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |    SUM(CAST(value AS DECIMAL(18,4))) AS rev
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1)
-        |SELECT day, CAST(SUM(rev) OVER (ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev_7d
-        |FROM d ORDER BY day""".stripMargin,
-
-    "q177_partitioned_scan" ->
-      """WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day, value FROM events),
-        |b AS (SELECT MIN(day) + 7 AS lo FROM e)
-        |SELECT day, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS rev
-        |FROM e, b WHERE day BETWEEN lo AND lo + 6
-        |GROUP BY day ORDER BY day""".stripMargin,
-
-    // q221 = q174's sessionization with the dyadic 2^(-days) split:
-    // num = 1 << (30 - min(30, days)), floor division via pmod,
-    // remainder to the latest touches — all exact integers.
-    "q221_timedecay_attribution" ->
-      """WITH e0 AS (
-        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |e AS (
-        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 604800000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e0),
-        |conv AS (SELECT user_id, sid, us AS pus, event_id AS pord,
-        |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vt
-        |  FROM e WHERE event_type = 'purchase'),
-        |t AS (SELECT c.user_id, c.sid, c.pord, c.pus, c.vt, e.us, e.event_id, e.event_type
-        |  FROM conv c JOIN e ON e.user_id = c.user_id AND e.sid = c.sid
-        |    AND (e.us < c.pus OR (e.us = c.pus AND e.event_id < c.pord))),
-        |r AS (SELECT *,
-        |    (1::BIGINT << CAST(30 - least(30, (pus - us) // 86400000000) AS INT)) AS num
-        |  FROM t),
-        |r2 AS (SELECT *,
-        |    SUM(num) OVER (PARTITION BY user_id, sid, pord) AS den,
-        |    row_number() OVER (PARTITION BY user_id, sid, pord
-        |      ORDER BY us DESC, event_id DESC) AS rk
-        |  FROM r),
-        |r3 AS (SELECT *,
-        |    (vt*num - (((vt*num) % den) + den) % den) // den AS base
-        |  FROM r2),
-        |r4 AS (SELECT *,
-        |    SUM(base) OVER (PARTITION BY user_id, sid, pord) AS sb
-        |  FROM r3),
-        |cr AS (SELECT event_type,
-        |    base + CASE WHEN rk <= vt - sb THEN 1 ELSE 0 END AS credit FROM r4),
-        |selfc AS (SELECT 'purchase' AS event_type, vt AS credit FROM conv c
-        |  WHERE NOT EXISTS (SELECT 1 FROM t
-        |    WHERE t.user_id = c.user_id AND t.sid = c.sid AND t.pord = c.pord))
-        |SELECT event_type, COUNT(*) AS n_credits,
-        |  CAST(SUM(credit) AS BIGINT) AS credit_tenk
-        |FROM (SELECT * FROM cr UNION ALL SELECT * FROM selfc)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q174_linear_attribution" ->
-      """WITH e0 AS (
-        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |e AS (
-        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e0),
-        |conv AS (SELECT user_id, sid, us AS pus, event_id AS pord,
-        |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vt
-        |  FROM e WHERE event_type = 'purchase'),
-        |t AS (SELECT c.user_id, c.sid, c.pord, c.vt, e.us, e.event_id, e.event_type
-        |  FROM conv c JOIN e ON e.user_id = c.user_id AND e.sid = c.sid
-        |    AND (e.us < c.pus OR (e.us = c.pus AND e.event_id < c.pord))),
-        |r AS (SELECT *,
-        |    row_number() OVER (PARTITION BY user_id, sid, pord ORDER BY us, event_id) AS rk,
-        |    COUNT(*) OVER (PARTITION BY user_id, sid, pord) AS n
-        |  FROM t),
-        |cr AS (SELECT event_type, (vt - ((vt % n) + n) % n) // n
-        |    + CASE WHEN rk <= ((vt % n) + n) % n THEN 1 ELSE 0 END AS credit FROM r),
-        |selfc AS (SELECT 'purchase' AS event_type, vt AS credit FROM conv c
-        |  WHERE NOT EXISTS (SELECT 1 FROM t
-        |    WHERE t.user_id = c.user_id AND t.sid = c.sid AND t.pord = c.pord))
-        |SELECT event_type, COUNT(*) AS n_credits,
-        |  CAST(SUM(credit) AS BIGINT) AS credit_tenk
-        |FROM (SELECT * FROM cr UNION ALL SELECT * FROM selfc)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q170_corpus_jaccard" ->
-      """WITH sh AS (
-        |  SELECT source, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(1, strlen(lower(text)) - 4)),
-        |    i -> substring(lower(text), i, 5)))) AS s
-        |  FROM documents WHERE source IN ('src0', 'src1')),
-        |g AS (SELECT s,
-        |    MAX(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ina,
-        |    MAX(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS inb
-        |  FROM sh GROUP BY s)
-        |SELECT CAST(SUM(ina) AS BIGINT) AS n_a, CAST(SUM(inb) AS BIGINT) AS n_b,
-        |  CAST(SUM(ina * inb) AS BIGINT) AS n_inter,
-        |  CAST(COUNT(*) AS BIGINT) AS n_union,
-        |  CAST(SUM(ina * inb) AS BIGINT)::DOUBLE / COUNT(*) AS jaccard
-        |FROM g ORDER BY n_a""".stripMargin,
-
-    "q171_funnel_windowed" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2 FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
-        |    AND epoch_us(e.ts) <= s1.t1 + 3600000000 GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t3 FROM events e
-        |  JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2
-        |    AND epoch_us(e.ts) <= s2.t2 + 3600000000 GROUP BY e.user_id)
-        |SELECT u.user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us,
-        |  (CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-        |        WHEN t1 IS NOT NULL THEN 1 ELSE 0 END)::INT AS step_reached
-        |FROM (SELECT DISTINCT user_id FROM events) u
-        |LEFT JOIN s1 ON u.user_id = s1.user_id
-        |LEFT JOIN s2 ON u.user_id = s2.user_id
-        |LEFT JOIN s3 ON u.user_id = s3.user_id
-        |ORDER BY u.user_id""".stripMargin,
-
-    // independent correlated formulation of the engine's two-direction
-    // union+window nearest join
-    "q172_asof_nearest" ->
-      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        |  WHERE event_type = 'click'),
-        |p AS (SELECT user_id, epoch_us(ts) AS pus FROM events
-        |  WHERE event_type = 'purchase'),
-        |b AS (SELECT c.user_id, c.event_id, c.us, MAX(p.pus) AS bt
-        |  FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pus <= c.us
-        |  GROUP BY c.user_id, c.event_id, c.us),
-        |f AS (SELECT c.user_id, c.event_id, MIN(p.pus) AS ft
-        |  FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pus > c.us
-        |  GROUP BY c.user_id, c.event_id)
-        |SELECT b.user_id, b.event_id, b.us,
-        |  CASE WHEN b.bt IS NOT NULL AND b.us - b.bt <= 600000000
-        |         AND (f.ft IS NULL OR b.us - b.bt <= f.ft - b.us) THEN b.bt
-        |       WHEN f.ft IS NOT NULL AND f.ft - b.us <= 600000000 THEN f.ft
-        |  END AS nearest_us
-        |FROM b JOIN f ON b.user_id = f.user_id AND b.event_id = f.event_id
-        |ORDER BY b.user_id, b.event_id""".stripMargin,
-
-    "q167_pit_enrich" ->
-      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
-        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
-        |    MIN(epoch_us(o_orderdate)) AS ver
-        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
-        |all_v AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
-        |h AS (SELECT c_custkey, segment, ver AS valid_from,
-        |    lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) AS valid_to
-        |  FROM all_v),
-        |o AS (SELECT o_orderkey, o_custkey AS c_custkey, epoch_us(o_orderdate) AS us
-        |  FROM orders)
-        |SELECT o.o_orderkey, h.segment
-        |FROM o JOIN h USING (c_custkey)
-        |WHERE o.us >= h.valid_from AND (h.valid_to IS NULL OR o.us < h.valid_to)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q168_stream_enrich" ->
-      """WITH dim AS (
-        |  SELECT user_id,
-        |    CASE WHEN COUNT(*) >= 20 THEN 'whale'
-        |         WHEN COUNT(*) >= 10 THEN 'regular'
-        |         ELSE 'light' END AS tier
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id)
-        |SELECT COALESCE(d.tier, 'none') AS tier, e.event_type, COUNT(*) AS n
-        |FROM events e LEFT JOIN dim d USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // q175 = q163's semantics with the update side folded through
-    // streaming state: one relational truth, two engine paths
-    "q175_stream_upsert" ->
-      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
-        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
-        |    MIN(epoch_us(o_orderdate)) AS ver
-        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
-        |a AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) AS rn FROM a)
-        |SELECT c_custkey, segment, ver FROM r WHERE rn = 1
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q163_upsert_latest" ->
-      """WITH base AS (SELECT c_custkey, c_mktsegment AS segment, 0::BIGINT AS ver FROM customer),
-        |upd AS (SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
-        |    MIN(epoch_us(o_orderdate)) AS ver
-        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
-        |a AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) AS rn FROM a)
-        |SELECT c_custkey, segment, ver FROM r WHERE rn = 1
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q143_constraint_report" ->
-      """WITH a AS (SELECT COUNT(*) AS n, COUNT(text) AS ct,
-        |    COUNT(DISTINCT doc_id) AS cd,
-        |    SUM(CASE WHEN n_chars >= 0 THEN 1 ELSE 0 END) AS cn,
-        |    SUM(CASE WHEN lang IN ('en','de','fr','es','zh') THEN 1 ELSE 0 END) AS cl,
-        |    SUM(CASE WHEN length(text) > 0 THEN 1 ELSE 0 END) AS ce,
-        |    SUM(n_chars) AS sc
-        |  FROM documents)
-        |SELECT * FROM (
-        |  SELECT 'complete_text' AS "constraint", CAST(ct AS BIGINT) AS observed,
-        |    CAST(n AS BIGINT) AS expected, ct = n AS passed FROM a
-        |  UNION ALL SELECT 'unique_doc_id', CAST(cd AS BIGINT), CAST(n AS BIGINT), cd = n FROM a
-        |  UNION ALL SELECT 'nonneg_n_chars', CAST(cn AS BIGINT), CAST(n AS BIGINT), cn = n FROM a
-        |  UNION ALL SELECT 'lang_in_domain', CAST(cl AS BIGINT), CAST(n AS BIGINT), cl = n FROM a
-        |  UNION ALL SELECT 'text_nonempty', CAST(ce AS BIGINT), CAST(n AS BIGINT), ce = n FROM a
-        |  UNION ALL SELECT 'sum_chars_floor', CAST(sc AS BIGINT), CAST(n * 100 AS BIGINT), sc >= n * 100 FROM a
-        |) ORDER BY "constraint"""".stripMargin,
-
-    "q144_scd2_history" ->
-      """WITH base AS (
-        |  SELECT c_custkey, c_mktsegment AS segment, CAST(0 AS BIGINT) AS ver
-        |  FROM customer),
-        |upd AS (
-        |  SELECT o_custkey AS c_custkey, 'URGENT_BUYER' AS segment,
-        |    MIN(epoch_us(o_orderdate)) AS ver
-        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
-        |all_v AS (SELECT * FROM base UNION ALL SELECT * FROM upd)
-        |SELECT c_custkey, segment, ver AS valid_from,
-        |  lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) AS valid_to,
-        |  lead(ver) OVER (PARTITION BY c_custkey ORDER BY ver) IS NULL AS is_current
-        |FROM all_v ORDER BY c_custkey, valid_from""".stripMargin,
-
-    "q149_constraints_by_source" ->
-      """WITH a AS (SELECT source, COUNT(*) AS n, COUNT(text) AS ct,
-        |    COUNT(DISTINCT doc_id) AS cd,
-        |    SUM(CASE WHEN n_chars >= 0 THEN 1 ELSE 0 END) AS cn,
-        |    SUM(CASE WHEN lang IN ('en','de','fr','es','zh') THEN 1 ELSE 0 END) AS cl,
-        |    SUM(CASE WHEN length(text) > 0 THEN 1 ELSE 0 END) AS ce,
-        |    SUM(n_chars) AS sc
-        |  FROM documents GROUP BY source)
-        |SELECT * FROM (
-        |  SELECT source, 'complete_text' AS "constraint", CAST(ct AS BIGINT) AS observed,
-        |    CAST(n AS BIGINT) AS expected, ct = n AS passed FROM a
-        |  UNION ALL SELECT source, 'unique_doc_id', CAST(cd AS BIGINT), CAST(n AS BIGINT), cd = n FROM a
-        |  UNION ALL SELECT source, 'nonneg_n_chars', CAST(cn AS BIGINT), CAST(n AS BIGINT), cn = n FROM a
-        |  UNION ALL SELECT source, 'lang_in_domain', CAST(cl AS BIGINT), CAST(n AS BIGINT), cl = n FROM a
-        |  UNION ALL SELECT source, 'text_nonempty', CAST(ce AS BIGINT), CAST(n AS BIGINT), ce = n FROM a
-        |  UNION ALL SELECT source, 'sum_chars_floor', CAST(sc AS BIGINT), CAST(n * 100 AS BIGINT), sc >= n * 100 FROM a
-        |) ORDER BY source, "constraint"""".stripMargin,
-
-    // q152 = q148's statistic with the cells built through streaming
-    // state: one relational truth, two engine paths (q116 discipline)
-    "q152_stream_chisq" -> chisqDriftSql,
-    "q148_chisq_drift" -> chisqDriftSql,
-
-    "q156_first_touch" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e),
-        |r AS (SELECT user_id, sid, event_type,
-        |    row_number() OVER (PARTITION BY user_id, sid ORDER BY us, event_id) AS rn
-        |  FROM s),
-        |f AS (SELECT user_id, sid, event_type AS first_type FROM r WHERE rn = 1),
-        |c AS (SELECT user_id, sid, COUNT(*) AS nc,
-        |    SUM(CAST(value AS DECIMAL(18,4))) AS rev
-        |  FROM s WHERE event_type = 'purchase' GROUP BY user_id, sid)
-        |SELECT f.first_type, CAST(SUM(c.nc) AS BIGINT) AS n_conversions,
-        |  CAST(CAST(SUM(c.rev) AS VARCHAR) AS DOUBLE) AS revenue
-        |FROM c JOIN f USING (user_id, sid)
-        |GROUP BY f.first_type ORDER BY f.first_type""".stripMargin,
-
-    "q157_also_bought" ->
-      """WITH e0 AS (SELECT l_orderkey AS g, l_partkey AS i FROM lineitem),
-        |ok AS (SELECT g, i FROM e0 WHERE g NOT IN (
-        |  SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 1000)),
-        |d AS (SELECT DISTINCT g, i FROM ok),
-        |pc AS (SELECT a.i AS src, b.i AS dst, COUNT(*) AS n_both
-        |  FROM d a JOIN d b ON a.g = b.g AND a.i <> b.i GROUP BY a.i, b.i),
-        |ic AS (SELECT i, COUNT(*) AS n FROM d GROUP BY i),
-        |sc AS (SELECT src, dst, n_both,
-        |  CAST((n_both::HUGEINT * n_both * 1000000) // (ia.n::HUGEINT * ib.n) AS BIGINT) AS score
-        |  FROM pc JOIN ic ia ON ia.i = pc.src JOIN ic ib ON ib.i = pc.dst),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY score DESC, dst) AS rank
-        |  FROM sc)
-        |SELECT src AS item, dst AS nbr, n_both, score, CAST(rank AS INT) AS rank
-        |FROM r WHERE rank <= 3 ORDER BY item, rank""".stripMargin,
-
-    // q158's merged parquet state must equal the full recompute — the
-    // oracle IS the full recompute (count + DECIMAL-exact sum).
-    "q158_agg_state_merge" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS val_sum
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q162_triangles" ->
-      """WITH e0 AS (SELECT l_orderkey AS g, l_partkey AS i FROM lineitem),
-        |ok AS (SELECT g, i FROM e0 WHERE g NOT IN (
-        |  SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 1000)),
-        |c AS (SELECT DISTINCT least(x.i, y.i) AS a, greatest(x.i, y.i) AS b
-        |  FROM ok x JOIN ok y ON x.g = y.g AND x.i <> y.i),
-        |nd AS (SELECT COUNT(DISTINCT n) AS n_nodes FROM (
-        |  SELECT a AS n FROM c UNION ALL SELECT b FROM c)),
-        |ed AS (SELECT COUNT(*) AS n_edges FROM c),
-        |tri AS (SELECT COUNT(*) AS n_triangles FROM c e1
-        |  JOIN c e2 ON e2.a = e1.a AND e2.b > e1.b
-        |  JOIN c e3 ON e3.a = e1.b AND e3.b = e2.b)
-        |SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-        |  CAST(n_edges AS BIGINT) AS n_edges,
-        |  CAST(n_triangles AS BIGINT) AS n_triangles
-        |FROM nd, ed, tri""".stripMargin,
-
-    "q159_skew_report" ->
-      """WITH c AS (SELECT l_partkey AS k, COUNT(*) AS n FROM lineitem GROUP BY l_partkey)
-        |SELECT COUNT(*) AS n_keys, MAX(n) AS max_size,
-        |  ROUND(quantile_cont(n, 0.5), 4) AS p50_size,
-        |  ROUND(quantile_cont(n, 0.9), 4) AS p90_size,
-        |  ROUND(quantile_cont(n, 0.99), 4) AS p99_size,
-        |  (SELECT k FROM c ORDER BY n DESC, k LIMIT 1) AS top_key,
-        |  (SELECT n FROM c ORDER BY n DESC, k LIMIT 1) AS top_size
-        |FROM c""".stripMargin,
-
-    "q160_session_paths" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT *, SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e),
-        |p AS (SELECT array_to_string((list(event_type ORDER BY us, event_id))[1:8], '>') AS path
-        |  FROM s GROUP BY user_id, sid)
-        |SELECT path, COUNT(*) AS n_sessions FROM p
-        |GROUP BY path ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-
-    "q145_ks_drift" ->
-      """WITH s AS (
-        |  SELECT value, CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS f
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |v AS (SELECT value, SUM(1 - f) AS c1, SUM(f) AS c2 FROM s GROUP BY value),
-        |t AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2 FROM v),
-        |c AS (SELECT SUM(c1) OVER (ORDER BY value) AS cum1,
-        |             SUM(c2) OVER (ORDER BY value) AS cum2 FROM v)
-        |SELECT n1, n2,
-        |  CAST(MAX(ABS(cum1 * n2 - cum2 * n1)) AS BIGINT) AS ks_num,
-        |  CAST(MAX(ABS(cum1 * n2 - cum2 * n1)) AS BIGINT)::DOUBLE
-        |    / (n1 * n2)::DOUBLE AS ks
-        |FROM c, t GROUP BY n1, n2""".stripMargin,
-
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4)) AS DOUBLE) AS disc_amount
-        |FROM lineitem WHERE l_quantity > 30 AND l_discount >= 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q03_revenue_by_nation" ->
-      """SELECT r_name, n_name,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "q04_topk_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q05_distinct_segments" ->
-      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-
-    "q06_window_rank" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INT) AS rn
-        |  FROM orders) t WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "q07_window_lag" ->
-      """SELECT o_custkey, o_orderkey,
-        |  COALESCE(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 0.0) AS prev_price
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q08_rollup_counts" ->
-      """SELECT COALESCE(c_mktsegment, 'ALL') AS segment, COUNT(*) AS n,
-        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_bal
-        |FROM customer GROUP BY ROLLUP(c_mktsegment) ORDER BY segment""".stripMargin,
-
-    "q09_union_priority" ->
-      """SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |UNION
-        |SELECT o_orderkey FROM orders WHERE o_totalprice > 300000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q10_intersect_except" ->
-      """(SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        | INTERSECT
-        | SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_totalprice > 400000
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q11_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q12_semi_join" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 350000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q13_scalar_funcs" ->
-      """SELECT p_partkey,
-        |  UPPER(p_brand) AS brand_u,
-        |  SUBSTRING(p_name, 1, 8) AS name_prefix,
-        |  CONCAT_WS('/', p_brand, p_type) AS brand_type,
-        |  CAST(LENGTH(p_name) AS BIGINT) AS name_len,
-        |  CAST(ABS(p_size - 25) AS BIGINT) AS size_dist,
-        |  CAST(ROUND(CAST(p_retailprice AS DECIMAL(18,2)) * 2, 2) AS DOUBLE) AS double_price
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q14_conditional_agg" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_finished,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
-        |  COUNT(*) AS n_total
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q15_above_avg" ->
-      """SELECT p_partkey, p_retailprice FROM part
-        |WHERE CAST(p_retailprice AS DECIMAL(18,2)) * (SELECT COUNT(*) FROM part)
-        |      > (SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2))) FROM part)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q16_having" ->
-      """SELECT o_custkey, COUNT(*) AS n_orders,
-        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_spent
-        |FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 3
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q17_events_minutely" ->
-      """SELECT CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) AS minute_bucket,
-        |  event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q18_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, us,
-        |    SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM e)
-        |SELECT user_id, CAST(session_id AS INT) AS session_id, COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-
-    "q19_asof_prev_purchase" ->
-      """SELECT user_id, event_id,
-        |  MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-        |    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_purchase_us
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "q20_dedup_exact" ->
-      """SELECT md5(text) AS digest, MIN(doc_id) AS keep_id, COUNT(*) AS dup_count
-        |FROM documents GROUP BY md5(text) ORDER BY digest""".stripMargin,
-
-    "q21_dedup_keep" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY md5(text))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q22_text_stats" ->
-      """WITH w AS (
-        |  SELECT doc_id, w FROM documents,
-        |    unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
-        |  WHERE w <> ''),
-        |tok AS (
-        |  SELECT doc_id, tk FROM documents,
-        |    unnest(regexp_split_to_array(text, '\s+')) AS t(tk)
-        |  WHERE tk <> '')
-        |SELECT d.doc_id,
-        |  CAST(LENGTH(d.text) AS BIGINT) AS n_chars,
-        |  (SELECT COUNT(*) FROM tok WHERE tok.doc_id = d.doc_id) AS n_tokens,
-        |  (SELECT COUNT(*) FROM w WHERE w.doc_id = d.doc_id) AS n_words,
-        |  (SELECT COUNT(DISTINCT w) FROM w WHERE w.doc_id = d.doc_id) AS n_unique_words
-        |FROM documents d ORDER BY d.doc_id""".stripMargin,
-
-    "q23_langid" ->
-      """WITH w AS (
-        |  SELECT doc_id, w FROM documents,
-        |    unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
-        |  WHERE w <> ''),
-        |h AS (
-        |  SELECT doc_id,
-        |    SUM(CASE WHEN w IN ('der','die','das','und','ist','nicht','ein','eine','zu','mit') THEN 1 ELSE 0 END) AS h_de,
-        |    SUM(CASE WHEN w IN ('the','and','of','to','in','is','that','it','was','for') THEN 1 ELSE 0 END) AS h_en,
-        |    SUM(CASE WHEN w IN ('el','la','los','las','y','es','un','una','que','por') THEN 1 ELSE 0 END) AS h_es,
-        |    SUM(CASE WHEN w IN ('le','la','les','et','est','une','un','que','pour','dans') THEN 1 ELSE 0 END) AS h_fr,
-        |    SUM(CASE WHEN w IN ('il','la','di','e','che','un','una','per','non','sono') THEN 1 ELSE 0 END) AS h_it,
-        |    SUM(CASE WHEN w IN ('de','het','een','en','van','is','dat','niet','met','op') THEN 1 ELSE 0 END) AS h_nl
-        |  FROM w GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CASE
-        |    WHEN h.doc_id IS NULL OR GREATEST(h_de,h_en,h_es,h_fr,h_it,h_nl) = 0 THEN 'und'
-        |    WHEN h_de >= GREATEST(h_en,h_es,h_fr,h_it,h_nl) THEN 'de'
-        |    WHEN h_en >= GREATEST(h_es,h_fr,h_it,h_nl) THEN 'en'
-        |    WHEN h_es >= GREATEST(h_fr,h_it,h_nl) THEN 'es'
-        |    WHEN h_fr >= GREATEST(h_it,h_nl) THEN 'fr'
-        |    WHEN h_it >= h_nl THEN 'it'
-        |    ELSE 'nl' END AS lang_pred
-        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q24_fingerprint" ->
-      """WITH w AS (
-        |  SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id) AS pos
-        |  FROM (SELECT doc_id, w FROM documents,
-        |          unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
-        |        WHERE w <> '') z),
-        |g AS (
-        |  SELECT a.doc_id, md5(string_agg(b.w, ' ' ORDER BY b.pos)) AS gram
-        |  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos BETWEEN a.pos AND a.pos + 7
-        |  GROUP BY a.doc_id, a.pos
-        |  HAVING COUNT(*) = 8)
-        |SELECT doc_id, MIN(gram) AS fingerprint FROM g GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q25_ngram_count" ->
-      """WITH w AS (
-        |  SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id) AS pos
-        |  FROM (SELECT doc_id, w FROM documents,
-        |          unnest(regexp_split_to_array(lower(text), '[^a-z0-9'']+')) AS t(w)
-        |        WHERE w <> '') z),
-        |g AS (
-        |  SELECT a.doc_id, string_agg(b.w, ' ' ORDER BY b.pos) AS gram
-        |  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos BETWEEN a.pos AND a.pos + 2
-        |  GROUP BY a.doc_id, a.pos
-        |  HAVING COUNT(*) = 3)
-        |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_distinct_3grams
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q26_split_chunks" ->
-      """SELECT vec_id, CAST(gs AS INT) AS chunk_id,
-        |  array_to_string(list_transform(list_slice(embedding, gs*16 + 1, gs*16 + 16),
-        |    x -> CAST(CAST(FLOOR(CAST(x AS DOUBLE) * 1e9) AS BIGINT) AS VARCHAR)), ',') AS chunk
-        |FROM (
-        |  SELECT vec_id, embedding,
-        |    unnest(generate_series(0, GREATEST(1, CAST(FLOOR((len(embedding) - 16.0)/16.0) AS BIGINT) + 1) - 1)) AS gs
-        |  FROM embeddings) t
-        |ORDER BY vec_id, chunk_id""".stripMargin,
-
-    "q27_sample_replicate" ->
-      """SELECT n_nationkey, CAST(rep_i AS INT) AS rep_i FROM (
-        |  SELECT n_nationkey, unnest(generate_series(1, n_regionkey + 1)) AS rep_i
-        |  FROM nation) t
-        |ORDER BY n_nationkey, rep_i""".stripMargin,
-
-    "q28_xval_sequential" ->
-      """SELECT c_custkey,
-        |  CAST(ntile(4) OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) - 1 AS INT) AS fold
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    // md5-permuted distinct groups, position mod k — engine-independent
-    // shuffle, so DuckDB reproduces the exact fold assignment
-    "q65_group_random_kfold" ->
-      """SELECT c_custkey, c_nationkey, f.fold FROM customer JOIN (
-        |  SELECT c_nationkey,
-        |    CAST((row_number() OVER (
-        |      ORDER BY md5('7#' || CAST(c_nationkey AS VARCHAR)), c_nationkey) - 1) % 4 AS INT) AS fold
-        |  FROM (SELECT DISTINCT c_nationkey FROM customer)
-        |) f USING (c_nationkey) ORDER BY c_custkey""".stripMargin,
-
-    "q29_normalize_minmax" ->
-      """SELECT c_custkey,
-        |  (c_acctbal - (SELECT MIN(c_acctbal) FROM customer))
-        |    / ((SELECT MAX(c_acctbal) FROM customer) - (SELECT MIN(c_acctbal) FROM customer)) AS bal_norm
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q30_cube_counts" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-        |  COALESCE(l_linestatus, 'ALL') AS status, COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""".stripMargin,
-
-    "q31_count_distinct" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-        |  COUNT(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q32_positional_slice" ->
-      """SELECT o_orderkey FROM (
-        |  SELECT o_orderkey, row_number() OVER (ORDER BY o_orderkey) - 1 AS idx
-        |  FROM orders) t
-        |WHERE idx >= 10 AND idx < 110 AND (idx - 10) % 3 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q43_range_join" ->
-      """SELECT o_orderkey, COUNT(*) AS n_shipped_60d
-        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  AND (CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE)) BETWEEN 0 AND 60
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-
-    "q44_median" ->
-      """SELECT o_orderpriority,
-        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
-        |  ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q45_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS us,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, us,
-        |    SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 300000000 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e)
-        |SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_us""".stripMargin,
-
-    "q46_unique_encode" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  CAST(dense_rank() OVER (ORDER BY c_mktsegment) - 1 AS INT) AS seg_id
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q47_union_missing_cols" ->
-      """SELECT c_custkey, c_acctbal, NULL AS c_mktsegment, 'a' AS src FROM customer
-        |UNION ALL
-        |SELECT c_custkey, NULL, c_mktsegment, 'b' AS src FROM customer
-        |ORDER BY src, c_custkey""".stripMargin,
-
-    "q48_hash_kfold" ->
-      """SELECT c_custkey,
-        |  CAST(CAST(CONCAT('0x', SUBSTRING(md5(c_name), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    // C4 line filter: same trim/split/regex semantics in DuckDB (both
-    // trims are space-only; both regex engines anchor $ without multiline;
-    // both split on \r?\n so CRLF input is LF-normalized identically)
-    "q87_clean_lines" ->
-      """WITH kept AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\r?\n'),
-        |    l -> len(regexp_split_to_array(trim(l), '\s+')) >= 3
-        |         AND regexp_matches(trim(l), '[.!?]$')) AS ls
-        |  FROM documents)
-        |SELECT doc_id,
-        |  COALESCE(array_to_string(ls, chr(10)), '') AS clean_text,
-        |  len(ls)::BIGINT AS n_kept
-        |FROM kept ORDER BY doc_id""".stripMargin,
-
-    // md5-uniform val sampling: u_k = first-8-hex(md5('seed#tag#key'))/2^32
-    // — an exact integer over 2^32, so the double and the < compare are
-    // engine-identical (same layout-independent sample as the engine)
-    "q83_xval_val_masks" ->
-      """WITH f AS (SELECT doc_id,
-        |    CAST(CAST(CONCAT('0x', SUBSTRING(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
-        |  FROM documents),
-        |u AS (SELECT doc_id, fold,
-        |    CAST(CONCAT('0x', SUBSTRING(md5('7#1000#' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)::DOUBLE / 4294967296.0 AS u0,
-        |    CAST(CONCAT('0x', SUBSTRING(md5('7#1001#' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)::DOUBLE / 4294967296.0 AS u1
-        |  FROM f)
-        |SELECT doc_id, fold,
-        |  CASE WHEN fold = 0 THEN 'test' WHEN u0 < 1.0/3 THEN 'val' ELSE 'train' END AS set_f0,
-        |  CASE WHEN fold = 1 THEN 'test' WHEN u1 < 1.0/3 THEN 'val' ELSE 'train' END AS set_f1
-        |FROM u ORDER BY doc_id""".stripMargin,
-
-    "q50_summary" ->
-      """SELECT lang, source, COUNT(*) AS n, MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "q64_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, '-') AS flag,
-        |  COALESCE(l_linestatus, '-') AS status,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY flag, status""".stripMargin,
-
-    "q62_date_funcs" ->
-      """SELECT o_orderkey,
-        |  strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS due_date,
-        |  strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end,
-        |  CAST(year(o_orderdate) AS INT) AS y,
-        |  CAST(quarter(o_orderdate) AS INT) AS q,
-        |  CAST(month(o_orderdate) AS INT) AS m,
-        |  CAST(dayofweek(CAST(o_orderdate AS DATE)) AS INT) AS dow
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q63_string_funcs" ->
-      """SELECT p_partkey,
-        |  lpad(p_brand, 12, '*') AS brand_padded,
-        |  rpad(p_name, 20, '.') AS name_padded,
-        |  translate(p_type, 'aeiou', 'AEIOU') AS type_translated,
-        |  reverse(p_brand) AS brand_rev,
-        |  CAST(levenshtein(p_name, p_brand) AS INT) AS edit_dist
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q60_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |          ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS running_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q61_analytic_ranks" ->
-      """SELECT o_orderkey, pr, cd FROM (
-        |  SELECT o_orderkey,
-        |    percent_rank() OVER (ORDER BY o_totalprice, o_orderkey) AS pr,
-        |    cume_dist() OVER (ORDER BY o_totalprice, o_orderkey) AS cd
-        |  FROM orders) t
-        |WHERE pr >= 0.99 ORDER BY o_orderkey""".stripMargin,
-
-    // q40 emits only the deterministic feature dimensionality (the values
-    // come from the FFT kernel, not SQL-expressible): the oracle pins the
-    // expected dim for every row, so a chain shape regression fails the gate
-    "q40_dsp_chain" ->
-      """SELECT vec_id, CAST(18 AS BIGINT) AS feat_dim
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q59_interval_join" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        |  WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT user_id, epoch_us(ts) AS w_start, epoch_us(ts) + 7200000000 AS w_end
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT c.user_id, c.event_id, COUNT(*) AS n_windows
-        |FROM c JOIN w ON c.user_id = w.user_id
-        |  AND c.us >= w.w_start AND c.us <= w.w_end
-        |GROUP BY c.user_id, c.event_id
-        |ORDER BY c.user_id, c.event_id""".stripMargin,
-
-    "q58_asof_join" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        |  WHERE event_type = 'click'),
-        |p AS (
-        |  SELECT user_id, epoch_us(ts) AS us, value, event_id FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT c.user_id, c.event_id,
-        |  (SELECT p.value FROM p
-        |   WHERE p.user_id = c.user_id AND p.us <= c.us
-        |   ORDER BY p.us DESC, p.event_id DESC LIMIT 1) AS purchase_value
-        |FROM c ORDER BY c.user_id, c.event_id""".stripMargin,
-
-    "q55_jaccard_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(generate_series(1, strlen(lower(text)) - 4),
-        |      i -> substring(lower(text), i, 5))) AS s
-        |  FROM documents WHERE strlen(text) > 10)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |    / len(list_distinct(a.s || b.s)) AS jaccard
-        |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |ORDER BY id_a""".stripMargin,
-
-    "q54_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY k_mod ORDER BY k_mod""".stripMargin,
-
-    "q53_config_pipeline" ->
-      """SELECT doc_id,
-        |  CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS dataset_id,
-        |  CAST(CAST(CONCAT('0x', SUBSTRING(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 4 AS INT) AS fold
-        |FROM documents WHERE lang IN ('en', 'de') AND n_chars > 50
-        |ORDER BY doc_id""".stripMargin,
-
-    "q52_sliding" ->
-      """WITH x AS (
-        |  SELECT event_type,
-        |    (CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) - k) * 60000000 AS w_start_us
-        |  FROM events, generate_series(0, 4) AS t(k))
-        |SELECT w_start_us, event_type, COUNT(*) AS n
-        |FROM x GROUP BY w_start_us, event_type ORDER BY w_start_us, event_type""".stripMargin,
-
-    "q51_unique_members" ->
-      """SELECT lang, COUNT(*) AS n_members,
-        |  array_to_string(list_sort(list(doc_id)), ',') AS member_ids
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q41_media_stats" ->
-      """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
-        |  md5(text) AS digest, 'unknown' AS format
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q42_stream_tumbling" ->
-      """SELECT CAST(FLOOR(epoch_us(ts) / 60000000) AS BIGINT) * 60000000 AS w_start_us,
-        |  event_type, COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q33_concat_datasets" ->
-      """WITH a AS (
-        |  SELECT c_custkey, row_number() OVER (ORDER BY c_custkey) - 1 AS _idx,
-        |         0 AS dataset_id
-        |  FROM customer WHERE c_mktsegment = 'BUILDING'),
-        |b AS (
-        |  SELECT c_custkey,
-        |         row_number() OVER (ORDER BY c_custkey) - 1 + (SELECT COUNT(*) FROM a) AS _idx,
-        |         1 AS dataset_id
-        |  FROM customer WHERE c_mktsegment = 'MACHINERY')
-        |SELECT _idx, c_custkey, dataset_id FROM a
-        |UNION ALL
-        |SELECT _idx, c_custkey, dataset_id FROM b
-        |ORDER BY _idx""".stripMargin) ++ Oracles.generated
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
   *
-  * All queries in [[SparkEntry.queries]] take an `sfDir` like
+  * Every [[SparkEntry.registry]] plan takes an `sfDir` like
   * `/root/testdata/sf0.01` and read one parquet file per table. At cluster
   * scale the same call reads a partitioned directory — nothing here assumes
   * single-file layout.

@@ -45,9 +45,31 @@ object Verify {
           failed += name -> String.valueOf(e.getMessage)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
+    // A query that THROWS leaves no output dir, and a per-name compare
+    // would silently omit it — recording an all-green round over a
+    // shrunken query set (exactly the round-8 TIMESTAMP_NTZ incident).
+    // Persist the failure list next to the outputs so any consumer can
+    // (and tools/check_oracle.py does) fail the gate on omissions, and
+    // exit non-zero so scripted runs can't miss it.
+    val errJson = "{\"full\": " + (subset.isEmpty: Boolean) +
+      ", \"failed\": " + jsonObject(failed) + "}"
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
+    println(s"VERIFY_FAILED=${failed.size}" +
+      (if (failed.isEmpty) "" else failed.map(_._1).mkString(" [", ",", "]")))
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** `oracle_sql.json`: every registered query's name → DuckDB SQL. */
+  def oracleJson: String = jsonObject(SparkEntry.oracleSql)
+
+  /** A JSON object of string members. Escapes backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in oracle SQL would otherwise
+    * make the compare's json.load fail and silently zero the round's
+    * correctness.
+    */
+  private def jsonObject(members: Iterable[(String, String)]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -57,23 +79,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // A query that THROWS leaves no output dir, and a per-name compare
-    // would silently omit it — recording an all-green round over a
-    // shrunken query set (exactly the round-8 TIMESTAMP_NTZ incident).
-    // Persist the failure list next to the outputs so any consumer can
-    // (and tools/check_oracle.py does) fail the gate on omissions, and
-    // exit non-zero so scripted runs can't miss it.
-    val errJson = "{\"full\": " + (subset.isEmpty: Boolean) +
-      ", \"failed\": " + failed
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}") +
-      "}"
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
-    println(s"VERIFY_FAILED=${failed.size}" +
-      (if (failed.isEmpty) "" else failed.map(_._1).mkString(" [", ",", "]")))
-    spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    members.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

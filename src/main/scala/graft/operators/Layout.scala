@@ -129,18 +129,6 @@ object Layout {
       .drop("_zkey")
   }
 
-  /** Hilbert sibling of [[zorderKey]]: the order-16 Hilbert index of
-    * the bucketed dimensions (codegen'd `graft_hilbert`) — strictly
-    * better file locality than Z-order at the same file count.
-    */
-  def hilbertKey(x: org.apache.spark.sql.Column, xStep: Long,
-      y: org.apache.spark.sql.Column, yStep: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.hilbertNative(
-      pmod(floor(x / xStep).cast("long"), lit(65536L)),
-      pmod(floor(y / yStep).cast("long"), lit(65536L)))
-  }
-
   /** Zone maps of a layout: deterministic "files" = `numFiles`
     * equal-width ranges of the OCCUPIED key span — width = (max−min)
     * DIV numFiles + 1, file = (key−min) DIV width — so the cut adapts

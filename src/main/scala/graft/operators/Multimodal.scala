@@ -20,12 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Metadata struct for a media column. */
-  def mediaMeta(format: Column, width: Column, height: Column,
-      nFrames: Column, fps: Column): Column =
-    struct(format.as("format"), width.as("width"), height.as("height"),
-      nFrames.as("n_frames"), fps.as("fps"))
-
   /** FALLBACK — deterministic fake decode for payloads no JDK codec
     * accepts (see [[decodeRgb]]; real PNG/JPEG/BMP/GIF go through
     * [[imageioDecodeRgb]]). Production swaps this for the remaining
@@ -145,13 +139,6 @@ object Multimodal {
         lit(0.0), (acc, v) => acc + v) / n.cast("double")
     }: _*)
   }
-
-  /** Uniform frame sampling for video-like payloads: pick `k` frame
-    * indices from n_frames (metadata), deterministic.
-    */
-  def sampleFrameIndices(nFrames: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => (i * nFrames.cast("long") / k).cast("int"))
 
   /** Sanity/statistics projection over a binary media column — real
     * (non-stub) operations on the payload bytes: size, digest, magic-based

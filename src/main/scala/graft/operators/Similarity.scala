@@ -103,23 +103,6 @@ object Similarity extends Serializable {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** Sign pattern of `nPlanes` fixed pseudo-random hyperplanes, as a
-    * compact long key. Hyperplane m's component for dimension j is a
-    * deterministic hash-derived value in [-1, 1] — reproducible across
-    * runs/executors with no stored model.
-    */
-  def hyperplaneKey(vec: Column, nPlanes: Int = 16, seed: Int = 42): Column = {
-    val bits = (0 until nPlanes).map { m =>
-      // projection = Σ_j v[j] * h(m, j); h in [-1,1]
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (v, j) =>
-          v * (pmod(xxhash64(lit(seed), lit(m), j), lit(2000001L)).cast("double") / 1000000.0 - 1.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), m)).otherwise(0L)
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** LSH-bucketed ANN: candidates share a hyperplane sign bucket in at
     * least one of `tables` independent hash tables; exact cosine re-rank
     * within candidates. Recall grows with tables; cost stays ~linear.

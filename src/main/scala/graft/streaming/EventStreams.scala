@@ -42,16 +42,6 @@ object EventStreams {
       .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
         col("user_id"), col("n_events"), col("sum_value"))
 
-  /** Watermarked streaming variant of [[tumblingCounts]] — late data
-    * beyond the watermark is dropped; state is bounded.
-    */
-  def tumblingCountsStream(events: DataFrame, width: String = "1 minute",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width), col("event_type"))
-      .agg(count("*").as("n"))
-
   /** Streaming dedup by event_id within the watermark horizon. */
   def dedupStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", watermark)

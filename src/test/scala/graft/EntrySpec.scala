@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Consistency of the driver contract surface: every oracle belongs to a
-  * real query, and every query has an oracle (q57's integer-exact IVF
-  * variant closed the last rows-only gap; Oracles scaladoc).
+/** Consistency of the query surface: one [[Query]] registry
+  * holds every query with its oracle, and its construction-time checks
+  * reject what the name-keyed views would silently merge.
   */
 class EntrySpec extends AnyFunSuite {
+
+  private val plan: (SparkSession, String) => DataFrame = (_, _) => null
+  private def entry(name: String): Query = Query(name, "SELECT 1")(plan)
 
   test("every oracleSql key has a queries entry") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -18,8 +22,57 @@ class EntrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"rows-only queries crept in: $rowsOnly")
   }
 
+  test("queries and oracleSql are views of one registry") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    assert(SparkEntry.queries.size == names.size)
+    val ids = SparkEntry.registry.map(_.id)
+    assert(ids == ids.sorted)
+  }
+
+  test("a registry with a duplicate name fails") {
+    val e = intercept[IllegalArgumentException](
+      Query.registry(entry("q1_a"), entry("q2_b"), entry("q1_a")))
+    assert(e.getMessage.contains("q1_a"))
+  }
+
+  test("a registry with a duplicate numeric id fails") {
+    val e = intercept[IllegalArgumentException](
+      Query.registry(entry("q7_a"), entry("q07_b")))
+    assert(e.getMessage.contains("numeric ids repeat: 7"))
+    assert(Query.registry(entry("q8_a"), entry("q7_b")).map(_.name) ==
+      Seq("q7_b", "q8_a"))
+  }
+
+  test("a registry with a name not of the form q<digits>_... fails") {
+    for (bad <- Seq("x1_a", "q_a", "q12", "q12_", "q1-a", "Q1_a")) {
+      val e = intercept[IllegalArgumentException](
+        Query.registry(entry("q1_ok"), entry(bad)))
+      assert(e.getMessage.contains(bad), bad)
+    }
+  }
+
+  test("building the registry evaluates no oracle") {
+    var evaluated = 0
+    val q = Query("q1_a", { evaluated += 1; "SELECT 1" })(plan)
+    Query.registry(q)
+    assert(evaluated == 0)
+    assert(q.oracleSql == "SELECT 1" && q.oracleSql == "SELECT 1")
+    assert(evaluated == 1)
+  }
+
   test("generated oracle SQL is single-statement and ordered") {
-    Oracles.generated.foreach { case (name, sql) =>
+    // the entries whose oracle is an Oracles def, read off the registry
+    // source (the oracle is an expression, not a tag)
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
+    val generated = """Query\("(q\d+_\w+)",\s*Oracles\.""".r
+      .findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(generated.size >= 232, generated.size)
+    val sqls = SparkEntry.oracleSql
+    generated.foreach { name =>
+      val sql = sqls(name)
       assert(!sql.trim.endsWith(";"), s"$name ends with ';'")
       assert(!sql.contains(";"), s"$name contains a statement separator")
       assert(sql.toUpperCase.contains("ORDER BY"), s"$name lacks ORDER BY")

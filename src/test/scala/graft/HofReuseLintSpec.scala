@@ -20,9 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the same defect — the IDENTICAL builder call text appearing
   *     ≥2 times in one expression unit without any val binding, e.g.
   *     `size(words(c)) + size(array_distinct(words(c)))` — is flagged
-  *     too. An expression unit is a def body, except inside
-  *     SparkEntry-style query maps where each `((s, dir) => ...)`
-  *     lambda is its own unit (different queries may each tokenize
+  *     too. An expression unit is a member (`def` or `val`) body,
+  *     except inside a query registry, where each `Query(...)(...)`
+  *     entry is its own unit (different queries may each tokenize
   *     once). Identical normalized call text means identical input,
   *     so two occurrences in one unit is double evaluation once
   *     CollapseProject folds the chain into one Project.
@@ -43,12 +43,20 @@ class HofReuseLintSpec extends AnyFunSuite {
   private val inlineHeads = Seq("words(", "wordNgrams(", "split(col",
     "split(lower")
 
+  /** (name, body) of each object member, `def` or `val` with any
+    * modifiers, on comment- and string-stripped source.
+    */
+  private def members(src0: String): Seq[(String, String)] = {
+    val start = "\n  (?=(?:(?:private|protected|final|override|lazy)" +
+      "(?:\\[\\w+\\])?\\s+)*(?:def|val)\\s)"
+    SourceLint.strip(src0).split(start).toSeq.drop(1).map { d =>
+      ("(?:def|val)\\s+(\\w+)".r.findFirstMatchIn(d).fold("?")(_.group(1)), d)
+    }
+  }
+
   /** rule 1: multi-referenced HOF-built vals. */
-  private def violations(src0: String, where: String): Seq[String] = {
-    val src = SourceLint.strip(src0)
-    val defs = src.split("\n  def ").toSeq
-    defs.drop(1).flatMap { d =>
-      val name = d.takeWhile(_ != '(').trim
+  private def violations(src0: String, where: String): Seq[String] =
+    members(src0).flatMap { case (name, d) =>
       val pat = ("val (\\w+)\\s*=\\s*(" + builders.mkString("|") + ")").r
       pat.findAllMatchIn(d).flatMap { m =>
         val v = m.group(1)
@@ -60,7 +68,6 @@ class HofReuseLintSpec extends AnyFunSuite {
         else None
       }
     }
-  }
 
   /** Full balanced-paren call text for each inline-head occurrence,
     * whitespace-normalized. An occurrence glued to a longer identifier
@@ -100,13 +107,10 @@ class HofReuseLintSpec extends AnyFunSuite {
   }
 
   /** rule 2: identical builder call ≥2× in one expression unit. */
-  private def inlineViolations(src0: String, where: String): Seq[String] = {
-    val src = SourceLint.strip(src0)
-    src.split("\n  def ").toSeq.drop(1).flatMap { d =>
-      val name = d.takeWhile(_ != '(').trim
-      // query maps: each ((s, dir) => ...) lambda is its own unit
-      val units = d.split("->\\s*\\(\\(\\w+,\\s*\\w+\\)\\s*=>").toSeq
-      units.flatMap { u =>
+  private def inlineViolations(src0: String, where: String): Seq[String] =
+    members(src0).flatMap { case (name, d) =>
+      // a query registry: each Query(...)(...) entry is its own unit
+      d.split("\\bQuery\\(").toSeq.flatMap { u =>
         extractCalls(u).groupBy(identity).collect {
           case (call, hits) if hits.size >= 2 =>
             s"$where#$name: inline `${call.take(60)}` appears " +
@@ -115,7 +119,6 @@ class HofReuseLintSpec extends AnyFunSuite {
         }
       }
     }
-  }
 
   test("no multi-referenced HOF-built locals in operators or SparkEntry") {
     val bad = SourceLint.sources.flatMap { case (n, s) => violations(s, n) }
@@ -153,6 +156,48 @@ class HofReuseLintSpec extends AnyFunSuite {
         "    * size(array_distinct(words(text))) inline */\n" +
         "  def ok(text: Column): Column = size(words(text))\n}\n"
     assert(inlineViolations(doc, "fixture").isEmpty)
+  }
+
+  /** A registry fixture in SparkEntry's entry syntax. */
+  private def registry(decl: String, entries: String*): String =
+    s"object Reg {\n  $decl: Seq[Query] = Query.registry(\n" +
+      entries.mkString(",\n") + ")\n}\n"
+  private val tokenizeOnce =
+    "    Query(\"q1_a\", \"SELECT 1\")((s, dir) =>\n" +
+      "      docs(s, dir).select(size(words(col(\"text\")))))"
+  private val tokenizeOnceToo =
+    "    Query(\"q2_b\", Oracles.q2B, headline = true)((s, dir) => {\n" +
+      "      val ws = words(col(\"text\"))\n" +
+      "      docs(s, dir).select(size(ws))\n    })"
+  private val tokenizeTwice =
+    "    Query(\"q3_c\",\n      \"\"\"SELECT 3\n        |FROM t\"\"\".stripMargin)((s, dir) =>\n" +
+      "      docs(s, dir).select(size(words(col(\"text\"))) +\n" +
+      "        size(array_distinct(words(col(\"text\"))))))"
+
+  test("registry entries are separate units: two that each tokenize once pass") {
+    val ok = registry("val registry", tokenizeOnce, tokenizeOnceToo)
+    assert(inlineViolations(ok, "fixture").isEmpty)
+    assert(violations(ok, "fixture").isEmpty)
+  }
+
+  test("a registry entry that calls words(text) twice is flagged") {
+    val bad = registry("val registry", tokenizeOnce, tokenizeTwice,
+      tokenizeOnceToo)
+    val hits = inlineViolations(bad, "fixture")
+    assert(hits.size == 1, hits)
+    assert(hits.head.startsWith("fixture#registry: inline `words(col(\"\"))`"))
+  }
+
+  test("a registry held in any val form is scanned by both rules") {
+    val reuse =
+      "    Query(\"q4_d\", \"SELECT 4\")((s, dir) => {\n" +
+        "      val ws = words(col(\"text\"))\n" +
+        "      docs(s, dir).select(size(ws), size(array_distinct(ws)))\n    })"
+    for (decl <- Seq("val registry", "private val registry",
+        "lazy val registry", "private[graft] lazy val registry")) {
+      assert(inlineViolations(registry(decl, tokenizeTwice), "f").nonEmpty, decl)
+      assert(violations(registry(decl, tokenizeOnce, reuse), "f").nonEmpty, decl)
+    }
   }
 
   test("a `//` inside a string literal does not blind the gate (r15 fix)") {

@@ -161,20 +161,9 @@ class OracleLintSpec extends AnyFunSuite {
 
   test("oracle SQL: no HUGEINT/UHUGEINT/DECIMAL(38,0) terminal columns") {
     assume(lintAvailable, "python3+duckdb or sf0.001 tables unavailable")
+    // the same oracle_sql.json bytes Verify writes for the compare
     val tmp = java.nio.file.Files.createTempFile("oracle_lint", ".json")
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.writeString(tmp, json)
+    java.nio.file.Files.writeString(tmp, Verify.oracleJson)
     val (code, out) = runTool("tools/lint_oracle_types.py",
       tmp.toString, "/root/testdata/sf0.001")
     assert(code == 0, s"oracle terminal-type lint failed:\n$out")

@@ -481,7 +481,8 @@ object SparkEntry {
         |SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
         |  CAST(n_edges AS BIGINT) AS n_edges,
         |  CAST(n_triangles AS BIGINT) AS n_triangles
-        |FROM nd, ed, tri""".stripMargin, headline = true)((s, dir) => {
+        |FROM nd, ed, tri
+        |ORDER BY n_nodes, n_edges, n_triangles""".stripMargin, headline = true)((s, dir) => {
       Graphs.triangleCount(Graphs.coOccurrenceEdges(
         lineitem(s, dir), "l_orderkey", "l_partkey", dedup = false))
     }),
@@ -1682,8 +1683,8 @@ object SparkEntry {
         |    MAX(CASE WHEN arm = 1 THEN s2 END) AS s2_1
         |  FROM a),
         |-- decimal→double via VARCHAR: DuckDB's direct decimal cast is
-        |-- not correctly rounded (hugeint/10^s as two float ops); the
-        |-- string round-trip is, matching Java BigDecimal.doubleValue
+        |-- not correctly rounded (hugeint/10^s as two float ops), while
+        |-- the string round-trip is, matching Java BigDecimal.doubleValue
         |d AS (
         |  SELECT n0, n1,
         |    CAST(CAST(s1_0 AS VARCHAR) AS DOUBLE) / CAST(n0 AS DOUBLE) AS mean0,
@@ -1699,7 +1700,8 @@ object SparkEntry {
         |    * (var0 / CAST(n0 AS DOUBLE) + var1 / CAST(n1 AS DOUBLE))
         |    / ((var0 / CAST(n0 AS DOUBLE)) * (var0 / CAST(n0 AS DOUBLE)) / (CAST(n0 AS DOUBLE) - 1.0)
         |      + (var1 / CAST(n1 AS DOUBLE)) * (var1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) AS df_welch
-        |FROM d""".stripMargin)((s, dir) => {
+        |FROM d
+        |ORDER BY n0, n1""".stripMargin)((s, dir) => {
       val perUser = events(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
@@ -4048,11 +4050,11 @@ object SparkEntry {
         .agg(sum(col("l_extendedprice").cast("decimal(18,4)") *
             (lit(1).cast("decimal(18,4)") -
               col("l_discount").cast("decimal(18,4)"))).as("total_dec"))
-      // max as a 1-row aggregate + broadcast cross-join (a global window
-      // would single-task the per-supplier table, which grows linearly
-      // with scale under TPC-H scaling)
+      // max as a 1-row aggregate + cross-join, which Catalyst broadcasts
+      // (a global window would single-task the per-supplier table, which
+      // grows linearly with scale under TPC-H scaling)
       val top = rev
-        .crossJoin(broadcast(rev.agg(max("total_dec").as("_max"))))
+        .crossJoin(rev.agg(max("total_dec").as("_max")))
         .filter(col("total_dec") === col("_max"))
       top.join(broadcast(supplier(s, dir)),
           col("l_suppkey") === col("s_suppkey"))
@@ -5230,8 +5232,7 @@ object SparkEntry {
       val hist = split.groupBy(col("fold").cast("long").as("fold"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(md5(col("text"))).as("n_groups"))
-      hist.crossJoin(broadcast(Xval.leakageAuditOn(split)
-          .agg(count(lit(1)).as("n_leaks"))))
+      hist.crossJoin(Xval.leakageAuditOn(split).agg(count(lit(1)).as("n_leaks")))
         .orderBy("fold")
     }),
 
@@ -5264,12 +5265,10 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(md5(col("text"))).as("n_groups"))
       hist
-        .crossJoin(broadcast(
-          Xval.nearDupLeakageAuditOn(split, numHashes = 32,
+        .crossJoin(Xval.nearDupLeakageAuditOn(split, numHashes = 32,
             rowsPerBand = 4, k = 5, threshold = 0.5, groupMap = gmap)
-          .agg(count(lit(1)).as("n_neardup_leaks"))))
-        .crossJoin(broadcast(Xval.leakageAuditOn(split)
-          .agg(count(lit(1)).as("n_exact_leaks"))))
+          .agg(count(lit(1)).as("n_neardup_leaks")))
+        .crossJoin(Xval.leakageAuditOn(split).agg(count(lit(1)).as("n_exact_leaks")))
         .orderBy("fold")
     }),
 
@@ -5934,7 +5933,8 @@ object SparkEntry {
       |  list_reduce(list_concat([0.0::DOUBLE], list_transform(
       |      list_sort(list({'cat': cat, 't': t})), x -> x.t)),
       |    (a, b) -> a + b) AS chisq
-      |FROM terms, tot GROUP BY r1, r2""".stripMargin
+      |FROM terms, tot GROUP BY r1, r2
+      |ORDER BY n1, n2""".stripMargin
 
   /** q202/q205 shared PSI oracle — batch cells and streaming
     * state-store cells are gated against the SAME SQL truth.
@@ -5961,7 +5961,8 @@ object SparkEntry {
         |SELECT na AS n_expected, nb AS n_actual, k AS n_cats,
         |  CAST(s2 // (CAST(na + k AS HUGEINT) * (nb + k)) AS BIGINT) AS psi_q,
         |  CAST(CAST(s2 // (CAST(na + k AS HUGEINT) * (nb + k)) AS BIGINT) AS DOUBLE) / 1e12 AS psi
-        |FROM agg""".stripMargin)
+        |FROM agg
+        |ORDER BY n_expected, n_actual""".stripMargin)
 
   /** q293 — [[psiOracleSql]] with every stage keyed by the user
     * cohort (user_id % 4).

@@ -9,11 +9,16 @@ import java.nio.file.{Files, Paths}
   * without paying for the full suite.
   */
 object Verify {
+  /** The named queries (none = all); an unknown name fails, named. */
+  def subset(names: Seq[String]): Set[String] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains).distinct
+    require(unknown.isEmpty, s"Verify names unknown queries: ${unknown.sorted.mkString(",")}")
+    names.toSet
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val subset: Set[String] = args.drop(2).toSet
-    (subset -- SparkEntry.queries.keySet).foreach(n =>
-      System.err.println(s"[verify] unknown query name: $n (skipped)"))
+    val subset: Set[String] = this.subset(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // invariance-audit knobs (COVERAGE.md): the same board must produce
     // identical values under different shuffle fan-outs and with AQE on

@@ -360,21 +360,12 @@ object DabDataset {
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
-  /** Renumber after a row-changing op, preserving prior order. Implemented
-    * as sort-within-partition + zipWithIndex; partition order is stable
-    * under Spark's narrow ops, so prior `_idx` order is preserved without
-    * a global sort. Row-changing *shuffling* ops must orderBy first.
+  /** Renumber after a row-changing op: [[zipWithIdx]] without the old
+    * `_idx`. Partition order is stable under Spark's narrow ops, so the
+    * prior order is preserved without a global sort. Row-changing
+    * *shuffling* ops must orderBy (or sortWithinPartitions) first.
     */
-  private[core] def reindex(df: DataFrame): DataFrame = {
-    val dropped = df.drop(IdxCol)
-    val schema = StructType(dropped.schema.fields :+
-      org.apache.spark.sql.types.StructField(IdxCol, LongType, nullable = false))
-    // sort by old _idx within partitions only when it survives; a narrow
-    // filter/explode keeps encounter order, so zipWithIndex re-yields the
-    // original relative order.
-    val rdd = df.drop(IdxCol).rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+  private[core] def reindex(df: DataFrame): DataFrame = zipWithIdx(df.drop(IdxCol))
 }
 
 /** Op-log entries replacing the reference's pop-dive/replay

@@ -99,25 +99,23 @@ object Bpe {
       minCount: Long = 1, textCol: String = "text",
       minWordCount: Long = 1): Seq[(String, String, Long)] = {
     require(nMerges > 0, s"nMerges $nMerges must be > 0")
-    // LAZY materialization throughout: each iteration's rewrite
-    // materializes as a by-product of the NEXT iteration's pair-count
-    // job (one Spark job per merge instead of two); the previous table
-    // is released only after its successor has materialized.
+    // An eager word table, then LAZY rounds: each rewrite materializes
+    // as a by-product of the NEXT round's pair-count job (one job per
+    // merge, not two); a table is released once its successor exists.
     var vocab = Dedup.materialize(docs
       .select(explode(graft.operators.TextAnalysis.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minWordCount)
-      .select(split(col("w"), "").as("syms"), col("cnt")))
+      .select(split(col("w"), "").as("syms"), col("cnt")), eager = true)
     // Each merge round is one vocab-sized aggregation + a top-1 collect:
     // a full Spark job for microseconds of pair counting once the
-    // dictionary is small. While the distinct words fit Gates (the
-    // count is the job that materializes the lazy vocab stage), the
+    // dictionary is small. While the distinct words fit Gates, the
     // dictionary collects once and the merges run on the driver — same
     // greedy algorithm, same (count DESC, pair ASC by UTF8 order)
     // tie-break, same left-to-right fuse. The published trainings prune
     // to a bounded dictionary first (minWordCount), so this is the
     // common case at any corpus scale.
-    if (Gates.fits(vocab, vocab.count())) {
+    if (Gates.fits(vocab, Dedup.rowCount(vocab))) {
       var dict = vocab.collect().map(r =>
         (r.getSeq[String](0).toArray, r.getLong(1)))
       Dedup.releaseStage(vocab)

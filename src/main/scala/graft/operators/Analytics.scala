@@ -185,7 +185,7 @@ object Analytics {
       expr("percentile(monetary_cents, 0.667)").as("_m2"))
     def score(c: Column, lo: Column, hi: Column): Column =
       when(c > hi, 3).when(c > lo, 2).otherwise(1)
-    perCust.crossJoin(broadcast(fences))
+    perCust.crossJoin(fences)
       .select(col(custCol), col("recency_us"), col("frequency"),
         col("monetary_cents"),
         score(col("recency_us"), col("_r1"), col("_r2")).as("r_score"),
@@ -284,7 +284,7 @@ object Analytics {
       when(r > 0 && cc > 0,
         (d / n.cast("double")) * (d / (r * cc).cast("double")))
     }
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("_t",
         term(col("_c1"), col("_r1")) + term(col("_c2"), col("_r2")))
       .groupBy("_r1", "_r2")
@@ -332,7 +332,7 @@ object Analytics {
       col("_c2").as("_b"))
     val tot = cells.agg(sum("_a").as("_na"), sum("_b").as("_nb"),
       count(lit(1)).as("_k"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .select(col("_na"), col("_nb"), col("_k"),
         ((col("_b") + 1) * (col("_na") + col("_k"))).as("_x"),
         ((col("_a") + 1) * (col("_nb") + col("_k"))).as("_y"))
@@ -410,7 +410,7 @@ object Analytics {
     val btot = cells.groupBy("bucket").agg(sum("_b").as("_nb"))
     // complete the grid: every (bucket, global category) pair, absent
     // bucket counts as 0 — bounded |buckets|·|cats|
-    val grid = btot.crossJoin(broadcast(base)).crossJoin(broadcast(k))
+    val grid = btot.crossJoin(broadcast(base)).crossJoin(k)
       .join(cells, Seq("bucket", "_cat"), "left")
       .na.fill(0L, Seq("_b"))
     grid
@@ -484,7 +484,7 @@ object Analytics {
     val offsets = offRows.toSeq.toDF("_b", "_o1", "_o2")
     val w = Window.partitionBy("_b").orderBy("_v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    b.join(broadcast(offsets), Seq("_b"))
+    b.join(offsets, Seq("_b"))
       .select((col("_o1") + sum("_c1").over(w)).as("_cum1"),
         (col("_o2") + sum("_c2").over(w)).as("_cum2"))
       .agg(max(abs(col("_cum1") * n2 - col("_cum2") * n1)).as("ks_num"))
@@ -961,9 +961,10 @@ object Analytics {
   def sessionLift(events: DataFrame, keyCol: String = "user_id",
       tsCol: String = "ts", gapUs: Long = 300000000L): DataFrame = {
     val sess = withSessionId(events, keyCol, tsCol, "event_id", gapUs)
-    val sets = sess.groupBy(col(keyCol), col("session_id"))
-      .agg(sort_array(collect_set(col("event_type"))).as("_types"))
-    val nSessions = sets.count()
+    // one job builds and counts the session sets for both readers below
+    val sets = Dedup.materialize(sess.groupBy(col(keyCol), col("session_id"))
+      .agg(sort_array(collect_set(col("event_type"))).as("_types")), eager = true)
+    val nSessions = Dedup.rowCount(sets)
     val singles = sets.select(explode(col("_types")).as("_t"))
       .groupBy("_t").agg(count(lit(1)).as("_n"))
     val pairs = sets.select(col("_types"), explode(col("_types")).as("_a"))
@@ -1398,7 +1399,7 @@ object Analytics {
     val offsets = offRows.toSeq.toDF("_b", "_off")
     val w = Window.partitionBy("_b").orderBy("_s")
       .rowsBetween(Window.unboundedPreceding, -1)
-    b.join(broadcast(offsets), Seq("_b"))
+    b.join(offsets, Seq("_b"))
       .withColumn("_nb", col("_off") + coalesce(sum("_q").over(w), lit(0L)))
       .agg(sum("_p").as("n_pos"), sum("_q").as("n_neg"),
         sum((col("_p").cast("decimal(38,0)") *
@@ -1495,7 +1496,7 @@ object Analytics {
     cells
       .withColumn("_cr", sum("_r").over(wc))
       .withColumn("_cc", sum("_c").over(wc))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("_nr"), col("_nc"), col("_k"),
         abs(col("_cr").cast("decimal(38,0)") * col("_nc") -
           col("_cc").cast("decimal(38,0)") * col("_nr"))
@@ -1578,31 +1579,30 @@ object Analytics {
     * rounds run on the driver with the IDENTICAL floor-division
     * arithmetic (BigInt for the widened products — the DECIMAL(38,0)
     * twin); otherwise the distributed loop runs. The cell check guards
-    * the collect: a dense chain can fit in states but not in cells. It
-    * runs only when the states fit, and `p.count()` is the job that
-    * materializes the lazy cell stage, not a cheap count.
+    * the collect: a dense chain can fit in states but not in cells, and
+    * the cell stage is eager (its one job counts it) only past the first.
     */
   def stationaryFromCells(cells: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, "stationaryFromCells needs rounds >= 1")
+    val states = Dedup.materialize(
+      cells.select(col("src").as("s"))
+        .union(cells.select(col("dst"))).distinct(), eager = true)
+    val ns = Dedup.rowCount(states)
+    require(ns > 0, "stationaryFromCells needs a non-empty chain")
+    val statesFit = Gates.fits(states, ns)
     val wtot = Window.partitionBy("src")
     val p = Dedup.materialize(cells
       .withColumn("_tot", sum("n").over(wtot))
       .withColumn("pq", expr(
         "CAST((CAST(n AS DECIMAL(38,0)) * 1000000000)" +
           " DIV nullif(_tot, 0) AS BIGINT)"))
-      .select("src", "dst", "pq"))
-    val states = Dedup.materialize(
-      cells.select(col("src").as("s"))
-        .union(cells.select(col("dst"))).distinct())
-    val ns = states.count()
-    require(ns > 0, "stationaryFromCells needs a non-empty chain")
-    if (Gates.fits(states, ns) && Gates.fits(p, p.count())) {
+      .select("src", "dst", "pq"), eager = statesFit)
+    if (statesFit && Gates.fits(p, Dedup.rowCount(p))) {
       // bounded-cells driver fixed point (see the scaladoc):
       // per round π′(d) = Σ_s ⌊π(s)·pq/10⁹⌋ — the exact arithmetic of
       // the distributed branch, BigInt where the SQL widens to
       // DECIMAL(38,0); states with no in-mass stay at the 0 the
       // left-join coalesce would give them.
-      val spark = cells.sparkSession
       val stateRows = states.collect().map(_.get(0))
       val idx = stateRows.zipWithIndex.toMap
       // NULL pq (a src whose cells are all n=0 makes _tot=0 and DIV
@@ -1618,15 +1618,7 @@ object Analytics {
         }
         pi = next
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("state",
-          states.schema.head.dataType, states.schema.head.nullable),
-        org.apache.spark.sql.types.StructField("pi_q12",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rows = stateRows.zipWithIndex.map { case (s, i) =>
-        org.apache.spark.sql.Row(s, pi(i)) }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+      driverTable(states, "state", stateRows, "pi_q12", pi)
     } else {
       var pi = states.withColumn("pi", lit(1000000000000L / ns))
       for (_ <- 1 to rounds) {
@@ -1641,6 +1633,19 @@ object Analytics {
       }
       pi.select(col("s").as("state"), col("pi").as("pi_q12"))
     }
+  }
+
+  /** A driver fixed point's result as a one-partition table: `key`
+    * (typed as `like`'s first column) → `value` (Q-scaled, non-null).
+    */
+  private def driverTable(like: DataFrame, key: String, keys: Array[Any],
+      value: String, values: Array[Long]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val (k, spark) = (like.schema.head, like.sparkSession)
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      keys.zip(values).map { case (a, b) => org.apache.spark.sql.Row(a, b) }.toIndexedSeq, 1),
+      StructType(Seq(StructField(key, k.dataType, k.nullable),
+        StructField(value, LongType, nullable = false))))
   }
 
   /** Bradley–Terry ratings from a pairwise-win table — THE
@@ -1667,21 +1672,21 @@ object Analytics {
     * [[bradleyTerryConfidence]] (the rating and its uncertainty must
     * count the same games).
     */
-  private def btGames(wins: DataFrame): DataFrame =
+  private def btGames(wins: DataFrame, eager: Boolean): DataFrame =
     Dedup.materialize(wins
       .select(col("winner").as("i"), col("loser").as("j"), col("n"))
       .union(wins.select(col("loser").as("i"), col("winner").as("j"),
         col("n")))
-      .groupBy("i", "j").agg(sum("n").as("g")))
+      .groupBy("i", "j").agg(sum("n").as("g")), eager)
 
   def bradleyTerryFromWins(wins: DataFrame, rounds: Int = 8)
       : DataFrame =
-    btFit(wins, btGames(wins), rounds)
+    btFit(wins, rounds)._2
 
-  /** The MM fixed-point loop over prebuilt [[btGames]] cells — split
-    * out so [[bradleyTerryConfidence]] can fit the rating and run the
-    * Fisher-information pass over the SAME materialized games table
-    * (one build site, r16 verdict item: the cells were built twice).
+  /** (games, ratings): the [[btGames]] cells of the win table,
+    * materialized once, and the MM fixed-point loop over them, so that
+    * [[bradleyTerryConfidence]] runs its Fisher-information pass over
+    * the SAME games table (one build site: the cells were built twice).
     *
     * The [[stationaryFromCells]] gate applied to the arena: items are
     * bounded by contract (models, suppliers, judged candidates) and
@@ -1691,28 +1696,31 @@ object Analytics {
     * While the items and then the game cells fit [[Gates]], the cells
     * collect once and the rounds run on the driver with the identical
     * floor arithmetic (BigInt = the DECIMAL(38,0) twin); otherwise the
-    * distributed loop runs. `games.count()` runs only when the items
-    * fit, and it is the job that materializes the lazy games stage, not
-    * a cheap count.
+    * distributed loop runs. The items come off the win table, so the
+    * games stage is eager (its one job counts it) only if they fit.
     */
-  private def btFit(wins: DataFrame, games: DataFrame, rounds: Int)
-      : DataFrame = {
+  private def btFit(winTable: DataFrame, rounds: Int)
+      : (DataFrame, DataFrame) = {
     require(rounds >= 1, "bradleyTerryFromWins needs rounds >= 1")
-    val items = Dedup.materialize(games.select("i").distinct())
-    val nItems = items.count()
+    // read by the items, the games and the win totals
+    val wins = Dedup.materialize(winTable)
+    val items = Dedup.materialize(wins.select(col("winner").as("i"))
+      .union(wins.select(col("loser"))).distinct(), eager = true)
+    val nItems = Dedup.rowCount(items)
     require(nItems > 0, "bradleyTerryFromWins needs at least one game")
+    val itemsFit = Gates.fits(items, nItems)
+    val games = btGames(wins, eager = itemsFit)
     val w = items.join(
         wins.groupBy(col("winner").as("i")).agg(sum("n").as("_w")),
         Seq("i"), "left")
       .na.fill(0L, Seq("_w"))
-    if (Gates.fits(items, nItems) && Gates.fits(games, games.count())) {
+    if (itemsFit && Gates.fits(games, Dedup.rowCount(games))) {
       // bounded-cells driver fixed point (see the scaladoc).
       // Same update as the distributed branch below, term for term:
       //   x_ij = ⌊g·10¹² / (s_i + s_j)⌋           (summed per i)
       //   sr_i = xs_i > 0 ? max(1, ⌊w_i·10¹² / xs_i⌋) : 1
       //   s_i  = max(1, ⌊sr_i·n·10⁶ / Σ sr⌋)      (mean-10⁶ renorm)
       // xs accumulates in Long exactly as the SQL sum over BIGINT _x.
-      val spark = wins.sparkSession
       val wRows = w.select("i", "_w").collect()
       val itemVals = wRows.map(_.get(0))
       val idx = itemVals.zipWithIndex.toMap
@@ -1736,15 +1744,7 @@ object Analytics {
           math.max(1L, (BigInt(sr(i)) * nItems * 1000000L / tot).toLong)
         }
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("item",
-          w.schema.head.dataType, w.schema.head.nullable),
-        org.apache.spark.sql.types.StructField("bt_q6",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rows = itemVals.zipWithIndex.map { case (v, i) =>
-        org.apache.spark.sql.Row(v, s(i)) }
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+      return (games, driverTable(w, "item", itemVals, "bt_q6", s))
     }
     var s = items.withColumn("s", lit(1000000L))
     for (_ <- 1 to rounds) {
@@ -1763,12 +1763,12 @@ object Analytics {
               " DIV _xs AS BIGINT)"))).otherwise(lit(1L)))
       val tot = raw.agg(sum(col("_sr").cast("decimal(38,0)"))
         .as("_t"))
-      s = Dedup.materialize(raw.crossJoin(broadcast(tot))
+      s = Dedup.materialize(raw.crossJoin(tot)
         .select(col("i"), greatest(lit(1L), expr(
           s"CAST((CAST(_sr AS DECIMAL(38,0)) * $nItems * 1000000)" +
             " DIV _t AS BIGINT)")).as("s")))
     }
-    s.select(col("i").as("item"), col("s").as("bt_q6"))
+    (games, s.select(col("i").as("item"), col("s").as("bt_q6")))
   }
 
   /** Rating uncertainty for [[bradleyTerryFromWins]] — the ±CI a
@@ -1795,14 +1795,9 @@ object Analytics {
     */
   def bradleyTerryConfidence(wins: DataFrame, rounds: Int = 8)
       : DataFrame = {
-    // win cells materialized ONCE: ratings (games + win totals) and
-    // the info pass all re-read them; unboxed, each action would
-    // re-run the caller's contest build. The symmetric game cells are
-    // likewise built ONCE and shared between the rating fit and the
-    // information pass (btGames' one-build-site contract).
-    val wcells = Dedup.materialize(wins)
-    val games = btGames(wcells)
-    val s = Dedup.materialize(btFit(wcells, games, rounds))
+    // the game cells btFit built ONCE, shared with the information pass
+    val (games, fit) = btFit(wins, rounds)
+    val s = Dedup.materialize(fit)
     val info = games
       .join(broadcast(s.select(col("item").as("i"),
         col("bt_q6").as("_si"))), Seq("i"))
@@ -2025,7 +2020,7 @@ object Analytics {
           // to correct against — α undefined, surface NULL not 10⁶
           .otherwise(lit(null).cast("long")))
       .select("alpha_q6", "n_labels")
-    kappa.crossJoin(broadcast(alpha))
+    kappa.crossJoin(alpha)
       .select(col("judge_a"), col("judge_b"), col("n_items"),
         col("n_agree"), col("po_q6"), col("pe_q6"), col("kappa_q6"),
         col("alpha_q6"), col("n_labels"))
@@ -2149,7 +2144,7 @@ object Analytics {
     val agg = cm.agg(sum("_c").as("n"),
       sum(when(col("_a") === col("_b"), col("_c")).otherwise(0L))
         .as("n_agree"))
-    agg.crossJoin(broadcast(pe))
+    agg.crossJoin(pe)
       .withColumn("_num",
         ((col("n_agree").cast("decimal(19,0)") *
           col("n").cast("decimal(19,0)")).cast("decimal(38,0)") -
@@ -2185,7 +2180,7 @@ object Analytics {
       .withColumn("_nv", -col("_v"))
     val run = Packing.withRunningTotal(base, Seq("_nv", "_k"), "_v", "_cum")
     val tot = run.agg(max("_cum").as("_tot"))
-    run.crossJoin(broadcast(tot))
+    run.crossJoin(tot)
       .withColumn("abc_class",
         when(col("_cum").cast("decimal(38,0)") * 1000 <=
           col("_tot").cast("decimal(38,0)") * thrA, "A")
@@ -2341,7 +2336,7 @@ object Analytics {
       .orderBy("_r").rowsBetween(Window.unboundedPreceding, 0)
     val qhat = cells
       .withColumn("_cum", sum("_n").over(w))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .filter(col("_cum") >= col("k"))
       .groupBy("n_cal", "k").agg(min("_r").as("q_hat"))
     val q1 = broadcast(tot.join(qhat, Seq("n_cal", "k"), "left"))
@@ -2483,7 +2478,7 @@ object Analytics {
         explode(sequence(lit(0), lit(b - 1))).as("j"))
       .groupBy("j")
       .agg(abs(sum(sign(col("_k"), col("j")) * col("_d"))).as("_t"))
-      .crossJoin(broadcast(obs))
+      .crossJoin(obs)
       .groupBy("n_keys", "t_obs")
       .agg(count(lit(1)).as("n_perms"),
         sum(when(col("_t") >= col("t_obs"), 1L).otherwise(0L)).as("n_ge"))
@@ -2536,7 +2531,7 @@ object Analytics {
       coalesce(sum("n"), lit(0L)).as("_n"),
       coalesce(sum(abs(col("_sp") - lit(10000L) * col("n_pos"))), lit(0L))
         .as("_gap"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .select(col("_b").as("bin"), col("n"),
         expr("_sp DIV n").as("mean_pred_q4"), col("n_pos"),
         expr("CAST((CAST(n_pos AS DECIMAL(38,0)) * 1000000000) DIV n" +

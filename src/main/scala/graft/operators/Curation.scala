@@ -104,7 +104,7 @@ object Curation {
     // cumulative drops BEFORE each stage; the window spans |stages| rows
     val wcum = Window.orderBy("stage_ord")
       .rowsBetween(Window.unboundedPreceding, -1)
-    joined.crossJoin(broadcast(tot))
+    joined.crossJoin(tot)
       .withColumn("n_docs_in",
         col("_tn") - coalesce(sum("_n").over(wcum), lit(0L)))
       .withColumn("n_words_in",
@@ -151,7 +151,7 @@ object Curation {
     val wcum = Window.orderBy("stage_ord")
       .rowsBetween(Window.unboundedPreceding, -1)
     val nStages = stages.size
-    val perStage = joined.crossJoin(broadcast(tot))
+    val perStage = joined.crossJoin(tot)
       .withColumn("n_docs_in",
         col("_tn") - coalesce(sum("_n").over(wcum), lit(0L)))
       .withColumn("n_bytes_in",
@@ -160,7 +160,7 @@ object Curation {
     // stage s was still processed by stages 1..s — counted s times)
     val work = perStage.agg(
       sum(col("n_bytes_in").cast("decimal(38,0)")).as("_work"))
-    perStage.crossJoin(broadcast(work))
+    perStage.crossJoin(work)
       .withColumn("cost_share_q6", when(col("_work") > 0, expr(
         "CAST((CAST(n_bytes_in AS DECIMAL(38,0)) * 1000000) DIV _work" +
           " AS BIGINT)")).otherwise(lit(0L)))

@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{classic, Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators over a document table
@@ -29,12 +34,13 @@ object Dedup {
     *
     * [[materialize]] is a local checkpoint (lineage truncated, blocks on
     * the executors) registered with the calling thread's innermost
-    * pipeline scope. `eager = true` runs the whole stage now, so the
-    * returned table's rows already exist. `eager = false` (the default)
-    * adds no job for the stage's last step: the first action that reads
-    * the stage computes it and populates the blocks every later reader
-    * shares. (Under adaptive execution, building a stage still runs the
-    * shuffle stages that feed it.)
+    * pipeline scope. `eager = true` runs the whole stage now in ONE job
+    * that also counts it ([[rowCount]]) and sums its bytes, the sizes
+    * Catalyst then plans joins by. `eager = false` (the default) adds no
+    * job for the stage's last step and keeps its origin's estimate: the
+    * first action that reads the stage computes it and populates the
+    * blocks every later reader shares. (Under adaptive execution,
+    * building a stage still runs the shuffle stages that feed it.)
     *
     * What frees the blocks:
     *  - [[withPipeline]] exit frees every stage materialized inside the
@@ -56,6 +62,11 @@ object Dedup {
     override def initialValue() = new java.util.ArrayDeque[Scope]()
   }
 
+  // the eager stages' blocks, the only stages rowCount reads: a lazy
+  // stage keeps its origin's estimate (a limit's bound), not a count
+  private val eagerStages = java.util.Collections.synchronizedSet(java.util
+    .Collections.newSetFromMap(new java.util.WeakHashMap[RDD[_], java.lang.Boolean]))
+
   /** Materialize a pipeline stage (see the lifecycle note above). Also
     * the stage-boundary idiom for composed curation chains: each
     * keep-stage built as `df ⋉ keys(df)` doubles its input's lineage, so
@@ -64,13 +75,33 @@ object Dedup {
     * stage's (already filtered, smaller) output.
     */
   def materialize(df: DataFrame, eager: Boolean = false): DataFrame = {
-    val mat = df.localCheckpoint(eager)
+    val mat = df.localCheckpoint(eager = false)
+    val lr = mat.queryExecution.analyzed.asInstanceOf[LogicalRDD]
     val scope = openScopes.get().peek() // null outside any scope
-    mat.queryExecution.analyzed match {
-      case lr: LogicalRDD if scope != null => scope.push(lr.rdd)
-      case _ => ()
+    if (scope != null) scope.push(lr.rdd)
+    if (!eager) return mat
+    // the one job, a SQL execution of df's plan; real bytes, as Spark's
+    // per-type estimate counts an array as one element
+    val perRow = EstimationUtils.getSizePerRow(lr.output).toLong
+    val parts = SQLExecution.withNewExecutionId(df.queryExecution, Some("materialize")) {
+      df.sparkSession.sparkContext.runJob(lr.rdd, (it: Iterator[InternalRow]) =>
+        it.foldLeft((0L, 0L)) {
+          case ((n, b), u: UnsafeRow) => (n + 1, b + u.getSizeInBytes)
+          case ((n, b), _) => (n + 1, b + perRow)
+        })
     }
-    mat
+    eagerStages.add(lr.rdd)
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    ColumnShim.ofRows(session, lr.copy()(session, Some(Statistics(BigInt(parts.map(_._2).sum),
+      Some(BigInt(parts.map(_._1).sum)))), Some(lr.constraints)))
+  }
+
+  /** The row count an eager [[materialize]] recorded: no job runs. */
+  def rowCount(stage: DataFrame): Long = stage.queryExecution.analyzed match {
+    case lr: LogicalRDD if eagerStages.contains(lr.rdd) =>
+      lr.stats.rowCount.get.toLong
+    case _ => throw new IllegalArgumentException(
+      "rowCount needs a stage built by materialize(df, eager = true)")
   }
 
   /** Free ONE materialized stage's blocks now: round k's output
@@ -755,7 +786,7 @@ object Dedup {
     // total with no second tokenization scan
     val nTot = docs.agg(count(lit(1)).as("_nd")).crossJoin(
       groups.agg(coalesce(sum("tk"), lit(0L)).as("_ntk")))
-    val qual = pairs.join(broadcast(tausDf), col("jaccard") >= col("_tau"))
+    val qual = pairs.join(tausDf, col("jaccard") >= col("_tau"))
     val pairAgg = qual.groupBy("tau_q6")
       .agg(sum("n_pairs").as("n_pairs"))
     // groups touched at τ: either side of any qualifying row (intra
@@ -777,7 +808,7 @@ object Dedup {
       .join(pairAgg, Seq("tau_q6"), "left")
       .join(docAgg, Seq("tau_q6"), "left")
       .na.fill(0L, Seq("n_pairs", "n_groups", "n_docs", "n_tokens"))
-      .crossJoin(broadcast(nTot))
+      .crossJoin(nTot)
       .withColumn("doc_share_q6", when(col("_nd") > 0, expr(
         "CAST((CAST(n_docs AS DECIMAL(38,0)) * 1000000) DIV _nd" +
           " AS BIGINT)")))
@@ -957,9 +988,9 @@ object Dedup {
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       eager = true)
-    // The label table is bounded by the directed edge count, exact here:
-    // its node-sized sides broadcast while that many rows fit.
-    val nDirEdges = edges.count()
+    // The label table is bounded by the directed edge count (the stage's
+    // own): its node-sized sides broadcast while that many rows fit.
+    val nDirEdges = rowCount(edges)
     // init folds the first hop in: label = min(self, direct neighbors).
     // Every node appears as a src (edges are bidirectional), so this one
     // aggregation replaces the distinct-nodes scan AND saves a full
@@ -1086,7 +1117,7 @@ object Dedup {
     val hist = dom.groupBy("n_domains")
       .agg(count(lit(1)).as("n_clusters"), sum("n_docs").as("n_docs"))
     val tot = hist.agg(coalesce(sum("n_clusters"), lit(0L)).as("_tc"))
-    hist.crossJoin(broadcast(tot))
+    hist.crossJoin(tot)
       .withColumn("cluster_share_q6", when(col("_tc") > 0, expr(
         "CAST((CAST(n_clusters AS DECIMAL(38,0)) * 1000000) DIV _tc" +
           " AS BIGINT)")))
@@ -1692,7 +1723,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_clusters"))
       .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
     val tot = hist.agg(coalesce(sum("n_docs"), lit(0L)).as("_t"))
-    hist.crossJoin(broadcast(tot))
+    hist.crossJoin(tot)
       .withColumn("pct_docs_q6", when(col("_t") =!= 0, expr(
         "CAST((CAST(n_docs AS DECIMAL(38,0)) * 1000000) DIV _t" +
           " AS BIGINT)")))

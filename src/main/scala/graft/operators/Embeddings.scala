@@ -510,7 +510,7 @@ object Embeddings {
       .agg(count(lit(1)).as("n"))
     val tot = cells.agg(sum("n").as("_t"), count(lit(1)).as("_nc"),
       max("n").as("_mx"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("share_q6", expr(
         "CAST((CAST(n AS DECIMAL(38,0)) * 1000000) DIV _t AS BIGINT)"))
       .withColumn("imbalance_q6", expr(

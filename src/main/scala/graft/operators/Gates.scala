@@ -6,22 +6,22 @@ import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.internal.SQLConf
 
 /** The one size gate. Every operator that picks a physical strategy
-  * from an exact row count asks here: an explicit `broadcast(...)` (else
-  * a shuffle join), a fixed point collected to the driver (else the
-  * distributed loop), a `limit(N + 1)` probe that collects at most N
-  * rows. The answer is Spark's own: `rows` × the planner's row-size
-  * estimate for `df`'s output (`EstimationUtils.getSizePerRow`, what
-  * Catalyst compares with the same setting) must fit the session's
+  * from an exact row count asks here: a fixed point collected to the
+  * driver (else the distributed loop), a `limit(N + 1)` probe that
+  * collects at most N rows, a broadcast hint on a derived frame (else a
+  * shuffle join). The answer is Spark's own: `rows` × the planner's
+  * row-size estimate for `df`'s output (`EstimationUtils.getSizePerRow`,
+  * what Catalyst compares with the same setting) must fit the session's
   * `spark.sql.autoBroadcastJoinThreshold`. A threshold ≤ 0 admits
   * nothing, so `-1` turns off every broadcast and every driver-side
   * branch at once.
   *
-  * Why callers hint at all: a materialized stage (a local checkpoint)
-  * carries no size statistics, so Catalyst plans every join against it
-  * as sort-merge. The caller holds the exact row count — the count is
-  * the job that materializes the lazy stage, not a cheap metadata read —
-  * and this gate turns it into the decision the planner would make with
-  * real statistics.
+  * Catalyst sizes joins against an eager stage (its measured rows and
+  * bytes; `Dedup.rowCount` reads the rows), an ungrouped aggregate or
+  * a local relation by itself. A frame DERIVED from a stage (a join or
+  * aggregation over it, a lazy stage) carries only an estimate, often
+  * the product of its inputs' sizes: the caller that knows a bound on
+  * its rows passes it to [[broadcastIfFits]].
   */
 private[graft] object Gates {
 

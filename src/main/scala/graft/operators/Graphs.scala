@@ -146,8 +146,8 @@ object Graphs {
     val und = Dedup.materialize(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
-    val m = und.count()
+        .filter(col("a") =!= col("b")).distinct(), eager = true)
+    val m = Dedup.rowCount(und)
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -269,8 +269,9 @@ object Graphs {
             s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
     // weighted edges are symmetric-caller-only in this engine, so the
     // nodes are exactly the chunk-0 adjacency rows
-    val nodes = e.filter(col("_chunk") === 0).select(col("src").as("node"))
-    val n = nodes.count()
+    val nodes = Dedup.materialize(
+      e.filter(col("_chunk") === 0).select(col("src").as("node")), eager = true)
+    val n = Dedup.rowCount(nodes)
     require(n > 0, "empty graph")
     val base = (scale * (100 - dampPct)) / (100L * n)
     var scores = nodes.withColumn("score", lit(scale / n))
@@ -343,11 +344,11 @@ object Graphs {
     * to DECIMAL(38,0) in one commit.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val canon = edges
+    val canon = Dedup.materialize(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val m = canon.count()
+      .filter(col("a") =!= col("b")).distinct(), eager = true)
+    val m = Dedup.rowCount(canon)
     val lab = labels.select(col("node"), col("community"))
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
@@ -515,15 +516,13 @@ object Graphs {
     val src0 = Option(sources).getOrElse(e.agg(min(col("src")).as("node")))
     var dist = Dedup.materialize(src0.select(col("node")).distinct()
       .withColumn("dist", lit(0L)), eager = true)
-    var frontier = dist
-    // The frontier is materialized every round, so its count is exact
-    // (see Gates). Without the broadcast every round's relax re-shuffles
-    // and re-sorts the FULL edge table by src (measured r18: the 3
+    // The frontier is an eager stage, so Catalyst broadcasts it while it
+    // fits. Without the broadcast every round's relax re-shuffles and
+    // re-sorts the FULL edge table by src (measured r18: the 3
     // edge-table shuffles were q211's dominant cost).
-    var frontierCount = frontier.count()
+    var frontier = dist
     for (r <- 1 to rounds) {
-      val relax = e.join(Gates.broadcastIfFits(
-          frontier.withColumnRenamed("node", "src"), frontierCount), Seq("src"))
+      val relax = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("_nd"))
         .groupBy("node").agg(min("_nd").as("_nd"))
       // One node-keyed FULL OUTER join folds the old improved-filter +
@@ -542,8 +541,8 @@ object Graphs {
           (col("dist").isNull || (col("_nd").isNotNull &&
             col("_nd") < col("dist"))).as("_imp")), eager = true)
       dist = merged.select("node", "dist")
-      frontier = merged.filter(col("_imp")).select("node", "dist")
-      if (r < rounds) frontierCount = frontier.count() // cached-block scan
+      if (r < rounds) frontier = Dedup.materialize(
+        merged.filter(col("_imp")).select("node", "dist"), eager = true)
     }
     dist.select("node", "dist")
   }
@@ -592,6 +591,40 @@ object Graphs {
         col("n_both"), col("score"), col("rank"))
   }
 
+  /** The (adjacency, nodes) pair both integer PageRanks iterate over.
+    *
+    * The graph materializes as a CHUNKED ADJACENCY table in ONE
+    * shuffle: groupBy(src) + collect_set dedups repeat edges inside
+    * the aggregation (map-side partials shrink them before the wire),
+    * yields the exact out-degree as the set size, and stores each
+    * node's neighbours as ≤ c-element array rows (a 10M-degree hub
+    * becomes ~1.2k bounded rows, never one giant record). The lazy
+    * adjacency stage is filled by the eager node table's one job, which
+    * also counts the nodes. Under adaptive execution the checkpoint
+    * does not declare the groupBy's src hash-partitioning, so a round
+    * that does not broadcast its scores shuffles the adjacency again.
+    *
+    * Pure sinks (dst-only nodes of a digraph) still get base mass:
+    * nodes = every src (one row per node via _chunk=0) ∪ every
+    * neighbour, read off the adjacency, never the raw edges. With
+    * `symmetric = true` (the caller GUARANTEES every dst is also a src,
+    * as coOccurrenceEdges' output is) nodes are the chunk-0 rows.
+    */
+  private def chunkedGraph(edges: DataFrame, c: Int, symmetric: Boolean)
+      : (DataFrame, DataFrame) = {
+    val e = Dedup.materialize(edges.select("src", "dst")
+      .groupBy("src").agg(collect_set("dst").as("_all"))
+      .select(col("src"), size(col("_all")).as("deg"),
+        posexplode(expr(
+          s"transform(sequence(0, (size(_all)-1) div $c)," +
+            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
+    val chunk0 = e.filter(col("_chunk") === 0).select(col("src").as("node"))
+    (e, Dedup.materialize(
+      if (symmetric) chunk0
+      else chunk0.union(e.select(explode(col("nbrs")).as("node"))).distinct(),
+      eager = true))
+  }
+
   /** PageRank in integer fixed-point, `iters` synchronous rounds.
     * score₀ = scale/n; per round each node sends
     * floor(score·dampPct/(deg·100)) along each out-edge and every node
@@ -615,42 +648,8 @@ object Graphs {
       scale: Long = 1000000000000L, dampPct: Int = 85,
       maxNbrsPerRow: Int = 8192, symmetric: Boolean = false,
       redistributeDangling: Boolean = false): DataFrame = {
-    // The graph materializes as a CHUNKED ADJACENCY table in ONE
-    // shuffle: groupBy(src) + collect_set dedups repeat edges inside
-    // the aggregation (map-side partials shrink them before the wire),
-    // yields the exact out-degree as the set size, and stores each
-    // node's neighbours as ≤ maxNbrsPerRow-element array rows (a 10M-
-    // degree hub becomes ~1.2k bounded rows, never one giant record).
-    // This replaces the previous distinct + repartition + window-sort
-    // pipeline (three exchanges and a sort) with a single hash-agg
-    // exchange. The stage is lazy: the node count below populates it,
-    // and the pipeline scope (or plan GC) frees it after the rounds have
-    // run. Under adaptive execution the checkpoint does not declare the
-    // groupBy's src hash-partitioning, so a round that does not
-    // broadcast its scores shuffles the adjacency again.
-    val c = maxNbrsPerRow
-    val e = Dedup.materialize(edges.select("src", "dst")
-      .groupBy("src").agg(collect_set("dst").as("_all"))
-      .select(col("src"), size(col("_all")).as("deg"),
-        posexplode(expr(
-          s"transform(sequence(0, (size(_all)-1) div $c)," +
-            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
-    // Pure sinks (dst-only nodes of a digraph) still get base mass:
-    // nodes = every src (one bounded row per node via _chunk=0) ∪ every
-    // neighbour, deduped reading the small adjacency — never the
-    // raw edge input a second time. `symmetric = true` (the caller
-    // GUARANTEES every dst also appears as a src — coOccurrenceEdges
-    // output by construction) skips the neighbour explode + distinct
-    // entirely: nodes are exactly the chunk-0 adjacency rows.
-    val nodes =
-      if (symmetric)
-        e.filter(col("_chunk") === 0).select(col("src").as("node"))
-      else
-        Dedup.materialize(
-          e.filter(col("_chunk") === 0).select(col("src").as("node"))
-            .union(e.select(explode(col("nbrs")).as("node")))
-            .distinct(), eager = true)
-    val n = nodes.count()
+    val (e, nodes) = chunkedGraph(edges, maxNbrsPerRow, symmetric)
+    val n = Dedup.rowCount(nodes)
     require(n > 0, "empty graph")
     val base = (scale * (100 - dampPct)) / (100L * n)
     // Each round's scores materialize (nodes-sized — tiny by
@@ -717,27 +716,8 @@ object Graphs {
   def personalizedPageRankInt(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, scale: Long = 1000000000000L, dampPct: Int = 85,
       maxNbrsPerRow: Int = 8192, symmetric: Boolean = false): DataFrame = {
-    val c = maxNbrsPerRow
-    val e = Dedup.materialize(edges.select("src", "dst")
-      .groupBy("src").agg(collect_set("dst").as("_all"))
-      .select(col("src"), size(col("_all")).as("deg"),
-        posexplode(expr(
-          s"transform(sequence(0, (size(_all)-1) div $c)," +
-            s" i -> slice(_all, i*$c+1, $c))")).as(Seq("_chunk", "nbrs"))))
-    // `symmetric = true` (the caller GUARANTEES every dst also appears
-    // as a src — coOccurrenceEdges output by construction) skips the
-    // neighbour explode + distinct, exactly as in [[pageRankInt]] (r18:
-    // the explode re-scanned the whole adjacency and shuffled a node
-    // row per EDGE for a node set the chunk-0 rows already hold).
-    val nodes =
-      if (symmetric)
-        e.filter(col("_chunk") === 0).select(col("src").as("node"))
-      else
-        Dedup.materialize(
-          e.filter(col("_chunk") === 0).select(col("src").as("node"))
-            .union(e.select(explode(col("nbrs")).as("node")))
-            .distinct(), eager = true)
-    val n = nodes.count()
+    val (e, nodes) = chunkedGraph(edges, maxNbrsPerRow, symmetric)
+    val n = Dedup.rowCount(nodes)
     require(n > 0, "empty graph")
     // In-graph seeds, as a 0/1 flag on the node table (one join, once)
     val seedCol = seeds.columns.head
@@ -800,10 +780,10 @@ object Graphs {
     val canon = Dedup.materialize(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    // canon's exact edge count gates the broadcasts below: canon has m
-    // rows, and the weight table (nodes of degree ≥ 2) at most m
-    val m = canon.count()
+      .filter(col("a") =!= col("b")).distinct(), eager = true)
+    // canon's exact edge count bounds the weight table (nodes of
+    // degree ≥ 2: at most m rows)
+    val m = Dedup.rowCount(canon)
     val both = canon.select(col("a").as("z"), col("b").as("x"))
       .unionByName(canon.select(col("b").as("z"), col("a").as("x")))
     val deg = both.groupBy("z").agg(count(lit(1)).as("_d"))
@@ -821,7 +801,7 @@ object Graphs {
     pairs
       .groupBy(col("pa").as("a"), col("pb").as("b"))
       .agg(count(lit(1)).as("cn"), sum("_wq6").as("aa_q6"))
-      .join(Gates.broadcastIfFits(canon, m), Seq("a", "b"), "left_anti")
+      .join(canon, Seq("a", "b"), "left_anti")
       .orderBy(col("aa_q6").desc, col("a"), col("b"))
       .limit(topK)
   }

@@ -64,7 +64,7 @@ object Packing {
     // poison its successors) and around it (a bucket prefix that is all
     // NULL is an empty contribution, matching the all-NULL bucket
     // treatment of the driver-side offsets above)
-    b.join(broadcast(offsets), Seq("_b"))
+    b.join(offsets, Seq("_b"))
       .withColumn(outCol, col("_boff") +
         coalesce(sum(coalesce(col(valueCol).cast("long"), lit(0L))).over(w), lit(0L)))
       .drop("_b", "_boff")
@@ -139,7 +139,7 @@ object Packing {
       coalesce(TextAnalysis.tokenCountWs(col(textCol)).cast("long"),
         lit(0L))).as("_n"))
     val grid = budgets.map(_.toLong).toDF("max_len")
-    n.crossJoin(broadcast(grid))
+    n.crossJoin(grid)
       .groupBy("max_len")
       .agg(count(lit(1)).as("n_docs"),
         sum("_n").as("n_tokens"),

@@ -95,7 +95,7 @@ object Ranking {
     import spark.implicits._
     val offsets = offRows.toSeq.toDF("_b", "_off")
     val w = Window.partitionBy("_b").orderBy(sortCols.map(col): _*)
-    val out = b.join(broadcast(offsets), Seq("_b"))
+    val out = b.join(offsets, Seq("_b"))
       .withColumn(outCol, col("_off") + row_number().over(w))
       .withColumn(nCol, lit(n))
       .drop("_b", "_off")
@@ -144,7 +144,7 @@ object Ranking {
     val offsets = offRows.toSeq.toDF("_b", "_off", "_n", "_cnt")
     val asc = Window.partitionBy("_b").orderBy(sortCols.map(col): _*)
     val desc = Window.partitionBy("_b").orderBy(sortCols.map(c => col(c).desc): _*)
-    val ranked = b.join(broadcast(offsets), Seq("_b"))
+    val ranked = b.join(offsets, Seq("_b"))
       .withColumn("_rk", rank().over(asc))
     val withLe = // #rows in bucket with key ≤ current
       if (tieFree) ranked.withColumn("_le", col("_rk"))

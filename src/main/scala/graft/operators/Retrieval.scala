@@ -223,7 +223,7 @@ object Retrieval {
       .withColumn("hit", col("first_rank").isNotNull)
     val tot = first.agg(coalesce(sum("rr_q6"), lit(0L)).as("_s"),
       count(lit(1)).as("_n"))
-    first.crossJoin(broadcast(tot))
+    first.crossJoin(tot)
       .withColumn("mrr_q6", when(col("_n") > 0,
         expr("CAST(CAST(_s AS DECIMAL(38,0)) DIV _n AS BIGINT)")))
       .select(col(qCol), col("first_rank"), col("rr_q6"), col("hit"),

@@ -178,17 +178,15 @@ object Sampling {
     import spark.implicits._
     val tgt = targetsPermille.toDF("_g", "target_pm")
     val dec = "DECIMAL(38,0)"
-    val planned = per.join(broadcast(tgt), Seq("_g"))
-      .crossJoin(broadcast(
-        per.agg(coalesce(sum("toks"), lit(0L)).as("_t"))))
+    val planned = per.join(tgt, Seq("_g"))
+      .crossJoin(per.agg(coalesce(sum("toks"), lit(0L)).as("_t")))
       .withColumn("rate_q6", least(lit(1000000L),
         expr(s"(CAST(target_pm AS $dec) * _t * 1000000)" +
           " DIV (CAST(1000 AS DECIMAL(38,0)) * toks)").cast("long")))
       .withColumn("kept_toks",
         expr(s"(CAST(toks AS $dec) * rate_q6) DIV 1000000").cast("long"))
     planned
-      .crossJoin(broadcast(planned.agg(
-        coalesce(sum("kept_toks"), lit(0L)).as("_kt"))))
+      .crossJoin(planned.agg(coalesce(sum("kept_toks"), lit(0L)).as("_kt")))
       .select(col("_g").as(domainCol), col("toks"), col("target_pm"),
         col("rate_q6"), col("kept_toks"),
         when(col("_kt") =!= 0,
@@ -416,7 +414,7 @@ object Sampling {
         .as("plan_shortfall_tokens"))
     rows
       .join(broadcast(perSource.drop("toks", "_short")), Seq(domainCol))
-      .crossJoin(broadcast(plan))
+      .crossJoin(plan)
       .select(col("phase"), col("phase_pm"), col("alpha_q3"),
         col(domainCol), col("toks"), col("w"),
         col("phase_budget_tokens"), col("needed_tokens"),
@@ -433,7 +431,7 @@ object Sampling {
         graft.plans.GraftExtensions.isqrtNative(col("toks")))
     val tot = w.agg(coalesce(sum("toks"), lit(0L)).as("_t"),
       coalesce(sum("w_sqrt"), lit(0L)).as("_tw"))
-    w.crossJoin(broadcast(tot))
+    w.crossJoin(tot)
       .withColumn("raw_share_q6", when(col("_t") =!= 0, expr(
         s"CAST((CAST(toks AS $dec) * 1000000) DIV _t AS BIGINT)")))
       .withColumn("temp_share_q6", when(col("_tw") =!= 0, expr(

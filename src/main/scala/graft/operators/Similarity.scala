@@ -908,12 +908,11 @@ object Similarity extends Serializable {
     // 64): a cosine threshold > 1 is meaningless, so num ≤ den ≤ 1000.
     require(thresholdNum <= thresholdDen,
       s"thresholdNum $thresholdNum > thresholdDen $thresholdDen (cosine threshold > 1)")
-    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol))
-    // nCells ≤ 0 → auto-scale with corpus size (see scaladoc). The
-    // count() forces the checkpoint that training re-reads — one extra
-    // job over materialized data, nothing shuffled.
+    // nCells ≤ 0 → auto-scale with corpus size (see scaladoc): an eager
+    // stage, whose one job also counts it
+    val qc = Dedup.materialize(quantIds(corpus, idCol, vecCol), eager = nCells <= 0)
     val nc = if (nCells > 0) nCells else {
-      val n = qc.count()
+      val n = Dedup.rowCount(qc)
       require(n > 0, "semanticDedup on an empty corpus")
       math.min(65536L, (n + targetCellSize - 1) / targetCellSize).toInt
     }
@@ -1087,7 +1086,7 @@ object Similarity extends Serializable {
       .agg(count(lit(1)).as("n_points"))
     val tot = hist.agg(coalesce(sum(col("in_degree") * col("n_points")),
       lit(0L)).as("_slots"))
-    hist.crossJoin(broadcast(tot))
+    hist.crossJoin(tot)
       .withColumn("slot_share_q6", when(col("_slots") > 0, expr(
         "CAST((CAST(in_degree * n_points AS DECIMAL(38,0)) * 1000000)" +
           " DIV _slots AS BIGINT)")))
@@ -1109,7 +1108,7 @@ object Similarity extends Serializable {
       .agg(sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
     val o = h.agg(coalesce(sum("n_hits"), lit(0L)).as("_th"),
       count(lit(1)).as("_nq"))
-    h.crossJoin(broadcast(o))
+    h.crossJoin(o)
       .withColumn("recall_q6", expr(
         s"CAST((CAST(n_hits AS DECIMAL(38,0)) * 1000000) DIV $k" +
           " AS BIGINT)"))
@@ -1186,20 +1185,20 @@ object Similarity extends Serializable {
     val psDf = ps.map(_.toLong).toDF("n_probe")
     val wP = Window.partitionBy("query_id", "n_probe")
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    val approx = cands.join(broadcast(psDf), col("_prn") < col("n_probe"))
+    val approx = cands.join(psDf, col("_prn") < col("n_probe"))
       .withColumn("rank", row_number().over(wP))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "n_probe")
     val hits = truth.join(approx, Seq("query_id", "neighbor_id"))
       .groupBy("n_probe").agg(count(lit(1)).as("n_hits"))
-    val scanned = q.join(broadcast(psDf), col("_prn") < col("n_probe"))
+    val scanned = q.join(psDf, col("_prn") < col("n_probe"))
       .join(broadcast(cellSizes), Seq("cell"))
       .groupBy("n_probe")
       .agg(coalesce(sum("_csz"), lit(0L)).as("rows_scanned"))
     psDf.join(hits, Seq("n_probe"), "left")
       .join(scanned, Seq("n_probe"), "left")
       .na.fill(0L, Seq("n_hits", "rows_scanned"))
-      .crossJoin(broadcast(nq)).crossJoin(broadcast(nc))
+      .crossJoin(nq).crossJoin(nc)
       .withColumn("macro_recall_q6", when(col("_nq") > 0, expr(
         s"CAST((CAST(n_hits AS DECIMAL(38,0)) * 1000000) DIV (_nq * $k)" +
           " AS BIGINT)")))
@@ -1328,7 +1327,7 @@ object Similarity extends Serializable {
     // join-against-literals shape as ivfProbePlan ranks every depth in
     // one window pass. Zero-hit factors re-enter via the left join.
     val rfsDf = rfs.map(_.toLong).toDF("refine_factor")
-    val exactP = exact.join(broadcast(rfsDf),
+    val exactP = exact.join(rfsDf,
       col("_adc_rank") <= lit(k.toLong) * col("refine_factor"))
     val wTP = Window.partitionBy("query_id", "refine_factor")
       .orderBy(col("dist2"), col("neighbor_id"))
@@ -1344,7 +1343,7 @@ object Similarity extends Serializable {
       .join(nref, Seq("refine_factor"), "left")
       .na.fill(0L, Seq("n_hits", "n_refined"))
       .withColumn("depth", lit(k.toLong) * col("refine_factor"))
-      .crossJoin(broadcast(nc))
+      .crossJoin(nc)
       .withColumn("macro_recall_q6", when(lit(nqL) > 0, expr(
         s"CAST((CAST(n_hits AS DECIMAL(38,0)) * 1000000) DIV ($nqL * $k)" +
           " AS BIGINT)")))
@@ -1374,11 +1373,11 @@ object Similarity extends Serializable {
   def ivfStalenessAudit(base: DataFrame, appended: DataFrame,
       nCells: Int = 16, iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val qc = Dedup.materialize(quantIds(base, idCol, vecCol))
+    val qc = Dedup.materialize(quantIds(base, idCol, vecCol), eager = true)
     // clamp the codebook to the base size (the semanticDedup
     // auto-scale convention) so a tiny base degrades to one-vector
     // cells instead of failing the seed requirement
-    val n = qc.count()
+    val n = Dedup.rowCount(qc)
     require(n > 0, "ivfStalenessAudit on an empty base")
     val nc = math.min(nCells.toLong, n).toInt
     val cs = trainCellCentroids(qc, hashSeedVecs(qc, nc), iters)
@@ -1397,7 +1396,7 @@ object Similarity extends Serializable {
       count(lit(1)).as("_nc"),
       coalesce(max("n_base"), lit(0L)).as("_mxb"),
       coalesce(max(col("n_base") + col("n_new")), lit(0L)).as("_mxa"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("growth_q6", when(col("n_base") > 0, expr(
         "CAST((CAST(n_new AS DECIMAL(38,0)) * 1000000) DIV n_base" +
           " AS BIGINT)")))
@@ -1456,9 +1455,9 @@ object Similarity extends Serializable {
       .select(col("id"), col("qv"), lit(false).as("_bench"))
     val qcB = quantIds(benchmark, idCol, vecCol)
       .select(col("id"), col("qv"), lit(true).as("_bench"))
-    val qcU = Dedup.materialize(qcC.unionByName(qcB))
+    val qcU = Dedup.materialize(qcC.unionByName(qcB), eager = nCells <= 0)
     val nc = if (nCells > 0) nCells else {
-      val n = qcU.count()
+      val n = Dedup.rowCount(qcU)
       require(n > 0, "semanticDecontaminate on empty input")
       math.min(65536L, (n + targetCellSize - 1) / targetCellSize).toInt
     }

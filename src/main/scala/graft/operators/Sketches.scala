@@ -282,7 +282,7 @@ object Sketches {
     */
   def heavyHitters(df: DataFrame, itemCol: String,
       relDen: Long = 120L): DataFrame = {
-    val slim = Dedup.materialize(df.select(col(itemCol)))
+    val slim = Dedup.materialize(df.select(col(itemCol)), eager = true)
     screenAndVerify(slim, cmsCounters(slim, itemCol), itemCol, relDen)
   }
 
@@ -295,13 +295,13 @@ object Sketches {
     */
   def heavyHittersWithCounters(df: DataFrame, counters: DataFrame,
       itemCol: String, relDen: Long = 120L): DataFrame = {
-    val slim = Dedup.materialize(df.select(col(itemCol)))
+    val slim = Dedup.materialize(df.select(col(itemCol)), eager = true)
     screenAndVerify(slim, counters, itemCol, relDen)
   }
 
   private def screenAndVerify(slim: DataFrame, counters: DataFrame,
       itemCol: String, relDen: Long): DataFrame = {
-    val total = slim.count()
+    val total = Dedup.rowCount(slim)
     val screened = cmsEstimate(counters, slim.distinct(), itemCol)
       .filter(col("est") * relDen >= total)
       .select(col(itemCol))
@@ -396,7 +396,7 @@ object Sketches {
       .filter(col("rn") <= k)
     val ranked = sample
       .withColumn("vr", row_number().over(Window.orderBy(col("_v"))))
-      .crossJoin(broadcast(sample.agg(count(lit(1)).as("m"))))
+      .crossJoin(sample.agg(count(lit(1)).as("m")))
     val qcols = qs.map(q =>
       min(when(col("vr") === expr(s"($q * m + 99) div 100"), col("_v")))
         .as(s"q$q"))
@@ -562,7 +562,7 @@ object Sketches {
       .withColumn("lo", expr(s"CASE WHEN oct = 1 THEN CAST(1 AS BIGINT) ELSE _lo1 + (cell * _lo1) DIV $sub END"))
       .withColumn("hi", expr(s"CASE WHEN oct = 1 THEN CAST(2 AS BIGINT) ELSE _lo1 + ((cell + 1) * _lo1) DIV $sub END"))
     val pcts = percentiles.toDF("_num", "_den", "pct")
-    cum.join(broadcast(pcts),
+    cum.join(pcts,
         col("_cum") - col("n") < expr("(_num * _n + _den - 1) DIV _den") &&
           expr("(_num * _n + _den - 1) DIV _den") <= col("_cum"))
       .select(col("pct"), col("_n").as("n"),

@@ -882,7 +882,7 @@ object TextAnalysis {
         col("w2") === col("_w"), "left").drop("_w")
       .join(uni.select(col("_w"), col("_c1").as("_c1w")),
         col("w3") === col("_w"), "left").drop("_w")
-      .crossJoin(broadcast(nTot))
+      .crossJoin(nTot)
       .withColumn("_t_q12",
         when(col("_c3").isNotNull,
           lnQ12Native(col("_c3")) - lnQ12Native(col("_c2s")))
@@ -971,7 +971,7 @@ object TextAnalysis {
     bcnt
       .join(ucnt.select(col("_w").as("w1"), col("_c").as("n_w1")), "w1")
       .join(ucnt.select(col("_w").as("w2"), col("_c").as("n_w2")), "w2")
-      .crossJoin(broadcast(scal))
+      .crossJoin(scal)
       .withColumn("pmi_q12",
         lnQ12Native(col("n_pair") * col("_n") * col("_n")) -
           lnQ12Native(col("n_w1") * col("n_w2") * col("_bt")))
@@ -1256,7 +1256,7 @@ object TextAnalysis {
           col("_y").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_sxy"),
         sum((col("_x").cast("decimal(19,0)") *
           col("_x").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_sxx"))
-      .crossJoin(broadcast(vocab))
+      .crossJoin(vocab)
       .withColumn("_num",
         expr("(n_fit * _sxy - _sx * _sy) * 1000000000"))
       .withColumn("_den", expr("n_fit * _sxx - _sx * _sx"))
@@ -1301,8 +1301,7 @@ object TextAnalysis {
       .groupBy("_fs").agg(count(lit(1)).as("_nw"))
     val ckpts = (1 to buckets)
       .map(i => (i.toLong, i.toLong * n / buckets)).toDF("ckpt", "n_docs")
-    broadcast(ckpts)
-      .join(firstSeen, col("_fs") <= col("n_docs"), "left")
+    ckpts.join(firstSeen, col("_fs") <= col("n_docs"), "left")
       .groupBy("ckpt", "n_docs")
       .agg(coalesce(sum("_nw"), lit(0L)).as("vocab"))
   }
@@ -1367,7 +1366,7 @@ object TextAnalysis {
       .filter(col("_x") > 0)
       .orderBy(col("_x").desc).limit(k)
     val xk = vals.agg(min("_x").as("_xk"), count(lit(1)).as("k_eff"))
-    vals.crossJoin(broadcast(xk))
+    vals.crossJoin(xk)
       .withColumn("_t",
         graft.plans.GraftExtensions.lnQ12Native(col("_x")) -
           graft.plans.GraftExtensions.lnQ12Native(col("_xk")))
@@ -1734,7 +1733,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"), sum("_bytes").as("n_bytes"),
         sum("_toks").as("n_tokens"))
     val tot = cells.agg(sum("n_tokens").as("_tt"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("token_share_q6", expr(
         "CAST(CASE WHEN _tt > 0 THEN (CAST(n_tokens AS DECIMAL(38,0))" +
           " * 1000000) DIV _tt END AS BIGINT)"))
@@ -1803,7 +1802,7 @@ object TextAnalysis {
   /** [[tokenBudgetBySource]]'s readout over prebuilt cells. */
   def tokenBudgetFromCells(cells: DataFrame): DataFrame = {
     val tot = cells.agg(sum("n_tokens").as("_tt"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("token_share_q6", expr(
         "CAST(CASE WHEN _tt > 0 THEN (CAST(n_tokens AS DECIMAL(38,0))" +
           " * 1000000) DIV _tt END AS BIGINT)"))

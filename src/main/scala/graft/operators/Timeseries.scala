@@ -283,7 +283,7 @@ object Timeseries {
     require(windowMinutes >= 1, "freshnessAudit needs windowMinutes >= 1")
     val w = windowMinutes.toLong
     val scal = cells.agg(max("_min").as("_gmax"))
-    cells.crossJoin(broadcast(scal))
+    cells.crossJoin(scal)
       .groupBy(col("_t").as("event_type"))
       .agg(sum("_n").as("n_events"),
         max("_min").as("last_minute"),

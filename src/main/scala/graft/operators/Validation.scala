@@ -365,7 +365,7 @@ object Validation {
     val cells = tagged.groupBy(col("_st").as("status"))
       .agg(count(lit(1)).as("n_rows"))
     val tot = cells.agg(coalesce(sum("n_rows"), lit(0L)).as("_t"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("share_q6", when(col("_t") > 0, expr(
         "CAST((CAST(n_rows AS DECIMAL(38,0)) * 1000000) DIV _t" +
           " AS BIGINT)")))
@@ -412,7 +412,7 @@ object Validation {
       .select((col("_pos") + 1).cast("long").as("rank"),
         col("p.id").as("key"))
     topk.join(cells, Seq("key"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("pair_share_q6", when(col("total_pairs") > 0, expr(
         "CAST((n_pairs * 1000000) DIV total_pairs AS BIGINT)")))
       .withColumn("skew_q6", when(col("total_pairs") > 0, expr(
@@ -541,7 +541,7 @@ object Validation {
         sum("n_pairs").cast("long").as("sum_pairs"),
         sum("_repl").cast("long").as("repl_rows"),
         max("_residual").cast("long").as("max_task_pairs"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("salt_fanout"), col("n_keys"), col("sum_pairs"),
         col("repl_rows"), col("max_task_pairs"),
         col("_n_salted").as("n_salted_keys"),
@@ -668,7 +668,7 @@ object Validation {
       .join(cellsR, joinCond, "left")
       .groupBy(qs ++ Seq(col("_nc"), col("_gband"), col("_cumg")): _*)
       .agg(coalesce(sum("_rn"), lit(0L)).as("_cumc"))
-    cum.crossJoin(broadcast(scal))
+    cum.crossJoin(scal)
       .withColumn("_term", expr(
         "abs(CAST(_cumc AS DECIMAL(38,0)) * _N" +
           " - CAST(_cumg AS DECIMAL(38,0)) * _nc)"))
@@ -707,7 +707,7 @@ object Validation {
     import spark.implicits._
     val ksDf = ks.map(_.toLong).toDF("k")
     val tot = cells.agg(coalesce(sum("_n"), lit(0L)).as("_tot"))
-    val per = cells.crossJoin(broadcast(ksDf))
+    val per = cells.crossJoin(ksDf)
       .groupBy("k")
       .agg(
         sum(when(col("_n") < col("k"), lit(1L)).otherwise(0L))
@@ -721,7 +721,7 @@ object Validation {
     // left join from the ladder so an EMPTY release still reads one
     // all-zero row per k instead of vanishing
     ksDf.join(per, Seq("k"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("k"),
         coalesce(col("n_groups_suppressed"), lit(0L))
           .as("n_groups_suppressed"),

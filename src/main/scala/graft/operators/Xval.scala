@@ -245,7 +245,7 @@ object Xval {
       .groupBy("fold_a", "fold_b")
       .agg(count(lit(1)).as("n_leaky_groups"),
         sum(expr("CAST(_na AS DECIMAL(38,0)) * _nb")).as("_lp"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("leak_share_q6", when(col("total_groups") > 0, expr(
         "CAST((CAST(n_multi_fold_groups AS DECIMAL(38,0)) * 1000000)" +
           " DIV total_groups AS BIGINT)")))
@@ -309,7 +309,7 @@ object Xval {
         "left")
       .select(col("fold"), col("_nf"), col("_ngrp"),
         coalesce(col("_rn"), lit(0L)).as("_nfb"))
-    grid.crossJoin(broadcast(scal))
+    grid.crossJoin(scal)
       .withColumn("_dev", expr(
         "abs(CAST(_nfb AS DECIMAL(38,0)) * _N" +
           " - CAST(_ngrp AS DECIMAL(38,0)) * _nf)"))
@@ -455,7 +455,7 @@ object Xval {
       .groupBy("fold_a", "fold_b")
       .agg(count(lit(1)).as("n_leaky_clusters"),
         sum(expr("CAST(_na AS DECIMAL(38,0)) * _nb")).as("_lp"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("leak_share_q6", when(col("total_clusters") > 0, expr(
         "CAST((CAST(n_multi_fold_clusters AS DECIMAL(38,0)) * 1000000)" +
           " DIV total_clusters AS BIGINT)")))

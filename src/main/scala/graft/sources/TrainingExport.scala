@@ -114,7 +114,7 @@ object TrainingExport {
           .as("n_tokens"))
     val tot = cells.agg(count(lit(1)).as("n_shards"),
       coalesce(sum("n_tokens"), lit(0L)).as("total_tokens"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("load_q6", when(col("total_tokens") > 0, expr(
         "CAST((CAST(n_tokens AS DECIMAL(38,0)) * n_shards * 1000000)" +
           " DIV total_tokens AS BIGINT)")))

@@ -17,8 +17,10 @@ import graft.{SparkEntry, Tables}
   * and reports, as human-readable strings:
   *
   *  1. any `CartesianProduct` — never acceptable in this library
-  *     (every intentional cross join is against a broadcast ≤B-row
-  *     aggregate, which plans as BroadcastNestedLoopJoin);
+  *     (every intentional cross join is against a ≤B-row aggregate or
+  *     local table that Catalyst sizes, so it plans as
+  *     BroadcastNestedLoopJoin while the broadcast threshold is > 0;
+  *     the audit runs at the default threshold);
   *  2. any window operator with an EMPTY partition spec — a global
   *     window moves its whole input through ONE task, the one-executor
   *     sort/OOM at 100 TB (the q266 class of defect) — unless the

@@ -62,20 +62,22 @@ class EntrySpec extends AnyFunSuite {
     assert(evaluated == 1)
   }
 
-  test("generated oracle SQL is single-statement and ordered") {
-    // the entries whose oracle is an Oracles def, read off the registry
-    // source (the oracle is an expression, not a tag)
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    val generated = """Query\("(q\d+_\w+)",\s*Oracles\.""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    assert(generated.size >= 232, generated.size)
-    val sqls = SparkEntry.oracleSql
-    generated.foreach { name =>
-      val sql = sqls(name)
+  test("every oracle is single-statement and ordered") {
+    assert(SparkEntry.registry.size >= 353, SparkEntry.registry.size)
+    SparkEntry.registry.foreach { q =>
+      val (name, sql) = (q.name, q.oracleSql)
       assert(!sql.trim.endsWith(";"), s"$name ends with ';'")
       assert(!sql.contains(";"), s"$name contains a statement separator")
       assert(sql.toUpperCase.contains("ORDER BY"), s"$name lacks ORDER BY")
     }
+  }
+
+  test("Verify fails on a subset name that is not a query, naming it") {
+    val e = intercept[IllegalArgumentException](
+      Verify.subset(Seq("q01_pricing_summary", "q99999_nope", "q0_typo")))
+    assert(e.getMessage.contains("q0_typo,q99999_nope"), e.getMessage)
+    assert(!e.getMessage.contains("q01_pricing_summary"))
+    assert(Verify.subset(Seq("q01_pricing_summary")) == Set("q01_pricing_summary"))
+    assert(Verify.subset(Nil).isEmpty)
   }
 }

@@ -30,21 +30,15 @@ class LifecycleLintSpec extends AnyFunSuite {
     "operators/Dedup.scala#withPipeline",
     "core/DabDataset.scala#loadMemory")
 
-  /** A member definition at member indentation; it starts a new unit. */
-  private val member = "\n  (?:(?:private|protected)(?:\\[\\w+\\])? |" +
-    "override |final |implicit |lazy )*(?:def|val|var|object|class) "
-
-  private def violations(src0: String, path: String): Seq[String] = {
-    val units = SourceLint.strip(src0).split(member).toSeq
-    units.zipWithIndex.flatMap { case (u, i) =>
-      val where = path + "#" + (if (i == 0) "" else u.takeWhile(_.isLetterOrDigit))
+  private def violations(src0: String, path: String): Seq[String] =
+    SourceLint.members(SourceLint.strip(src0)).flatMap { case (name, u) =>
+      val where = path + "#" + name
       if (allowed(where)) Nil
       else lifecycleCall.findAllMatchIn(u).map(m =>
         s"$where: `${m.matched}` — materialize a stage with " +
           "Dedup.materialize, free it with Dedup.withPipeline or " +
           "Dedup.releaseStage").toSeq
     }
-  }
 
   test("stages are materialized and freed only through Dedup's lifecycle") {
     val bad = SourceLint.sources.flatMap { case (p, s) => violations(s, p) }

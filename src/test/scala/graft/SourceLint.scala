@@ -18,6 +18,18 @@ object SourceLint {
       .replaceAll("\"(\\\\.|[^\"\\\\\n])*\"", "\"\"")
       .replaceAll("//[^\n]*", "")
 
+  /** A member definition at member indentation; it starts a new unit. */
+  private val member = "\n  (?:(?:private|protected)(?:\\[\\w+\\])? |" +
+    "override |final |implicit |lazy )*(?:def|val|var|object|class) "
+
+  /** (name, text) of each member of `src`: one unit per member at
+    * member indentation, the text before the first one named "".
+    */
+  def members(src: String): Seq[(String, String)] =
+    src.split(member).toSeq.zipWithIndex.map { case (u, i) =>
+      (if (i == 0) "" else u.takeWhile(_.isLetterOrDigit), u)
+    }
+
   /** (path under `src/main/scala/graft`, text) of every engine source. */
   def sources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft")

@@ -4002,14 +4002,8 @@ object SparkEntry {
 
     // ---- north star: C4/Gopher-style quality scoring ----
     Query("q66_quality_score", Oracles.q66QualityScore)((s, dir) => {
-      // two-Project shape (r14): inline, the 6 feature references each
-      // re-tokenize — HOFs are outside codegen subexpression
-      // elimination; a multi-referenced non-cheap alias is not
-      // collapsed, so _ws/_f evaluate once
       documents(s, dir)
-        .withColumn("_ws", TextAnalysis.words(col("text")))
-        .withColumn("_f",
-          TextAnalysis.qualityFeaturesFromWords(col("text"), col("_ws")))
+        .withColumn("_f", TextAnalysis.qualityFeatures(col("text")))
         .select(col("doc_id"),
           TextAnalysis.qualityScoreFromFeatures(col("_f")).as("quality"),
           col("_f").getField("n_words").cast("long").as("n_words"),

@@ -96,13 +96,20 @@ object Dedup {
       Some(BigInt(parts.map(_._1).sum)))), Some(lr.constraints)))
   }
 
+  /** The rows and bytes an eager [[materialize]] measured, or None for
+    * any other frame: no job runs.
+    */
+  private[graft] def measured(df: DataFrame): Option[Statistics] =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD if eagerStages.contains(lr.rdd) => Some(lr.stats)
+      case _ => None
+    }
+
   /** The row count an eager [[materialize]] recorded: no job runs. */
-  def rowCount(stage: DataFrame): Long = stage.queryExecution.analyzed match {
-    case lr: LogicalRDD if eagerStages.contains(lr.rdd) =>
-      lr.stats.rowCount.get.toLong
-    case _ => throw new IllegalArgumentException(
-      "rowCount needs a stage built by materialize(df, eager = true)")
-  }
+  def rowCount(stage: DataFrame): Long = measured(stage).fold(
+    throw new IllegalArgumentException(
+      "rowCount needs a stage built by materialize(df, eager = true)"))(
+    _.rowCount.get.toLong)
 
   /** Free ONE materialized stage's blocks now: round k's output
     * supersedes round k−1's, so a loop frees the predecessor once an

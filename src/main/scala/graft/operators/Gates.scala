@@ -9,12 +9,14 @@ import org.apache.spark.sql.internal.SQLConf
   * from an exact row count asks here: a fixed point collected to the
   * driver (else the distributed loop), a `limit(N + 1)` probe that
   * collects at most N rows, a broadcast hint on a derived frame (else a
-  * shuffle join). The answer is Spark's own: `rows` × the planner's
-  * row-size estimate for `df`'s output (`EstimationUtils.getSizePerRow`,
-  * what Catalyst compares with the same setting) must fit the session's
-  * `spark.sql.autoBroadcastJoinThreshold`. A threshold ≤ 0 admits
-  * nothing, so `-1` turns off every broadcast and every driver-side
-  * branch at once.
+  * shuffle join). `rows` × `df`'s bytes per row must fit the session's
+  * `spark.sql.autoBroadcastJoinThreshold`, the setting Catalyst compares
+  * with. An eager stage's row is the mean its `materialize` job
+  * measured (its bytes over its rows, rounded up); any other frame's is
+  * the planner's per-type estimate (`EstimationUtils.getSizePerRow`),
+  * which counts an array as one element and a string as 20 B. A
+  * threshold ≤ 0 admits nothing, so `-1` turns off every broadcast and
+  * every driver-side branch at once.
   *
   * Catalyst sizes joins against an eager stage (its measured rows and
   * bytes; `Dedup.rowCount` reads the rows), an ungrouped aggregate or
@@ -28,7 +30,10 @@ private[graft] object Gates {
   private def threshold: Long = SQLConf.get.autoBroadcastJoinThreshold
 
   private def bytesPerRow(df: DataFrame): BigInt =
-    EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+    Dedup.measured(df).collect {
+      case st if st.rowCount.exists(_ > 0) =>
+        ((st.sizeInBytes + st.rowCount.get - 1) / st.rowCount.get).max(1)
+    }.getOrElse(EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output))
 
   /** True iff `rows` rows of `df`'s output fit the broadcast threshold. */
   def fits(df: DataFrame, rows: Long): Boolean = {

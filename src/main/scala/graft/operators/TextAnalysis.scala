@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines over a `documents`
   * table (driver contract, BASELINE.json north_star): language ID, quality
-  * scoring, token counting, fingerprinting. All pure Catalyst expressions
-  * (codegen'd; no UDF, no shuffle — they run at scan speed map-side).
+  * scoring, token counting, fingerprinting. Catalyst expressions, no UDF
+  * and no shuffle: map-side, per row. The hot per-row statistics are
+  * native codegen'd kernels ([[graft.plans]]); the higher-order-function
+  * forms (`filter`, `aggregate`, `transform` over a split) are
+  * `CodegenFallback` and evaluate interpreted, once per reference.
   */
 object TextAnalysis {
 
-  /** Whitespace token count. */
   /** Whitespace token count (q79 convention). Since r15 the native
     * codegen'd byte-run kernel ([[graft.plans.TokenCountWs]]) — value-
     * identical to the original
@@ -35,12 +37,6 @@ object TextAnalysis {
   /** Word list, lowercased, punctuation-stripped. */
   def words(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9']+"), w => length(w) > 0)
-
-  private val stopwordsEn = Seq("the", "a", "an", "and", "or", "but", "if",
-    "then", "is", "are", "was", "were", "be", "been", "of", "to", "in", "on",
-    "at", "for", "with", "by", "from", "as", "that", "this", "it", "not",
-    "he", "she", "they", "we", "you", "i", "his", "her", "their", "have",
-    "has", "had", "do", "does", "did", "will", "would", "can", "could")
 
   // marker table lives in functions.LangMarkers (single source of
   // truth shared with the native mask expression and its oracles)
@@ -68,37 +64,24 @@ object TextAnalysis {
 
   /** Quality features: lengths, ratios used by public corpus filters
     * (C4/Gopher-style rules): word count, mean word length, stopword
-    * ratio, punctuation ratio, uppercase ratio, digit ratio.
+    * ratio, punctuation ratio, uppercase ratio, digit ratio. Fields:
+    *  - `n_chars`: `length(text)`; `n_words`: `size(words(text))`;
+    *  - `mean_word_len`, `stopword_ratio`: the words' total length and
+    *    their hits on `TextKernels.enStops` (with multiplicity), over
+    *    max(1, n_words);
+    *  - `punct_ratio`, `upper_ratio`, `digit_ratio`: ASCII punctuation
+    *    (Java's `\p{Punct}`), `[A-Z]` and `[0-9]` characters over
+    *    max(1, n_chars).
+    *
+    * One native UTF-8 pass per row ([[graft.plans.QualityFeatures]]);
+    * this is a projection of its struct, so a filter on two fields
+    * calls the kernel once per field and never splits the text. Null
+    * text gives a struct of null fields.
     */
-  def qualityFeatures(text: Column): Column =
-    qualityFeaturesFromWords(text, words(text))
-
-  /** [[qualityFeatures]] with the tokenized array supplied — pass a
-    * MATERIALIZED `_ws` column (a preceding `withColumn("_ws",
-    * words(text))`) when the struct is consumed more than once:
-    * whole-stage codegen's subexpression elimination does not cover
-    * higher-order functions, so every reference of an inline
-    * `words(text)` re-runs the corpus regex split (the r14 langId
-    * lesson — 6× tokenization). A multi-referenced non-cheap alias is
-    * NOT collapsed by CollapseProject, so the two-Project shape
-    * evaluates the split exactly once.
-    */
-  def qualityFeaturesFromWords(text: Column, ws: Column): Column = {
-    val nChars = length(text)
-    val nWords = size(ws)
-    val stopHits = size(filter(ws, w => w.isin(stopwordsEn.map(lit): _*)))
-    struct(
-      nChars.as("n_chars"),
-      nWords.as("n_words"),
-      (aggregate(ws, lit(0L), (a, w) => a + length(w)).cast("double") /
-        greatest(nWords, lit(1))).as("mean_word_len"),
-      (stopHits.cast("double") / greatest(nWords, lit(1))).as("stopword_ratio"),
-      ((nChars - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") /
-        greatest(nChars, lit(1))).as("punct_ratio"),
-      ((nChars - length(regexp_replace(text, "[A-Z]", ""))).cast("double") /
-        greatest(nChars, lit(1))).as("upper_ratio"),
-      ((nChars - length(regexp_replace(text, "[0-9]", ""))).cast("double") /
-        greatest(nChars, lit(1))).as("digit_ratio"))
+  def qualityFeatures(text: Column): Column = {
+    val k = graft.plans.GraftExtensions.qualityFeaturesNative(text)
+    struct(graft.plans.QualityFeatures.schema.fieldNames.toSeq
+      .map(f => k.getField(f).as(f)): _*)
   }
 
   /** Gopher-style keep/drop quality score in [0,1]: fraction of passed
@@ -108,11 +91,7 @@ object TextAnalysis {
   def qualityScore(text: Column): Column =
     qualityScoreFromFeatures(qualityFeatures(text))
 
-  /** [[qualityScore]] over an already-computed features struct — pass
-    * a MATERIALIZED features column when it is consumed alongside the
-    * individual fields (see [[qualityFeaturesFromWords]]; the struct
-    * references the tokenization five times).
-    */
+  /** [[qualityScore]] over an already-computed features struct. */
   def qualityScoreFromFeatures(f: Column): Column = {
     val rules = Seq(
       f.getField("n_words").between(5, 100000),
@@ -563,12 +542,6 @@ object TextAnalysis {
       default = 1.0, seed = seed, idCol = idCol)
   }
 
-  /** The eight Gopher stopwords (Rae et al. 2021, appendix A1.1 —
-    * "must contain at least two of" these).
-    */
-  private val gopherStops =
-    Seq("the", "be", "to", "of", "and", "that", "have", "with")
-
   /** Gopher-rules document quality filter (Rae et al. 2021, arXiv
     * 2112.11446 appendix A1.1 — the published MassiveWeb heuristics).
     * Every rule is an INTEGER-ratio comparison (`10·bullets ≤ 9·lines`
@@ -578,65 +551,31 @@ object TextAnalysis {
     * Rules (flag true = passes):
     *  - `r_word_count`: 50 ≤ words ≤ 100 000
     *  - `r_word_len`:   mean word length in [3, 10] chars
-    *  - `r_symbol`:     (hash signs + ellipses) ≤ 0.1 × words
+    *  - `r_symbol`:     hash signs ≤ 0.1 × words, and non-overlapping
+    *    "..." ≤ 0.1 × words (Rae et al. bound each symbol separately)
     *  - `r_bullet`:     ≤ 90% of lines start with a bullet (`- ` / `* `)
     *  - `r_ellipsis`:   ≤ 30% of lines end with "..."
     *  - `r_alpha`:      ≥ 80% of words contain an alphabetic character
-    *  - `r_stop`:       ≥ 2 distinct Gopher stopwords present
+    *  - `r_stop`:       ≥ 2 distinct Gopher stopwords
+    *    (`TextKernels.gopherStops`) present
     *  - `pass`:         all of the above
     *
-    * Pure codegen'd expressions — one scan-speed map-side pass, the
-    * same shape as [[qualityFeatures]]. Tokenization is the shared
-    * [[words]] ASCII tokenizer (oracle agreement by construction);
-    * lines split on `\r?\n` (the q87 CRLF discipline).
+    * Output: (idCol, carry…, n_words, n_word_chars, n_lines, the seven
+    * flags, pass); the counts are longs.
+    *
+    * One native UTF-8 pass per row ([[graft.plans.GopherRules]]) reads
+    * the counts and computes every flag and `pass`, so
+    * `filter(col("pass"))` pushed below this projection calls the kernel
+    * once per row. Words are the shared [[words]] tokenizer's (oracle
+    * agreement by construction); lines split on `\r?\n` (the q87 CRLF
+    * discipline); null text reads as "".
     */
-  def gopherRules(docs0: DataFrame, idCol: String = "doc_id",
+  def gopherRules(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", carry: Seq[String] = Nil): DataFrame = {
-    val text = coalesce(col(textCol), lit(""))
-    // materialize the tokenizations ONCE (multi-referenced non-cheap
-    // aliases survive CollapseProject): the rule columns reference the
-    // word array 4× and the line array 3×, and codegen subexpression
-    // elimination does not cover HOFs — inline, each reference re-runs
-    // the corpus regex split (the r14 langId lesson)
-    val docs = docs0
-      .withColumn("_gr_ws", words(text))
-      .withColumn("_gr_lines", split(text, "\r?\n"))
-    val ws = col("_gr_ws")
-    val lines = col("_gr_lines")
-    val nWords = size(ws).cast("long")
-    val totalChars = coalesce(aggregate(ws, lit(0L),
-      (acc, w) => acc + length(w).cast("long")), lit(0L))
-    val alphaWords = size(filter(ws, w => w.rlike("[a-z]"))).cast("long")
-    val stopHits = gopherStops.map(s =>
-      when(array_contains(ws, s), 1L).otherwise(0L)).reduce(_ + _)
-    val nLines = size(lines).cast("long")
-    val bulletLines = size(filter(lines, l =>
-      startswith(ltrim(l), lit("- ")) || startswith(ltrim(l), lit("* "))))
-      .cast("long")
-    val ellipsisLines = size(filter(lines, l =>
-      endswith(rtrim(l), lit("...")))).cast("long")
-    val nHash = length(text).cast("long") -
-      length(replace(text, lit("#"), lit(""))).cast("long")
-    val nEllipsis = (length(text).cast("long") -
-      length(replace(text, lit("..."), lit(""))).cast("long")) / lit(3L)
-    docs.select(col(idCol) +: carry.map(col) ++: Seq(
-        nWords.as("n_words"), totalChars.as("n_word_chars"),
-        nLines.as("n_lines"),
-        (nWords >= 50L && nWords <= 100000L).as("r_word_count"),
-        (lit(3L) * nWords <= totalChars &&
-          totalChars <= lit(10L) * nWords).as("r_word_len"),
-        // Rae et al. A1.1 applies the 0.1 symbol-to-word ratio to the
-        // hash symbol and the ellipsis SEPARATELY, not to their sum.
-        (lit(10L) * nHash <= nWords &&
-          lit(10L) * nEllipsis <= nWords).as("r_symbol"),
-        (lit(10L) * bulletLines <= lit(9L) * nLines).as("r_bullet"),
-        (lit(10L) * ellipsisLines <= lit(3L) * nLines).as("r_ellipsis"),
-        (lit(5L) * alphaWords >= lit(4L) * nWords).as("r_alpha"),
-        (stopHits >= 2L).as("r_stop")): _*)
-      .withColumn("pass",
-        col("r_word_count") && col("r_word_len") && col("r_symbol") &&
-          col("r_bullet") && col("r_ellipsis") && col("r_alpha") &&
-          col("r_stop"))
+    val k = graft.plans.GraftExtensions.gopherRulesNative(
+      coalesce(col(textCol), lit("")))
+    docs.select(col(idCol) +: carry.map(col) ++:
+      graft.plans.GopherRules.schema.fieldNames.toSeq.map(f => k.getField(f).as(f)): _*)
   }
 
   /** Intra-document line deduplication (RefinedWeb-style boilerplate
@@ -1057,16 +996,16 @@ object TextAnalysis {
   }
 
   /** Full document-analysis projection over a documents table. The
-    * words array and the features struct materialize as their own
-    * columns (the [[qualityFeaturesFromWords]] two-Project shape), so
-    * the corpus tokenizes once and the features evaluate once.
+    * words array (read by the language ID and the fingerprint) and the
+    * features struct (read by the score too) are columns of their own:
+    * a non-cheap alias referenced twice survives CollapseProject, so
+    * each evaluates once per row.
     */
   def analyze(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     docs
       .withColumn("_an_ws", words(col(textCol)))
-      .withColumn("_an_q",
-        qualityFeaturesFromWords(col(textCol), col("_an_ws")))
+      .withColumn("_an_q", qualityFeatures(col(textCol)))
       .select(
         col(idCol),
         coalesce(graft.plans.GraftExtensions.langIdNative(col("_an_ws")),

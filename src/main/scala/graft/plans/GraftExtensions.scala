@@ -264,6 +264,22 @@ object GraftExtensions {
     ColumnShim.column(TokenCountWs(ColumnShim.expression(text)))
   }
 
+  /** Registration-free quality-features struct (see [[cosineNative]]):
+    * one UTF-8 pass per row ([[QualityFeatures]]).
+    */
+  def qualityFeaturesNative(text: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnShim
+    ColumnShim.column(QualityFeatures(ColumnShim.expression(text)))
+  }
+
+  /** Registration-free Gopher-rules struct (see [[cosineNative]]): one
+    * UTF-8 pass per row ([[GopherRules]]).
+    */
+  def gopherRulesNative(text: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnShim
+    ColumnShim.column(GopherRules(ColumnShim.expression(text)))
+  }
+
   /** Registration-free k-char shingle digests (see [[cosineNative]]):
     * sorted distinct FNV-1a window digests with zero substring
     * allocation — the set-similarity build kernel. Pass lowered text.

@@ -1,9 +1,12 @@
 package graft
 
-import graft.operators.Gates
+import graft.operators.{Dedup, Gates}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.functions._
 
-/** The one size gate: rows × Spark's row-size estimate against the
-  * session's broadcast threshold.
+/** The one size gate: rows × bytes per row against the session's
+  * broadcast threshold; an eager stage's row is the mean it measured,
+  * any other frame's is Spark's row-size estimate.
   */
 class GatesSpec extends SparkSpec {
   import spark.implicits._
@@ -40,5 +43,27 @@ class GatesSpec extends SparkSpec {
       assert(pairs.limit(n + 1).count() == 1)
       assert(!Gates.fits(pairs, Long.MaxValue), "rows × bytes must not overflow")
     }
+  }
+
+  test("an eager stage is gated by its measured bytes, not the type estimate") {
+    // 40 eight-character strings a row: ~600 B measured, where Spark's
+    // per-type estimate counts an array as one 20 B string
+    val stage = Dedup.materialize(spark.range(0, 1000).select(
+      array_repeat(lpad(col("id").cast("string"), 8, "x"), 40).as("syms"),
+      col("id").as("cnt")), eager = true)
+    val rows = Dedup.rowCount(stage)
+    val estimate = EstimationUtils.getSizePerRow(stage.queryExecution.analyzed.output) * rows
+    val bytes = stage.queryExecution.optimizedPlan.stats.sizeInBytes
+    val thr = 100000L
+    assert(estimate < thr && bytes > 2 * thr, s"estimate $estimate, bytes $bytes")
+    withConf(threshold, thr.toString) {
+      assert(!Gates.fits(stage, rows))
+      assert(Gates.maxRows(stage) < rows && Gates.maxRows(stage) > 0)
+      // a derived frame carries no measurement: the estimate admits it
+      assert(Gates.fits(stage.filter(col("cnt") >= 0), rows))
+    }
+    val empty = Dedup.materialize(pairs.filter(col("a") < 0), eager = true)
+    assert(Dedup.rowCount(empty) == 0L)
+    withConf(threshold, "240")(assert(Gates.fits(empty, 0) && Gates.maxRows(empty) == 10))
   }
 }

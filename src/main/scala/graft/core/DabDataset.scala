@@ -1,9 +1,14 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.operators.Dedup
 
 /** Positional-table core: the Spark-native equivalent of the reference's
   * `DictSeqAbstract` table + `Dataset` facade (reference:
@@ -12,9 +17,14 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * The reference's contract is *ordinal*: rows are addressed by position,
   * concat preserves order, select/filter renumber. Spark rows are unordered,
   * so the engine carries an explicit `_idx: Long` column and renumbers after
-  * row-changing ops. `_idx` is assigned scalably via `zipWithIndex` (two
-  * narrow passes, no global shuffle, no single-partition window) — safe at
-  * 100 TB, unlike `row_number() OVER ()`.
+  * row-changing ops. `_idx` is assigned in ONE job with no global shuffle
+  * and no single-partition window — safe at 100 TB, unlike
+  * `row_number() OVER ()`: the numbered frame is an eager stage
+  * ([[graft.operators.Dedup.materialize]]) whose measured rows per
+  * partition are the partitions' start offsets, so every later reader
+  * shares the stage's blocks instead of recomputing the lineage. Like
+  * any stage, a table built inside a `Dedup.withPipeline` scope must be
+  * read inside it.
   *
   * Columns stay in the DataFrame; the wrapper tracks only driver-side
   * metadata: active keys (projection mask, reference abstract.py:1681-1706)
@@ -227,8 +237,12 @@ final class DabDataset private (
           col(s"_slices_$k"))
           .otherwise(raise_error(lit(s"split: chunk count mismatch between $first and $k"))))
     }
+    // `_outer`: a row always has ≥ 1 chunk, so the rows are the same, but
+    // an inner explode lets Catalyst infer a `size(slices) > 0` filter and
+    // push it below the projections, re-running an upstream UDF (the wav
+    // decode) in it once per reference
     val exploded = checked
-      .select(col("*"), posexplode(col(s"_slices_$first")).as(Seq("_chunk", s"_c_$first")))
+      .select(col("*"), posexplode_outer(col(s"_slices_$first")).as(Seq("_chunk", s"_c_$first")))
     val replaced = dataKeys.foldLeft(exploded) { (d, k) =>
       val c = if (k == first) col(s"_c_$first") else col(s"_slices_$k")(col("_chunk"))
       d.withColumn(k, c)
@@ -281,16 +295,23 @@ final class DabDataset private (
   /** Eager materialize (reference `load_memory`): persist + touch. */
   def loadMemory(): DabDataset = { df.persist(); df.count(); this }
 
-  /** Row at a position (reference `__getitem__` row-dict). Driver-side
-    * probe — O(scan) with predicate pushdown on `_idx`; not a hot path.
+  /** Row at a position (reference `__getitem__` row-dict): one job, a
+    * scan with predicate pushdown on `_idx` (Catalyst still plans each
+    * call). Throws `NoSuchElementException` when no row is at `i`.
     */
-  def get(i: Long): Row = active.filter(col(IdxCol) === i).head()
+  def get(i: Long): Row = {
+    val rows = active.filter(col(IdxCol) === i).collect()
+    if (rows.isEmpty) throw new NoSuchElementException(s"no row at position $i")
+    require(rows.length == 1, s"${rows.length} rows at position $i")
+    rows.head
+  }
 
   /** Positions `[a, b)` collected in order (reference DataAbstract
-    * multi-index, abstract.py:252-472).
+    * multi-index, abstract.py:252-472): one job; the at most b − a rows
+    * are sorted on the driver.
     */
   def getRange(a: Long, b: Long): Array[Row] =
-    active.filter(col(IdxCol) >= a && col(IdxCol) < b).orderBy(IdxCol).collect()
+    active.filter(col(IdxCol) >= a && col(IdxCol) < b).collect().sortBy(_.getLong(0))
 
   /** Collect an array column stacked client-side (reference DataAbstract
     * auto-stacking, abstract.py:413-439): uniform row lengths → a dense
@@ -328,9 +349,9 @@ object DabDataset {
   }
 
   /** Wrap a DataFrame, assigning dense positional `_idx` in the frame's
-    * current order. Uses RDD `zipWithIndex` — two narrow passes (count per
-    * partition, then local offsets), no global sort, no single-partition
-    * window — the 100 TB-safe way to number rows (SURVEY §7.1).
+    * current order with [[zipWithIdx]] — one job, no global sort, no
+    * single-partition window — the 100 TB-safe way to number rows
+    * (SURVEY §7.1).
     */
   def fromDataFrame(df: DataFrame): DabDataset =
     new DabDataset(zipWithIdx(df), Nil, 1, Nil)
@@ -352,12 +373,29 @@ object DabDataset {
     new DabDataset(zipWithIdx(base), Nil, 1, Nil)
   }
 
-  /** Dense 0..n-1 `_idx` in current row order, without a global window. */
+  /** Dense 0..n-1 `_idx` in current row order, without a global window:
+    * `df` becomes an eager stage, whose one job also counts each
+    * partition's rows; partition p's rows are numbered from the sum of
+    * the counts before it, over the stage's blocks, as each reader scans
+    * them.
+    */
   def zipWithIdx(df: DataFrame): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(IdxCol, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val stage = Dedup.materialize(df, eager = true)
+    val starts = Dedup.partitionRows(stage).scanLeft(0L)(_ + _)
+    val schema = StructType(stage.schema.fields :+ StructField(IdxCol, LongType, nullable = false))
+    val rows = stage.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    val numbered = rows.mapPartitionsWithIndex { (p, it) =>
+      val append = UnsafeProjection.create(schema)
+      val idx = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      var next = starts(p)
+      it.map { r =>
+        idx.setLong(0, next)
+        next += 1
+        append(joined(r, idx)): InternalRow
+      }
+    }
+    ColumnShim.internalCreateDataFrame(df.sparkSession, numbered, schema)
   }
 
   /** Renumber after a row-changing op: [[zipWithIdx]] without the old

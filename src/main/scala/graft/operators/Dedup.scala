@@ -55,17 +55,21 @@ object Dedup {
     *
     * Contract: consume results (collect/write/count) inside the scope. A
     * local checkpoint has no lineage, so a lazy DataFrame that escapes
-    * the scope cannot recompute its freed blocks.
+    * the scope cannot recompute its freed blocks. The same holds for a
+    * `DabDataset`: its `_idx` numbering is an eager stage, so one built
+    * inside a scope must be read inside it, and a lost executor's share
+    * of a numbered table is not recomputed from lineage either.
     */
   private type Scope = java.util.ArrayDeque[RDD[_]]
   private val openScopes = new ThreadLocal[java.util.ArrayDeque[Scope]] {
     override def initialValue() = new java.util.ArrayDeque[Scope]()
   }
 
-  // the eager stages' blocks, the only stages rowCount reads: a lazy
-  // stage keeps its origin's estimate (a limit's bound), not a count
-  private val eagerStages = java.util.Collections.synchronizedSet(java.util
-    .Collections.newSetFromMap(new java.util.WeakHashMap[RDD[_], java.lang.Boolean]))
+  // the eager stages' blocks and their measured rows per partition, the
+  // only stages rowCount and partitionRows read: a lazy stage keeps its
+  // origin's estimate (a limit's bound), not a count
+  private val eagerStages = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], Array[Long]])
 
   /** Materialize a pipeline stage (see the lifecycle note above). Also
     * the stage-boundary idiom for composed curation chains: each
@@ -90,7 +94,7 @@ object Dedup {
           case ((n, b), _) => (n + 1, b + perRow)
         })
     }
-    eagerStages.add(lr.rdd)
+    eagerStages.put(lr.rdd, parts.map(_._1))
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     ColumnShim.ofRows(session, lr.copy()(session, Some(Statistics(BigInt(parts.map(_._2).sum),
       Some(BigInt(parts.map(_._1).sum)))), Some(lr.constraints)))
@@ -101,7 +105,7 @@ object Dedup {
     */
   private[graft] def measured(df: DataFrame): Option[Statistics] =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD if eagerStages.contains(lr.rdd) => Some(lr.stats)
+      case lr: LogicalRDD if eagerStages.containsKey(lr.rdd) => Some(lr.stats)
       case _ => None
     }
 
@@ -110,6 +114,16 @@ object Dedup {
     throw new IllegalArgumentException(
       "rowCount needs a stage built by materialize(df, eager = true)"))(
     _.rowCount.get.toLong)
+
+  /** The rows of each partition of an eager [[materialize]]'s stage, in
+    * partition order: no job runs. Partition p of the stage's RDD holds
+    * `partitionRows(stage)(p)` rows.
+    */
+  def partitionRows(stage: DataFrame): Array[Long] = (stage.queryExecution.analyzed match {
+    case lr: LogicalRDD => Option(eagerStages.get(lr.rdd))
+    case _ => None
+  }).getOrElse(throw new IllegalArgumentException(
+    "partitionRows needs a stage built by materialize(df, eager = true)"))
 
   /** Free ONE materialized stage's blocks now: round k's output
     * supersedes round k−1's, so a loop frees the predecessor once an

@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   *    within one run.
   *
   * For a dense 0..n−1 id (the reference's `_idx` semantics), wrap the
-  * result in `DabDataset.fromDataFrame` instead — that is the
-  * two-narrow-pass zipWithIndex path and costs a materialization.
+  * result in `DabDataset.fromDataFrame` instead — one job that
+  * materializes the table as an eager stage.
   */
 object DocumentSource {
 

@@ -24,4 +24,14 @@ object ColumnShim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** DataFrame over an RDD of Catalyst rows of `schema`, with no
+    * conversion to or from external `Row`s — the session's
+    * `internalCreateDataFrame` is `private[sql]`.
+    */
+  def internalCreateDataFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

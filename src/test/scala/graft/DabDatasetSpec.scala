@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.DabDataset
+import graft.operators.Dedup
 
 /** Core table-layer goldens, mirroring the reference's unit tests
   * (FIXTURES.md F1/F2; reference tests/test_dataset.py, tests/test_abstract.py).
@@ -208,5 +211,75 @@ class DabDatasetSpec extends SparkSpec {
     val rows = out.df.orderBy("_idx").select("n", "s", "v")
       .as[(Int, String, Double)].collect().toSeq
     assert(rows == Seq((1, "X", 10.0), (2, "Y", 20.0)))
+  }
+
+  // ---- numbering: one job, and later readers share its stage ----
+
+  test("fromDataFrame and split number rows in one job each") {
+    val df = Seq(("a", (1 to 10).map(_.toDouble)), ("b", (1 to 20).map(_.toDouble)))
+      .toDF("k", "data")
+    val made = traced(DabDataset.fromDataFrame(df))
+    assert(made.jobs == 1, s"fromDataFrame ran ${made.jobs} jobs")
+    val split = traced(made.result.split(Seq("data"), 5))
+    assert(split.jobs == 1, s"split ran ${split.jobs} jobs")
+    assert(split.result.df.orderBy("_idx").select("_idx", "k").as[(Long, String)]
+      .collect().toSeq == (0L until 6L).zip(Seq("a", "a", "b", "b", "b", "b")))
+  }
+
+  test("an upstream UDF runs once per row when the split table is read twice") {
+    val calls = spark.sparkContext.longAccumulator("decode calls")
+    val decode = udf((n: Int) => { calls.add(1); (1 to n).map(_.toDouble) })
+    val ds = DabDataset.fromDataFrame(Seq(10, 20, 30).toDF("n"))
+      .add("data", decode(col("n")))
+      .split(Seq("data"), 10)
+    assert(ds.len == 6)
+    assert(ds.df.select(sum(size(col("data")))).as[Long].head() == 60L)
+    assert(calls.value == 3L, s"the UDF ran ${calls.value} times for 3 rows")
+  }
+
+  test("_idx is dense and in input order over empty partitions, 0 rows and 1 row") {
+    // ids 0 | 1 | 2 | 3,4 in four partitions; the filter empties two
+    val input = spark.range(0, 5, 1, 4).toDF().filter(col("id") =!= 1 && col("id") =!= 2)
+    assert(Dedup.partitionRows(Dedup.materialize(input, eager = true)).toSeq ==
+      Seq(1L, 0L, 0L, 2L))
+    def numbered(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      DabDataset.fromDataFrame(df).df.select("_idx", "id").as[(Long, Long)]
+        .collect().toSeq
+    assert(numbered(input) == Seq((0L, 0L), (1L, 3L), (2L, 4L)))
+    assert(numbered(spark.range(0, 0, 1, 4).toDF()).isEmpty)
+    assert(numbered(spark.range(7, 8, 1, 4).toDF()) == Seq((0L, 7L)))
+  }
+
+  test("get and getRange run one job per call, rows in _idx order") {
+    val ds = DabDataset.fromDataFrame(spark.range(0, 40, 1, 4).toDF("v"))
+      .select(col("v") % 2 === 1) // odd v at positions 0..19
+    val one = traced(ds.get(7))
+    assert(one.jobs == 1 && one.result.getAs[Long]("v") == 15L)
+    val range = traced(ds.getRange(3, 13))
+    assert(range.jobs == 1)
+    assert(range.result.map(_.getLong(0)).toSeq == (3L until 13L))
+    assert(range.result.map(_.getAs[Long]("v")).toSeq == (3L until 13L).map(2 * _ + 1))
+    assert(ds.getRange(5, 5).isEmpty && ds.getRange(30, 40).isEmpty)
+    val missing = intercept[NoSuchElementException](ds.get(20))
+    assert(missing.getMessage.contains("20"))
+    intercept[NoSuchElementException](ds.get(-1))
+    val doubled = DabDataset.fromExisting(Seq((0L, "a"), (0L, "b")).toDF("_idx", "k"))
+    intercept[IllegalArgumentException](doubled.get(0))
+  }
+
+  test("a DabDataset built and read inside withPipeline frees its stage at exit") {
+    val sc = spark.sparkContext
+    def persisted(id: Int) = sc.getPersistentRDDs.get(id)
+      .exists(_.getStorageLevel != StorageLevel.NONE)
+    val (rows, stageId) = Dedup.withPipeline {
+      val ds = DabDataset.fromDataFrame(spark.range(0, 10, 1, 4).toDF("v"))
+      // the numbered frame scans the stage the numbering job filled
+      val stage = ds.df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+        .rdd.dependencies.head.rdd
+      assert(persisted(stage.id))
+      (ds.getRange(2, 5).map(_.getAs[Long]("v")).toSeq, stage.id)
+    }
+    assert(rows == Seq(2L, 3L, 4L))
+    assert(!persisted(stageId))
   }
 }

@@ -44,6 +44,7 @@ class SizedStageSpec extends SparkSpec {
     val stage = ran.result
     assert(stage.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(4)))
     assert(Dedup.rowCount(stage) == stage.count())
+    assert(Dedup.partitionRows(stage).sum == 4L)
     val empty = Dedup.materialize(small.filter(col("k") < 0), eager = true)
     assert(Dedup.rowCount(empty) == 0 && empty.count() == 0)
   }
@@ -85,6 +86,7 @@ class SizedStageSpec extends SparkSpec {
     assert(lazyStages.drop(1).forall(_.queryExecution.optimizedPlan.stats.rowCount.nonEmpty))
     lazyStages.foreach { st =>
       intercept[IllegalArgumentException](Dedup.rowCount(st))
+      intercept[IllegalArgumentException](Dedup.partitionRows(st))
     }
     assert(lazyStages.map(_.count()) == Seq(4L, 40L, 30L))
     val a = Dedup.materialize(small, eager = true)
@@ -92,6 +94,7 @@ class SizedStageSpec extends SparkSpec {
       a.join(Dedup.materialize(small, eager = true), "k"))
     derived.foreach { d =>
       intercept[IllegalArgumentException](Dedup.rowCount(d))
+      intercept[IllegalArgumentException](Dedup.partitionRows(d))
     }
   }
 
